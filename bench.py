@@ -224,39 +224,6 @@ def _time_duckdb_suite(sf_dir: str, names, cpus: int,
     return out, out_min
 
 
-def _time_datafusion_suite(sf_dir: str, names, cpus: int,
-                           iterations: int = ITERATIONS):
-    """Time the same oracle SQL through the PUBLIC `datafusion` Python
-    package — the actual baseline engine of the reference. Import-gated:
-    the package is not in this container, so absence returns ({}, {}) and
-    the headline reports ratio_vs_datafusion=null rather than a guess."""
-    try:
-        from datafusion import SessionContext
-    except ImportError:
-        return {}, {}
-    ctx = SessionContext()
-    for t in TABLES:
-        ctx.register_parquet(t, os.path.join(sf_dir, f"{t}.parquet"))
-    oracles = oracle_queries()
-    out, out_min = {}, {}
-    for name in names:
-        sql = oracles.get(name)
-        if sql is None:
-            continue
-        try:
-            ctx.sql(sql).to_arrow_table()      # warm (+ dialect probe)
-        except Exception:
-            continue                           # DuckDB-only SQL shape
-        runs = []
-        for _ in range(iterations):
-            t0 = time.perf_counter()
-            ctx.sql(sql).to_arrow_table()
-            runs.append(time.perf_counter() - t0)
-        out[name] = round(sum(runs) / len(runs), 4)
-        out_min[name] = round(min(runs), 4)
-    return out, out_min
-
-
 def _floor_adjusted_ratios(mins: dict, floor: float, duck_min: dict):
     """Per-query floor-adjusted ratios (min walls). A wall at or under the
     measured floor is NOT "infinitely fast" — it is unmeasurable at this
@@ -275,22 +242,6 @@ def _floor_adjusted_ratios(mins: dict, floor: float, duck_min: dict):
         else:
             adjusted[n] = round((w - floor) / d, 2)
     return adjusted, at_floor
-
-
-def _pinned_duckdb(tier_dir: str) -> dict | None:
-    """The committed per-tier DuckDB denominator (tools/pin_duckdb.py,
-    r10 verdict #3): min walls per query for this box generation, keyed
-    by tier dir basename. Returns the tier's queries_min dict or None.
-    This is a REPORTING aid — the in-run denominator is still measured
-    and reported first; the pinned ratio isolates Spark-side movement
-    from DuckDB's own ±35% run-to-run swing at the floor-dominated
-    tiers."""
-    try:
-        doc = json.loads((REPO / "DUCKDB_PINNED.json").read_text())
-        tier = doc["tiers"].get(os.path.basename(tier_dir.rstrip("/")))
-        return tier["queries_min"] if tier else None
-    except Exception:
-        return None
 
 
 def _ratio(spark_times: dict, duck_times: dict) -> float | None:
@@ -619,11 +570,9 @@ def main() -> None:
     floor = _measure_floor(spark, cpus)
     wall, plan, wall_min, wall_reps, wall_sd = _time_spark_suite(spark, sf_dir)
     duck, duck_min = _time_duckdb_suite(sf_dir, list(wall), cpus)
-    dfus, dfus_min = _time_datafusion_suite(sf_dir, list(wall), cpus)
 
     adjusted = {n: round(max(t - floor, 0.0), 4) for n, t in wall.items()}
     total = round(sum(wall.values()), 4)
-    pinned = _pinned_duckdb(sf_dir)
 
     # Stdout stays COMPACT (one short JSON line — a capture window may be
     # as small as ~2000 chars); full per-query detail goes to the sidecar.
@@ -639,13 +588,6 @@ def main() -> None:
         "ratio_vs_duckdb_raw": _ratio(wall, duck),
         "ratio_vs_duckdb_floor_adjusted": _ratio(adjusted, duck),
         "ratio_min_vs_duckdb_min": _ratio(wall_min, duck_min),
-        # min walls vs the COMMITTED per-box DuckDB denominator
-        # (DUCKDB_PINNED.json, r10 verdict #3) — null when no pinned
-        # file exists; the in-run ratios above remain the primary,
-        # same-session measurement
-        "ratio_vs_duckdb_pinned": _ratio(wall_min, pinned) if pinned else None,
-        "datafusion_total": round(sum(dfus.values()), 4) if dfus else None,
-        "ratio_vs_datafusion": _ratio(wall, dfus),
         "detail_file": "BENCH_detail.json",
         # r5 verdict #8: keep round-over-round ratios interpretable when
         # suite composition or methodology changes. The stdout copy is a
@@ -684,39 +626,23 @@ def main() -> None:
             "whole line fits the driver's ~2000-char capture window "
             "and parses again; no timed value or methodology changed"),
         "queries": wall,
-        "duckdb_pinned_queries": pinned,
         "queries_plan_sec": plan,
         "queries_floor_adjusted": adjusted,
         "queries_min": wall_min,
         "queries_reps": wall_reps,
         "queries_stdev": wall_sd,
         "duckdb_queries": duck,
-        "datafusion_queries": dfus or None,
         "reference_summary": _ref_summary(wall, duck),
         "methodology": (
-            "ratio = Spark suite / DuckDB (and, when the public `datafusion` "
-            "package is importable, DataFusion — the reference's actual "
-            "engine) running the same queries' oracle SQL in-process, "
+            "ratio = Spark suite / DuckDB running the same queries' "
+            "oracle SQL in-process, "
             "warmed, threads=cpus (the reference's headline metric, "
             "report.rs:38-49; its rating bands put an engine at "
             "<1.5x/<3x/<5x of DuckDB). floor_sec = median wall of a no-data "
             f"{cpus}-task job; at tiny sf this fixed scheduling cost "
             "dominates, so floor-adjusted and scaled numbers are the "
-            "throughput signal. ratio_vs_datafusion=null means the package "
-            "is not installed in this container — reported honestly rather "
-            "than estimated."),
+            "throughput signal."),
     }
-
-    # The 2x-of-baseline gate stays formally undecidable in this
-    # container: the public `datafusion` package is absent and package
-    # installation is disallowed by environment policy, so
-    # ratio_vs_datafusion is reported as null rather than estimated
-    # (the measurement code runs automatically whenever the package is
-    # importable — _time_datafusion_suite).
-    detail["datafusion_gate_note"] = (
-        "public `datafusion` package absent; installs are disallowed in "
-        "this environment, so ratio_vs_datafusion=null is an evidenced "
-        "non-measurement, not an omission")
 
     # Two compute-dominated tiers: SF1-equivalent (scale, headline) and
     # SF3-equivalent (scale2, detail-only) — the per-query SF3 ratios
@@ -764,8 +690,6 @@ def main() -> None:
             spark, scaled_dir, iterations=iters, only=only)
         s_duck, s_duck_min = _time_duckdb_suite(scaled_dir, list(s_wall), cpus,
                                                 iterations=iters)
-        s_dfus, s_dfus_min = _time_datafusion_suite(scaled_dir, list(s_wall),
-                                                    cpus)
         s_adj = {n: round(max(t - floor, 0.0), 4) for n, t in s_wall.items()}
         s_head = {
             "scale_factor_equivalent": round((sf or 0) * sc, 3),
@@ -774,9 +698,6 @@ def main() -> None:
             "ratio_vs_duckdb_raw": _ratio(s_wall, s_duck),
             "ratio_vs_duckdb_floor_adjusted": _ratio(s_adj, s_duck),
             "ratio_min_vs_duckdb_min": _ratio(s_min, s_duck_min),
-            "datafusion_total": round(sum(s_dfus.values()), 4)
-            if s_dfus else None,
-            "ratio_vs_datafusion": _ratio(s_wall, s_dfus),
         }
         if in_headline:
             headline[key] = s_head
@@ -807,13 +728,9 @@ def main() -> None:
                 "q18_ratio_min": _rm4("q18_large_orders"),
                 "q05_ratio_min": _rm4("q05_local_supplier_volume"),
             }
-        s_pinned = _pinned_duckdb(scaled_dir)
-        if s_pinned:
-            s_head["ratio_vs_duckdb_pinned"] = _ratio(s_min, s_pinned)
         s_fadj, s_at_floor = _floor_adjusted_ratios(s_min, floor, s_duck_min)
         detail[key] = {
             **s_head,
-            "duckdb_pinned_queries": s_pinned,
             "queries": s_wall,
             "queries_plan_sec": s_plan,
             "queries_min": s_min,
@@ -821,7 +738,6 @@ def main() -> None:
             "queries_stdev": s_sd,
             "queries_floor_adjusted": s_adj,
             "duckdb_queries": s_duck,
-            "datafusion_queries": s_dfus or None,
             "queries_ratio_min": {
                 n: round(s_min[n] / s_duck_min[n], 2)
                 for n in s_min if s_duck_min.get(n)},
@@ -893,7 +809,7 @@ def _stdout_line(headline: dict) -> str:
         return json.dumps(h, separators=(",", ":"))
 
     line = dump(headline)
-    for key in ("suite_delta_note", "ratio_vs_duckdb_pinned", "scaled4",
+    for key in ("suite_delta_note", "scaled4",
                 "scaled3", "scaled2", "scaled"):
         if len(line) <= STDOUT_BUDGET:
             break

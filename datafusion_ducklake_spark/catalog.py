@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+import zlib
 from functools import cached_property
 from typing import Optional
 
@@ -27,6 +28,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from .errors import InvalidConfig, SchemaNotFound, TableNotFound
 from .metadata.provider import (ColumnMeta, MetadataProvider, SchemaMeta,
                                 TableMeta, provider_for)
+from .operators.info_schema import local_df
 from .paths import PathResolver, to_spark_uri
 from .sources.scan import ResolvedFile, scan_table
 from .types import build_spark_schema
@@ -228,8 +230,8 @@ class DuckLakeTable:
     def _live_set_digest(self) -> str:
         """Digest of this snapshot's live file set (raw catalog rows —
         see metadata.provider.live_set_digest for the definition and the
-        gating properties). Shared with the ducklake_clustering_info
-        UDTF so the staleness flag it reports and the read-path gate in
+        gating properties). Shared with ducklake_clustering_info() so
+        the staleness flag it reports and the read-path gate in
         _replica_df can never disagree."""
         from .metadata.provider import live_set_digest
         return live_set_digest(self._provider, self.meta.table_id,
@@ -854,7 +856,8 @@ class DuckLakeSession:
     - ``dl.table('main.users')`` / ``dl.table('users')`` → DataFrame
     - ``dl.sql('SELECT ... FROM main.users')`` → DataFrame (temp views)
     - ``dl.snapshots() / table_info() / list_files()`` and
-      ``dl.table_changes / table_deletions`` (UDTF parity, SURVEY §2A A13-14)
+      ``dl.table_changes / table_deletions`` (table-function parity,
+      SURVEY §2A A13-14; SQL calls resolve to the same builders)
     - ``dl.create_table / insert_into`` (write path, A8-A10)
     - ``snapshot_id=`` arg gives time travel (with_snapshot, catalog.rs:71-83)
     """
@@ -961,6 +964,7 @@ class DuckLakeSession:
         self._view_rewrites: dict[str, str] = {}
         self._txn_base: Optional[int] = None   # BEGIN's snapshot anchor
         self._macros: Optional[list] = None    # lazy ducklake_macro cache
+        self._st_registered = False
         # READ_ONLY attach: every mutation funnels through the catalog
         # writer, which refuses (sql/general/ducklake_read_only.test).
         # A session pinned to a historical snapshot is read-only by
@@ -1065,9 +1069,7 @@ class DuckLakeSession:
             for v in self.provider.list_views(schema.meta.schema_id,
                                               self.catalog.snapshot_id):
                 try:
-                    body = self._rewrite_outside_literals(
-                        v.sql, self._view_rewrites)
-                    df = self.spark.sql(body)
+                    df = self.spark.sql(self._plan_view_body(v.sql))
                 except Exception as e:
                     warnings.warn(
                         f"register_views: skipping view "
@@ -1103,44 +1105,71 @@ class DuckLakeSession:
             parts[i] = seg
         return "".join(parts)
 
-    # SQL-callable CDC (A14 parity with table_functions.rs:86-225): the
-    # call site is resolved at plan time to the SAME vectorized DataFrame
-    # the Python API plans (parquet scan + position algebra) — no
-    # row-yielding UDTF in the data path. Constant arguments only; a
-    # bound is a snapshot id, a DATE/TIMESTAMP literal, a bare quoted
-    # timestamp string, or now() (upstream accepts time bounds —
-    # table_changes/ducklake_lower_timestamp.test).
-    _CDC_BOUND = (r"(\d+|(?:DATE|TIMESTAMP)?\s*'[^']*'|NOW\s*\(\s*\))")
-    _CDC_CALL = re.compile(
-        r"ducklake_table_(changes|deletions|insertions)\(\s*'([^']+)'\s*,"
-        r"\s*" + _CDC_BOUND + r"\s*,\s*" + _CDC_BOUND + r"\s*\)",
-        re.IGNORECASE)
+    # One SQL-time resolver for every relation the catalog serves
+    # (SURVEY A13-A14): information_schema.<view>, the metadata-catalog
+    # passthrough (__ducklake_metadata_<name>.X / ducklake_metadata.X —
+    # upstream ATTACHes the metadata DB as a queryable catalog) and
+    # ducklake_<fn>(<constants>) table functions. Literals and backtick
+    # identifiers match first and are kept verbatim. A constant argument
+    # is a number, a quoted string, a DATE/TIMESTAMP literal or now()
+    # (CDC time bounds — table_changes/ducklake_lower_timestamp.test).
+    _SQL_ARG = r"(?:\d+|(?:DATE|TIMESTAMP)?\s*'(?:[^']|'')*'|NOW\s*\(\s*\))"
+    _RELATION_RE = re.compile(
+        r"('(?:[^']|'')*'|`(?:[^`]|``)*`)"
+        r"|\b(information_schema\.\w+)"
+        r"|\b(?:__ducklake_metadata\w*|ducklake_meta\w*?)\.(ducklake_\w+)"
+        r"|\b(ducklake_\w+)\s*\(\s*((?:" + _SQL_ARG + r")(?:\s*,\s*"
+        + _SQL_ARG + r")*)?\s*\)", re.I)
 
-    def _parse_cdc_bound(self, raw: str):
+    def _sql_arg(self, raw: str):
         raw = raw.strip()
         if raw.isdigit():
             return int(raw)
         if raw.upper().replace(" ", "").startswith("NOW("):
             return self.provider.get_current_snapshot()
-        return re.sub(r"^(?:DATE|TIMESTAMP)\s*", "", raw,
-                      flags=re.I).strip("'")
+        raw = re.sub(r"^(?:DATE|TIMESTAMP)\s*", "", raw, flags=re.I)
+        return raw[1:-1].replace("''", "'")
 
-    def _resolve_cdc_calls(self, query: str) -> str:
+    def _resolve_relations(self, query: str) -> str:
+        """Replace each catalog relation in ``query`` with a temp view
+        over its operators/info_schema builder, built now at the
+        session's pinned snapshot."""
+        from .operators import info_schema
+
         def sub(m: "re.Match[str]") -> str:
-            kind = m.group(1).lower()
-            tbl = m.group(2)
-            start = self._parse_cdc_bound(m.group(3))
-            end = self._parse_cdc_bound(m.group(4))
-            df = {"changes": self.table_changes,
-                  "deletions": self.table_deletions,
-                  "insertions": self.table_insertions}[kind](tbl, start, end)
-            view = (f"__ducklake_{kind}_"
-                    + re.sub(r"[^A-Za-z0-9_]", "_",
-                             f"{tbl}_{start}_{end}"))
-            df.createOrReplaceTempView(view)
+            literal, dotted, meta, fn, raw_args = m.groups()
+            if literal:
+                return literal
+            args = ()
+            if fn:
+                if fn.lower() not in info_schema.RELATIONS:
+                    return m.group(0)
+                name = fn
+                args = tuple(self._sql_arg(a) for a in
+                             re.findall(self._SQL_ARG, raw_args or "", re.I))
+            else:
+                name = dotted or f"ducklake_metadata.{meta}"
+            view = "__ducklake_" + re.sub(r"\W", "_", name.lower())
+            if args:
+                view += f"_{zlib.crc32(repr(args).encode()):08x}"
+            info_schema.relation(self, name, args) \
+                .createOrReplaceTempView(view)
             return view
 
-        return self._CDC_CALL.sub(sub, query)
+        return self._RELATION_RE.sub(sub, query)
+
+    def _register_st_functions(self, query: str) -> None:
+        if not self._st_registered and \
+                re.search(r"\bst_\w+\s*\(", query, re.I):
+            self.register_sql_functions()
+
+    def _plan_view_body(self, body: str) -> str:
+        """A persisted view body as Spark-plannable text: catalog
+        relations resolved, dotted table names flattened. The stored
+        text itself is never rewritten."""
+        self._register_st_functions(body)
+        return self._rewrite_outside_literals(
+            self._resolve_relations(body), self._view_rewrites)
 
     # -- SQL-callable DML (simple single-statement forms; the corpus
     #    drives DML through SQL, sql/delete/ sql/update/ sql/insert/) ----
@@ -1283,7 +1312,7 @@ class DuckLakeSession:
     def _count_df(self, n: int) -> DataFrame:
         """DML statements return a 1-row count batch, the reference's
         INSERT convention (insert_exec.rs:24-31)."""
-        return self.spark.createDataFrame([(n,)], "count BIGINT")
+        return local_df(self.spark, [(n,)], "count BIGINT")
 
     _TXN_RE = re.compile(
         r"^\s*(BEGIN(?:\s+TRANSACTION)?|COMMIT|ROLLBACK)\s*;?\s*$", re.I)
@@ -1301,8 +1330,8 @@ class DuckLakeSession:
 
     def _resolve_comment_calls(self, query: str) -> str:
         """Plan-time resolution of ducklake_table_comment('t') /
-        ducklake_column_comment('t','c') to literals — the same
-        mechanism as the CDC UDTF rewrites."""
+        ducklake_column_comment('t','c') to literals, in the manner of
+        ``_resolve_relations``."""
         def sub(m):
             if m.group(1):
                 v = self.table_comment(m.group(1))
@@ -1620,9 +1649,8 @@ class DuckLakeSession:
             # CALL ducklake_refresh_materialized_view('name') — returns
             # the refresh mode so SQL callers see which path ran
             out = self.refresh_materialized_view(m.group(1))
-            return self.spark.createDataFrame(
-                [(out["mode"], out["snapshot"])],
-                "mode STRING, snapshot BIGINT")
+            return local_df(self.spark, [(out["mode"], out["snapshot"])],
+                            "mode STRING, snapshot BIGINT")
         m = self._REWRITE_FILES_RE.match(query)
         if m:
             # two positional names = (catalog_alias, table) — the alias
@@ -1655,8 +1683,8 @@ class DuckLakeSession:
             rows = [(s, t.table_name)
                     for s, t in self.provider.list_all_tables(snap)
                     if target is None or s == target]
-            return self.spark.createDataFrame(
-                rows or [], "schema_name STRING, table_name STRING")
+            return local_df(self.spark, rows,
+                            "schema_name STRING, table_name STRING")
         m = self._DESCRIBE_RE.match(query)
         if m:
             handle = self.table_handle(
@@ -1665,9 +1693,9 @@ class DuckLakeSession:
             rows = [(c.column_name, c.column_type,
                      "YES" if c.nulls_allowed else "NO", c.default_value)
                     for c in handle.columns]
-            return self.spark.createDataFrame(
-                rows, "column_name STRING, column_type STRING, "
-                      "null STRING, default STRING")
+            return local_df(self.spark, rows,
+                            "column_name STRING, column_type STRING, "
+                            "null STRING, default STRING")
         m = self._CREATE_SCHEMA_RE.match(query)
         if m:
             # multi-schema DDL (corpus: sql/catalog/schema.test)
@@ -2209,38 +2237,6 @@ class DuckLakeSession:
     _ROWID_REF_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.\w+)?)__rowid\b")
     _VIRTUAL_REF_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.\w+)?)__virtual\b")
 
-    def _metadata_table_df(self, name: str) -> DataFrame:
-        """One metadata-catalog table as a DataFrame (SQL passthrough —
-        upstream exposes the metadata DB as an attached catalog).
-        Driver-side materialization matches the feature: catalog tables
-        are metadata-sized by design. Types: ints surface as BIGINT,
-        floats as DOUBLE, everything else as STRING."""
-        from pyspark.sql import types as T
-        if not re.fullmatch(r"ducklake_[a-z0-9_]+", name):
-            raise InvalidConfig(f"not a metadata catalog table: {name!r}")
-        cols = self.provider.get_catalog_table_columns(name)
-        if not cols:
-            raise InvalidConfig(f"not a metadata catalog table: {name!r}")
-        rows = self.provider._fetchall(f'SELECT * FROM "{name}"')
-        fields, casts = [], []
-        for i, c in enumerate(cols):
-            vals = [r[i] for r in rows if r[i] is not None]
-            if vals and all(isinstance(v, bool) for v in vals):
-                dt, conv = T.BooleanType(), bool
-            elif vals and all(isinstance(v, int)
-                              and not isinstance(v, bool) for v in vals):
-                dt, conv = T.LongType(), int
-            elif vals and all(isinstance(v, (int, float))
-                              and not isinstance(v, bool) for v in vals):
-                dt, conv = T.DoubleType(), float
-            else:
-                dt, conv = T.StringType(), str
-            fields.append(T.StructField(c, dt, True))
-            casts.append(conv)
-        data = [tuple(None if v is None else conv(v)
-                      for v, conv in zip(r, casts)) for r in rows]
-        return self.spark.createDataFrame(data, T.StructType(fields))
-
     def _register_virtual_views(self, query: str) -> None:
         """``<table>__virtual`` view twins exposing the DuckLake virtual
         columns (filename / file_row_number / file_index / snapshot_id /
@@ -2338,43 +2334,17 @@ class DuckLakeSession:
             query = re.sub(r"CAST\s*\(\s*('(?:[^']|'')*')\s+AS\s+GEOMETRY"
                            r"\s*\)", r"st_geomfromtext(\1)", query,
                            flags=re.I)
-        if not getattr(self, "_sql_fns_registered", False) and \
-                re.search(r"\b(?:st_|ducklake_)\w+\s*\(", query, re.I):
-            self.register_sql_functions()
-        # information_schema.<view> in SQL (DuckDB exposes these in the
-        # catalog; ours compute from the pinned snapshot on demand)
-        for m in set(re.findall(r"\binformation_schema\.(\w+)", query,
-                                re.I)):
-            from .operators import info_schema
-            info_schema.view(self, m.lower()).createOrReplaceTempView(
-                f"information_schema__{m.lower()}")
-        query = re.sub(r"\binformation_schema\.(\w+)",
-                       lambda mm: f"information_schema__"
-                                  f"{mm.group(1).lower()}",
-                       query, flags=re.I)
-        # metadata-catalog passthrough: __ducklake_metadata_<name>.X /
-        # ducklake_metadata.X resolve to live snapshots of the catalog's
-        # own tables (upstream ATTACHes the metadata DB as a queryable
-        # catalog — e.g. FROM __ducklake_metadata_ducklake.ducklake_macro)
-        _META_REF = r"\b(?:__ducklake_metadata\w*|ducklake_meta\w*?)\." \
-                    r"(ducklake_\w+)"
-        for t in set(re.findall(_META_REF, query, re.I)):
-            self._metadata_table_df(t.lower()).createOrReplaceTempView(
-                f"ducklake_metadata__{t.lower()}")
-        query = re.sub(_META_REF,
-                       lambda mm: f"ducklake_metadata__"
-                                  f"{mm.group(1).lower()}",
-                       query, flags=re.I)
         ddl = self._try_macro_ddl(query)
         if ddl is not None:
             return ddl
         from .operators.macros import expand_macros
         query = expand_macros(query, self._live_macros())
+        self._register_st_functions(query)
         dml = self._try_dml(query)
         if dml is not None:
             return dml
         query = self._resolve_comment_calls(query)
-        query = self._resolve_cdc_calls(query)
+        query = self._resolve_relations(query)
         query = self._resolve_time_travel(query)
         self._register_rowid_views(query)
         self._register_virtual_views(query)
@@ -2391,13 +2361,8 @@ class DuckLakeSession:
         self._macros = None
         if self._view_rewrites:
             self.register_views()
-        if getattr(self, "_sql_fns_registered", False):
-            # the UDTF closures capture snapshot_id at registration —
-            # re-register so ducklake_snapshots()/current_snapshot()/
-            # database_size() track the new pin
-            self.register_sql_functions()
 
-    # -- UDTF / info-schema / CDC / write entry points (other modules) -----
+    # -- info-schema / CDC / write entry points (other modules) ------------
 
     def snapshots(self) -> DataFrame:
         from .operators.info_schema import snapshots_df
@@ -2415,19 +2380,16 @@ class DuckLakeSession:
         return files_df(self, table, snapshot_version)
 
     def information_schema(self, view: str) -> DataFrame:
-        from .operators import info_schema
-        return info_schema.view(self, view)
-
-    def register_information_schema(self) -> None:
-        from .operators import info_schema
-        info_schema.register_all(self)
+        from .operators.info_schema import relation
+        return relation(self, f"information_schema.{view}")
 
     def register_sql_functions(self) -> None:
-        """SQL-callable UDTFs: ducklake_snapshots() / ducklake_table_info()
-        / ducklake_list_files() (A14 parity)."""
-        from .operators.udtf import register_sql_functions
-        register_sql_functions(self)
-        self._sql_fns_registered = True
+        """Register the st_* geometry functions with the Spark session
+        (``sql()`` does this on first use). The ducklake_* table
+        functions need no registration: ``sql()`` resolves them."""
+        from .functions.geo import register_geo_functions
+        register_geo_functions(self.spark)
+        self._st_registered = True
 
     def table_changes(self, name: str, start, end) -> DataFrame:
         """Full CDC feed in (start, end]. Bounds are snapshot ids, or
@@ -2518,8 +2480,7 @@ class DuckLakeSession:
         if not self._view_rewrites:
             self.register_views()
         # validate: the body must plan against the current catalog
-        self.spark.sql(
-            self._rewrite_outside_literals(sql_text, self._view_rewrites))
+        self.spark.sql(self._plan_view_body(sql_text))
         writer = _catalog_writer(self)
         try:
             writer.create_view(schema.meta.schema_id, view_name, sql_text,
@@ -3637,28 +3598,8 @@ class DuckLakeSession:
         nothing reporting it). SQL twin:
         ``SELECT * FROM ducklake_clustering_info()``. ``name`` filters
         to one table."""
-        from pyspark.sql import types as T
-
-        from .operators.layout import clustering_status_rows
-        rows = list(clustering_status_rows(
-            self.provider, self.catalog.snapshot_id))
-        if name is not None:
-            schema_name, table_name = self._split(name)
-            rows = [r for r in rows
-                    if r[0] == schema_name and r[1] == table_name]
-        schema = T.StructType([
-            T.StructField("schema_name", T.StringType()),
-            T.StructField("table_name", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("cluster_key", T.StringType()),
-            T.StructField("buckets", T.LongType()),
-            T.StructField("n_files", T.LongType()),
-            T.StructField("directory", T.StringType()),
-            T.StructField("current", T.BooleanType())])
-        return self.spark.createDataFrame(
-            [tuple(r[:4]) + (int(r[4]) if r[4] is not None else None,
-                             int(r[5]) if r[5] is not None else None,
-                             r[6], bool(r[7])) for r in rows], schema)
+        from .operators.info_schema import clustering_df
+        return clustering_df(self, name)
 
     def create_materialized_view(self, name: str, sql_text: str,
                                  if_not_exists: bool = False) -> int:
@@ -3689,29 +3630,8 @@ class DuckLakeSession:
         """One row per materialized view with its source, refresh
         capability, covered snapshot, and a catalog-level ``current``
         flag. SQL twin: ``SELECT * FROM ducklake_matview_info()``."""
-        from pyspark.sql import types as T
-
-        from .operators.matview import matview_status_rows
-        rows = list(matview_status_rows(
-            self.provider, self.catalog.snapshot_id))
-        if name is not None:
-            schema_name, table_name = self._split(name)
-            rows = [r for r in rows
-                    if r[0] == schema_name and r[1] == table_name]
-        schema = T.StructType([
-            T.StructField("schema_name", T.StringType()),
-            T.StructField("table_name", T.StringType()),
-            T.StructField("source_table", T.StringType()),
-            T.StructField("incremental", T.BooleanType()),
-            T.StructField("last_snapshot", T.LongType()),
-            T.StructField("current_snapshot", T.LongType()),
-            T.StructField("current", T.BooleanType())])
-        return self.spark.createDataFrame(
-            [(r[0], r[1], r[2], bool(r[3]),
-              int(r[4]) if r[4] is not None else None,
-              int(r[5]) if r[5] is not None else None,
-              bool(r[6]) if r[6] is not None else None)
-             for r in rows], schema)
+        from .operators.info_schema import materialized_views_df
+        return materialized_views_df(self, name)
 
     def refresh_replica(self, name: str, key: Optional[str] = None) -> int:
         """Rebuild diverged replica families by re-running the bucketed

@@ -958,7 +958,7 @@ def live_set_digest(provider: "MetadataProvider", table_id: int,
     begin_snapshot) tuples. Resolution-independent on purpose: a catalog
     whose data_path moved keeps valid clustering replicas (their bucket
     dirs are relative to the table path and move with it), and the
-    ``ducklake_clustering_info`` UDTF can compute it provider-only,
+    ``ducklake_clustering_info()`` function can compute it provider-only,
     without a SparkSession. Gating property (shared with the
     resolved-URI definition this replaced in r9): any DML changes the
     row set — insert adds rows, delete/update swap the delete path,

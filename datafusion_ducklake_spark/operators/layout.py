@@ -113,8 +113,9 @@ def clustering_status_rows(p, snapshot_id: int):
     """(schema_name, table_name, kind, key, buckets, n_files, directory,
     current) for every clustering entry — the primary spec and each
     replica family — of every table live at ``snapshot_id``. Provider
-    API only (no SparkSession): serves both the
-    ``ducklake_clustering_info()`` UDTF and the session's
+    API only (no SparkSession): operators/info_schema.clustering_df
+    serves it as ``ducklake_clustering_info()``,
+    information_schema.clustering and the session's
     ``clustering_status``. ``current`` is CATALOG-level currency — for a
     replica, the spec's live-set digest equals the snapshot's (the exact
     gate _replica_df applies; r8 verdict Missing #5: one DML silently

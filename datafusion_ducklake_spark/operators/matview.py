@@ -306,8 +306,9 @@ def matview_status_rows(p, snapshot_id: int):
     """(schema_name, table_name, source, incremental, last_snapshot,
     current_snapshot, current) per materialized view. Provider API only
     — no SparkSession, no file I/O (the clustering_status contract) —
-    so it serves both ``DuckLakeSession.matview_status`` and the
-    ``ducklake_matview_info()`` UDTF from one definition."""
+    so one definition serves ``DuckLakeSession.matview_status``,
+    ``ducklake_matview_info()`` and information_schema.materialized_views
+    (all through operators/info_schema.materialized_views_df)."""
     for schema_name, t in sorted(p.list_all_tables(snapshot_id),
                                  key=lambda st: (st[0], st[1].table_name)):
         raw = p.get_scoped_option(MV_OPTION, None, t.table_id)

@@ -348,9 +348,6 @@ class HybridRunner:
                 self.duck.unregister("__engine_sync")
                 self._known.add(tbl)
         elif case.kind == "query_engine":
-            # (re-)register at the current snapshot — the UDTF closures
-            # capture snapshot_id at registration time
-            self.dl.register_sql_functions()
             ours = self.dl.sql(case.sql).toPandas()
             self._compare_literal(case, ours)
         elif case.kind == "statement":

@@ -143,8 +143,6 @@ class TestStdoutLine:
             "ratio_vs_duckdb_raw": 5.17,
             "ratio_vs_duckdb_floor_adjusted": 2.72,
             "ratio_min_vs_duckdb_min": 5.29,
-            "datafusion_total": None,
-            "ratio_vs_datafusion": None,
             "detail_file": "BENCH_detail.json",
             "suite_delta_note": "x" * note_chars,
             "scaled": {"scale_factor_equivalent": 1.0, "value": 20.5,

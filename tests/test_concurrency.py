@@ -168,8 +168,6 @@ def test_delete_after_concurrent_compact_conflicts(spark, tmp_path):
 
 
 @pytest.mark.slow
-
-
 def test_rewrite_after_concurrent_delete_conflicts(spark, tmp_path):
     from datafusion_ducklake_spark.errors import TransactionConflict
     dl1 = _fresh(spark, tmp_path, "rc")
@@ -251,8 +249,6 @@ def test_transient_lock_retry_honors_max_retry_count(spark, tmp_path):
 
 
 @pytest.mark.slow
-
-
 def test_parallel_deletes_disjoint_files_all_commit(spark, tmp_path):
     """sql/concurrent/file_level_conflict.test (the concurrentloop
     shape): N threads, each deleting rows that live in its OWN

@@ -1,4 +1,4 @@
-"""information_schema + UDTF-surface tests (ports of
+"""information_schema + SQL table-function tests (ports of
 information_schema_test.rs scenarios)."""
 
 from __future__ import annotations
@@ -54,25 +54,23 @@ def test_files(dl):
 
 def test_registered_views_joinable(dl):
     # ref: information_schema joins against data (information_schema_test.rs:170)
-    dl.register_information_schema()
-    df = dl.spark.sql("""
+    df = dl.sql("""
         SELECT t.table_name, f.record_count
-        FROM information_schema_tables t
-        JOIN information_schema_files f USING (table_name)
+        FROM information_schema.tables t
+        JOIN information_schema.files f USING (table_name)
         ORDER BY f.record_count
     """)
     assert [tuple(r) for r in df.collect()] == [("users", 2), ("users", 4)]
 
 
-def test_sql_callable_udtfs(dl):
+def test_sql_callable_metadata_functions(dl):
     # A14 parity: SELECT ... FROM ducklake_snapshots() etc.
-    dl.register_sql_functions()
-    snaps = dl.spark.sql("SELECT * FROM ducklake_snapshots()").collect()
+    snaps = dl.sql("SELECT * FROM ducklake_snapshots()").collect()
     assert [r["snapshot_id"] for r in snaps] == [0, 1, 2, 3, 4]
-    info = dl.spark.sql(
+    info = dl.sql(
         "SELECT table_name, file_count FROM ducklake_table_info()").collect()
     assert [(r["table_name"], r["file_count"]) for r in info] == [("users", 2)]
-    files = dl.spark.sql(
+    files = dl.sql(
         "SELECT * FROM ducklake_list_files() WHERE delete_file_path IS NOT NULL"
     ).collect()
     assert len(files) == 1 and files[0]["delete_count"] == 2
@@ -130,7 +128,7 @@ def test_information_schema_sql_surface(dl):
 def test_information_schema_clustering(spark, tmp_path):
     """r10 (r9 verdict task #6): clustering staleness is SQL-visible as
     information_schema.clustering — same rows and currency flag as the
-    ducklake_clustering_info() UDTF / clustering_status API."""
+    ducklake_clustering_info() function / clustering_status API."""
     from datafusion_ducklake_spark.metadata.writer import CatalogWriter
     db = str(tmp_path / "ic.sqlite")
     w = CatalogWriter.sqlite(db)
@@ -151,7 +149,148 @@ def test_information_schema_clustering(spark, tmp_path):
     rows = s.sql("SELECT current FROM information_schema.clustering"
                  " WHERE table_name = 't'").collect()
     assert [r.current for r in rows] == [False]
-    # agrees with the UDTF by construction (shared row builder)
-    udtf = s.sql("SELECT * FROM ducklake_clustering_info()").collect()
-    assert [(r.kind, r.cluster_key, r.current) for r in udtf] \
+    # agrees with the SQL function by construction (one builder)
+    fn = s.sql("SELECT * FROM ducklake_clustering_info()").collect()
+    assert [(r.kind, r.cluster_key, r.current) for r in fn] \
         == [("replica", "k", False)]
+
+
+# -- the dl.sql resolver -------------------------------------------------
+
+# output schemas of the SQL table functions, as the corpus pins them
+FUNCTION_SCHEMAS = {
+    "ducklake_snapshots":
+        "snapshot_id BIGINT, schema_version BIGINT, snapshot_time STRING, "
+        "author STRING, commit_message STRING, changes STRING",
+    "ducklake_current_snapshot": "snapshot_id BIGINT",
+    "ducklake_last_committed_snapshot": "snapshot_id BIGINT",
+    "ducklake_table_info":
+        "schema_name STRING, table_name STRING, table_id BIGINT, "
+        "file_count BIGINT, file_size_bytes BIGINT, "
+        "delete_file_count BIGINT, delete_file_size_bytes BIGINT",
+    "ducklake_database_size":
+        "data_size_bytes BIGINT, metadata_size_bytes BIGINT, "
+        "file_count BIGINT",
+    "ducklake_list_files":
+        "schema_name STRING, table_name STRING, data_file_path STRING, "
+        "file_size_bytes BIGINT, record_count BIGINT, "
+        "delete_file_path STRING, delete_count BIGINT, "
+        "data_file_footer_size BIGINT",
+    "ducklake_file_column_stats":
+        "data_file_id BIGINT, table_id BIGINT, column_id BIGINT, "
+        "column_size_bytes BIGINT, value_count BIGINT, null_count BIGINT, "
+        "min_value STRING, max_value STRING, contains_nan BOOLEAN, "
+        "extra_stats STRING",
+    "ducklake_table_column_stats":
+        "table_id BIGINT, column_id BIGINT, contains_null BOOLEAN, "
+        "contains_nan BOOLEAN, min_value STRING, max_value STRING, "
+        "extra_stats STRING",
+    "ducklake_options":
+        "option_name STRING, value STRING, scope STRING, scope_entry STRING",
+    "ducklake_clustering_info":
+        "schema_name STRING, table_name STRING, kind STRING, "
+        "cluster_key STRING, buckets BIGINT, n_files BIGINT, "
+        "directory STRING, current BOOLEAN",
+    "ducklake_matview_info":
+        "schema_name STRING, table_name STRING, source_table STRING, "
+        "incremental BOOLEAN, last_snapshot BIGINT, "
+        "current_snapshot BIGINT, current BOOLEAN",
+}
+
+
+@pytest.fixture()
+def fresh(spark, tmp_path):
+    from datafusion_ducklake_spark.metadata.writer import CatalogWriter
+    db = str(tmp_path / "res.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "lake"))
+    w.close()
+    s = DuckLakeSession(spark, db)
+    s.create_table("main.t", spark.range(10).selectExpr("id", "id % 3 AS g"))
+    return s
+
+
+def test_function_schemas(fresh):
+    from pyspark.sql.types import DataType
+    for fn, ddl in FUNCTION_SCHEMAS.items():
+        got = fresh.sql(f"SELECT * FROM {fn}()").schema
+        assert got == DataType.fromDDL(ddl), fn
+
+
+def _record_registrations(spark, monkeypatch) -> list:
+    calls = []
+    for registry in (spark.udf, spark.udtf):
+        monkeypatch.setattr(type(registry), "register",
+                            lambda *a, **k: calls.append(a))
+    return calls
+
+
+def test_functions_follow_the_pin_without_registration(fresh, spark,
+                                                        monkeypatch):
+    """Metadata functions resolve at dl.sql time against the session
+    pin; neither dl.sql nor refresh() registers any Spark function."""
+    calls = _record_registrations(spark, monkeypatch)
+
+    def pinned():
+        cur = fresh.sql("SELECT snapshot_id FROM "
+                        "ducklake_current_snapshot()").collect()[0][0]
+        n = fresh.sql("SELECT count(*) FROM ducklake_snapshots()"
+                      ).collect()[0][0]
+        return cur, n
+
+    cur0, n0 = pinned()
+    fresh.insert_into("main.t", spark.range(3).selectExpr("id", "0 AS g"))
+    assert pinned() == (cur0 + 1, n0 + 1)
+    other = DuckLakeSession(spark, fresh.catalog_path)
+    other.insert_into("main.t", spark.range(2).selectExpr("id", "1 AS g"))
+    assert pinned()[0] == cur0 + 1          # pinned until refreshed
+    fresh.refresh()
+    assert pinned() == (cur0 + 2, n0 + 2)
+    assert calls == []
+
+
+def test_refresh_registers_nothing(fresh, spark, monkeypatch):
+    fresh.sql("SELECT * FROM ducklake_snapshots()").collect()
+    fresh.sql("SELECT st_astext(st_point(1.0, 2.0)) AS w").collect()
+    calls = _record_registrations(spark, monkeypatch)
+    fresh.refresh()
+    fresh.sql("SELECT st_astext(st_point(1.0, 2.0)) AS w").collect()
+    assert calls == []
+
+
+def test_catalog_view_over_function_resolves_in_fresh_session(fresh,
+                                                              spark):
+    fresh.sql("CREATE VIEW snap_count AS "
+              "SELECT count(*) AS n FROM ducklake_snapshots()")
+    n = len(fresh.provider.list_snapshots())
+    # a new Spark session shares nothing registered by the first one
+    other = DuckLakeSession(spark.newSession(), fresh.catalog_path)
+    assert other.sql("SELECT n FROM snap_count").collect()[0][0] == n
+
+
+def test_literal_mentioning_a_relation_is_kept(fresh):
+    row = fresh.sql("SELECT 'see information_schema.tables' AS a, "
+                    "'ducklake_snapshots()' AS b").collect()[0]
+    assert tuple(row) == ("see information_schema.tables",
+                          "ducklake_snapshots()")
+
+
+def test_literal_naming_an_unknown_view_is_kept(fresh):
+    row = fresh.sql("SELECT 'information_schema.nope' AS s").collect()[0]
+    assert row["s"] == "information_schema.nope"
+
+
+def test_unknown_information_schema_view_is_typed(fresh):
+    from datafusion_ducklake_spark.errors import TableNotFound
+    with pytest.raises(TableNotFound, match="information_schema.nope"):
+        fresh.sql("SELECT * FROM information_schema.nope")
+
+
+def test_view_body_is_persisted_verbatim(fresh):
+    body = "SELECT table_name FROM information_schema.tables"
+    fresh.sql(f"CREATE VIEW tv AS {body}")
+    stored = [v.sql for v in fresh.provider.list_views(
+        fresh.catalog.schema("main").meta.schema_id,
+        fresh.catalog.snapshot_id)]
+    assert stored == [body]
+    assert [r[0] for r in fresh.sql("SELECT * FROM tv").collect()] == ["t"]

@@ -383,8 +383,6 @@ def test_cdc_over_interval(iv_session):
 
 
 @pytest.mark.slow
-
-
 def test_stream_inserts_over_interval(iv_session, spark):
     """The catalog-driven insert stream reads files through pyarrow —
     interval columns must arrive decoded (interval_decode_arrow)."""

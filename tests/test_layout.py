@@ -173,8 +173,6 @@ def test_cluster_by_fast_path_survives_reopen(spark, clustered_dl):
 
 
 @pytest.mark.slow
-
-
 def test_cluster_by_later_dml_falls_back_correctly(spark, tmp_path):
     """Any later write invalidates the fast path (live set != clustered
     export) — scans fall back to the plain path with correct values."""

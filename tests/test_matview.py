@@ -124,7 +124,6 @@ class TestLifecycle:
             "WHERE id < 50 GROUP BY tag"))
 
     @pytest.mark.slow
-
     def test_null_agg_values_in_delta(self, dl, spark):
         # an all-NULL delta SUM must leave the group's total UNCHANGED
         # (SUM ignores NULLs) — the NULL-identity combine, not tgt+NULL
@@ -167,7 +166,6 @@ class TestLifecycle:
         assert _rows(dl.table("main.mvj")) == _rows(dl.sql(sql))
 
     @pytest.mark.slow
-
     def test_consecutive_incremental_refreshes(self, dl, spark):
         dl.create_materialized_view("main.mv", MV_SQL)
         for i in (1, 2, 3):
@@ -253,7 +251,6 @@ class TestSql:
         ).collect()
         assert out[0]["mode"] == "incremental"
         assert _rows(dl.table("main.mv2")) == _recompute(dl)
-        dl.register_sql_functions()
         info = dl.sql("SELECT * FROM ducklake_matview_info()").collect()
         assert len(info) == 1 and info[0]["table_name"] == "mv2" \
             and info[0]["current"] is True

@@ -21,7 +21,6 @@ def dl(spark, tmp_path):
 
 
 def test_database_size(dl):
-    dl.register_sql_functions()
     row = dl.sql("SELECT * FROM ducklake_database_size()").collect()[0]
     assert row["data_size_bytes"] > 0
     assert row["metadata_size_bytes"] > 0
@@ -97,7 +96,6 @@ def test_rename_on_legacy_pk_catalog(dl, spark):
 def test_sql_functions_track_refresh(dl, spark):
     """ducklake_current_snapshot()/snapshots() must follow the session
     pin across writes (review fix: stale UDTF closures)."""
-    dl.register_sql_functions()
     before = dl.sql(
         "SELECT snapshot_id FROM ducklake_current_snapshot()"
     ).collect()[0][0]

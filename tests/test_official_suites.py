@@ -32,8 +32,6 @@ def test_official_tpch_all_22(spark):
 
 
 @pytest.mark.slow
-
-
 def test_official_tpcds_all_99(spark):
     r = run_suite(spark, "tpcds", 0.01)
     assert r["failed"] == [], r["failed"]

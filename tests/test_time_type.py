@@ -368,8 +368,6 @@ def test_encrypted_time_roundtrip(spark, tmp_path):
 
 
 @pytest.mark.slow
-
-
 def test_time_survives_compaction(dl, spark):
     dl.create_table("main.tt", _time_df(spark))
     dl.insert_into("main.tt", spark.createDataFrame(
