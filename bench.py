@@ -244,6 +244,15 @@ def _floor_adjusted_ratios(mins: dict, floor: float, duck_min: dict):
     return adjusted, at_floor
 
 
+def _suite_note(wall: dict, sf, cpus: int) -> str:
+    """The timed suite's identity: query count, a digest of the query
+    names, scale, cores and repetitions."""
+    import hashlib
+    digest = hashlib.sha1("\n".join(sorted(wall)).encode()).hexdigest()[:8]
+    return (f"{len(wall)} queries (names sha1 {digest}), sf {sf}, "
+            f"{cpus} cpus, {ITERATIONS} reps; per-query data in detail_file")
+
+
 def _ratio(spark_times: dict, duck_times: dict) -> float | None:
     common = [n for n in spark_times if n in duck_times]
     if not common:
@@ -589,42 +598,13 @@ def main() -> None:
         "ratio_vs_duckdb_floor_adjusted": _ratio(adjusted, duck),
         "ratio_min_vs_duckdb_min": _ratio(wall_min, duck_min),
         "detail_file": "BENCH_detail.json",
-        # r5 verdict #8: keep round-over-round ratios interpretable when
-        # suite composition or methodology changes. The stdout copy is a
-        # POINTER, not the note itself: the driver's stdout capture
-        # window is ~2000 chars and the r6-r9 lines overflowed it (the
-        # driver recorded parsed=null every round) — the full note lives
-        # in the detail sidecar, which is a file and has no budget.
-        "suite_delta_note": (
-            "r10 (optimization round): same 27 queries, floor "
-            "methodology and tiers as r9 + an events-clustered "
-            "sub-tier; no oracle changed; full delta note in "
-            "detail_file / OPTIMIZATION_r10.md"),
+        # keep run-over-run ratios interpretable: derived from the suite
+        # itself, so two artifacts compare like for like exactly when
+        # their notes match (the detail sidecar carries the same note)
+        "suite_delta_note": _suite_note(wall, sf, cpus),
     }
     detail = {
         **headline,
-        "suite_delta_note": (
-            "r10 (optimization round): same 27 queries, floor "
-            "methodology and tiers as r9, plus a new events-clustered "
-            "sub-tier (cb_top_users over events clustered on user_id). "
-            "No oracle changed. Plan changes: q05/q08 move the "
-            "broadcast custkey restriction INTO orders before the "
-            "fact-fact join; ds_monthly_brand_rank broadcasts the "
-            "(p_partkey,p_brand) projection instead of shuffling on "
-            "partkey; the clustered/family/events sub-tiers run with "
-            "the runtime bloom filter OFF (no shuffle to shrink — "
-            "plans/r10/). Honesty fix: cb_top_users' bench-path domain "
-            "snapshot is re-collected on EVERY timed build — the "
-            "round-10 build session's fingerprint-keyed cache was "
-            "removed, so its per-rep walls now include the domain "
-            "pass and are ~0.3 s/rep higher at SF10 than the cached "
-            "artifact they replace. Reporting fix (r10): the stdout "
-            "line is now printed with compact separators, carries this "
-            "pointer note instead of the full text, and summarizes the "
-            "clustered sub-tier as med/max instead of per-query dicts "
-            "(all per-query data unchanged, in this sidecar) so the "
-            "whole line fits the driver's ~2000-char capture window "
-            "and parses again; no timed value or methodology changed"),
         "queries": wall,
         "queries_plan_sec": plan,
         "queries_floor_adjusted": adjusted,

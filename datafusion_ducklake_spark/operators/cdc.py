@@ -12,11 +12,14 @@ Reference parity (SURVEY.md §2A A11-A12, §3.3):
   minus the superseded previous delete file's positions, semi-joined back
   onto the data file, with ``change_type='delete'``.
 
-Spark-first: position math is executor-side DataFrame algebra
-(exceptAll + semi join on _metadata.row_index), not a driver-side
-3-phase stream machine. Files added in the same snapshot share one scan
-(constant columns allow grouping), so plan size is O(snapshots), not
-O(files).
+Spark-first: each delta's newly deleted positions are one bitset
+difference on the driver (current delete vector AND NOT the superseded
+one, both cached per delete file — sources/scan.deletion_vector), and a
+codegen'd bit test on _metadata.row_index selects the data file's rows
+inside the scan stage: no join and no extra job per delta, in place of
+the reference's 3-phase stream machine. Files added in the same snapshot
+share one scan (constant columns allow grouping), so plan size is
+O(snapshots), not O(files).
 """
 
 from __future__ import annotations
@@ -28,7 +31,8 @@ from pyspark.sql import functions as F
 
 from ..errors import InvalidConfig, TableNotFound
 from ..paths import to_spark_uri
-from ..sources.scan import (POS_COL, ResolvedFile, _read_parquet,
+from ..sources.scan import (POS_COL, ResolvedFile, bitset_filter,
+                            deletion_vector, positions_bitset,
                             read_file_with_pos, scan_table)
 
 CDC_SNAPSHOT_COL = "snapshot_id"
@@ -308,24 +312,23 @@ def table_deletions(session, name: str, start: int, end: int) -> DataFrame:
             table.table_path, d.data_path, d.data_path_is_relative))
 
         if d.cur_path is not None:
-            cur_uri = to_spark_uri(resolver.file_path(
-                table.table_path, d.cur_path, d.cur_path_is_relative))
-            cur = spark.read.parquet(cur_uri).select(F.col("pos").alias(POS_COL))
+            cur = deletion_vector(spark, to_spark_uri(resolver.file_path(
+                table.table_path, d.cur_path, d.cur_path_is_relative)),
+                d.record_count, data_uri)
+        elif d.record_count is None:
+            raise InvalidConfig(
+                f"whole-file delete without record_count for {d.data_path}")
         else:
             # whole-file delete: every position 0..record_count is deleted
             # (ref: table_deletions.rs:498-513)
-            if d.record_count is None:
-                raise InvalidConfig(
-                    f"whole-file delete without record_count for {d.data_path}")
-            cur = spark.range(d.record_count).select(F.col("id").alias(POS_COL))
-
+            cur = ~positions_bitset((), d.record_count)
+            if d.record_count % 64:
+                cur[-1] = (1 << (d.record_count % 64)) - 1
         if d.prev_path is not None:
-            prev_uri = to_spark_uri(resolver.file_path(
-                table.table_path, d.prev_path, d.prev_path_is_relative))
-            prev = spark.read.parquet(prev_uri).select(F.col("pos").alias(POS_COL))
-            newly = cur.exceptAll(prev)
-        else:
-            newly = cur
+            cur = cur & ~deletion_vector(spark, to_spark_uri(
+                resolver.file_path(table.table_path, d.prev_path,
+                                   d.prev_path_is_relative)),
+                d.record_count, data_uri)
 
         mapped_cols, hive_values = table.mapping_transform(
             d.mapping_id, data_uri)
@@ -341,17 +344,13 @@ def table_deletions(session, name: str, start: int, end: int) -> DataFrame:
         data = read_file_with_pos(spark, read_schema, ResolvedFile(
             data_uri, mapping_id=d.mapping_id,
             mapped_cols=mapped_cols, hive_values=hive_values))
-        # No forced broadcast: `newly` can approach record_count rows for a
-        # large delete (a 10 GB delta would be shipped to every executor).
-        # AQE downgrades the shuffle join to broadcast when it IS small —
-        # same policy as the grouped dirty scan (scan.py).
         if rid_in_file:
             rowid = F.col(ROWID_FILE_COL)
         elif d.row_id_start is not None:
             rowid = (F.lit(d.row_id_start) + F.col(POS_COL)).cast("long")
         else:
             rowid = F.lit(None).cast("long")
-        part = (data.join(newly, POS_COL, "left_semi")
+        part = (bitset_filter(spark, data, {None: cur}, keep_set=True)
                 .withColumn("rowid", rowid)
                 .drop(POS_COL))
         if rid_in_file:

@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 
 from ..errors import InvalidConfig, MergeActionError
 from ..metadata.writer import DataFileInfo
-from ..sources.scan import (_configure_fieldid_read, _read_parquet,
-                            _split_by_field_ids)
+from ..sources.scan import (DELETE_POS_SCHEMA, _configure_fieldid_read,
+                            _read_parquet, _split_by_field_ids)
 from ..table_writer import (_catalog_writer, _enforce_not_null,
                             _finalize_hadoop, _finalize_local,
                             _local_readable, _raise_if_constraint,
@@ -171,25 +171,10 @@ def _live_with_filepos(session, handle, with_rowid: bool = False
     if mapped:
         # name-mapped add_files tables (renames / hive injection): apply
         # the mapping so DML conditions see the LIVE column names
-        from pyspark.sql import types as T
-
-        from ..sources.scan import (_era_clip_type, _mark_metadata,
-                                    apply_mapping)
-        types = {f.name: f.dataType
-                 for f in handle.spark_schema.fields}
-        marks = {f.name: _mark_metadata(f)
-                 for f in handle.spark_schema.fields}
+        from ..sources.scan import apply_mapping, mapped_read_schema
         groups: dict[tuple, list] = {}
         for f in mapped:
-            clipped = {dst: _era_clip_type(types[dst], f.begin_snapshot)
-                       for _src, dst in f.mapped_cols}
-            eff = tuple((src, dst) for src, dst in f.mapped_cols
-                        if clipped[dst] is not None)
-            from ..sources.scan import _strip_nested_metadata
-            rs = T.StructType([T.StructField(
-                src, _strip_nested_metadata(clipped[dst]), True,
-                metadata=marks[dst])
-                for src, dst in eff])
+            eff, rs = mapped_read_schema(handle.spark_schema, f)
             groups.setdefault(
                 (eff, f.hive_values or (), rs.simpleString()),
                 [rs, []])[1].append(f)
@@ -272,12 +257,13 @@ def _existing_deletes(session, handle) -> Optional[DataFrame]:
         # non-unique delete basenames (never true for UUID-named files):
         # per-file branches with literal tags
         plain_dels = reduce(DataFrame.unionByName, (
-            session.spark.read.parquet(d)
+            session.spark.read.schema(DELETE_POS_SCHEMA).parquet(d)
             .select(F.lit(name_of(a)).alias(FILE_COL),
                     F.col("pos").alias(POS_COL))
             for d, a in pairs))
     else:
-        dels = (session.spark.read.parquet(*[d for d, _ in pairs])
+        dels = (session.spark.read.schema(DELETE_POS_SCHEMA)
+                .parquet(*[d for d, _ in pairs])
                 .select(F.element_at(
                     F.split(F.col("_metadata.file_path"), "/"),
                     -1).alias("__del_file"),

@@ -12,18 +12,21 @@ Reference parity (SURVEY.md §2A A1-A6):
   rewrite files.
 
 Spark-first design:
-- Deletes become an executor-side anti-join on ``_metadata.row_index``
-  (file-local physical row position, stable across row-group splits) —
-  no driver materialization of position sets, unlike the reference's
-  planning-thread HashSet (table.rs:302-363); scales to arbitrarily large
-  delete files.
+- Deletes become a bitset test on ``_metadata.row_index`` (file-local
+  physical row position, stable across row-group splits). Like the
+  reference's planning-thread position set (table.rs:302-363), each
+  delete file is read ONCE on the driver into an LRU-cached int64 bitset
+  (``record_count/64`` words) that rides into the plan as one array
+  literal: a codegen'd test inside the scan stage, no exchange, no job.
 - Clean files go through ONE ``spark.read.parquet(*paths)`` so Spark gets
   file-level parallelism and partition coalescing in a single source node.
-- Dirty files: if few (≤ MAX_PER_FILE_BRANCHES), one anti-join per file
-  (mirrors the reference plan shape); if many, a single scan of all dirty
-  files joined against a single union of all delete files keyed by file
-  name — O(1) plan nodes, the shape you want at 100 TB with thousands of
-  deleted-from files.
+- Dirty files: if few (≤ MAX_PER_FILE_BRANCHES), they join the clean
+  files' scan, and one filter tests each dirty file's rows (told apart by
+  ``_metadata.file_name``) against that file's bitset — the plan of a
+  clean table plus a filter; if many, a single scan of all dirty files
+  anti-joined against a single scan of all delete files keyed by file
+  name — O(1) plan nodes and no driver-side position sets, the shape you
+  want at 100 TB with thousands of deleted-from files.
 - Renames: Spark's native field-id resolution
   (spark.sql.parquet.fieldId.read.enabled) keyed by the catalog column_id
   stamped into the read schema's ``parquet.field.id`` metadata; files
@@ -39,18 +42,18 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import CatalogCorruption
 
-# Dirty files at or below this count scan as per-file branches with a
-# broadcast anti-join of that file's delete positions; above it, one
-# grouped scan + one shuffle anti-join (bounded plan size). Measured at
-# SF1-equivalent (6M-row file, 1.5M deleted positions): per-file broadcast
-# 1.18 s vs grouped 2.34 s min-of-3 — the broadcast path stays the default
-# below the threshold.
+# Dirty files at or below this count are filtered inside the clean files'
+# scan by their driver-held bitsets (plan size and the driver's bitset
+# memory grow with the count); above it, one grouped scan + one shuffle
+# anti-join keeps both O(1). One 6M-row file with 1.5M deleted positions
+# (local[2], 4-vCPU VM, min of 3 warm runs, delete file re-read each
+# run): bitset filter 0.96 s, grouped path 8.35 s.
 MAX_PER_FILE_BRANCHES = 16
 
 # Hive-mapped files: at or below this many distinct partition-value
@@ -135,25 +138,18 @@ def _strip_nested_metadata(dt: T.DataType) -> T.DataType:
     return dt
 
 
-def _strip_field_ids(schema: T.StructType) -> T.StructType:
-    """Drop ALL field-id metadata (top-level and nested) — the read
-    schema for files resolved by name."""
-    fields = []
-    for f in schema.fields:
-        md = {k: v for k, v in (f.metadata or {}).items()
-              if k != "parquet.field.id"}
-        fields.append(T.StructField(f.name, _strip_nested_metadata(f.dataType),
-                                    f.nullable, metadata=md))
-    return T.StructType(fields)
-
-
-def _strip_nested_ids(schema: T.StructType) -> T.StructType:
-    """Keep top-level field ids, drop nested ones — the read schema for
-    files written before nested-id stamping (their structs resolve by
-    name; a nested-id request over them would NULL out every field)."""
+def _strip_field_ids(schema: T.StructType,
+                     keep_top: bool = False) -> T.StructType:
+    """Drop field-id metadata: ALL of it — the read schema for files
+    resolved by name — or, with ``keep_top``, only the nested ids — the
+    read schema for files written before nested-id stamping (their
+    structs resolve by name; a nested-id request over them would NULL out
+    every field)."""
     return T.StructType([
-        T.StructField(f.name, _strip_nested_metadata(f.dataType),
-                      f.nullable, metadata=f.metadata)
+        T.StructField(f.name, _strip_nested_metadata(f.dataType), f.nullable,
+                      metadata=f.metadata if keep_top else {
+                          k: v for k, v in (f.metadata or {}).items()
+                          if k != "parquet.field.id"})
         for f in schema.fields])
 
 
@@ -168,6 +164,12 @@ def _schema_has_nested_ids(schema: T.StructType) -> bool:
             return walk(dt.keyType) or walk(dt.valueType)
         return False
     return any(walk(f.dataType) for f in schema.fields)
+
+
+def _local_path(uri: str) -> Optional[str]:
+    """Filesystem path of a local URI; None for object-store URIs."""
+    path = uri[len("file://"):] if uri.startswith("file://") else uri
+    return None if "://" in path else path
 
 
 _FIELD_ID_CACHE: dict[str, str] = {}
@@ -195,8 +197,8 @@ def _special_columns(uri: str) -> frozenset:
     """One cached footer read answering both reserved-column probes."""
     if uri in _ROWID_COL_CACHE:
         return _ROWID_COL_CACHE[uri]
-    path = uri[len("file://"):] if uri.startswith("file://") else uri
-    if "://" in path:
+    path = _local_path(uri)
+    if path is None:
         # object store: trust the registration convention (rowid present;
         # snapshot column cannot be assumed — flush is local-write only)
         return frozenset({ROWID_FILE_COL})
@@ -223,8 +225,8 @@ def _field_id_level(uri: str) -> str:
     global PROBE_COUNT
     if uri in _FIELD_ID_CACHE:
         return _FIELD_ID_CACHE[uri]
-    path = uri[len("file://"):] if uri.startswith("file://") else uri
-    if "://" in path:
+    path = _local_path(uri)
+    if path is None:
         return "full"
     try:
         import pyarrow.parquet as pq
@@ -287,7 +289,7 @@ def _split_by_field_ids(schema: T.StructType, files: list["ResolvedFile"]
             # fields resolve by name (correct for add/drop/promote; a
             # nested field renamed or dropped-and-readded AFTER such
             # files were written would need a rewrite first)
-            groups.append((_strip_nested_ids(schema), unknown))
+            groups.append((_strip_field_ids(schema, keep_top=True), unknown))
         else:
             groups.append((schema, unknown))
     if named:
@@ -300,8 +302,8 @@ def _check_local_exists(uri: str) -> None:
     referenced file that is gone must fail loudly as corruption, never
     silently drop rows. Cheap check for local paths only; object-store
     URIs surface at execution time."""
-    path = uri[len("file://"):] if uri.startswith("file://") else uri
-    if "://" not in path and not os.path.exists(path):
+    path = _local_path(uri)
+    if path is not None and not os.path.exists(path):
         raise CatalogCorruption(
             f"Catalog corruption: file referenced by catalog does not exist: {uri}")
 
@@ -512,76 +514,119 @@ def _read_parquet(spark: SparkSession, schema: T.StructType,
         for c in df.columns])
 
 
-def _read_delete_positions(spark: SparkSession, delete_uri: str) -> DataFrame:
-    """Delete files are Parquet with schema (file_path VARCHAR, pos INT64);
-    file_path is documentation-only (ref: table.rs:82-92, 297-305)."""
-    _check_local_exists(delete_uri)
-    return spark.read.parquet(delete_uri).select(F.col("pos").alias(POS_COL))
+# Positional-delete files are (file_path VARCHAR, pos BIGINT); file_path
+# is documentation-only (ref: table.rs:82-92, 297-305). Every delete-file
+# read names this schema, so Spark reads only ``pos`` and runs no
+# schema-inference job.
+DELETE_POS_SCHEMA = "pos BIGINT"
 
-
-# Per-delete-file bitset-words cache: the words DataFrame is persisted in
-# executor memory (≤ record_count/64 rows of 16 B) so repeated scans of a
-# snapshot skip the delete-parquet re-read + re-aggregation. Delete files
-# are immutable — DML writes a NEW uuid-named delete file per transaction —
-# so the URI keys content; the applicationId guards against stale plans
-# after a session restart. LRU-bounded with unpersist on evict.
-_WORDS_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+# Deletion vectors held on the driver: bitset words per delete file (files
+# are immutable — DML writes a NEW uuid-named one per transaction), LRU
+# over at most _WORDS_CACHE_MAX files of record_count/64 int64s each.
+_DELETION_VECTORS: "OrderedDict[str, object]" = OrderedDict()
 _WORDS_CACHE_MAX = 64
-WORD_COL = "__ducklake_delw"
-BITS_COL = "__ducklake_delbits"
-# Broadcast the words side only while it's provably small: ≤ record_count/64
-# rows. Past ~512M rows/file let AQE pick the join strategy instead.
-MAX_BROADCAST_WORD_ROWS = 8_000_000
 
 
-def _delete_words(spark: SparkSession, delete_uri: str) -> DataFrame:
-    """One data file's positional deletes as 64-row bitset words:
-    (pos >> 6, bit_or(1 << (pos & 63))). Entirely executor-side — the
-    shuffle moves at most record_count/64 rows, never the raw position
-    list, and nothing is collected to the driver (the contract the
-    reference gets from native selection vectors,
-    delete_filter.rs:154-203)."""
-    key = (spark.sparkContext.applicationId, delete_uri)
-    hit = _WORDS_CACHE.get(key)
-    if hit is not None:
-        _WORDS_CACHE.move_to_end(key)
-        return hit
-    words = (spark.read.parquet(delete_uri)
-             .select(F.shiftright(F.col("pos"), 6).alias(WORD_COL),
-                     F.expr("shiftleft(1L, CAST(pos % 64 AS INT))")
-                     .alias("__b"))
-             .groupBy(WORD_COL).agg(F.expr("bit_or(__b)").alias(BITS_COL))
-             .persist())
-    _WORDS_CACHE[key] = words
-    while len(_WORDS_CACHE) > _WORDS_CACHE_MAX:
-        _, old = _WORDS_CACHE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # session of a cached entry already stopped
-            pass
+def positions_bitset(positions, n_rows: int):
+    """int64 bitset over ``n_rows`` rows: word ``pos >> 6``, bit
+    ``pos & 63``. Positions outside [0, n_rows) are dropped before
+    allocation: they delete nothing (ref: delete_filter.rs:211-344), and a
+    stray 2**40 must not size the array."""
+    import numpy as np
+    pos = np.asarray(positions, dtype=np.int64)
+    pos = pos[(pos >= 0) & (pos < n_rows)]
+    words = np.zeros(-(-n_rows // 64), dtype=np.int64)
+    np.bitwise_or.at(words, pos >> 6, np.left_shift(np.int64(1), pos & 63))
     return words
 
 
-def _apply_delete_filter(spark: SparkSession, data: DataFrame,
-                         f: "ResolvedFile") -> DataFrame:
-    """MOR positional-delete filter for ONE file's scan branch over
-    ``POS_COL``: broadcast-join the 64×-compressed delete bitset words on
-    pos >> 6, then a codegen'd bit test. The broadcast build side is
-    ≤ record_count/64 rows (vs every deleted position for a raw anti-join)
-    — 3× faster at SF1 (1.5M deletes over 6M rows: 0.25 s vs 0.77 s) and
-    the advantage grows with delete density."""
-    _check_local_exists(f.delete_uri)
-    words = _delete_words(spark, f.delete_uri)
-    small = (f.record_count is None
-             or (f.record_count >> 6) <= MAX_BROADCAST_WORD_ROWS)
-    if small:
-        words = F.broadcast(words)
-    joined = (data.withColumn(WORD_COL, F.shiftright(F.col(POS_COL), 6))
-              .join(words, WORD_COL, "left"))
-    mask = F.expr(f"shiftleft(1L, CAST({POS_COL} % 64 AS INT))")
-    return (joined.filter(F.col(BITS_COL).isNull()
-                          | (F.col(BITS_COL).bitwiseAND(mask) == 0))
-            .drop(WORD_COL, BITS_COL))
+def deletion_vector(spark: SparkSession, delete_uri: str,
+                    record_count: Optional[int], data_uri: str):
+    """One delete file's bitset over its data file, read once on the
+    driver: pyarrow for local files, one Arrow collect for object stores.
+    Without a catalog ``record_count`` the data file's footer sizes it."""
+    _check_local_exists(delete_uri)
+    words = _DELETION_VECTORS.get(delete_uri)
+    if words is None:
+        path = _local_path(delete_uri)
+        if path is not None:
+            import pyarrow.parquet as pq
+            pos = pq.ParquetFile(path).read(columns=["pos"]).column("pos")
+        else:
+            pos = (spark.read.schema(DELETE_POS_SCHEMA).parquet(delete_uri)
+                   .toArrow().column("pos"))
+        if record_count is None:
+            jvm = spark._jvm
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    jvm.org.apache.hadoop.fs.Path(data_uri),
+                    spark._jsc.hadoopConfiguration()))
+            try:
+                record_count = reader.getRecordCount()
+            finally:
+                reader.close()
+        words = positions_bitset(pos.drop_null().to_numpy(), record_count)
+        words.flags.writeable = False     # shared by every later scan
+        _DELETION_VECTORS[delete_uri] = words
+        while len(_DELETION_VECTORS) > _WORDS_CACHE_MAX:
+            _DELETION_VECTORS.popitem(last=False)
+    _DELETION_VECTORS.move_to_end(delete_uri)
+    return words
+
+
+def _words_literal(spark: SparkSession, words) -> Column:
+    """``words`` as ONE array<bigint> literal, built with a constant number
+    of py4j calls (the bytes cross once, as a byte[])."""
+    nio = spark._jvm.java.nio
+    longs = nio.LongBuffer.allocate(len(words))
+    longs.put(nio.ByteBuffer.wrap(words.astype("<i8").tobytes())
+              .order(nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer())
+    return Column(spark._jvm.org.apache.spark.sql.functions.lit(
+        longs.array()))
+
+
+def bitset_filter(spark: SparkSession, data: DataFrame, bitsets: dict,
+                  keep_set: bool = False) -> DataFrame:
+    """Filter rows on their file-local position against a deletion
+    bitset. ``bitsets`` maps a data file's name, as ``_metadata.file_name``
+    reports it, to its words — or holds the one key None: words for every
+    row of a one-file frame carrying ``POS_COL``. A row whose bit is set is
+    dropped (``keep_set``: only such rows are kept); rows of files not
+    named pass (``keep_set``: are dropped). The optimizer folds the
+    literals into the filter, which runs inside the scan stage: no join,
+    no exchange, no extra job."""
+    if not bitsets:
+        return data
+    pos = POS_COL if None in bitsets else "_metadata.row_index"
+    cols, tests = {}, []
+    for i, words in enumerate(bitsets.values()):
+        w = f"__ducklake_w{i}"
+        cols[w] = _words_literal(spark, words)
+        clear = (f"({pos} >= {64 * len(words)} OR (element_at({w}, "
+                 f"CAST(shiftright({pos}, 6) + 1 AS INT)) & "
+                 f"shiftleft(1L, CAST({pos} % 64 AS INT))) = 0)")
+        tests.append(f"NOT {clear}" if keep_set else clear)
+    if None in bitsets:
+        cond = tests[0]
+    else:
+        def quote(name):    # a SQL string literal
+            return "'{}'".format(
+                name.replace("\\", "\\\\").replace("'", "\\'"))
+        cond = ("CASE _metadata.file_name "
+                + " ".join(f"WHEN {quote(n)} THEN {t}"
+                           for n, t in zip(bitsets, tests))
+                + f" ELSE {str(not keep_set).lower()} END")
+    return data.withColumns(cols).filter(cond).drop(*cols)
+
+
+def _scan_name(spark: SparkSession, uri: str) -> str:
+    """A data file's name as Spark's ``_metadata.file_name`` reports it:
+    the last segment of its URL-encoded path."""
+    name = uri.rsplit("/", 1)[-1]
+    if re.fullmatch(r"[A-Za-z0-9._=+-]+", name):
+        return name
+    return spark._jvm.org.apache.hadoop.fs.Path(uri).toUri().getRawPath() \
+        .rsplit("/", 1)[-1]
 
 
 def _with_pos(df: DataFrame) -> DataFrame:
@@ -656,26 +701,10 @@ def scan_table(spark: SparkSession, schema: T.StructType,
     if mapped:
         import dataclasses
         types = {fld.name: fld.dataType for fld in schema.fields}
-        # TIME/INTERVAL physical-read marks ride into the mapped read
-        # schema per destination column (see _mark_metadata) — the marks
-        # survive _strip_field_ids in the recursive scan, so _read_parquet
-        # applies the identical decode on this path.
-        marks = {fld.name: _mark_metadata(fld) for fld in schema.fields}
-        # Era clipping (no-resurrection contract for name-mapped files):
-        # a nested field whose IDENTITY postdates the file's registration
-        # is removed from that file's read schema — a same-named column
-        # in the file belongs to a dropped identity and must read NULL.
         # Files group by (effective mapping, hive shape, clipped schema).
         by_shape: dict[tuple, list] = {}
         for f in mapped:
-            clipped = {dst: _era_clip_type(types[dst], f.begin_snapshot)
-                       for _src, dst in f.mapped_cols}
-            eff = tuple((src, dst) for src, dst in f.mapped_cols
-                        if clipped[dst] is not None)
-            rs = T.StructType([T.StructField(
-                src, _strip_nested_metadata(clipped[dst]), True,
-                metadata=marks[dst])
-                for src, dst in eff])
+            eff, rs = mapped_read_schema(schema, f)
             key = (eff,
                    tuple((h[0], h[1]) for h in (f.hive_values or ())),
                    rs.simpleString())
@@ -757,20 +786,30 @@ def scan_table(spark: SparkSession, schema: T.StructType,
         if with_rowid:
             parts.append(_scan_with_rowid(spark, group_schema, group))
             continue
-        clean = [f for f in group if f.delete_uri is None]
-        dirty = [f for f in group if f.delete_uri is not None]
-        if clean:
-            parts.append(_read_parquet(spark, group_schema,
-                                       [f.data_uri for f in clean]))
-        if dirty:
+        # one scan per batch of distinct file names — a single batch unless
+        # a catalog repeats a name in different directories (add_files)
+        batches: list[dict] = []
+        for f in group:
+            name = _scan_name(spark, f.data_uri)
+            batch = next((b for b in batches if name not in b), None)
+            if batch is None:
+                batches.append(batch := {})
+            batch[name] = f
+        for batch in batches:
+            dirty = {n: f for n, f in batch.items() if f.delete_uri}
             if len(dirty) <= MAX_PER_FILE_BRANCHES:
-                for f in dirty:
-                    data = _with_pos(_read_parquet(spark, group_schema,
-                                                   [f.data_uri]))
-                    parts.append(
-                        _apply_delete_filter(spark, data, f).drop(POS_COL))
-            else:
-                parts.append(_scan_dirty_grouped(spark, group_schema, dirty))
+                parts.append(bitset_filter(spark, _read_parquet(
+                    spark, group_schema, [f.data_uri for f in batch.values()]),
+                    {n: deletion_vector(spark, f.delete_uri, f.record_count,
+                                        f.data_uri)
+                     for n, f in dirty.items()}))
+                continue
+            clean = [f for f in batch.values() if f.delete_uri is None]
+            if clean:
+                parts.append(_read_parquet(spark, group_schema,
+                                           [f.data_uri for f in clean]))
+            parts.append(_scan_dirty_grouped(spark, group_schema,
+                                             list(dirty.values())))
 
     return reduce(DataFrame.unionByName, parts)
 
@@ -831,7 +870,8 @@ def _scan_with_rowid(spark: SparkSession, schema: T.StructType,
         if snap_in_file:
             data = data.drop(SNAPSHOT_FILE_COL)
         if f.delete_uri is not None:
-            data = _apply_delete_filter(spark, data, f)
+            data = bitset_filter(spark, data, {None: deletion_vector(
+                spark, f.delete_uri, f.record_count, f.data_uri)})
         parts.append(data.drop(POS_COL))
     return reduce(DataFrame.unionByName, parts)
 
@@ -870,6 +910,26 @@ def _era_clip_type(dt: T.DataType, file_begin: Optional[int]
             return None
         return T.MapType(k, v, dt.valueContainsNull)
     return dt
+
+
+def mapped_read_schema(schema: T.StructType, f: ResolvedFile
+                       ) -> tuple[tuple, T.StructType]:
+    """A name-mapped file's effective mapping and read schema: its mapped
+    in-file columns under their at-add-time names.
+
+    - TIME/INTERVAL physical-read marks ride in per destination column
+      (see _mark_metadata), so _read_parquet applies the same decode.
+    - Era clipping (no-resurrection contract): a nested field whose
+      IDENTITY postdates the file's registration is removed — a
+      same-named column in the file belongs to a dropped identity and
+      must read NULL; a column clipped to nothing leaves the mapping."""
+    clipped = {dst: _era_clip_type(schema[dst].dataType, f.begin_snapshot)
+               for _src, dst in f.mapped_cols}
+    eff = tuple((src, dst) for src, dst in f.mapped_cols
+                if clipped[dst] is not None)
+    return eff, T.StructType([T.StructField(
+        src, _strip_nested_metadata(clipped[dst]), True,
+        metadata=_mark_metadata(schema[dst])) for src, dst in eff])
 
 
 def _conform_by_name(expr, src_dt: T.DataType, dst_dt: T.DataType):
@@ -948,32 +1008,12 @@ def read_file_with_pos(spark: SparkSession, schema: T.StructType,
     """One data file with its file-local position column, mapping-aware —
     the read primitive for CDC paths that do their own position algebra."""
     if rf.mapped_cols is None:
-        # a name-mapped file with an identity mapping still has no field
-        # ids — read by name (stripped schema), not by field id; other
-        # files follow the same tri-level probe as scan_table so a
-        # pre-nested-id file under a struct-evolved schema resolves
-        # nested fields by name instead of reading NULL
-        if rf.mapping_id is not None:
-            s = _strip_field_ids(schema)
-        else:
-            level = _field_id_level(rf.data_uri)
-            if level == "none":
-                s = _strip_field_ids(schema)
-            elif level == "top" and _schema_has_nested_ids(schema):
-                s = _strip_nested_ids(schema)
-            else:
-                s = schema
+        # the same field-id / by-name resolution as scan_table (an
+        # identity-mapped file has no field ids; a pre-nested-id file
+        # under a struct-evolved schema resolves nested fields by name)
+        [(s, _)] = _split_by_field_ids(schema, [rf])
         return _with_pos(_read_parquet(spark, s, [rf.data_uri]))
-    types = {fld.name: fld.dataType for fld in schema.fields}
-    marks = {fld.name: _mark_metadata(fld) for fld in schema.fields}
-    clipped = {dst: _era_clip_type(types[dst], rf.begin_snapshot)
-               for _src, dst in rf.mapped_cols}
-    eff = tuple((src, dst) for src, dst in rf.mapped_cols
-                if clipped[dst] is not None)
-    read_schema = T.StructType(
-        [T.StructField(src, _strip_nested_metadata(clipped[dst]), True,
-                       metadata=marks[dst])
-         for src, dst in eff])
+    eff, read_schema = mapped_read_schema(schema, rf)
     df = _with_pos(_read_parquet(spark, read_schema, [rf.data_uri]))
     hive_lits = tuple((h[0], h[2]) for h in (rf.hive_values or ()))
     return apply_mapping(df, schema, eff, hive_lits, [POS_COL])
@@ -1088,7 +1128,8 @@ def _scan_encrypted(spark: SparkSession, schema: T.StructType,
     if plain:
         for f in plain:
             _check_local_exists(f.delete_uri)
-        dels = (spark.read.parquet(*[f.delete_uri for f in plain])
+        dels = (spark.read.schema(DELETE_POS_SCHEMA)
+                .parquet(*[f.delete_uri for f in plain])
                 .select(F.col("pos").alias(POS_COL),
                         F.element_at(F.split(F.col("_metadata.file_path"), "/"),
                                      -1).alias("__del_file")))
@@ -1151,17 +1192,9 @@ def _scan_dirty_grouped(spark: SparkSession, schema: T.StructType,
 
     Join key is the file *name* (not full path): delete parquet's own
     file_path column is unreliable (documentation-only), so we map each
-    delete file to its data file via the catalog pairing, keyed by name.
-    DuckLake data files are UUID-named so names are unique; if a catalog
-    somehow violates that we fall back to per-file branches."""
+    delete file to its data file via the catalog pairing, keyed by name
+    (unique: scan_table batches files by distinct name)."""
     name_of = lambda uri: uri.rsplit("/", 1)[-1]  # noqa: E731
-    if len({name_of(f.data_uri) for f in dirty}) != len(dirty):
-        return reduce(DataFrame.unionByName, (
-            _with_pos(_read_parquet(spark, schema, [f.data_uri]))
-            .join(F.broadcast(_read_delete_positions(spark, f.delete_uri)),
-                  POS_COL, "left_anti")
-            .drop(POS_COL)
-            for f in dirty))
 
     data = _with_pos(
         _read_parquet(spark, schema, [f.data_uri for f in dirty])
@@ -1172,7 +1205,8 @@ def _scan_dirty_grouped(spark: SparkSession, schema: T.StructType,
     # data-file name with a broadcast catalog pairing
     for f in dirty:
         _check_local_exists(f.delete_uri)
-    dels = (spark.read.parquet(*[f.delete_uri for f in dirty])
+    dels = (spark.read.schema(DELETE_POS_SCHEMA)
+            .parquet(*[f.delete_uri for f in dirty])
             .select(F.col("pos").alias(POS_COL),
                     F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
                     .alias("__del_file")))

@@ -657,6 +657,8 @@ def _survivor_run_df(session, file_rows: list, dirty_pairs: list):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from .sources.scan import DELETE_POS_SCHEMA
+
     spark = session.spark
     fmap = spark.createDataFrame(
         file_rows, "__data STRING, __grp LONG, __rstart LONG, __rcount LONG")
@@ -664,7 +666,8 @@ def _survivor_run_df(session, file_rows: list, dirty_pairs: list):
         pair_df = spark.createDataFrame(
             [(d.rsplit("/", 1)[-1], b) for d, b in dirty_pairs],
             "__del STRING, __data STRING")
-        dels = (spark.read.parquet(*[d for d, _ in dirty_pairs])
+        dels = (spark.read.schema(DELETE_POS_SCHEMA)
+                .parquet(*[d for d, _ in dirty_pairs])
                 .select(F.element_at(
                     F.split(F.col("_metadata.file_path"), "/"), -1)
                     .alias("__del"), "pos")

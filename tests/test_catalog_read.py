@@ -27,6 +27,25 @@ def ids(df):
     return sorted(r["id"] for r in df.collect())
 
 
+def pa_table(rows, schema):
+    import pyarrow as pa
+    cols = list(zip(*rows))
+    return pa.table([pa.array(c, f.type) for c, f in zip(cols, schema)],
+                    schema=schema)
+
+
+def _users_table(root):
+    """An empty main.t(id, name, email) created at snapshot 1."""
+    cat = FixtureCatalog(root)
+    s1 = cat.snapshot()
+    sid = cat.schema("main", s1)
+    tid = cat.table(sid, "main", "t", s1)
+    cat.column(tid, 1, "id", "int32", 0, s1)
+    cat.column(tid, 2, "name", "varchar", 1, s1)
+    cat.column(tid, 3, "email", "varchar", 2, s1)
+    return cat, cat.table_dir("main", "t"), tid
+
+
 class TestBasicScan:
     def test_full_scan_with_deletes(self, dl):
         # live at s4: file1 minus positions {1,3} + file2
@@ -138,6 +157,40 @@ class TestEdgeCases:
         cat.delete_file(tid, fid, dname, dsize, 2, s2)
         dl = DuckLakeSession(spark, cat.db_path)
         assert ids(dl.table("main.t")) == [1]
+
+    def test_out_of_range_positions_do_not_size_the_bitset(
+            self, spark, tmp_path, monkeypatch):
+        # a stray 2**40 (or any position >= record_count) is dropped
+        # before the bitset is allocated: the filter's array literal
+        # stays at ceil(record_count / 64) words
+        from datafusion_ducklake_spark.sources import scan
+        lengths = []
+        real = scan._words_literal
+        monkeypatch.setattr(scan, "_words_literal",
+                            lambda sp, w: lengths.append(len(w))
+                            or real(sp, w))
+        cat, tdir, tid = _users_table(tmp_path)
+        rows = [(i, f"u{i}", "x") for i in range(70)]
+        fname, fsize = write_data_file(tdir, rows)
+        fid = cat.data_file(tid, fname, fsize, 1, len(rows))
+        s2 = cat.snapshot()
+        dname, dsize = write_delete_file(tdir, fname, [2, 69, 70, 2 ** 40])
+        cat.delete_file(tid, fid, dname, dsize, 4, s2)
+        got = ids(DuckLakeSession(spark, cat.db_path).table("main.t"))
+        assert got == [i for i in range(70) if i not in (2, 69)]
+        assert lengths and max(lengths) <= -(-len(rows) // 64)
+
+    def test_unknown_record_count_falls_back_to_footer(self, spark,
+                                                       tmp_path):
+        cat, tdir, tid = _users_table(tmp_path)
+        rows = [(i, f"u{i}", "x") for i in range(5)]
+        fname, fsize = write_data_file(tdir, rows)
+        fid = cat.data_file(tid, fname, fsize, 1, None)
+        s2 = cat.snapshot()
+        dname, dsize = write_delete_file(tdir, fname, [0, 4, 2 ** 40])
+        cat.delete_file(tid, fid, dname, dsize, 3, s2)
+        assert ids(DuckLakeSession(spark, cat.db_path)
+                   .table("main.t")) == [1, 2, 3]
 
     def test_missing_delete_file_is_corruption(self, spark, tmp_path):
         # ref: missing_delete_file_tests.rs:41-92
@@ -375,3 +428,117 @@ def test_scan_plan_statistics_track_catalog_sizes(spark, tmp_path):
     # magnitude proves the estimate is file-grounded, not a default
     assert 0 < plan_bytes <= catalog_bytes * 20
     assert plan_bytes >= catalog_bytes // 20
+
+
+class TestDeleteBitset:
+    """The merge-on-read filter: each dirty file's delete positions are a
+    driver-held bitset tested inside the scan stage."""
+
+    @staticmethod
+    def _one_dirty_file(tmp_path, n_rows, positions, row_group_size=None):
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tests.ducklake_fixtures import users_arrow_schema
+        cat, tdir, tid = _users_table(tmp_path)
+        fname = "ducklake-data-0.parquet"
+        path = os.path.join(tdir, fname)
+        pq.write_table(pa.table({
+            "id": pa.array(range(n_rows), pa.int32()),
+            "name": pa.array([f"u{i}" for i in range(n_rows)], pa.string()),
+            "email": pa.array([f"e{i % 7}" for i in range(n_rows)],
+                              pa.string())}, schema=users_arrow_schema()),
+            path, row_group_size=row_group_size)
+        fid = cat.data_file(tid, fname, os.path.getsize(path), 1, n_rows,
+                            row_id_start=0)
+        s2 = cat.snapshot()
+        dname, dsize = write_delete_file(tdir, fname, positions)
+        cat.delete_file(tid, fid, dname, dsize, len(positions), s2)
+        return cat, path, os.path.join(tdir, dname)
+
+    def test_dirty_read_runs_as_many_jobs_as_clean(self, spark, tmp_path):
+        # regression guard: the delete filter adds no Spark job to a read
+        cat, _, _ = self._one_dirty_file(tmp_path, 1000, [3, 500, 999])
+        sc = spark.sparkContext
+
+        def jobs(snapshot, group):
+            dl = DuckLakeSession(spark, cat.db_path, snapshot_id=snapshot)
+            sc.setJobGroup(group, group)
+            try:
+                row = dl.sql("SELECT count(*) AS n, sum(id) AS s "
+                             "FROM main.t").collect()[0]
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return (row["n"], row["s"]), \
+                len(sc.statusTracker().getJobIdsForGroup(group))
+
+        clean, clean_jobs = jobs(1, "bitset-clean")
+        dirty, dirty_jobs = jobs(2, "bitset-dirty")
+        assert clean == (1000, sum(range(1000)))
+        assert dirty == (997, sum(range(1000)) - 3 - 500 - 999)
+        assert dirty_jobs == clean_jobs
+
+    def test_word_boundary_positions(self, spark, tmp_path):
+        # bits 0 and 63 of word 0, both ends of word 1, a fully deleted
+        # word 2 (positions 128..191) and the file's last row
+        n = 250
+        gone = {0, 63, 64, 127, n - 1} | set(range(128, 192))
+        cat, _, _ = self._one_dirty_file(tmp_path, n, sorted(gone))
+        dl = DuckLakeSession(spark, cat.db_path)
+        live = [i for i in range(n) if i not in gone]
+        assert ids(dl.table("main.t")) == live
+        # the rowid scan filters through the same bitset (row_id_start 0:
+        # rowid = position = id)
+        assert sorted(tuple(r) for r in dl.table(
+            "main.t", with_rowid=True).select("id", "rowid").collect()) \
+            == [(i, i) for i in live]
+
+    def test_multi_row_group_pushed_filter_matches_duckdb(self, spark,
+                                                          tmp_path):
+        # positions are file-global across row groups, so a pushed-down
+        # filter on another column (row-group skipping) must not shift them
+        import duckdb
+        n = 5000
+        positions = sorted(set(range(0, n, 3)) | set(range(1000, 1400)))
+        cat, data, dels = self._one_dirty_file(tmp_path, n, positions,
+                                               row_group_size=512)
+        got = sorted(tuple(r) for r in DuckLakeSession(
+            spark, cat.db_path).sql(
+            "SELECT id, name FROM main.t WHERE email = 'e3' "
+            "AND id >= 1200").collect())
+        want = sorted(duckdb.sql(
+            f"SELECT id, name FROM read_parquet('{data}', "
+            f"file_row_number = true) WHERE email = 'e3' AND id >= 1200 "
+            f"AND file_row_number NOT IN "
+            f"(SELECT pos FROM read_parquet('{dels}'))").fetchall())
+        assert got == want and len(want) > 100
+
+    def test_awkward_and_repeated_file_names(self, spark, tmp_path):
+        # one scan tells dirty files apart by Spark's (URL-encoded) file
+        # name: names needing encoding, and one name in two directories,
+        # must each get their own delete file
+        import os
+
+        import pyarrow.parquet as pq
+
+        from tests.ducklake_fixtures import users_arrow_schema
+        cat, tdir, tid = _users_table(tmp_path)
+        layout = [("a/part 0%.parquet", [0, 2]), ("b/part 0%.parquet", [1]),
+                  ("c/part 0%.parquet", None), ("it's.parquet", [3])]
+        want = []
+        for i, (rel, dels) in enumerate(layout):
+            os.makedirs(os.path.dirname(os.path.join(tdir, rel)),
+                        exist_ok=True)
+            rows = [(10 * i + j, f"u{j}", "x") for j in range(4)]
+            pq.write_table(pa_table(rows, users_arrow_schema()),
+                           os.path.join(tdir, rel))
+            fid = cat.data_file(tid, rel, 1, 1, len(rows))
+            if dels is not None:
+                dname, dsize = write_delete_file(tdir, rel, dels)
+                cat.delete_file(tid, fid, dname, dsize, len(dels), 1)
+            want += [r[0] for j, r in enumerate(rows)
+                     if j not in (dels or [])]
+        assert ids(DuckLakeSession(spark, cat.db_path).table("main.t")) \
+            == sorted(want)

@@ -101,6 +101,71 @@ class TestTableDeletions:
         assert rows == [(2, s3), (3, s3)]
 
 
+def test_superseding_and_whole_file_deltas_match_duckdb(spark, tmp_path):
+    """Newly deleted rows per delta are (current bitset AND NOT superseded
+    bitset), whole-file deletes included; checked through table_deletions
+    and ducklake_table_changes against DuckDB reading the same files."""
+    import os
+
+    import duckdb
+    cat = FixtureCatalog(tmp_path)
+    s1 = cat.snapshot()
+    sid = cat.schema("main", s1)
+    tid = cat.table(sid, "main", "t", s1)
+    cat.column(tid, 1, "id", "int32", 0, s1)
+    cat.column(tid, 2, "name", "varchar", 1, s1)
+    cat.column(tid, 3, "email", "varchar", 2, s1)
+    tdir = cat.table_dir("main", "t")
+    a, a_size = write_data_file(tdir, [(i, f"a{i}", "x") for i in range(200)])
+    b, b_size = write_data_file(
+        tdir, [(1000 + i, f"b{i}", "y") for i in range(150)])
+    a_id = cat.data_file(tid, a, a_size, s1, 200)
+    b_id = cat.data_file(tid, b, b_size, s1, 150)
+
+    s2 = cat.snapshot()
+    p1 = [0, 5, 63, 64, 130]
+    a1, size = write_delete_file(tdir, a, p1)
+    a1_id = cat.delete_file(tid, a_id, a1, size, len(p1), s2)
+    q1 = [1, 2, 149]
+    b1, size = write_delete_file(tdir, b, q1)
+    cat.delete_file(tid, b_id, b1, size, len(q1), s2)
+
+    s3 = cat.snapshot()   # superseding cumulative delete of file a
+    cat.conn.execute("UPDATE ducklake_delete_file SET end_snapshot = ? "
+                     "WHERE delete_file_id = ?", (s3, a1_id))
+    cat.conn.commit()
+    p2 = sorted(set(p1) | {6, 127, 128, 199} | set(range(70, 90)))
+    a2, size = write_delete_file(tdir, a, p2)
+    cat.delete_file(tid, a_id, a2, size, len(p2), s3)
+
+    s4 = cat.snapshot()   # file b dropped whole
+    cat.end_data_file(b_id, s4)
+
+    def duck(data, cur, prev, snap):
+        path = lambda n: os.path.join(tdir, n)  # noqa: E731
+        where = (f"file_row_number IN (SELECT pos FROM "
+                 f"read_parquet('{path(cur)}'))" if cur else "true")
+        if prev:
+            where += (f" AND file_row_number NOT IN (SELECT pos FROM "
+                      f"read_parquet('{path(prev)}'))")
+        return [(r[0], snap) for r in duckdb.sql(
+            f"SELECT id FROM read_parquet('{path(data)}', "
+            f"file_row_number = true) WHERE {where}").fetchall()]
+
+    want = sorted(duck(a, a1, None, s2) + duck(b, b1, None, s2)
+                  + duck(a, a2, a1, s3) + duck(b, None, b1, s4))
+    dl = DuckLakeSession(spark, cat.db_path)
+    got = sorted((r["id"], r["snapshot_id"])
+                 for r in dl.table_deletions("main.t", s1, s4).collect())
+    assert got == want
+    assert len(want) == len(p2) + 150
+    changes = dl.sql(
+        f"SELECT id, snapshot_id, change_type "
+        f"FROM ducklake_table_changes('main.t', {s1}, {s4})").collect()
+    assert sorted((r["id"], r["snapshot_id"]) for r in changes) == want
+    assert {r["change_type"] for r in changes} == {"delete"}
+
+
 class TestBigDeltaPlan:
     def test_large_delete_delta_is_not_force_broadcast(self, spark, tmp_path):
         """A delete delta can approach the table's record_count; the plan
