@@ -22,7 +22,7 @@ import zlib
 from functools import cached_property
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .errors import InvalidConfig, SchemaNotFound, TableNotFound
@@ -502,22 +502,10 @@ class DuckLakeTable:
             files = self.prune_files(prune_filters)
 
         if with_virtual:
-            # virtual-column scan (sql/virtualcolumns/): per-file
-            # branches stamp filename/file_row_number/file_index/
-            # snapshot_id; initial_default fill uses the per-row
-            # snapshot_id directly instead of file bucketing
-            df = scan_table(self.spark, self.spark_schema, files,
-                            with_virtual=True)
-            types = {f.name: f.dataType for f in self.spark_schema.fields}
-            for c in self.columns:
-                if c.initial_default is not None \
-                        and c.begin_snapshot is not None:
-                    df = df.withColumn(
-                        c.column_name,
-                        F.when(F.col("snapshot_id") < F.lit(c.begin_snapshot),
-                               F.expr(c.initial_default)
-                               .cast(types[c.column_name]))
-                        .otherwise(F.col(c.column_name)))
+            # virtual-column scan (sql/virtualcolumns/)
+            df = self.fill_initial_defaults(
+                scan_table(self.spark, self.spark_schema, files,
+                           with_virtual=True), F.col("snapshot_id"))
             rows = self.inlined_rows()
             if rows:
                 from pyspark.sql.types import StringType
@@ -604,6 +592,24 @@ class DuckLakeTable:
         if inlined is not None:
             df = df.unionByName(inlined)
         return df
+
+    def fill_initial_defaults(self, df: DataFrame,
+                              snapshot: Column) -> DataFrame:
+        """initial_default fill keyed by each row's insertion
+        ``snapshot`` (sql/default/ corpus): a row inserted before a
+        defaulted column existed reads the default, not NULL. The
+        virtual-column read and DML both carry that snapshot per row,
+        so neither needs the plain read's file bucketing."""
+        from pyspark.sql import functions as F
+        types = {f.name: f.dataType for f in self.spark_schema.fields}
+        return df.withColumns({
+            c.column_name: F.when(snapshot < F.lit(c.begin_snapshot),
+                                  F.expr(c.initial_default)
+                                  .cast(types[c.column_name]))
+            .otherwise(F.col(c.column_name))
+            for c in self.columns
+            if c.initial_default is not None
+            and c.begin_snapshot is not None})
 
     def prune_files(self, filters: list[tuple]) -> list[ResolvedFile]:
         """Catalog-level file pruning from ``ducklake_file_column_stats``

@@ -12,10 +12,12 @@ back identically from DuckDB. Corpus parity: sql/delete/, sql/update/,
 sql/merge/ in the reference's vendored sqllogictests.
 
 Scale shape (100 TB discipline):
-- match: ONE declarative scan with the file basename + ``row_index``
-  attached; existing delete positions are anti-joined away; the predicate
-  is pushed into the parquet scan by Catalyst. No driver-side row
-  movement.
+- match: the table's shared scan (sources/scan.scan_table with the
+  virtual columns): existing deletes already filtered, rowid attached,
+  and each row keyed by its resolved data-file URI (``filename``) and
+  file-local position (``file_row_number``); initial_default filled as
+  for a SELECT; the predicate is pushed into the parquet scan by
+  Catalyst. No driver-side row movement.
 - write: matched positions group by file; each task writes its file's
   cumulative delete parquet via pyarrow.fs (executor-side, object-store
   capable) and returns a ONE-ROW manifest. Only the manifest reaches the
@@ -31,9 +33,7 @@ Scale shape (100 TB discipline):
 
 from __future__ import annotations
 
-import os
 import uuid
-from functools import reduce
 from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame
@@ -41,15 +41,11 @@ from pyspark.sql import functions as F
 
 from ..errors import InvalidConfig, MergeActionError
 from ..metadata.writer import DataFileInfo
-from ..sources.scan import (DELETE_POS_SCHEMA, _configure_fieldid_read,
-                            _read_parquet, _split_by_field_ids)
+from ..sources.scan import FILE_COL, POS_COL, delete_positions, scan_table
 from ..table_writer import (_catalog_writer, _enforce_not_null,
                             _finalize_hadoop, _finalize_local,
                             _local_readable, _raise_if_constraint,
                             _with_field_ids, column_stats_of)
-
-FILE_COL = "__ducklake_dml_file"
-POS_COL = "__ducklake_dml_pos"
 
 NEW_COL = "__ducklake_dml_new"
 
@@ -107,197 +103,20 @@ def rowids_preservable(handle) -> bool:
 
 def _live_with_filepos(session, handle, with_rowid: bool = False
                        ) -> DataFrame:
-    """The table's LIVE rows (existing deletes applied) with the data file
-    basename and file-local position attached. PARQUET rows only — callers
-    handle inlined rows via _match_inlined. ``with_rowid`` (callers must
-    have checked rowids_preservable) additionally attaches each row's
-    exact rowid: start+pos for catalog-started files, the in-file column
-    for UPDATE-rewritten ones."""
-    from ..sources.scan import ROWID_FILE_COL, file_has_rowid_column
-    _configure_fieldid_read(session.spark)
-    files = handle.files
-    encd = [f for f in files if f.encryption_key is not None]
-    files = [f for f in files if f.encryption_key is None]
-    ridcol = [f for f in files if with_rowid and f.row_id_start is None
-              and f.mapped_cols is None
-              and file_has_rowid_column(f.data_uri)]
-    _ridcol_uris = {f.data_uri for f in ridcol}
-    files = [f for f in files if f.data_uri not in _ridcol_uris]
-    plain = [f for f in files if f.mapped_cols is None]
-    mapped = [f for f in files if f.mapped_cols is not None]
-    parts = []
-    if ridcol:
-        from pyspark.sql import types as T
-        rid_schema = T.StructType(
-            list(handle.spark_schema.fields)
-            + [T.StructField(ROWID_FILE_COL, T.LongType(), True)])
-        # tri-level footer probe, same as scan_table: an UPDATE-rewritten
-        # file written by Spark carries field ids, but a duckdb-staged
-        # rewrite of an INTERVAL table (r9) carries none — reading the
-        # id-stamped schema over an id-less file returns NULL columns
-        for group_schema, group in _split_by_field_ids(rid_schema, ridcol):
-            df = _read_parquet(session.spark, group_schema,
-                               [f.data_uri for f in group])
-            parts.append(
-                df.withColumnRenamed(ROWID_FILE_COL, "__rid_file")
-                .withColumn(
-                    FILE_COL,
-                    F.element_at(F.split(
-                        F.col("_metadata.file_path"), "/"), -1))
-                .withColumn(POS_COL, F.col("_metadata.row_index")))
-    if encd:
-        # encrypted data files: executor-side PME decode with positions
-        # (sql/encryption/ corpus — DELETE over an ENCRYPTED catalog)
-        from pyspark.sql import types as T
-
-        from ..sources.encryption import decode_with_positions
-        out_schema = T.StructType(
-            list(handle.spark_schema.fields)
-            + [T.StructField(POS_COL, T.LongType(), False),
-               T.StructField(FILE_COL, T.StringType(), False)])
-        parts.append(decode_with_positions(
-            session.spark,
-            [(f.data_uri, f.encryption_key,
-              f.data_uri.rsplit("/", 1)[-1]) for f in encd],
-            out_schema))
-    for group_schema, group in _split_by_field_ids(handle.spark_schema,
-                                                   plain):
-        df = _read_parquet(session.spark, group_schema,
-                           [f.data_uri for f in group])
-        parts.append(df.withColumn(
-            FILE_COL,
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        ).withColumn(POS_COL, F.col("_metadata.row_index")))
-    if mapped:
-        # name-mapped add_files tables (renames / hive injection): apply
-        # the mapping so DML conditions see the LIVE column names
-        from ..sources.scan import apply_mapping, mapped_read_schema
-        groups: dict[tuple, list] = {}
-        for f in mapped:
-            eff, rs = mapped_read_schema(handle.spark_schema, f)
-            groups.setdefault(
-                (eff, f.hive_values or (), rs.simpleString()),
-                [rs, []])[1].append(f)
-        for (mcols, hive, _sig), (read_schema, group) in sorted(
-                groups.items(), key=lambda kv: repr(kv[0])):
-            df = (_read_parquet(session.spark, read_schema,
-                                [f.data_uri for f in group])
-                  .withColumn(FILE_COL,
-                              F.element_at(
-                                  F.split(F.col("_metadata.file_path"),
-                                          "/"), -1))
-                  .withColumn(POS_COL, F.col("_metadata.row_index")))
-            hive_lits = tuple((h[0], h[2]) for h in hive)
-            parts.append(apply_mapping(df, handle.spark_schema, mcols,
-                                       hive_lits, [FILE_COL, POS_COL]))
-    if not parts:
-        # every live row is inlined (or the table is empty): the parquet
-        # half of the DML matches nothing
-        from pyspark.sql import types as T
-        empty_schema = T.StructType(
-            list(handle.spark_schema.fields)
-            + [T.StructField(FILE_COL, T.StringType(), True),
-               T.StructField(POS_COL, T.LongType(), True)]
-            + ([T.StructField("rowid", T.LongType(), True)]
-               if with_rowid else []))
-        return session.spark.createDataFrame([], empty_schema)
-    scanned = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts) \
-        if with_rowid else reduce(DataFrame.unionByName, parts)
-    if with_rowid:
-        if "__rid_file" not in scanned.columns:
-            scanned = scanned.withColumn("__rid_file",
-                                         F.lit(None).cast("long"))
-        starts = [(f.data_uri.rsplit("/", 1)[-1], f.row_id_start)
-                  for f in plain + mapped if f.row_id_start is not None]
-        if starts:
-            smap = session.spark.createDataFrame(
-                starts, f"{FILE_COL} STRING, __rid_start LONG")
-            scanned = scanned.join(F.broadcast(smap), FILE_COL, "left")
-        else:
-            scanned = scanned.withColumn("__rid_start",
-                                         F.lit(None).cast("long"))
-        scanned = (scanned.withColumn(
-            "rowid",
-            F.coalesce(F.col("__rid_file"),
-                       (F.col("__rid_start") + F.col(POS_COL)).cast("long")))
-            .drop("__rid_file", "__rid_start"))
-    dels = _existing_deletes(session, handle)
-    if dels is None:
-        return scanned
-    return scanned.join(dels, [FILE_COL, POS_COL], "left_anti")
-
-
-def _existing_deletes(session, handle) -> Optional[DataFrame]:
-    """(data file basename, pos) across all current delete files, or None.
-
-    Keys deletes to their data file via the CATALOG pairing
-    (delete-file name -> data-file name, joined on the delete parquet's
-    own ``_metadata.file_path``) — never via the delete parquet's
-    ``file_path`` COLUMN, which the DuckLake contract treats as
-    documentation-only (ref: src/table.rs:84-85; a DuckDB- or
-    Iceberg-style writer stores absolute paths/URIs there, and trusting
-    it silently resurrects previously-deleted rows). Mirrors
-    sources/scan._scan_dirty_grouped."""
-    name_of = lambda uri: uri.rsplit("/", 1)[-1]  # noqa: E731
-    enc_pairs = [(f.delete_uri, f.delete_encryption_key, f.data_uri)
-                 for f in handle.files
-                 if f.delete_uri is not None
-                 and f.delete_encryption_key is not None]
-    pairs = [(f.delete_uri, f.data_uri) for f in handle.files
-             if f.delete_uri is not None
-             and f.delete_encryption_key is None]
-    enc_dels = None
-    if enc_pairs:
-        enc_dels = _decode_encrypted_deletes(
-            session.spark, [(d, k, name_of(a)) for d, k, a in enc_pairs])
-    if not pairs:
-        return enc_dels
-    if len({name_of(d) for d, _ in pairs}) != len(pairs):
-        # non-unique delete basenames (never true for UUID-named files):
-        # per-file branches with literal tags
-        plain_dels = reduce(DataFrame.unionByName, (
-            session.spark.read.schema(DELETE_POS_SCHEMA).parquet(d)
-            .select(F.lit(name_of(a)).alias(FILE_COL),
-                    F.col("pos").alias(POS_COL))
-            for d, a in pairs))
-    else:
-        dels = (session.spark.read.schema(DELETE_POS_SCHEMA)
-                .parquet(*[d for d, _ in pairs])
-                .select(F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"),
-                    -1).alias("__del_file"),
-                    F.col("pos").alias(POS_COL)))
-        pairing = session.spark.createDataFrame(
-            [(name_of(d), name_of(a)) for d, a in pairs],
-            f"`__del_file` STRING, `{FILE_COL}` STRING")
-        plain_dels = (dels.join(F.broadcast(pairing), "__del_file")
-                      .select(FILE_COL, POS_COL))
-    if enc_dels is None:
-        return plain_dels
-    return plain_dels.unionByName(enc_dels)
-
-
-def _decode_encrypted_deletes(spark, triples: list[tuple]) -> DataFrame:
-    """(delete_uri, key, data-file basename) → (FILE_COL, POS_COL) rows,
-    decrypted executor-side (encrypted-catalog DML: the existing delete
-    files are PME parquet too)."""
-    def decode(pdf_iter):
-        import pandas as pd
-
-        from ..sources.encryption import decode_key, read_encrypted_arrow
-        for pdf in pdf_iter:
-            for path, key, tag in zip(pdf["path"], pdf["key"], pdf["tag"]):
-                tbl = read_encrypted_arrow(path, decode_key(key))
-                out = pd.DataFrame({FILE_COL: tag,
-                                    POS_COL: tbl.column("pos").to_pandas()})
-                yield out
-
-    pairs = spark.createDataFrame(
-        triples, "path STRING, key STRING, tag STRING") \
-        .repartition(max(len(triples), 1))
-    return pairs.mapInPandas(decode,
-                             f"`{FILE_COL}` STRING, `{POS_COL}` LONG")
+    """The table's LIVE parquet rows (callers handle inlined rows via
+    _match_inlined) as the shared scan reads them — deletes applied,
+    initial_default filled — with the data-file URI (FILE_COL) and
+    file-local position (POS_COL) attached. ``with_rowid`` (callers must
+    have checked rowids_preservable) keeps each row's exact ``rowid``."""
+    df = scan_table(session.spark, handle.spark_schema, handle.files,
+                    with_virtual=True)
+    # positional rename: a user column may share a virtual column's name
+    names = [f.name for f in handle.spark_schema.fields]
+    df = df.toDF(*names, "rowid", FILE_COL, POS_COL, "__file_index",
+                 "__snapshot")
+    df = handle.fill_initial_defaults(df, F.col("__snapshot"))
+    return df.select(*names, *(["rowid"] if with_rowid else []),
+                     FILE_COL, POS_COL)
 
 
 def _pyarrow_dest(table_path: str):
@@ -381,13 +200,12 @@ def _write_delete_parquets(spark, cumulative: DataFrame,
 
 
 def _register_deletes(writer, handle, snapshot_id: int, manifest) -> None:
-    by_name = {os.path.basename(f.path):
-               (f.data_file_id,
-                f.delete_file.delete_file_id
-                if f.delete_file is not None else None)
-               for f in handle._raw_files}
+    by_uri = {rf.data_uri: (f.data_file_id,
+                            f.delete_file.delete_file_id
+                            if f.delete_file is not None else None)
+              for f, rf in zip(handle._raw_files, handle.files)}
     for row in sorted(manifest, key=lambda r: r["file_name"]):
-        entry = by_name.get(row["file_name"])
+        entry = by_uri.get(row["file_name"])
         if entry is None:
             raise InvalidConfig(
                 f"delete manifest references unknown data file "
@@ -928,7 +746,7 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
     (UPDATE) skips staging when the manifest shows zero matches, since
     its append derives from the matched rows."""
     cumulative = matched_pos.withColumn(NEW_COL, F.lit(1))
-    dels = _existing_deletes(session, handle)
+    dels = delete_positions(session.spark, handle.files)
     if dels is not None:
         cumulative = cumulative.unionByName(
             dels.withColumn(NEW_COL, F.lit(0)))

@@ -238,35 +238,6 @@ def read_encrypted_distributed(spark: SparkSession,
     return pairs.mapInPandas(decode_batches, schema)
 
 
-def decode_with_positions(spark: SparkSession,
-                          files: list[tuple[str, str, str]],
-                          out_schema) -> DataFrame:
-    """Decrypt (path, key, tag) triples executor-side; each row carries
-    its file-local position and the tag (the DML live-scan contract:
-    FILE_COL = data file basename, POS_COL = physical row index).
-    ``out_schema`` must be the payload schema + (pos LONG, tag STRING)
-    as its LAST two fields, named by the caller."""
-    pos_name = out_schema.fields[-2].name
-    tag_name = out_schema.fields[-1].name
-    payload = [f.name for f in out_schema.fields[:-2]]
-
-    def decode(pdf_iter):
-        for pdf in pdf_iter:
-            for path, key, tag in zip(pdf["path"], pdf["key"], pdf["tag"]):
-                tbl = read_encrypted_arrow(path, decode_key(key))
-                out = tbl.to_pandas()
-                if payload:
-                    out = out[[c for c in payload if c in out.columns]]
-                out[pos_name] = range(len(out))
-                out[tag_name] = tag
-                yield out
-
-    pairs = spark.createDataFrame(files, "path STRING, key STRING, "
-                                         "tag STRING") \
-        .repartition(max(len(files), 1))
-    return pairs.mapInPandas(decode, out_schema)
-
-
 def write_encrypted_distributed(df: DataFrame, dest_dir: str) -> list[dict]:
     """Write a DataFrame as PME-encrypted parquet, one file per non-empty
     partition, written INSIDE executor tasks (the driver never touches

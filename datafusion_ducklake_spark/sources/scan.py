@@ -24,9 +24,17 @@ Spark-first design:
   files' scan, and one filter tests each dirty file's rows (told apart by
   ``_metadata.file_name``) against that file's bitset — the plan of a
   clean table plus a filter; if many, a single scan of all dirty files
-  anti-joined against a single scan of all delete files keyed by file
-  name — O(1) plan nodes and no driver-side position sets, the shape you
-  want at 100 TB with thousands of deleted-from files.
+  anti-joined against delete_positions, a single scan of all delete
+  files keyed by data-file URI — O(1) plan nodes and no driver-side
+  position sets, the shape you want at 100 TB with thousands of
+  deleted-from files.
+- rowid and the virtual columns (filename, file_row_number, file_index,
+  snapshot_id) ride the same scan: per-file catalog values are map
+  literals looked up by ``_metadata.file_name``, the position is
+  ``_metadata.row_index``. This one scan is every reader's live-row
+  source — plain reads, DML matching (operators/dml.py), compaction and
+  merge-adjacent — so one delete filter, one rowid rule and one file key
+  serve them all; this module is the only reader of ``row_index``.
 - Renames: Spark's native field-id resolution
   (spark.sql.parquet.fieldId.read.enabled) keyed by the catalog column_id
   stamped into the read schema's ``parquet.field.id`` metadata; files
@@ -64,6 +72,7 @@ MAX_HIVE_VALUE_BRANCHES = 32
 
 POS_COL = "__ducklake_pos"
 PATH_COL = "__ducklake_path"
+FILE_COL = "__ducklake_file"
 
 # Explicit per-row id column inside a data file (DuckLake: a data file
 # registered with row_id_start NULL carries its row ids as a column —
@@ -173,7 +182,7 @@ def _local_path(uri: str) -> Optional[str]:
 
 
 _FIELD_ID_CACHE: dict[str, str] = {}
-_ROWID_COL_CACHE: dict[str, frozenset] = {}
+_ROWID_COL_CACHE: dict[str, bool] = {}
 PROBE_COUNT = 0  # test hook: number of actual footer reads performed
 
 
@@ -182,35 +191,18 @@ def file_has_rowid_column(uri: str) -> bool:
     explicit ROWID_FILE_COL? Only consulted for files registered with
     row_id_start NULL — the DuckLake convention for UPDATE-rewritten
     files; a NULL-start file WITHOUT the column keeps the targeted
-    rowid-scan error."""
-    return ROWID_FILE_COL in _special_columns(uri)
-
-
-def file_has_snapshot_column(uri: str) -> bool:
-    """Footer probe (same cached read as file_has_rowid_column): does
-    this file carry the per-row SNAPSHOT_FILE_COL (flushed inlined
-    data)?"""
-    return SNAPSHOT_FILE_COL in _special_columns(uri)
-
-
-def _special_columns(uri: str) -> frozenset:
-    """One cached footer read answering both reserved-column probes."""
-    if uri in _ROWID_COL_CACHE:
-        return _ROWID_COL_CACHE[uri]
-    path = _local_path(uri)
-    if path is None:
-        # object store: trust the registration convention (rowid present;
-        # snapshot column cannot be assumed — flush is local-write only)
-        return frozenset({ROWID_FILE_COL})
-    try:
-        import pyarrow.parquet as pq
-        names = set(pq.read_schema(path).names)
-        have = frozenset(names & {ROWID_FILE_COL, SNAPSHOT_FILE_COL})
-    except Exception:
-        have = frozenset()
-    _ROWID_COL_CACHE[path if path != uri else uri] = have
-    _ROWID_COL_CACHE[uri] = have
-    return have
+    rowid-scan error. Object-store URIs trust that convention."""
+    if uri not in _ROWID_COL_CACHE:
+        path = _local_path(uri)
+        if path is None:
+            return True
+        try:
+            import pyarrow.parquet as pq
+            have = ROWID_FILE_COL in pq.read_schema(path).names
+        except Exception:
+            have = False
+        _ROWID_COL_CACHE[uri] = have
+    return _ROWID_COL_CACHE[uri]
 
 
 def _field_id_level(uri: str) -> str:
@@ -647,6 +639,7 @@ VIRTUAL_FIELDS = [("rowid", T.LongType()), ("filename", T.StringType()),
                   ("file_row_number", T.LongType()),
                   ("file_index", T.LongType()),
                   ("snapshot_id", T.LongType())]
+_HIDDEN = "__ducklake_"     # prefix of a virtual column inside the scan
 
 
 def scan_table(spark: SparkSession, schema: T.StructType,
@@ -660,21 +653,36 @@ def scan_table(spark: SparkSession, schema: T.StructType,
     us this is Spark's default DataSource behavior).
 
     ``with_rowid=True`` appends the DuckLake virtual ``rowid`` column
-    (catalog ``row_id_start`` + file-local position — the rowid feature of
-    the reference's test corpus); requires row_id_start for every file."""
+    (catalog ``row_id_start`` + file-local position, or the file's own
+    ROWID_FILE_COL); every file must have one of the two.
+    ``with_virtual=True`` appends ``rowid`` (NULL where a file has
+    neither) and the virtual columns ``filename``, ``file_row_number``,
+    ``file_index`` (position in ``files``) and ``snapshot_id`` (the row's
+    insertion snapshot) — corpus: sql/virtualcolumns/. Both ride the
+    shared scan (see _with_row_columns) under hidden names until the
+    final positional rename, so a user column that shares a virtual
+    column's name is kept beside it, not overwritten."""
     _configure_fieldid_read(spark)
+    extras = [n for n, _ in VIRTUAL_FIELDS] if with_virtual \
+        else ["rowid"] if with_rowid else []
 
     if not files:
-        out_schema = schema
-        if with_virtual:
-            out_schema = T.StructType(
-                list(schema.fields) + [T.StructField(n, t, True)
-                                       for n, t in VIRTUAL_FIELDS])
-        elif with_rowid:
-            out_schema = T.StructType(
-                list(schema.fields) + [T.StructField("rowid", T.LongType(), True)])
-        return _empty(spark, out_schema)
+        return _empty(spark, T.StructType(
+            list(schema.fields) + [T.StructField(n, t, True)
+                                   for n, t in VIRTUAL_FIELDS
+                                   if n in extras]))
 
+    if with_rowid and not with_virtual:
+        from ..errors import InvalidConfig
+        for f in files:
+            if f.row_id_start is None and not (
+                    _encrypted_has_rowid(f) if f.encryption_key is not None
+                    else file_has_rowid_column(f.data_uri)):
+                raise InvalidConfig(
+                    f"rowid scan requires row_id_start in the catalog (or "
+                    f"the in-file rowid column) for every data file "
+                    f"(missing for {f.data_uri})")
+    index = {f.data_uri: i for i, f in enumerate(files)}
     encrypted = [f for f in files if f.encryption_key is not None]
     files = [f for f in files if f.encryption_key is None]
     for f in files:
@@ -699,7 +707,6 @@ def scan_table(spark: SparkSession, schema: T.StructType,
     mapped = [f for f in files if f.mapped_cols is not None]
     files = [f for f in files if f.mapped_cols is None]
     if mapped:
-        import dataclasses
         types = {fld.name: fld.dataType for fld in schema.fields}
         # Files group by (effective mapping, hive shape, clipped schema).
         by_shape: dict[tuple, list] = {}
@@ -724,7 +731,7 @@ def scan_table(spark: SparkSession, schema: T.StructType,
                 for _, _, v in (c or ()))
             scale_files = [f for f in clean if faithful(f.hive_values)]
             if hive_keys and len(combos) > MAX_HIVE_VALUE_BRANCHES \
-                    and not with_rowid and not with_virtual and scale_files:
+                    and not extras and scale_files:
                 # one scan for every clean path-faithful hive file;
                 # MOR-dirty and escaped-value files (rare) fall through
                 # to the literal branches below
@@ -756,124 +763,187 @@ def scan_table(spark: SparkSession, schema: T.StructType,
             # marker) with strings, which plain tuple compare rejects
             for hive, group in sorted(groups.items(),
                                       key=lambda kv: repr(kv[0])):
-                plain = [dataclasses.replace(f, mapped_cols=None,
-                                             hive_values=None)
-                         for f in group]
-                df = scan_table(spark, read_schema, plain,
-                                with_rowid=with_rowid,
-                                with_virtual=with_virtual)
-                extras = [c for c in df.columns
-                          if c not in {src for src, _ in mcols}]
+                df = _scan_files(spark, read_schema, group, index, extras)
                 hive_lits = tuple((h[0], h[2]) for h in hive)
-                parts.append(apply_mapping(df, schema, mcols, hive_lits,
-                                           extras))
+                parts.append(apply_mapping(
+                    df, schema, mcols, hive_lits,
+                    [_HIDDEN + n for n in extras]))
     if encrypted:
-        if with_virtual:
-            from ..errors import InvalidConfig
-            raise InvalidConfig(
-                "virtual columns over encrypted tables are not supported")
-        parts.append(_scan_encrypted(spark, schema, encrypted,
-                                     with_rowid=with_rowid))
-
-    index_base = 0
+        parts.append(_scan_encrypted(spark, schema, encrypted, index,
+                                     extras))
     for group_schema, group in _split_by_field_ids(schema, files):
-        if with_virtual:
-            parts.append(_scan_with_rowid(spark, group_schema, group,
-                                          with_virtual=True,
-                                          index_base=index_base))
-            index_base += len(group)
-            continue
-        if with_rowid:
-            parts.append(_scan_with_rowid(spark, group_schema, group))
-            continue
-        # one scan per batch of distinct file names — a single batch unless
-        # a catalog repeats a name in different directories (add_files)
-        batches: list[dict] = []
-        for f in group:
-            name = _scan_name(spark, f.data_uri)
-            batch = next((b for b in batches if name not in b), None)
-            if batch is None:
-                batches.append(batch := {})
-            batch[name] = f
-        for batch in batches:
-            dirty = {n: f for n, f in batch.items() if f.delete_uri}
-            if len(dirty) <= MAX_PER_FILE_BRANCHES:
-                parts.append(bitset_filter(spark, _read_parquet(
-                    spark, group_schema, [f.data_uri for f in batch.values()]),
-                    {n: deletion_vector(spark, f.delete_uri, f.record_count,
-                                        f.data_uri)
-                     for n, f in dirty.items()}))
-                continue
-            clean = [f for f in batch.values() if f.delete_uri is None]
-            if clean:
-                parts.append(_read_parquet(spark, group_schema,
-                                           [f.data_uri for f in clean]))
-            parts.append(_scan_dirty_grouped(spark, group_schema,
-                                             list(dirty.values())))
+        parts.append(_scan_files(spark, group_schema, group, index, extras))
 
-    return reduce(DataFrame.unionByName, parts)
+    df = reduce(DataFrame.unionByName, parts)
+    return df.toDF(*[f.name for f in schema.fields], *extras) \
+        if extras else df
 
 
-def _scan_with_rowid(spark: SparkSession, schema: T.StructType,
-                     files: list[ResolvedFile],
-                     with_virtual: bool = False,
-                     index_base: int = 0) -> DataFrame:
-    """Per-file branch scan emitting the virtual rowid and, with
-    ``with_virtual``, the DuckLake virtual columns ``filename``,
-    ``file_row_number``, ``file_index`` and ``snapshot_id`` (the row's
-    insertion snapshot = its file's begin_snapshot) — corpus:
-    sql/virtualcolumns/. Per-file constants are literals stamped into
-    each branch; positions survive delete filtering (a deleted row's
-    neighbors keep their physical file_row_number)."""
-    from ..errors import InvalidConfig
+def _name_batches(spark: SparkSession, files: list[ResolvedFile],
+                  uri_of=lambda f: f.data_uri) -> list[dict]:
+    """``files`` split into batches of distinct names as Spark reports
+    them (``_scan_name``), each a name → file dict: one batch unless a
+    catalog repeats a name in different directories (add_files)."""
+    batches: list[dict] = []
+    for f in files:
+        name = _scan_name(spark, uri_of(f))
+        batch = next((b for b in batches if name not in b), None)
+        if batch is None:
+            batches.append(batch := {})
+        batch[name] = f
+    return batches
+
+
+def _per_file(key: Column, values: dict, dtype: str) -> Column:
+    """Each row's entry of ``values`` (file key → constant), looked up by
+    the row's ``key`` through one map literal: constant-folded, so the
+    lookup runs inside the scan stage with no join."""
+    distinct = set(values.values())
+    if len(distinct) == 1:
+        return F.lit(distinct.pop()).cast(dtype)
+    return F.create_map(*[F.lit(x) for kv in values.items()
+                          for x in kv])[key].cast(dtype)
+
+
+def _with_row_columns(df: DataFrame, by_key: dict, key: Column,
+                      pos: Column, index: dict,
+                      extras: list[str]) -> DataFrame:
+    """Append ``extras`` (``rowid`` and/or the VIRTUAL_FIELDS names, each
+    prefixed with _HIDDEN) to rows of the files in ``by_key`` (key →
+    file), given each row's file ``key`` and file-local ``pos``:
+
+    - ``rowid`` = catalog ``row_id_start`` + pos, else the file's own
+      ROWID_FILE_COL (UPDATE-rewritten rows keep their original ids);
+      NULL if the file has neither
+    - ``filename`` = the resolved data-file URI, ``file_row_number`` =
+      pos (physical: a deleted row's neighbors keep theirs),
+      ``file_index`` = ``index[data_uri]``
+    - ``snapshot_id`` = the file's SNAPSHOT_FILE_COL (flushed inlined
+      rows keep their own), else its registration snapshot
+
+    The reserved in-file columns, when read, are dropped."""
+    def in_file(name):
+        return F.col(name) if name in df.columns else F.lit(None)
+
+    def per_file(value, dtype):
+        return _per_file(key, {k: value(f) for k, f in by_key.items()},
+                         dtype)
+
+    cols = {
+        "rowid": F.coalesce(per_file(lambda f: f.row_id_start, "long") + pos,
+                            in_file(ROWID_FILE_COL)).cast("long"),
+        "filename": per_file(lambda f: f.data_uri, "string"),
+        "file_row_number": pos.cast("long"),
+        "file_index": per_file(lambda f: index[f.data_uri], "long"),
+        "snapshot_id": F.coalesce(
+            in_file(SNAPSHOT_FILE_COL),
+            per_file(lambda f: f.begin_snapshot, "long")).cast("long"),
+    }
+    return (df.withColumns({_HIDDEN + n: cols[n] for n in extras})
+            .drop(ROWID_FILE_COL, SNAPSHOT_FILE_COL))
+
+
+def _riders(files: list[ResolvedFile], extras: list[str]) -> list[str]:
+    """Reserved in-file columns to read alongside the data for
+    ``extras``: only files without a catalog ``row_id_start`` carry them
+    (a file lacking one reads it as NULL)."""
+    if not extras or all(f.row_id_start is not None for f in files):
+        return []
+    return [ROWID_FILE_COL] + (
+        [SNAPSHOT_FILE_COL] if "snapshot_id" in extras else [])
+
+
+def _scan_files(spark: SparkSession, schema: T.StructType,
+                files: list[ResolvedFile], index: dict,
+                extras: list[str]) -> DataFrame:
+    """Unencrypted files read under one ``schema`` (a name-mapped group
+    passes its in-file read schema): ONE scan per name batch,
+    merge-on-read deletes applied, ``extras`` attached by
+    _with_row_columns.
+
+    Few dirty files (≤ MAX_PER_FILE_BRANCHES) stay in that scan and one
+    filter tests each one's rows against its driver-held bitset; more go
+    to a separate scan anti-joined against delete_positions."""
+    def read(by_name):
+        riders = _riders(list(by_name.values()), extras)
+        df = _read_parquet(spark, T.StructType(
+            list(schema.fields)
+            + [T.StructField(c, T.LongType(), True) for c in riders]),
+            [f.data_uri for f in by_name.values()])
+        if not extras:
+            return df
+        return _with_row_columns(
+            df, by_name, F.col("_metadata.file_name"),
+            F.col("_metadata.row_index"), index, extras)
+
     parts = []
-    for idx, f in enumerate(files):
-        rowid_in_file = f.row_id_start is None and \
-            file_has_rowid_column(f.data_uri)
-        if f.row_id_start is None and not rowid_in_file and not with_virtual:
-            raise InvalidConfig(
-                f"rowid scan requires row_id_start in the catalog for every "
-                f"data file (missing for {f.data_uri})")
-        _check_local_exists(f.data_uri)
-        snap_in_file = with_virtual and rowid_in_file \
-            and file_has_snapshot_column(f.data_uri)
-        if rowid_in_file:
-            # row_id_start NULL ⇒ the file carries its ids as a column
-            # (UPDATE-rewritten rows keep their original rowids); flushed
-            # inlined data additionally carries per-row snapshot ids
-            extra = [T.StructField(ROWID_FILE_COL, T.LongType(), True)]
-            if snap_in_file:
-                extra.append(
-                    T.StructField(SNAPSHOT_FILE_COL, T.LongType(), True))
-            rid_schema = T.StructType(list(schema.fields) + extra)
-            data = _with_pos(_read_parquet(spark, rid_schema, [f.data_uri]))
-            data = data.withColumnRenamed(ROWID_FILE_COL, "rowid")
-        else:
-            data = _with_pos(_read_parquet(spark, schema, [f.data_uri]))
-        if f.row_id_start is not None:
-            data = data.withColumn(
-                "rowid",
-                (F.lit(f.row_id_start) + F.col(POS_COL)).cast("long"))
-        elif with_virtual and not rowid_in_file:
-            data = data.withColumn("rowid", F.lit(None).cast("long"))
-        if with_virtual:
-            data = (data
-                    .withColumn("filename", F.lit(f.data_uri))
-                    .withColumn("file_row_number",
-                                F.col(POS_COL).cast("long"))
-                    .withColumn("file_index",
-                                F.lit(index_base + idx).cast("long"))
-                    .withColumn("snapshot_id",
-                                (F.col(SNAPSHOT_FILE_COL) if snap_in_file
-                                 else F.lit(f.begin_snapshot))
-                                .cast("long")))
-        if snap_in_file:
-            data = data.drop(SNAPSHOT_FILE_COL)
-        if f.delete_uri is not None:
-            data = bitset_filter(spark, data, {None: deletion_vector(
-                spark, f.delete_uri, f.record_count, f.data_uri)})
-        parts.append(data.drop(POS_COL))
+    for batch in _name_batches(spark, files):
+        dirty = {n: f for n, f in batch.items() if f.delete_uri}
+        if len(dirty) <= MAX_PER_FILE_BRANCHES:
+            parts.append(bitset_filter(spark, read(batch), {
+                n: deletion_vector(spark, f.delete_uri, f.record_count,
+                                   f.data_uri)
+                for n, f in dirty.items()}))
+            continue
+        clean = {n: f for n, f in batch.items() if not f.delete_uri}
+        if clean:
+            parts.append(read(clean))
+        # No forced broadcast: the combined delete set can be large; AQE
+        # downgrades the shuffle join to broadcast at runtime when small.
+        data = read(dirty).withColumns({
+            FILE_COL: _per_file(F.col("_metadata.file_name"),
+                                {n: f.data_uri for n, f in dirty.items()},
+                                "string"),
+            POS_COL: F.col("_metadata.row_index")})
+        parts.append(data.join(delete_positions(spark, dirty.values()),
+                               [FILE_COL, POS_COL], "left_anti")
+                     .drop(FILE_COL, POS_COL))
     return reduce(DataFrame.unionByName, parts)
+
+
+def delete_positions(spark: SparkSession, files) -> Optional[DataFrame]:
+    """(FILE_COL = data-file URI, POS_COL) for every position deleted by
+    the delete files of ``files``; None if none has one.
+
+    Each delete file is tied to its data file by the CATALOG pairing,
+    looked up from the delete file's own name as Spark reports it — never
+    by the delete parquet's ``file_path`` column, which the DuckLake
+    contract treats as documentation-only (ref: src/table.rs:84-85; a
+    DuckDB- or Iceberg-style writer stores absolute paths there). PME
+    delete files decrypt executor-side."""
+    dirty = [f for f in files if f.delete_uri is not None]
+    parts = []
+    for batch in _name_batches(
+            spark, [f for f in dirty if f.delete_encryption_key is None],
+            lambda f: f.delete_uri):
+        for f in batch.values():
+            _check_local_exists(f.delete_uri)
+        parts.append(
+            spark.read.schema(DELETE_POS_SCHEMA)
+            .parquet(*[f.delete_uri for f in batch.values()])
+            .select(_per_file(F.col("_metadata.file_name"),
+                              {n: f.data_uri for n, f in batch.items()},
+                              "string").alias(FILE_COL),
+                    F.col("pos").alias(POS_COL)))
+    encd = [f for f in dirty if f.delete_encryption_key is not None]
+    if encd:
+        def decode(pdf_iter):
+            import pandas as pd
+
+            from .encryption import decode_key, read_encrypted_arrow
+            for pdf in pdf_iter:
+                for path, key, data_uri in zip(pdf["path"], pdf["key"],
+                                               pdf["data_uri"]):
+                    pos = read_encrypted_arrow(
+                        path, decode_key(key)).column("pos").to_pandas()
+                    yield pd.DataFrame({FILE_COL: data_uri, POS_COL: pos})
+
+        parts.append(spark.createDataFrame(
+            [(f.delete_uri, f.delete_encryption_key, f.data_uri)
+             for f in encd], "path STRING, key STRING, data_uri STRING")
+            .repartition(len(encd))
+            .mapInPandas(decode, f"`{FILE_COL}` STRING, `{POS_COL}` LONG"))
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def _era_clip_type(dt: T.DataType, file_begin: Optional[int]
@@ -1019,9 +1089,6 @@ def read_file_with_pos(spark: SparkSession, schema: T.StructType,
     return apply_mapping(df, schema, eff, hive_lits, [POS_COL])
 
 
-FILE_COL = "__ducklake_file"
-
-
 _ENC_ROWID_CACHE: dict[str, bool] = {}
 
 
@@ -1044,32 +1111,28 @@ def _encrypted_has_rowid(f: "ResolvedFile") -> bool:
 
 
 def _scan_encrypted(spark: SparkSession, schema: T.StructType,
-                    files: list[ResolvedFile],
-                    with_rowid: bool = False) -> DataFrame:
+                    files: list[ResolvedFile], index: dict,
+                    extras: list[str]) -> DataFrame:
     """PME-encrypted files: decrypt executor-side (A15 — Spark's reader
     has no PME hook). ONE mapInPandas stage decodes every file (the
-    driver ships only (path, key) pairs); positions are synthesized in
-    file order inside the decode, and ALL positional deletes are applied
-    through a single grouped anti-join keyed by (file name, pos) — O(1)
-    plan nodes regardless of file count, same shape as
-    ``_scan_dirty_grouped`` (r1 VERDICT wrongness #6 fixed).
-
-    ``with_rowid``: the virtual rowid joins in from a small (file name →
-    row_id_start) pairing, then rowid = start + pos."""
-    from ..errors import InvalidConfig
+    driver ships only (path, key) pairs); each row carries its data-file
+    URI and the position synthesized in file order inside the decode, so
+    ALL positional deletes apply through a single anti-join against
+    delete_positions — O(1) plan nodes regardless of file count — and
+    ``extras`` attach by the same _with_row_columns as the plain scan."""
     from . import encryption as enc
 
     for f in files:
         _check_local_exists(f.data_uri)
         enc.check_not_duckdb_encrypted(f.data_uri)
 
-    name_of = lambda uri: uri.rsplit("/", 1)[-1]  # noqa: E731
     want = [f.name for f in schema.fields]
+    riders = _riders(files, extras)
     out_schema = T.StructType(
         list(schema.fields)
         + [T.StructField(POS_COL, T.LongType(), False),
-           T.StructField(FILE_COL, T.StringType(), False),
-           T.StructField("__rid_file", T.LongType(), True)])
+           T.StructField(FILE_COL, T.StringType(), False)]
+        + [T.StructField(c, T.LongType(), True) for c in riders])
 
     iv_cols = set(_interval_fields(schema))
     tm_cols = set(_time_fields(schema))
@@ -1085,7 +1148,7 @@ def _scan_encrypted(spark: SparkSession, schema: T.StructType,
                 tbl = enc.read_encrypted_arrow(path, enc.decode_key(key))
                 # reserved in-file columns (rowid / per-row snapshot of
                 # UPDATE-rewritten or flushed files) must not leak into
-                # the data schema; the rowid rides out via __rid_file
+                # the data schema; they ride out as riders when asked for
                 sel = tbl.select(
                     [n for n in tbl.schema.names if n in want])
                 if iv_cols:
@@ -1106,116 +1169,22 @@ def _scan_encrypted(spark: SparkSession, schema: T.StructType,
                     if n not in out.columns:
                         out[n] = None
                 out[POS_COL] = range(len(out))
-                out[FILE_COL] = path.rsplit("/", 1)[-1]
-                if ROWID_FILE_COL in tbl.schema.names:
-                    out["__rid_file"] = tbl.column(
-                        ROWID_FILE_COL).to_pandas().values
-                else:
-                    out["__rid_file"] = None
+                out[FILE_COL] = path
+                for c in riders:
+                    out[c] = tbl.column(c).to_pandas().values \
+                        if c in tbl.schema.names else None
                 yield out
 
     pairs = spark.createDataFrame(
         [(f.data_uri, f.encryption_key) for f in files],
         "path STRING, key STRING").repartition(len(files))
     data = pairs.mapInPandas(decode, out_schema)
-
-    # delete positions, tagged with the DATA file name they apply to
-    del_parts = []
-    plain = [f for f in files
-             if f.delete_uri is not None and f.delete_encryption_key is None]
-    encd = [f for f in files
-            if f.delete_uri is not None and f.delete_encryption_key is not None]
-    if plain:
-        for f in plain:
-            _check_local_exists(f.delete_uri)
-        dels = (spark.read.schema(DELETE_POS_SCHEMA)
-                .parquet(*[f.delete_uri for f in plain])
-                .select(F.col("pos").alias(POS_COL),
-                        F.element_at(F.split(F.col("_metadata.file_path"), "/"),
-                                     -1).alias("__del_file")))
-        pairing = spark.createDataFrame(
-            [(name_of(f.delete_uri), name_of(f.data_uri)) for f in plain],
-            f"`__del_file` STRING, `{FILE_COL}` STRING")
-        del_parts.append(
-            dels.join(F.broadcast(pairing), "__del_file").drop("__del_file"))
-    if encd:
-        del_schema = T.StructType([
-            T.StructField(POS_COL, T.LongType(), False),
-            T.StructField(FILE_COL, T.StringType(), False)])
-
-        def decode_dels(pdf_iter):
-            for pdf in pdf_iter:
-                for path, key, dname in zip(pdf["path"], pdf["key"],
-                                            pdf["data_name"]):
-                    tbl = enc.read_encrypted_arrow(path, enc.decode_key(key))
-                    out = tbl.to_pandas()[["pos"]].rename(
-                        columns={"pos": POS_COL})
-                    out[FILE_COL] = dname
-                    yield out
-
-        dpairs = spark.createDataFrame(
-            [(f.delete_uri, f.delete_encryption_key, name_of(f.data_uri))
-             for f in encd],
-            "path STRING, key STRING, data_name STRING").repartition(len(encd))
-        del_parts.append(dpairs.mapInPandas(decode_dels, del_schema))
-
-    if del_parts:
-        all_dels = reduce(DataFrame.unionByName, del_parts)
+    dels = delete_positions(spark, files)
+    if dels is not None:
         # AQE picks broadcast when the delete set is small
-        data = data.join(all_dels, [FILE_COL, POS_COL], "left_anti")
-
-    if with_rowid:
-        from ..errors import InvalidConfig  # noqa: F811 — targeted check
-        for f in files:
-            if f.row_id_start is None and not _encrypted_has_rowid(f):
-                raise InvalidConfig(
-                    f"rowid scan requires row_id_start in the catalog (or "
-                    f"the in-file rowid column) for every data file "
-                    f"(missing for {f.data_uri})")
-        starts = spark.createDataFrame(
-            [(name_of(f.data_uri), f.row_id_start) for f in files],
-            f"`{FILE_COL}` STRING, `__rid_start` LONG")
-        data = (data.join(F.broadcast(starts), FILE_COL)
-                .withColumn("rowid",
-                            F.coalesce(
-                                F.col("__rid_file"),
-                                (F.col("__rid_start") + F.col(POS_COL))
-                                .cast("long")))
-                .drop("__rid_start"))
-    return data.drop(POS_COL, FILE_COL, "__rid_file")
-
-
-def _scan_dirty_grouped(spark: SparkSession, schema: T.StructType,
-                        dirty: list[ResolvedFile]) -> DataFrame:
-    """Scale path for many dirty files: ONE scan of all dirty data files +
-    ONE scan of all delete files, anti-joined on (data file name, pos).
-
-    Join key is the file *name* (not full path): delete parquet's own
-    file_path column is unreliable (documentation-only), so we map each
-    delete file to its data file via the catalog pairing, keyed by name
-    (unique: scan_table batches files by distinct name)."""
-    name_of = lambda uri: uri.rsplit("/", 1)[-1]  # noqa: E731
-
-    data = _with_pos(
-        _read_parquet(spark, schema, [f.data_uri for f in dirty])
-    ).withColumn(
-        "__ducklake_file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
-
-    # one distributed scan over all delete files; map delete-file name →
-    # data-file name with a broadcast catalog pairing
-    for f in dirty:
-        _check_local_exists(f.delete_uri)
-    dels = (spark.read.schema(DELETE_POS_SCHEMA)
-            .parquet(*[f.delete_uri for f in dirty])
-            .select(F.col("pos").alias(POS_COL),
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-                    .alias("__del_file")))
-    pairing = spark.createDataFrame(
-        [(name_of(f.delete_uri), name_of(f.data_uri)) for f in dirty],
-        "`__del_file` STRING, `__ducklake_file` STRING")
-    dels = dels.join(F.broadcast(pairing), "__del_file").drop("__del_file")
-
-    # No forced broadcast here: the combined delete set can be large; AQE
-    # downgrades the shuffle join to broadcast at runtime when it is small.
-    return (data.join(dels, ["__ducklake_file", POS_COL], "left_anti")
-            .drop("__ducklake_file", POS_COL))
+        data = data.join(dels, [FILE_COL, POS_COL], "left_anti")
+    if extras:
+        data = _with_row_columns(data, {f.data_uri: f for f in files},
+                                 F.col(FILE_COL), F.col(POS_COL), index,
+                                 extras)
+    return data.drop(POS_COL, FILE_COL)

@@ -609,3 +609,85 @@ def test_foreign_delete_file_with_extra_columns(spark, tmp_path):
     dl3 = DuckLakeSession(spark, db)
     assert sorted(r["id"] for r in dl3.table("main.t").collect()) == \
         [1, 2, 4, 6, 7, 8, 9]
+
+
+def _add_parquet(session, name, path, ids):
+    """Write ``ids`` as an INTEGER ``id`` parquet at ``path`` and register
+    it with add_files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table({"id": pa.array(list(ids), pa.int32())}), path)
+    session.add_files(name, [str(path)])
+    session.refresh()
+
+
+def test_same_basename_in_two_directories(dl, tmp_path):
+    """Matched positions key to the resolved data file, not its basename:
+    two add_files'd ``x.parquet`` in different directories each get
+    their own delete file."""
+    dl.create_empty_table("main.af", "id INTEGER")
+    _add_parquet(dl, "main.af", tmp_path / "a" / "x.parquet", range(4))
+    _add_parquet(dl, "main.af", tmp_path / "b" / "x.parquet", range(10, 14))
+    assert dl.delete_from("main.af", "id = 11") == 1
+    assert dl.delete_from("main.af", "id = 2") == 1
+    assert _ids(dl, "main.af") == [0, 1, 3, 10, 12, 13]
+
+
+@pytest.mark.parametrize("path", ["dml", "grouped_read"])
+def test_names_needing_url_encoding(dl, tmp_path, path):
+    """A data file whose name Spark reports URL-encoded (``part 0%``)
+    takes deletes through DML, and its delete positions reach it on the
+    grouped (many dirty files) read path."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_ducklake_spark.sources import scan as scan_mod
+    dl.create_empty_table("main.enc", "id INTEGER")
+    _add_parquet(dl, "main.enc", tmp_path / "d" / "part 0%.parquet", range(4))
+    _add_parquet(dl, "main.enc", tmp_path / "d" / "q.parquet", range(10, 14))
+    if path == "dml":
+        assert dl.delete_from("main.enc", "id IN (0, 2, 11)") == 3
+    else:
+        # register the delete files directly, as a foreign writer would
+        handle = dl.table_handle("main.enc")
+        w = CatalogWriter.sqlite(dl.catalog_path)
+        try:
+            sid = w.create_snapshot()
+            for raw, positions in zip(handle._raw_files, ([0, 2], [1])):
+                name = f"ducklake-delete-{uuid.uuid4()}.parquet"
+                dest = os.path.join(handle.table_path, name)
+                os.makedirs(handle.table_path, exist_ok=True)
+                pq.write_table(pa.table({
+                    "file_path": pa.array([raw.path] * len(positions)),
+                    "pos": pa.array(positions, pa.int64())}), dest)
+                w.register_delete_file(
+                    handle.meta.table_id, raw.data_file_id, sid, name, True,
+                    os.path.getsize(dest), len(positions))
+        finally:
+            w.close()
+        dl.refresh()
+    old = scan_mod.MAX_PER_FILE_BRANCHES
+    scan_mod.MAX_PER_FILE_BRANCHES = 0       # force the grouped path
+    try:
+        grouped = _ids(dl, "main.enc")
+    finally:
+        scan_mod.MAX_PER_FILE_BRANCHES = old
+    assert grouped == [1, 3, 10, 12, 13]
+    assert _ids(dl, "main.enc") == [1, 3, 10, 12, 13]
+
+
+def test_dml_reads_initial_default(dl):
+    """Rows written before ``ADD COLUMN … DEFAULT`` read the default in
+    DML exactly as in SELECT: UPDATE keeps it on the rewritten row, and
+    predicates on the column match those rows."""
+    dl.sql("ALTER TABLE main.t ADD COLUMN c INTEGER DEFAULT 5")
+    assert {r["c"] for r in dl.table("main.t").collect()} == {5}
+    assert dl.update_where("main.t", {"tag": "'x'"}, "id = 1") == 1
+    rows = {r["id"]: r for r in dl.table("main.t").collect()}
+    assert rows[1]["tag"] == "x" and rows[1]["c"] == 5
+    assert dl.update_where("main.t", {"v": "v + 1"}, "c = 5 AND id < 4") == 4
+    assert dl.delete_from("main.t", "c = 5 AND id >= 10") == 10
+    assert _ids(dl) == list(range(10))

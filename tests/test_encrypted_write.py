@@ -97,3 +97,17 @@ def test_encrypted_compact_guard_and_plain_rewrite(edl, spark):
                for f in edl.table_handle("main.c")._raw_files)
     for p in _lake_files(edl):
         assert enc.is_encrypted_parquet(p), p
+
+
+def test_encrypted_virtual_columns(edl, spark):
+    """rowid and the virtual columns ride the encrypted scan like the
+    plain one: positions are physical, deleted rows are gone."""
+    edl.sql("CREATE TABLE v (id BIGINT)")
+    edl.insert_into("main.v", spark.range(6).coalesce(1).selectExpr("id"))
+    edl.delete_from("main.v", "id = 2")
+    rows = edl.table("main.v", with_virtual=True).collect()
+    assert sorted((r.id, r.file_row_number, r.rowid) for r in rows) == \
+        [(i, i, i) for i in (0, 1, 3, 4, 5)]
+    uris = {f.data_uri for f in edl.table_handle("main.v").files}
+    assert {r.filename for r in rows} <= uris
+    assert len({r.snapshot_id for r in rows}) == 1

@@ -169,6 +169,30 @@ def test_virtual_columns_over_inlined_rows(dl):
     assert rows[0]["filename"].endswith(".parquet")
 
 
+def test_virtual_file_index_spans_plain_and_hive_files(spark, tmp_path):
+    """file_index is one enumeration over the table's files: a plain file
+    and two hive add_files'd files (same basename) get three indexes."""
+    import duckdb
+    db = str(tmp_path / "cat.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "lake"))
+    w.close()
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.h", spark.sql(
+        "SELECT CAST(0 AS INT) p, CAST('a' AS STRING) v"))
+    for p in (1, 2):
+        d = tmp_path / f"hv/p={p}"
+        d.mkdir(parents=True)
+        duckdb.connect().execute(
+            f"COPY (SELECT 'b' v) TO '{d}/f.parquet'")
+    dl.add_files("main.h", [f"{tmp_path}/hv/**/*.parquet"])
+    dl.refresh()
+    rows = dl.table("main.h", with_virtual=True).collect()
+    assert sorted(r["file_index"] for r in rows) == [0, 1, 2]
+    assert len({r["filename"] for r in rows}) == 3
+    assert sorted(r["file_row_number"] for r in rows) == [0, 0, 0]
+
+
 class TestWriteSideInlining:
     """data_inlining_row_limit: small appends store rows in the catalog
     DB instead of parquet (DuckDB's DATA_INLINING_ROW_LIMIT; corpus:

@@ -90,3 +90,27 @@ def test_written_tables_have_rowids(spark, tmp_path):
     got = sorted((r["v"], r["rowid"])
                  for r in dl.table("main.r", with_rowid=True).collect())
     assert got == [(10, 0), (11, 1), (12, 2), (13, 3), (14, 4)]
+
+
+def test_row_index_is_read_only_by_the_scan():
+    """Every read of a row's file-local position goes through
+    sources/scan.py: no other module names ``_metadata.row_index`` in
+    code (docstrings and comments may mention it)."""
+    import ast
+    import pathlib
+    pkg = pathlib.Path(scan_mod.__file__).resolve().parent.parent
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(scan_mod.__file__).resolve():
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {id(n.body[0].value) for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef))
+                and n.body and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)}
+        hits += [f"{path.relative_to(pkg)}:{n.lineno}"
+                 for n in ast.walk(tree)
+                 if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                 and "_metadata.row_index" in n.value and id(n) not in docs]
+    assert hits == []
