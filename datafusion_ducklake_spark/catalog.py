@@ -65,6 +65,58 @@ def _resolve_catalog_file_row(resolver, row) -> "str | None":
     return os.path.normpath(full)
 
 
+def _coerce_inlined(v, dt):
+    """One inlined value back to its column's Spark type: catalog DBs
+    (sqlite) store timestamps/dates/times/decimals as text/numeric."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+    if v is None:
+        return None
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)) \
+            and isinstance(v, str):
+        return datetime.datetime.fromisoformat(v)
+    if isinstance(dt, T.DateType) and isinstance(v, str):
+        return datetime.date.fromisoformat(v)
+    if isinstance(dt, T.TimeType) and isinstance(v, (str, int)):
+        # pre-r8 engine inlined time rows as µs-of-day ints
+        # (which SQLite may hand back as digit strings under the
+        # column's text affinity); post-r8 rows are ISO text
+        if isinstance(v, str) and not v.isdigit():
+            return datetime.time.fromisoformat(v)
+        return (datetime.datetime.min
+                + datetime.timedelta(microseconds=int(v))).time()
+    if isinstance(dt, T.DecimalType) and \
+            not isinstance(v, decimal.Decimal):
+        return decimal.Decimal(str(v))
+    if isinstance(dt, (T.FloatType, T.DoubleType)) and \
+            isinstance(v, int):
+        return float(v)
+    if isinstance(dt, T.BooleanType) and isinstance(v, int):
+        return bool(v)
+    return v
+
+
+def inlined_frame(spark: SparkSession, schema: StructType, rows: list,
+                  with_rowid: bool,
+                  snapshot_col: Optional[str] = None) -> DataFrame:
+    """(row_id, <data columns>, snapshot) provider rows as a DataFrame of
+    ``schema`` (values coerced), plus ``rowid`` and, named
+    ``snapshot_col``, the trailing snapshot when asked for."""
+    fields = list(schema.fields)
+    if with_rowid:
+        fields.append(StructField("rowid", LongType(), True))
+    if snapshot_col is not None:
+        fields.append(StructField(snapshot_col, LongType(), True))
+    data = [tuple(_coerce_inlined(v, f.dataType)
+                  for v, f in zip(r[1:], schema.fields))
+            + ((int(r[0]),) if with_rowid else ())
+            + ((int(r[-1]),) if snapshot_col is not None else ())
+            for r in rows]
+    return spark.createDataFrame(data, StructType(fields))
+
+
 class DuckLakeTable:
     def __init__(self, spark: SparkSession, provider: MetadataProvider,
                  resolver: PathResolver, schema_resolved_path: str,
@@ -176,56 +228,14 @@ class DuckLakeTable:
         Driver-side materialization is the right shape here: inlining is
         BY DESIGN bounded to a handful of rows per insert (the row-limit
         contract), so this never scales with table size."""
-        import datetime
-        import decimal
-
-        from pyspark.sql import types as T
         rows = self.inlined_rows()
         if not rows:
             return None
-
-        def coerce(v, dt):
-            # catalog DBs (sqlite) store timestamps/dates/decimals as
-            # text/numeric — coerce back to the column's Spark type
-            if v is None:
-                return None
-            if isinstance(dt, (T.TimestampType, T.TimestampNTZType)) \
-                    and isinstance(v, str):
-                return datetime.datetime.fromisoformat(v)
-            if isinstance(dt, T.DateType) and isinstance(v, str):
-                return datetime.date.fromisoformat(v)
-            if isinstance(dt, T.TimeType) and isinstance(v, (str, int)):
-                # pre-r8 engine inlined time rows as µs-of-day ints
-                # (which SQLite may hand back as digit strings under the
-                # column's text affinity); post-r8 rows are ISO text
-                if isinstance(v, str) and not v.isdigit():
-                    return datetime.time.fromisoformat(v)
-                return (datetime.datetime.min
-                        + datetime.timedelta(microseconds=int(v))).time()
-            if isinstance(dt, T.DecimalType) and \
-                    not isinstance(v, decimal.Decimal):
-                return decimal.Decimal(str(v))
-            if isinstance(dt, (T.FloatType, T.DoubleType)) and \
-                    isinstance(v, int):
-                return float(v)
-            if isinstance(dt, T.BooleanType) and isinstance(v, int):
-                return bool(v)
-            return v
-
-        schema = self.spark_schema
-        data = [tuple(coerce(v, f.dataType) for v, f in
-                      zip(r[1:], schema.fields)) for r in rows]
-        if with_rowid:
-            schema = StructType(list(schema.fields) + [
-                StructField("rowid", LongType(), True)])
-            data = [d + (int(r[0]),) for d, r in zip(data, rows)]
-        if with_snapshot:
-            # trailing begin_snapshot from get_inlined_rows — per-row
-            # insertion snapshot (flush preserves it in-file)
-            schema = StructType(list(schema.fields) + [
-                StructField("__begin_snapshot", LongType(), True)])
-            data = [d + (int(r[-1]),) for d, r in zip(data, rows)]
-        return self.spark.createDataFrame(data, schema)
+        # trailing begin_snapshot from get_inlined_rows — per-row
+        # insertion snapshot (flush preserves it in-file)
+        return inlined_frame(self.spark, self.spark_schema, rows,
+                             with_rowid,
+                             "__begin_snapshot" if with_snapshot else None)
 
     def _live_set_digest(self) -> str:
         """Digest of this snapshot's live file set (raw catalog rows —

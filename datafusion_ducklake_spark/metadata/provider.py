@@ -132,6 +132,10 @@ class DeleteDeltaMeta:
     snapshot_id: int
     mapping_id: Optional[int] = None   # data file's name mapping, if any
     row_id_start: Optional[int] = None  # data file's rowid base (CDC rowid)
+    # stored-form PME keys: the data file's and both delete files'
+    encryption_key: Optional[str] = None
+    cur_encryption_key: Optional[str] = None
+    prev_encryption_key: Optional[str] = None
 
 
 @dataclass(frozen=True)
@@ -601,7 +605,8 @@ class MetadataProvider:
                     r[3], bool(r[4]) if r[4] is not None else None,
                     r[5], bool(r[6]) if r[6] is not None else None,
                     int(r[7]), int(r[8]) if r[8] is not None else None,
-                    int(r[9]) if r[9] is not None else None)
+                    int(r[9]) if r[9] is not None else None,
+                    r[10], r[11], r[12])
                 for r in self._fetchall(Q.DELETE_FILES_ADDED_BETWEEN,
                                         (table_id, start, end, table_id, start, end))]
 
@@ -633,9 +638,30 @@ class MetadataProvider:
     def get_inlined_rows(self, inline_table: str, column_names: list[str],
                          snapshot_id: int) -> list[tuple]:
         """Live rows of one inlined-data table at ``snapshot_id``:
-        (row_id, <data columns...>) filtered by the table's own
-        begin/end_snapshot MVCC columns — inlined rows version exactly
-        like data files do."""
+        (row_id, <data columns...>, begin_snapshot) filtered by the
+        table's own begin/end_snapshot MVCC columns — inlined rows
+        version exactly like data files do."""
+        return self._select_inlined(
+            inline_table, column_names, "begin_snapshot",
+            "begin_snapshot <= ? "
+            "AND (end_snapshot IS NULL OR end_snapshot > ?)",
+            (snapshot_id, snapshot_id))
+
+    def get_inlined_changes(self, inline_table: str,
+                            column_names: list[str], start: int, end: int,
+                            ended: bool = False) -> list[tuple]:
+        """Rows of one inlined-data table inserted — or, ``ended``,
+        ended — in snapshot range (start, end]: (row_id, <data
+        columns...>, that begin (end) snapshot). The change feed's one
+        inlined-row read."""
+        col = "end_snapshot" if ended else "begin_snapshot"
+        return self._select_inlined(
+            inline_table, column_names, col, f"{col} > ? AND {col} <= ?",
+            (start, end))
+
+    def _select_inlined(self, inline_table: str, column_names: list[str],
+                        snapshot_col: str, where: str,
+                        params: tuple) -> list[tuple]:
         # Schema-evolution tolerance (sql/data_inlining/
         # data_inlining_alter.test): a column ADDed after the rows were
         # inlined is absent from the inline table — it reads NULL, same
@@ -656,14 +682,11 @@ class MetadataProvider:
             f'"{c}"' if (have is None or c.lower() in have)
             else f'NULL AS "{c}"'
             for c in column_names)
-        # begin_snapshot trails the data columns (consumers zip against
-        # the schema, so the extra element is only read where needed —
-        # the virtual snapshot_id column)
+        # the snapshot trails the data columns (consumers zip against
+        # the schema, so the extra element is only read where needed)
         return self._fetchall(
-            f'SELECT row_id, {cols}, begin_snapshot FROM "{inline_table}" '
-            "WHERE begin_snapshot <= ? "
-            "AND (end_snapshot IS NULL OR end_snapshot > ?)",
-            (snapshot_id, snapshot_id))
+            f'SELECT row_id, {cols}, {snapshot_col} FROM "{inline_table}" '
+            f"WHERE {where}", params)
 
     def list_macros(self, snapshot_id: int) -> list["MacroMeta"]:
         """Live catalog macros at the snapshot (DuckLake macro tables;

@@ -136,7 +136,9 @@ SELECT
   data.path, data.path_is_relative, data.record_count,
   cd.path AS cur_path, cd.path_is_relative AS cur_rel,
   pd.path AS prev_path, pd.path_is_relative AS prev_rel,
-  cd.begin_snapshot AS snapshot_id, data.mapping_id, data.row_id_start
+  cd.begin_snapshot AS snapshot_id, data.mapping_id, data.row_id_start,
+  data.encryption_key, cd.encryption_key AS cur_key,
+  pd.encryption_key AS prev_key
 FROM ducklake_delete_file cd
 JOIN ducklake_data_file data ON data.data_file_id = cd.data_file_id
 LEFT JOIN ducklake_delete_file pd
@@ -155,7 +157,9 @@ SELECT
   data.path, data.path_is_relative, data.record_count,
   NULL, NULL,
   pd.path, pd.path_is_relative,
-  data.end_snapshot AS snapshot_id, data.mapping_id, data.row_id_start
+  data.end_snapshot AS snapshot_id, data.mapping_id, data.row_id_start,
+  data.encryption_key, NULL,
+  pd.encryption_key
 FROM ducklake_data_file data
 LEFT JOIN ducklake_delete_file pd
   ON pd.data_file_id = data.data_file_id

@@ -12,14 +12,19 @@ Reference parity (SURVEY.md §2A A11-A12, §3.3):
   minus the superseded previous delete file's positions, semi-joined back
   onto the data file, with ``change_type='delete'``.
 
-Spark-first: each delta's newly deleted positions are one bitset
+Spark-first: both sides read through the one shared scan
+(sources/scan.scan_table with its virtual columns), so field-id and
+name-mapped files, PME encryption and the rowid rule are the table
+read's own. Inserts: ONE scan over every file added in the window.
+Deletions: each delta's newly deleted positions are one bitset
 difference on the driver (current delete vector AND NOT the superseded
-one, both cached per delete file — sources/scan.deletion_vector), and a
-codegen'd bit test on _metadata.row_index selects the data file's rows
-inside the scan stage: no join and no extra job per delta, in place of
-the reference's 3-phase stream machine. Files added in the same snapshot
-share one scan (constant columns allow grouping), so plan size is
-O(snapshots), not O(files).
+one, both cached per delete file — sources/scan.deletion_vector); a
+delete snapshot's data files share one scan, and a codegen'd bit test
+on the virtual filename / file_row_number keeps the deleted rows inside
+the scan stage: no join and no extra job per delta, in place of the
+reference's 3-phase stream machine. Plan size is O(delete snapshots),
+not O(files). Inlined rows come from one provider read
+(get_inlined_changes) on either side.
 """
 
 from __future__ import annotations
@@ -29,11 +34,10 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import InvalidConfig, TableNotFound
+from ..errors import CatalogCorruption, InvalidConfig, TableNotFound
 from ..paths import to_spark_uri
-from ..sources.scan import (POS_COL, ResolvedFile, bitset_filter,
-                            deletion_vector, positions_bitset,
-                            read_file_with_pos, scan_table)
+from ..sources.scan import (FILE_COL, POS_COL, ResolvedFile, bitset_filter,
+                            deletion_vector, positions_bitset, scan_table)
 
 CDC_SNAPSHOT_COL = "snapshot_id"
 CDC_CHANGE_COL = "change_type"
@@ -139,51 +143,47 @@ def resolve_cdc_bound(session, value, lower: bool) -> int:
 def _inserted_rows(session, name: str, start: int, end: int) -> DataFrame:
     """Rows inserted in snapshot range (start, end] — parquet files AND
     inlined rows (write-side data inlining registers no data file, so
-    the CDC log must read the inlined tables' begin_snapshot too)."""
+    the CDC log must read the inlined tables' begin_snapshot too).
+
+    Every added file rides ONE shared scan (field-id vs name-mapped
+    groups, encryption and the rowid rule are scan_table's). Its virtual
+    ``snapshot_id`` is the file's begin_snapshot: the only writer of the
+    in-file snapshot column is the flush, whose snapshots CDC skips."""
     table = _resolve(session, name, start, end)
-    spark = session.spark
-    added = session.provider.get_data_files_added_between(
-        table.meta.table_id, start, end)
-    compacted = _compaction_snapshots(session, table)
-    added = [f for f in added if f.begin_snapshot not in compacted]
-    schema = table.spark_schema
+    skip = _maintenance_snapshots(session, table)
+    files = [_data_file(session, table, f.path, f.path_is_relative,
+                        encryption_key=f.encryption_key,
+                        mapping_id=f.mapping_id,
+                        row_id_start=f.row_id_start,
+                        begin_snapshot=f.begin_snapshot)
+             for f in session.provider.get_data_files_added_between(
+                 table.meta.table_id, start, end)
+             if f.begin_snapshot not in skip]
     parts = []
-
-    by_snapshot: dict[int, list[ResolvedFile]] = {}
-    for f in added:
-        uri = to_spark_uri(session.catalog.resolver.file_path(
-            table.table_path, f.path, f.path_is_relative))
-        mapped_cols, hive_values = table.mapping_transform(f.mapping_id, uri)
-        by_snapshot.setdefault(f.begin_snapshot, []).append(ResolvedFile(
-            uri, encryption_key=f.encryption_key, mapping_id=f.mapping_id,
-            mapped_cols=mapped_cols, hive_values=hive_values,
-            row_id_start=f.row_id_start))
-    from ..sources.scan import file_has_rowid_column
-    for snapshot_id, rfiles in sorted(by_snapshot.items()):
-        # scan_table resolves field-id vs name-mapped groups (add_files
-        # renames/hive injection) exactly like the live-table scan.
-        # rowid rides along (ref table_functions.rs:86-225 emits it):
-        # start+pos, or the in-file column of UPDATE-rewritten files;
-        # catalogs predating row_id_start surface NULL rowids.
-        have_rowid = all(rf.row_id_start is not None
-                         or file_has_rowid_column(rf.data_uri)
-                         for rf in rfiles)
-        part = scan_table(spark, schema, rfiles, with_rowid=have_rowid)
-        if not have_rowid:
-            part = part.withColumn("rowid", F.lit(None).cast("long"))
-        parts.append(
-            part.withColumn(CDC_SNAPSHOT_COL, F.lit(snapshot_id).cast("long"))
-            .withColumn(CDC_CHANGE_COL, F.lit("insert")))
-
-    inlined = _inlined_changes(session, table, start, end)
+    if files:
+        parts.append(_scan_changes(session.spark, table, files)
+                     .drop(FILE_COL, POS_COL)
+                     .withColumnsRenamed({"__snapshot": CDC_SNAPSHOT_COL})
+                     .withColumn(CDC_CHANGE_COL, F.lit("insert")))
+    inlined = _inlined_changes(session, table, start, end, "insert", skip)
     if inlined is not None:
         parts.append(inlined)
     if not parts:
-        return _empty_cdc(spark, schema)
+        return _empty_cdc(session.spark, table.spark_schema)
     return reduce(DataFrame.unionByName, parts)
 
 
-def _compaction_snapshots(session, table) -> set:
+def labeled_snapshots(provider, table_id: int, *labels: str) -> set:
+    """Snapshot ids whose ``changes_made`` list holds ``<label>:<table_id>``
+    for one of ``labels``. Token-exact, NOT substring: 'compacted_table:1'
+    is a substring of 'compacted_table:12' and would false-positive on
+    tables whose id is a prefix of another's."""
+    markers = {f"{label}:{table_id}" for label in labels}
+    return {sid for sid, s in provider.get_snapshot_changes().items()
+            if markers & {t.strip() for t in (s or "").split(",")}}
+
+
+def _maintenance_snapshots(session, table) -> set:
     """Snapshot ids that are STORAGE maintenance for this table — file
     compaction (compact / merge_adjacent / rewrite_data_files, labeled
     compacted_table) and inlined-data flushes (labeled
@@ -191,130 +191,87 @@ def _compaction_snapshots(session, table) -> set:
     them on both the insert and the delete side (upstream table_changes
     is silent across compaction AND flush —
     sql/data_inlining/data_inlining_flush.test)."""
-    markers = {f"compacted_table:{table.meta.table_id}",
-               f"flushed_inlined_data:{table.meta.table_id}"}
-    try:
-        # token-exact compare, NOT substring: 'compacted_table:1' is a
-        # substring of 'compacted_table:12' and would false-positive on
-        # tables whose id is a prefix of another's
-        return {sid for sid, s in
-                session.provider.get_snapshot_changes().items()
-                if markers & {t.strip() for t in (s or "").split(",")}}
-    except Exception:
-        return set()
+    return labeled_snapshots(session.provider, table.meta.table_id,
+                             "compacted_table", "flushed_inlined_data")
 
 
-def _inlined_changes(session, table, start: int, end: int):
-    """Inlined rows whose begin_snapshot falls in (start, end], shaped
-    like the parquet CDC branches. Bounded by the inlining row limit —
-    driver-side materialization is the feature's own contract."""
+def _data_file(session, table, path: str, is_relative: bool,
+               **kw) -> ResolvedFile:
+    """A catalog data-file row as the shared scan reads it: resolved URI
+    plus its name mapping (add_files renames / hive values)."""
+    uri = to_spark_uri(session.catalog.resolver.file_path(
+        table.table_path, path, is_relative))
+    mapped_cols, hive_values = table.mapping_transform(
+        kw.get("mapping_id"), uri)
+    return ResolvedFile(uri, mapped_cols=mapped_cols,
+                        hive_values=hive_values, **kw)
+
+
+def _scan_changes(spark, table, files: list[ResolvedFile]) -> DataFrame:
+    """``files`` through scan_table with the virtual columns, renamed by
+    position (a user column may share a virtual column's name): ``rowid``,
+    data-file URI (FILE_COL), file-local position (POS_COL),
+    ``__file_index`` (dropped) and ``__snapshot``."""
+    names = [f.name for f in table.spark_schema.fields]
+    return (scan_table(spark, table.spark_schema, files, with_virtual=True)
+            .toDF(*names, "rowid", FILE_COL, POS_COL, "__file_index",
+                  "__snapshot")
+            .drop("__file_index"))
+
+
+def _inlined_changes(session, table, start: int, end: int, change: str,
+                     skip: set):
+    """Inlined rows inserted (``change='insert'``, by begin_snapshot) or
+    ended by a DATA change (``'delete'``, by end_snapshot) in (start,
+    end], shaped like the scanned parts. Rows of a maintenance snapshot
+    (``skip``) are not changes: a flush ends inlined rows as storage
+    migration and CDC stays silent across it
+    (sql/data_inlining/data_inlining_flush.test). Bounded by the
+    inlining row limit — driver-side materialization is the feature's
+    own contract."""
+    from ..catalog import inlined_frame
     names = [c.column_name for c in table.columns]
-    rows = []
-    for it in table.inlined_tables:
-        try:
-            raw = session.provider._fetchall(
-                'SELECT row_id, {} , begin_snapshot FROM "{}" '
-                "WHERE begin_snapshot > ? AND begin_snapshot <= ?".format(
-                    ", ".join(f'"{c}"' for c in names), it),
-                (start, end))
-        except Exception:
-            continue
-        rows.extend(raw)
+    rows = [r for it in table.inlined_tables
+            for r in session.provider.get_inlined_changes(
+                it, names, start, end, ended=change == "delete")
+            if int(r[-1]) not in skip]
     if not rows:
         return None
-    import pyspark.sql.types as T
-    coerced = []
-    schema = table.spark_schema
-    for r in rows:
-        vals = []
-        for v, f in zip(r[1:-1], schema.fields):
-            vals.append(_coerce_cdc(v, f.dataType))
-        coerced.append(tuple(vals) + (int(r[0]), int(r[-1]), "insert"))
-    out_schema = T.StructType(
-        list(schema.fields)
-        + [T.StructField("rowid", T.LongType(), True),
-           T.StructField(CDC_SNAPSHOT_COL, T.LongType(), True),
-           T.StructField(CDC_CHANGE_COL, T.StringType(), False)])
-    return session.spark.createDataFrame(coerced, out_schema)
-
-
-def _coerce_cdc(v, dt):
-    import datetime
-    import decimal
-
-    import pyspark.sql.types as T
-    if v is None:
-        return None
-    if isinstance(dt, T.TimestampType) and isinstance(v, str):
-        return datetime.datetime.fromisoformat(v)
-    if isinstance(dt, T.DateType) and isinstance(v, str):
-        return datetime.date.fromisoformat(v)
-    if isinstance(dt, T.DecimalType) and not isinstance(v, decimal.Decimal):
-        return decimal.Decimal(str(v))
-    if isinstance(dt, (T.FloatType, T.DoubleType)) and isinstance(v, int):
-        return float(v)
-    if isinstance(dt, T.BooleanType) and isinstance(v, int):
-        return bool(v)
-    return v
-
-
-def _inlined_deletions(session, table, start: int, end: int,
-                       skip: set = frozenset()):
-    """Inlined rows ENDED in (start, end] by a DATA change (inlined
-    DELETE/UPDATE). Rows ended by a flush snapshot (``skip``) are NOT
-    deletions — the flush is storage migration and CDC stays silent
-    across it (sql/data_inlining/data_inlining_flush.test)."""
-    names = [c.column_name for c in table.columns]
-    rows = []
-    for it in table.inlined_tables:
-        try:
-            raw = session.provider._fetchall(
-                'SELECT row_id, {} , end_snapshot FROM "{}" '
-                "WHERE end_snapshot > ? AND end_snapshot <= ?".format(
-                    ", ".join(f'"{c}"' for c in names), it),
-                (start, end))
-        except Exception:
-            continue
-        rows.extend(r for r in raw if int(r[-1]) not in skip)
-    if not rows:
-        return None
-    import pyspark.sql.types as T
-    schema = table.spark_schema
-    coerced = [tuple(_coerce_cdc(v, f.dataType)
-                     for v, f in zip(r[1:-1], schema.fields))
-               + (int(r[0]), int(r[-1]), "delete") for r in rows]
-    out_schema = T.StructType(
-        list(schema.fields)
-        + [T.StructField("rowid", T.LongType(), True),
-           T.StructField(CDC_SNAPSHOT_COL, T.LongType(), True),
-           T.StructField(CDC_CHANGE_COL, T.StringType(), False)])
-    return session.spark.createDataFrame(coerced, out_schema)
+    return (inlined_frame(session.spark, table.spark_schema, rows, True,
+                          CDC_SNAPSHOT_COL)
+            .withColumn(CDC_CHANGE_COL, F.lit(change)))
 
 
 def table_deletions(session, name: str, start: int, end: int) -> DataFrame:
-    """Rows deleted in snapshot range (start, end]."""
+    """Rows deleted in snapshot range (start, end].
+
+    Each delta's newly deleted positions are one bitset on the driver:
+    the current delete vector (all rows for a whole-file delete) AND NOT
+    the superseded one. A delete snapshot's data files ride ONE shared
+    scan, filtered to those positions on the scan's data-file URI and
+    file-local position, so plan size is O(delete snapshots)."""
     table = _resolve(session, name, start, end)
     spark = session.spark
-    deltas = session.provider.get_delete_files_added_between(
-        table.meta.table_id, start, end)
-    compacted = _compaction_snapshots(session, table)
-    deltas = [d for d in deltas if d.snapshot_id not in compacted]
-    schema = table.spark_schema
-    inlined = _inlined_deletions(session, table, start, end, skip=compacted)
-    if not deltas:
-        return inlined if inlined is not None \
-            else _empty_cdc(spark, schema, change="delete")
-
+    skip = _maintenance_snapshots(session, table)
     resolver = session.catalog.resolver
-    parts = []
-    for d in deltas:
-        data_uri = to_spark_uri(resolver.file_path(
-            table.table_path, d.data_path, d.data_path_is_relative))
 
+    def uri(path, is_relative):
+        return to_spark_uri(resolver.file_path(table.table_path, path,
+                                               is_relative))
+
+    # snapshot → data-file URI → (file, newly deleted positions)
+    by_snapshot: dict[int, dict[str, tuple]] = {}
+    for d in session.provider.get_delete_files_added_between(
+            table.meta.table_id, start, end):
+        if d.snapshot_id in skip:
+            continue
+        rf = _data_file(session, table, d.data_path, d.data_path_is_relative,
+                        encryption_key=d.encryption_key,
+                        mapping_id=d.mapping_id, row_id_start=d.row_id_start)
         if d.cur_path is not None:
-            cur = deletion_vector(spark, to_spark_uri(resolver.file_path(
-                table.table_path, d.cur_path, d.cur_path_is_relative)),
-                d.record_count, data_uri)
+            cur = deletion_vector(
+                spark, uri(d.cur_path, d.cur_path_is_relative),
+                d.record_count, rf.data_uri, d.cur_encryption_key)
         elif d.record_count is None:
             raise InvalidConfig(
                 f"whole-file delete without record_count for {d.data_path}")
@@ -325,42 +282,32 @@ def table_deletions(session, name: str, start: int, end: int) -> DataFrame:
             if d.record_count % 64:
                 cur[-1] = (1 << (d.record_count % 64)) - 1
         if d.prev_path is not None:
-            cur = cur & ~deletion_vector(spark, to_spark_uri(
-                resolver.file_path(table.table_path, d.prev_path,
-                                   d.prev_path_is_relative)),
-                d.record_count, data_uri)
+            cur = cur & ~deletion_vector(
+                spark, uri(d.prev_path, d.prev_path_is_relative),
+                d.record_count, rf.data_uri, d.prev_encryption_key)
+        group = by_snapshot.setdefault(d.snapshot_id, {})
+        if rf.data_uri in group:
+            raise CatalogCorruption(
+                f"snapshot {d.snapshot_id} deletes from data file "
+                f"{rf.data_uri} twice")
+        group[rf.data_uri] = (rf, cur)
 
-        mapped_cols, hive_values = table.mapping_transform(
-            d.mapping_id, data_uri)
-        from ..sources.scan import ROWID_FILE_COL, file_has_rowid_column
-        rid_in_file = d.row_id_start is None and d.mapping_id is None \
-            and file_has_rowid_column(data_uri)
-        read_schema = schema
-        if rid_in_file:
-            from pyspark.sql import types as T
-            read_schema = T.StructType(
-                list(schema.fields)
-                + [T.StructField(ROWID_FILE_COL, T.LongType(), True)])
-        data = read_file_with_pos(spark, read_schema, ResolvedFile(
-            data_uri, mapping_id=d.mapping_id,
-            mapped_cols=mapped_cols, hive_values=hive_values))
-        if rid_in_file:
-            rowid = F.col(ROWID_FILE_COL)
-        elif d.row_id_start is not None:
-            rowid = (F.lit(d.row_id_start) + F.col(POS_COL)).cast("long")
-        else:
-            rowid = F.lit(None).cast("long")
-        part = (bitset_filter(spark, data, {None: cur}, keep_set=True)
-                .withColumn("rowid", rowid)
-                .drop(POS_COL))
-        if rid_in_file:
-            part = part.drop(ROWID_FILE_COL)
+    parts = []
+    for snapshot_id, group in sorted(by_snapshot.items()):
+        scanned = _scan_changes(spark, table,
+                                [rf for rf, _ in group.values()])
         parts.append(
-            part
-            .withColumn(CDC_SNAPSHOT_COL, F.lit(d.snapshot_id).cast("long"))
+            bitset_filter(spark, scanned,
+                          {u: words for u, (_, words) in group.items()},
+                          keep_set=True, key=FILE_COL, pos=POS_COL)
+            .drop(FILE_COL, POS_COL, "__snapshot")
+            .withColumn(CDC_SNAPSHOT_COL, F.lit(snapshot_id).cast("long"))
             .withColumn(CDC_CHANGE_COL, F.lit("delete")))
+    inlined = _inlined_changes(session, table, start, end, "delete", skip)
     if inlined is not None:
         parts.append(inlined)
+    if not parts:
+        return _empty_cdc(spark, table.spark_schema, change="delete")
     return reduce(DataFrame.unionByName, parts)
 
 

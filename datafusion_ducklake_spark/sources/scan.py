@@ -31,10 +31,13 @@ Spark-first design:
 - rowid and the virtual columns (filename, file_row_number, file_index,
   snapshot_id) ride the same scan: per-file catalog values are map
   literals looked up by ``_metadata.file_name``, the position is
-  ``_metadata.row_index``. This one scan is every reader's live-row
-  source — plain reads, DML matching (operators/dml.py), compaction and
-  merge-adjacent — so one delete filter, one rowid rule and one file key
-  serve them all; this module is the only reader of ``row_index``.
+  ``_metadata.row_index``. This one scan is every reader's row source —
+  plain reads, DML matching (operators/dml.py), compaction,
+  merge-adjacent and the change feed (operators/cdc.py reads inserted
+  files, and deleted rows through ``bitset_filter(keep_set=True)`` on
+  the virtual ``filename`` / ``file_row_number``) — so one delete filter,
+  one rowid rule and one file key serve them all; this module is the
+  only reader of ``row_index``.
 - Renames: Spark's native field-id resolution
   (spark.sql.parquet.fieldId.read.enabled) keyed by the catalog column_id
   stamped into the read schema's ``parquet.field.id`` metadata; files
@@ -533,15 +536,22 @@ def positions_bitset(positions, n_rows: int):
 
 
 def deletion_vector(spark: SparkSession, delete_uri: str,
-                    record_count: Optional[int], data_uri: str):
+                    record_count: Optional[int], data_uri: str,
+                    encryption_key: Optional[str] = None):
     """One delete file's bitset over its data file, read once on the
-    driver: pyarrow for local files, one Arrow collect for object stores.
-    Without a catalog ``record_count`` the data file's footer sizes it."""
+    driver: pyarrow for local files (decrypted with ``encryption_key``,
+    the delete file's stored PME key, when it has one), one Arrow collect
+    for object stores. Without a catalog ``record_count`` the data file's
+    footer sizes it."""
     _check_local_exists(delete_uri)
     words = _DELETION_VECTORS.get(delete_uri)
     if words is None:
         path = _local_path(delete_uri)
-        if path is not None:
+        if encryption_key is not None:
+            from .encryption import decode_key, read_encrypted_arrow
+            pos = read_encrypted_arrow(
+                delete_uri, decode_key(encryption_key)).column("pos")
+        elif path is not None:
             import pyarrow.parquet as pq
             pos = pq.ParquetFile(path).read(columns=["pos"]).column("pos")
         else:
@@ -578,18 +588,18 @@ def _words_literal(spark: SparkSession, words) -> Column:
 
 
 def bitset_filter(spark: SparkSession, data: DataFrame, bitsets: dict,
-                  keep_set: bool = False) -> DataFrame:
+                  keep_set: bool = False, key: str = "_metadata.file_name",
+                  pos: str = "_metadata.row_index") -> DataFrame:
     """Filter rows on their file-local position against a deletion
-    bitset. ``bitsets`` maps a data file's name, as ``_metadata.file_name``
-    reports it, to its words — or holds the one key None: words for every
-    row of a one-file frame carrying ``POS_COL``. A row whose bit is set is
-    dropped (``keep_set``: only such rows are kept); rows of files not
-    named pass (``keep_set``: are dropped). The optimizer folds the
-    literals into the filter, which runs inside the scan stage: no join,
-    no exchange, no extra job."""
+    bitset. ``bitsets`` maps a data file's key, as the ``key`` column
+    reports it (by default the file name Spark's scan reports), to its
+    words; ``pos`` is the row's file-local position column. A row whose
+    bit is set is dropped (``keep_set``: only such rows are kept); rows
+    of files not named pass (``keep_set``: are dropped). The optimizer
+    folds the literals into the filter, which runs inside the scan stage:
+    no join, no exchange, no extra job."""
     if not bitsets:
         return data
-    pos = POS_COL if None in bitsets else "_metadata.row_index"
     cols, tests = {}, []
     for i, words in enumerate(bitsets.values()):
         w = f"__ducklake_w{i}"
@@ -598,16 +608,14 @@ def bitset_filter(spark: SparkSession, data: DataFrame, bitsets: dict,
                  f"CAST(shiftright({pos}, 6) + 1 AS INT)) & "
                  f"shiftleft(1L, CAST({pos} % 64 AS INT))) = 0)")
         tests.append(f"NOT {clear}" if keep_set else clear)
-    if None in bitsets:
-        cond = tests[0]
-    else:
-        def quote(name):    # a SQL string literal
-            return "'{}'".format(
-                name.replace("\\", "\\\\").replace("'", "\\'"))
-        cond = ("CASE _metadata.file_name "
-                + " ".join(f"WHEN {quote(n)} THEN {t}"
-                           for n, t in zip(bitsets, tests))
-                + f" ELSE {str(not keep_set).lower()} END")
+
+    def quote(name):    # a SQL string literal
+        return "'{}'".format(
+            name.replace("\\", "\\\\").replace("'", "\\'"))
+    cond = (f"CASE {key} "
+            + " ".join(f"WHEN {quote(n)} THEN {t}"
+                       for n, t in zip(bitsets, tests))
+            + f" ELSE {str(not keep_set).lower()} END")
     return data.withColumns(cols).filter(cond).drop(*cols)
 
 
@@ -619,15 +627,6 @@ def _scan_name(spark: SparkSession, uri: str) -> str:
         return name
     return spark._jvm.org.apache.hadoop.fs.Path(uri).toUri().getRawPath() \
         .rsplit("/", 1)[-1]
-
-
-def _with_pos(df: DataFrame) -> DataFrame:
-    """Attach the file-local physical row position. ``_metadata.row_index``
-    is computed by the Parquet reader itself and is correct even when Spark
-    splits one file across tasks at row-group boundaries — the property the
-    reference gets from per-file streams + running offset
-    (delete_filter.rs:154-203)."""
-    return df.withColumn(POS_COL, F.col("_metadata.row_index"))
 
 
 def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -882,7 +881,7 @@ def _scan_files(spark: SparkSession, schema: T.StructType,
         if len(dirty) <= MAX_PER_FILE_BRANCHES:
             parts.append(bitset_filter(spark, read(batch), {
                 n: deletion_vector(spark, f.delete_uri, f.record_count,
-                                   f.data_uri)
+                                   f.data_uri, f.delete_encryption_key)
                 for n, f in dirty.items()}))
             continue
         clean = {n: f for n, f in batch.items() if not f.delete_uri}
@@ -1071,22 +1070,6 @@ def apply_mapping(df: DataFrame, schema: T.StructType,
         if fld.name not in covered:
             df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
     return df.select(*[fld.name for fld in schema.fields], *present)
-
-
-def read_file_with_pos(spark: SparkSession, schema: T.StructType,
-                       rf: ResolvedFile) -> DataFrame:
-    """One data file with its file-local position column, mapping-aware —
-    the read primitive for CDC paths that do their own position algebra."""
-    if rf.mapped_cols is None:
-        # the same field-id / by-name resolution as scan_table (an
-        # identity-mapped file has no field ids; a pre-nested-id file
-        # under a struct-evolved schema resolves nested fields by name)
-        [(s, _)] = _split_by_field_ids(schema, [rf])
-        return _with_pos(_read_parquet(spark, s, [rf.data_uri]))
-    eff, read_schema = mapped_read_schema(schema, rf)
-    df = _with_pos(_read_parquet(spark, read_schema, [rf.data_uri]))
-    hive_lits = tuple((h[0], h[2]) for h in (rf.hive_values or ()))
-    return apply_mapping(df, schema, eff, hive_lits, [POS_COL])
 
 
 _ENC_ROWID_CACHE: dict[str, bool] = {}

@@ -165,11 +165,9 @@ class _CatalogStreamReader(DataSourceStreamReader):
                 f"{self._table} (foreign add_files tables: use "
                 f"mode='glob' or replay_changes())")
         if self._flush_snapshots is None:
-            marker = "flushed_inlined_data:"
-            self._flush_snapshots = {
-                sid for sid, s in
-                self._provider.get_snapshot_changes().items()
-                if marker in (s or "")}
+            from ..operators.cdc import labeled_snapshots
+            self._flush_snapshots = labeled_snapshots(
+                self._provider, handle.meta.table_id, "flushed_inlined_data")
         lo, hi = _rowid_extent(f.data_uri, f.encryption_key)
         snap = int(f.begin_snapshot or 0)
         if f.begin_snapshot in self._flush_snapshots:

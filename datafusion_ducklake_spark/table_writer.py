@@ -837,7 +837,10 @@ def compact_table(session, name: str, single_file: bool = True,
         session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled",
                                "true")
         data_cols = [f.name for f in session.table(name).schema.fields]
-        out = (df2.repartition("__run").sortWithinPartitions("rowid")
+        # sort on __run first: the planned partitionBy("__run") write
+        # re-sorts on __run alone, which would drop a rowid-only order
+        out = (df2.repartition("__run")
+               .sortWithinPartitions("__run", "rowid")
                .select(*data_cols, "__run"))
         out = _with_field_ids_partial(
             out, data_cols, setup.column_ids,
@@ -1441,7 +1444,10 @@ def rewrite_file_groups(session, name: str, groups: list,
                                "true")
         data_cols = [c.column_name for c in handle.columns]
         col_ids = [c.column_id for c in handle.columns]
-        out = (df2.repartition("__run").sortWithinPartitions("rowid")
+        # sort on __run first: the planned partitionBy("__run") write
+        # re-sorts on __run alone, which would drop a rowid-only order
+        out = (df2.repartition("__run")
+               .sortWithinPartitions("__run", "rowid")
                .select(*data_cols, "__run"))
         out = _with_field_ids_partial(
             out, data_cols, col_ids,

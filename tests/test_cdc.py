@@ -314,3 +314,29 @@ class TestTimestampBounds:
     def test_upper_bound_before_first_snapshot_rejected(self, dl):
         with pytest.raises(InvalidConfig):
             dl.table_changes("main.users", 0, "1969-01-01 00:00:00")
+
+
+def test_deletions_of_one_snapshot_share_one_scan(spark, tmp_path):
+    """A DELETE touching 3 data files is one delete snapshot: its
+    deleted rows come from ONE Parquet scan, not one scan per file."""
+    from datafusion_ducklake_spark.metadata.writer import CatalogWriter
+    db = str(tmp_path / "one.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "onelake"))
+    w.close()
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.t", spark.createDataFrame(
+        [(i,) for i in range(4)], "id INT").coalesce(1))
+    for k in (1, 2):
+        dl.insert_into("main.t", spark.createDataFrame(
+            [(10 * k + i,) for i in range(4)], "id INT").coalesce(1))
+    assert len(dl.table_handle("main.t").files) == 3
+    before = dl.provider.get_current_snapshot()
+    dl.delete_from("main.t", "id % 2 = 0")
+    snap = dl.provider.get_current_snapshot()
+    df = dl.table_deletions("main.t", before, snap)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation") == 1, plan
+    assert sorted((r.id, r.rowid, r.snapshot_id) for r in df.collect()) == \
+        [(i, r, snap) for i, r in
+         [(0, 0), (2, 2), (10, 4), (12, 6), (20, 8), (22, 10)]]

@@ -111,3 +111,28 @@ def test_encrypted_virtual_columns(edl, spark):
     uris = {f.data_uri for f in edl.table_handle("main.v").files}
     assert {r.filename for r in rows} <= uris
     assert len({r.snapshot_id for r in rows}) == 1
+
+
+def test_encrypted_change_feed(edl, spark):
+    """CDC over an encrypted table reads its data files through the
+    encrypted scan and decrypts the delete files (the current one and a
+    superseded one) with their catalog keys."""
+    edl.sql("CREATE TABLE t (id BIGINT)")
+    edl.insert_into("main.t", spark.range(6).coalesce(1).selectExpr("id"))
+    s0 = edl.provider.get_current_snapshot()
+    edl.sql("DELETE FROM t WHERE id < 3")
+    s1 = edl.provider.get_current_snapshot()
+    edl.sql("DELETE FROM t WHERE id = 4")           # supersedes s1's file
+    s2 = edl.provider.get_current_snapshot()
+    edl.insert_into("main.t", spark.range(10, 11).selectExpr("id"))
+    s3 = edl.provider.get_current_snapshot()
+    dels = edl.table_deletions("main.t", s0, s3).collect()
+    assert sorted((r.id, r.rowid, r.snapshot_id) for r in dels) == \
+        [(0, 0, s1), (1, 1, s1), (2, 2, s1), (4, 4, s2)]
+    want = [(0, "delete"), (1, "delete"), (2, "delete"), (4, "delete"),
+            (10, "insert")]
+    assert sorted((r.id, r.change_type) for r in
+                  edl.table_changes("main.t", s0, s3).collect()) == want
+    assert sorted((r.id, r.change_type) for r in edl.sql(
+        f"SELECT id, change_type FROM "
+        f"ducklake_table_changes('main.t', {s0}, {s3})").collect()) == want

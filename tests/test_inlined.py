@@ -364,3 +364,35 @@ def test_sql_call_flush(spark, tmp_path):
     assert out[0]["count"] == 1
     assert dl.table_handle("main.s").inlined_rows() == []
     assert sorted(r["id"] for r in dl.table("main.s").collect()) == [1, 2]
+
+
+def test_cdc_over_inlined_rows_after_add_column(spark, tmp_path):
+    """Inlined rows written before an ADD COLUMN lack the new column in
+    their inlined table: the change feed reads it as NULL on both the
+    insert and the delete side, like the table read does."""
+    db = str(tmp_path / "ac.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "aclake"))
+    w.close()
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.c", spark.createDataFrame(
+        [(1, "a")], "id INT, s STRING"))
+    dl.set_option("data_inlining_row_limit", 10)
+    start = dl.provider.get_current_snapshot()
+    dl.insert_into("main.c", spark.createDataFrame(
+        [(2, "b"), (3, "c")], "id INT, s STRING"))     # inlined
+    ins = dl.provider.get_current_snapshot()
+    dl.sql("ALTER TABLE c ADD COLUMN x INTEGER")
+    alter = dl.provider.get_current_snapshot()
+    for hi in (ins, alter):
+        ch = dl.table_changes("main.c", start, hi).collect()
+        assert sorted((r.id, r.s, r.change_type, r.snapshot_id)
+                      for r in ch) == [(2, "b", "insert", ins),
+                                       (3, "c", "insert", ins)]
+    assert [r.x for r in dl.table_changes("main.c", start, alter)
+            .collect()] == [None, None]
+    dl.sql("DELETE FROM c WHERE id = 2")
+    end = dl.provider.get_current_snapshot()
+    ch = dl.table_changes("main.c", alter, end).collect()
+    assert [(r.id, r.s, r.x, r.change_type, r.snapshot_id) for r in ch] == \
+        [(2, "b", None, "delete", end)]

@@ -248,6 +248,39 @@ def test_merge_adjacent_respects_target_file_size(spark, tmp_path):
             for f in dl.table_handle("main.t")._raw_files} == before_ids
 
 
+def test_compact_and_merge_keep_rowids_on_their_rows(spark, tmp_path):
+    """compact and merge_adjacent_files rewrite files keeping every
+    row's rowid: the rewrite's write order must not permute them. Later
+    files are larger, so the scan (largest file first) reads them out of
+    rowid order."""
+    db = str(tmp_path / "rid.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "lake"))
+    w.close()
+    dl = DuckLakeSession(spark, db)
+
+    def ids(lo, hi):
+        return spark.createDataFrame(
+            [(i,) for i in range(lo, hi)], "id INT").coalesce(1)
+
+    def id_rowid(name):
+        return sorted((r.id, r.rowid) for r in
+                      dl.table(name, with_rowid=True).collect())
+
+    dl.create_table("main.evs", ids(0, 5))
+    dl.insert_into("main.evs", ids(5, 50))
+    dl.compact("main.evs")
+    assert len(dl.table_handle("main.evs").files) == 1
+    assert id_rowid("main.evs") == [(i, i) for i in range(50)]
+
+    dl.create_table("main.m3", ids(0, 5))
+    dl.insert_into("main.m3", ids(5, 50))
+    dl.insert_into("main.m3", ids(50, 500))
+    assert dl.merge_adjacent_files() == 1
+    assert len(dl.table_handle("main.m3").files) == 1
+    assert id_rowid("main.m3") == [(i, i) for i in range(500)]
+
+
 def test_merge_adjacent_preserves_partition_values(spark, tmp_path):
     # maintenance over a partitioned table: files merge only within one
     # partition-value tuple and rewritten files keep exact pruning values
