@@ -210,7 +210,6 @@ class HybridRunner:
         if case.kind == "compact":
             self.dl.compact(f"main.{case.sql.strip()}")
             self.dl.refresh()
-            self.dl.register_views()
         elif case.kind == "snapshot":
             # time-travel baseline (ref: sql/time_travel/): pin the engine's
             # current snapshot id; freeze DuckDB's state in a shadow schema
@@ -233,12 +232,7 @@ class HybridRunner:
             snap = self._snapshots[case.arg]
             pinned = DuckLakeSession(self.spark, self.db_path,
                                      snapshot_id=snap)
-            try:
-                pinned.register_views()
-                ours = pinned.sql(case.sql).toPandas()
-            finally:
-                # restore current-snapshot views for subsequent cases
-                self.dl.register_views()
+            ours = pinned.sql(case.sql).toPandas()
             self.duck.execute(f"SET search_path = 'snap_{case.arg},main'")
             try:
                 theirs = self.duck.sql(case.sql).df()
@@ -271,7 +265,6 @@ class HybridRunner:
                    if case.kind == "statement_engine2" else self.dl)
             ses.sql(case.sql)              # our DML/DDL path writes the lake
             self.dl.refresh()
-            self.dl.register_views()
             avm = re.match(
                 r"\s*ALTER\s+VIEW\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)",
                 case.sql, re.I)
@@ -355,7 +348,6 @@ class HybridRunner:
             for tbl in dict.fromkeys(_TABLE_RE.findall(case.sql)):
                 self._sync(tbl)
             self.dl.refresh()
-            self.dl.register_views()
         else:
             ours = self.dl.sql(case.sql).toPandas()
             theirs = self.duck.sql(case.sql).df()

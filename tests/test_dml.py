@@ -691,3 +691,24 @@ def test_dml_reads_initial_default(dl):
     assert dl.update_where("main.t", {"v": "v + 1"}, "c = 5 AND id < 4") == 4
     assert dl.delete_from("main.t", "c = 5 AND id >= 10") == 10
     assert _ids(dl) == list(range(10))
+
+
+def test_virtual_read_and_update_fill_nested_field_default(dl):
+    """A struct field added with a DEFAULT reads the default on rows
+    written before it existed through the virtual-column read and DML
+    too, not only the plain read; UPDATE keeps it on the rewritten row."""
+    dl.sql("CREATE TABLE main.s (id INT, col1 STRUCT<i:INT, j:INT>)")
+    dl.sql("INSERT INTO main.s SELECT 1 AS id, "
+           "named_struct('i', 1, 'j', 2) AS col1")
+    dl.sql("ALTER TABLE main.s ADD COLUMN col1.k INTEGER DEFAULT 42")
+    dl.sql("INSERT INTO main.s SELECT 2 AS id, "
+           "named_struct('i', 3, 'j', 4, 'k', 7) AS col1")
+
+    def ks(rel):
+        return sorted((r["id"], r["k"]) for r in dl.sql(
+            f"SELECT id, col1.k AS k FROM {rel}").collect())
+
+    assert ks("s") == [(1, 42), (2, 7)]
+    assert ks("s__virtual") == [(1, 42), (2, 7)]
+    assert dl.update_where("main.s", {"id": "id + 10"}, "id = 1") == 1
+    assert ks("s") == [(2, 7), (11, 42)]

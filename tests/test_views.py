@@ -103,7 +103,9 @@ def test_time_travel_sees_pre_drop_and_pre_replace(dl, spark):
                   pinned2.sql("SELECT id FROM tt").collect()) == [9, 10, 11]
     # current session: dropped
     fresh = DuckLakeSession(spark, dl.catalog_path)
-    assert "main.tt" not in fresh._view_rewrites
+    for ref in ("tt", "main.tt"):
+        with pytest.raises(Exception, match="tt"):
+            fresh.sql(f"SELECT id FROM {ref}").collect()
 
 
 def test_old_catalog_without_view_table_reads_fine(dl, spark):
