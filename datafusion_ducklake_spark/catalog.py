@@ -17,6 +17,7 @@ entry points.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import weakref
@@ -1006,6 +1007,7 @@ class DuckLakeSession:
         self._names: Optional[dict] = None       # pin's relation names
         self._frames: dict[tuple, DataFrame] = {}   # relation key → frame
         self._views: dict[str, tuple] = {}       # temp view → relation key
+        self._published: Optional[list] = None   # open statement's views
         self._txn_base: Optional[int] = None   # BEGIN's snapshot anchor
         self._macros: Optional[list] = None    # lazy ducklake_macro cache
         self._st_registered = False
@@ -1097,7 +1099,7 @@ class DuckLakeSession:
         if not isinstance(meta, TableMeta):
             if meta is None or variant:
                 raise TableNotFound(name)
-            return self.spark.sql(self._plan_view_body(meta.sql))
+            return self._plan_view_body(meta.sql)
         resolver = self.catalog.resolver
         try:
             return DuckLakeTable(
@@ -1125,6 +1127,37 @@ class DuckLakeSession:
         self._views[view] = key
         self._publish(view, df)
         return view
+
+    def _probe(self, key: tuple) -> DataFrame:
+        """The frame of relation ``key``, leaving no binding behind:
+        whatever building it binds (a view body's relations) is released
+        again, and the session's own bindings are kept as they were."""
+        frames, views = dict(self._frames), dict(self._views)
+        try:
+            return self._build(key)
+        finally:
+            for view, k in self._views.items():
+                if view not in views:
+                    self._release(view, self._frames[k])
+            self._frames, self._views = frames, views
+
+    @contextlib.contextmanager
+    def _statement(self):
+        """Scope of one statement. The metadata views it publishes serve
+        its analysis, and its run when it is DML; leaving the outermost
+        scope drops the views left in the yielded list. Analysis inlines a
+        temp view's plan, so a frame built over one still runs after the
+        view is gone."""
+        if self._published is not None:
+            yield self._published
+            return
+        self._published = []
+        try:
+            yield self._published
+        finally:
+            published, self._published = self._published, None
+            for view, df in published:
+                self._release(view, df)
 
     def _publish(self, view: str, df: DataFrame) -> None:
         """Point temp view ``view`` at ``df`` unless it already does.
@@ -1258,7 +1291,10 @@ class DuckLakeSession:
             view = "__ducklake_" + re.sub(r"\W", "_", name.lower())
             if args:
                 view += f"_{zlib.crc32(repr(args).encode()):08x}"
-            self._publish(view, info_schema.relation(self, name, args))
+            df = info_schema.relation(self, name, args)
+            self._publish(view, df)
+            if self._published is not None:
+                self._published.append((view, df))
             return view
 
         return self._RELATION_RE.sub(sub, query)
@@ -1268,11 +1304,12 @@ class DuckLakeSession:
                 re.search(r"\bst_\w+\s*\(", query, re.I):
             self.register_sql_functions()
 
-    def _plan_view_body(self, body: str) -> str:
-        """A persisted view body as Spark-plannable text, its relations
-        bound. The stored text itself is never rewritten."""
+    def _plan_view_body(self, body: str) -> DataFrame:
+        """A persisted view body planned at the pin, its relations bound.
+        The stored text itself is never rewritten."""
         self._register_st_functions(body)
-        return self._resolve_relations(body)
+        with self._statement():
+            return self.spark.sql(self._resolve_relations(body))
 
     # -- SQL-callable DML (simple single-statement forms; the corpus
     #    drives DML through SQL, sql/delete/ sql/update/ sql/insert/) ----
@@ -2356,23 +2393,28 @@ class DuckLakeSession:
             query = re.sub(r"CAST\s*\(\s*('(?:[^']|'')*')\s+AS\s+GEOMETRY"
                            r"\s*\)", r"st_geomfromtext(\1)", query,
                            flags=re.I)
-        ddl = self._try_macro_ddl(query)
-        if ddl is not None:
-            return ddl
-        from .operators.macros import expand_macros
-        query = expand_macros(query, self._live_macros())
-        self._register_st_functions(query)
-        if not is_query and re.search(r"\(\s*SELECT\b", query, re.I):
-            # DML conditions and SET expressions reach Spark as raw text:
-            # bind the relations their subqueries name
-            self._resolve_relations(query)
-        dml = self._try_dml(query)
-        if dml is not None:
-            return dml
-        query = self._resolve_relations(self._resolve_comment_calls(query))
-        if args is None:
-            return self.spark.sql(query)
-        return self.spark.sql(query, args)
+        with self._statement() as published:
+            ddl = self._try_macro_ddl(query)
+            if ddl is not None:
+                return ddl
+            from .operators.macros import expand_macros
+            query = expand_macros(query, self._live_macros())
+            self._register_st_functions(query)
+            if not is_query and re.search(r"\(\s*SELECT\b", query, re.I):
+                # DML conditions and SET expressions reach Spark as raw text:
+                # bind the relations their subqueries name
+                self._resolve_relations(query)
+            dml = self._try_dml(query)
+            if dml is not None:
+                return dml
+            query = self._resolve_relations(self._resolve_comment_calls(query))
+            if not is_query:
+                # a command Spark keeps as text (CREATE TEMP VIEW, CACHE
+                # TABLE) resolves the metadata views' names again later
+                published.clear()
+            if args is None:
+                return self.spark.sql(query)
+            return self.spark.sql(query, args)
 
     def refresh(self) -> None:
         """Re-pin to the latest snapshot (the reference re-creates its
@@ -2511,7 +2553,7 @@ class DuckLakeSession:
         if if_not_exists and self._view_exists(name):
             return
         # validate: the body must plan against the current catalog
-        self.spark.sql(self._plan_view_body(sql_text))
+        self._plan_view_body(sql_text)
         writer = _catalog_writer(self)
         try:
             writer.create_view(schema.meta.schema_id, view_name, sql_text,

@@ -42,8 +42,8 @@ def poly_hash64(col: Column | str) -> Column:
     (CodegenFallback), and the two-fold form evaluated the ``codes``
     transform once per fold — the dominant cost of every poly-hashed
     shingle. Same recurrences, same constants, bit-identical output
-    (tools/exp_dedup_shapes.py: equality-checked, min wall 0.50→0.37 s
-    hashing 500 full documents at sf0.01)."""
+    (equality-checked A/B, since deleted: min wall 0.50→0.37 s hashing
+    500 full documents at sf0.01)."""
     c = F.col(col) if isinstance(col, str) else col
     codes = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(c), F.lit(1))),
@@ -810,7 +810,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     on exploded rows, then aggregates the 64 bit-votes as codegen'd
     SUMs with map-side partial aggregation (the exchange ships one
     65-column row per document). Bit-identical to ``simhash``
-    (tools/exp_dedup_shapes.py: equality-checked; signatures-only wall
+    (equality-checked A/B, since deleted: signatures-only wall
     6.76 -> 1.86 s at sf0.01). The Column form stays for expression
     contexts; this is the DataFrame-scale path."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col

@@ -22,11 +22,13 @@ import os
 import re
 from functools import lru_cache
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..errors import InvalidConfig, TableNotFound
+from ..errors import (DuckLakeError, InvalidConfig, TableNotFound,
+                      UnsupportedType)
 
 _CONVERT = {T.StringType: str, T.BooleanType: bool, T.LongType: int,
             T.IntegerType: int, T.DoubleType: float}
@@ -145,16 +147,15 @@ def _append_view_columns(session, snap, rows) -> None:
     from ..types import spark_to_ducklake_type
     for sch in session.provider.list_schemas(snap):
         for v in session.provider.list_views(sch.schema_id, snap):
+            key = (f"{sch.schema_name}.{v.view_name}".lower(), None)
             try:
-                vschema = session.sql(
-                    f"SELECT * FROM {sch.schema_name}.{v.view_name} "
-                    f"LIMIT 0").schema
-            except Exception:
+                vschema = session._probe(key).schema
+            except (DuckLakeError, AnalysisException):
                 continue        # view over a dropped/renamed table
             for pos, f in enumerate(vschema.fields, start=1):
                 try:
                     dtype = spark_to_ducklake_type(f.dataType)
-                except Exception:
+                except UnsupportedType:
                     dtype = f.dataType.simpleString()
                 rows.append((sch.schema_name, v.view_name, None, f.name,
                              dtype, True, dtype, "YES", pos))

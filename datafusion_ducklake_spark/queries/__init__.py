@@ -85,8 +85,7 @@ _SPECS = [
     # mm_audio_features, mm_frame_samples, cube_revenue,
     # ds_channel_union and ds_rank_in_category (all stable since r8 or
     # earlier). Evicted specs
-    # stay covered by the local 98/98 gate (tools/check_correctness.py),
-    # whose log is committed per round as CORRECTNESS_r{N}_local.txt
+    # stay covered by the local 98/98 gate (tools/check_correctness.py)
     QuerySpec("q05_local_supplier_volume", tpch.q05_local_supplier_volume, tpch.ORACLE_Q05, True),
     QuerySpec("q08_market_share", tpch2.q08_market_share, tpch2.ORACLE_Q08, True),
     QuerySpec("q10_returned_items", tpch.q10_returned_items, tpch.ORACLE_Q10, True),

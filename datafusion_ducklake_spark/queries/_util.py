@@ -27,20 +27,6 @@ TABLES = (
 
 _DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
-# Layout experiments (operators/layout.py) and catalog-managed storage can
-# inject an alternative physical source (e.g. a bucketed session-catalog
-# table) under the same query bodies: logical query text stays identical,
-# only the scan changes — exactly how a catalog would swap layouts.
-_TABLE_OVERRIDES: dict[str, DataFrame] = {}
-
-
-def set_table_override(name: str, df: DataFrame | None) -> None:
-    if df is None:
-        _TABLE_OVERRIDES.pop(name, None)
-    else:
-        _TABLE_OVERRIDES[name] = df
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table. Parquet scan → Catalyst handles column
     pruning + predicate pushdown. The unresolved DataFrame is memoized per
@@ -49,9 +35,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for schema inference on every query (driver-side I/O that at 100k
     files/queries would serialize plan time). No .cache()/persist — data
     is never pinned, each query still scans."""
-    override = _TABLE_OVERRIDES.get(name)
-    if override is not None:
-        return override
     key = (id(spark), sf_dir, name)
     df = _DF_CACHE.get(key)
     if df is None:
@@ -74,19 +57,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream date_format/date_trunc match the DuckDB oracle's naive
     # rendering on any host machine, not just UTC ones.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    override = _TABLE_OVERRIDES.get("events")
-    if override is not None:
-        # catalog-served layout (e.g. bench.py's events-clustered
-        # sub-tier): same ts normalization on top of the injected scan,
-        # never cached — the override owner controls its lifetime
-        df = override
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
     key = (id(spark), sf_dir, "__events_converted")
     cached = _DF_CACHE.get(key)
     if cached is not None:
@@ -117,20 +87,6 @@ _EXACT_SUMS = True
 def set_exact_sums(flag: bool) -> None:
     global _EXACT_SUMS
     _EXACT_SUMS = flag
-
-
-# Bench-only plan rewrites that snapshot data properties at DataFrame
-# BUILD time (e.g. cb_top_users' event-type domain collect). Off by
-# default: the library-default plan must stay valid across appends — a
-# cached domain-snapshot plan silently undercounts after an append with
-# a new value (r7 ADVICE). bench.py turns this on; it rebuilds every
-# DataFrame per timed run, so the snapshot is always fresh there.
-_BENCH_REWRITES = False
-
-
-def set_bench_rewrites(flag: bool) -> None:
-    global _BENCH_REWRITES
-    _BENCH_REWRITES = flag
 
 
 def dsum(col: Column | str) -> Column:

@@ -173,66 +173,18 @@ WINDOW w AS (PARTITION BY brand ORDER BY m
 """
 
 
-def _events_type_domain(spark: SparkSession, sf_dir: str) -> list:
-    """Bench-only event_type domain snapshot, collected fresh on EVERY
-    DataFrame build. A fingerprint-keyed cache of this collect existed
-    briefly (round-10 build session) and was removed in the round-10
-    optimization pass: memoizing a data-derived result across bench reps
-    skips part of the timed computation on warm reps — every bench
-    invocation must compute from the parquet inputs. The domain pass is
-    a bounded extra scan of one dictionary-encoded column (a few rows
-    collected), paid inside every timed build."""
-    ev = load_events(spark, sf_dir)
-    return sorted(
-        r[0] for r in ev.select("event_type").distinct().collect()
-        if r[0] is not None)  # countDistinct ignores NULLs
-
-
 def cb_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickBench heavy-hitter shape: top 20 users by event count.
+    """ClickBench heavy-hitter shape: top 20 users by event count."""
+    return top_users(load_events(spark, sf_dir))
 
-    Low-cardinality-domain distinct rewrite: event_type has a handful of
-    values, so a bounded domain-discovery pass (partial-distinct per
-    partition, a few rows collected) lets n_types become a sum of
-    conditional MAX flags in a single int-keyed aggregation — measured
-    ~1.5x faster than the generic countDistinct plan, whose two-level
-    (user,type)->(user) shape pays a second exchange and a string group
-    key. Scale-safe: the collect is bounded by the type-domain size, and
-    the main agg stays one partial+final pass over user_id.
 
-    The domain is snapshotted when this function BUILDS the DataFrame,
-    so the rewrite is gated behind ``_util.set_bench_rewrites(True)``
-    (r7 ADVICE): bench.py enables it and rebuilds every DataFrame per
-    timed run, so every timed rep pays the domain collect — the
-    round-10 build session's fingerprint-keyed snapshot cache was
-    removed in the optimization pass (memoized data-derived results
-    are off-limits in the bench path; see _events_type_domain). The
-    library default is the generic two-level countDistinct plan, which
-    stays valid across appends and when the domain is unbounded. Same
-    rows and values either way (driver-hash-equal). The bench's
-    catalog-path answer for this query is the events-clustered
-    sub-tier (bench.py EVENTS_CLUSTERED_QUERIES): with events
-    clustered on user_id, the groupBy runs as a complete per-bucket
-    aggregate with no exchange.
-    """
-    from . import _util
-    ev = load_events(spark, sf_dir)
-    if _util._BENCH_REWRITES and _util._TABLE_OVERRIDES.get("events") is None:
-        # plain-scan rewrite only: over a user_id-clustered override the
-        # generic two-level countDistinct already collapses to a
-        # zero-exchange in-bucket aggregate (measured 0.27 vs 0.54 s at
-        # SF10 — the flags path's domain-discovery job is pure overhead
-        # there)
-        types = _events_type_domain(spark, sf_dir)
-        flags = [F.max(F.when(F.col("event_type") == ty, 1).otherwise(0))
-                 for ty in types]
-        n_types = sum(flags[1:], flags[0]).cast("long") if flags \
-            else F.lit(0).cast("long")
-    else:
-        n_types = F.countDistinct("event_type")
+def top_users(ev: DataFrame) -> DataFrame:
+    """cb_top_users' aggregate over any events frame. Over events
+    clustered on user_id (operators/layout.cluster_by) the groupBy runs as
+    a complete per-bucket aggregate with no exchange."""
     return (ev.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_events"),
-                 n_types.alias("n_types"))
+                 F.countDistinct("event_type").alias("n_types"))
             .orderBy(F.desc("n_events"), F.asc("user_id"))
             .limit(20))
 

@@ -71,6 +71,7 @@ class TestShjConversionThreshold:
         assert bench._shj_conversion_threshold(
             500 * MiB, 32, 4 * GiB) == "256m"
 
+
 class _ConfRecorder:
     """Duck-typed SparkSession: records conf.set calls from _tune_for_dir."""
     class _Conf:
@@ -123,92 +124,20 @@ class TestTuneForDir:
         assert int(vals["spark.sql.shuffle.partitions"]) == 128  # 4*cpus
 
 
-class TestStdoutLine:
-    """The driver keeps only the last ~2000 chars of stdout: the r6-r9
-    headline lines overflowed that window and were recorded parsed=null.
-    _stdout_line must emit one parseable JSON line within budget without
-    ever shedding a contract key."""
+class TestContractLine:
+    """bench.py prints one JSON line; a capture window may keep as little
+    as the last ~2000 characters of stdout, so the line must fit whole."""
 
-    def _headline(self, n_queries=27, note_chars=160):
-        return {
-            "metric": "headline_suite_wall",
-            "value": 12.3456,
-            "unit": "sec",
-            "queries": {f"q{i:02d}_some_longish_query_name": round(
-                0.1 + i * 0.037, 3) for i in range(n_queries)},
-            "sf": 0.1,
-            "floor_sec": 0.2054,
-            "suite_floor_adjusted": 6.05,
-            "duckdb_total": 2.2274,
-            "ratio_vs_duckdb_raw": 5.17,
-            "ratio_vs_duckdb_floor_adjusted": 2.72,
-            "ratio_min_vs_duckdb_min": 5.29,
-            "detail_file": "BENCH_detail.json",
-            "suite_delta_note": "x" * note_chars,
-            "scaled": {"scale_factor_equivalent": 1.0, "value": 20.5,
-                       "ratio_vs_duckdb_raw": 5.87},
-            "scaled3": {"sf_equivalent": 10.0, "ratio_vs_duckdb_raw": 1.52,
-                        "clustered_ratio_min_med": 2.0,
-                        "clustered_ratio_min_max": 4.1},
-        }
-
-    def test_fits_budget_and_parses(self):
+    def test_full_headline_suite_fits_the_capture_window(self):
         import json
-        line = bench._stdout_line(self._headline())
-        assert len(line) <= bench.STDOUT_BUDGET
-        parsed = json.loads(line)
-        assert parsed["metric"] == "headline_suite_wall"
-        assert len(parsed["queries"]) == 27
-        # nothing shed on the normal-sized line
-        assert "suite_delta_note" in parsed and "scaled3" in parsed
-
-    def test_sheds_annotations_never_contract_keys(self):
-        import json
-        h = self._headline(n_queries=45, note_chars=900)
-        line = bench._stdout_line(h)
-        assert len(line) <= bench.STDOUT_BUDGET
+        from datafusion_ducklake_spark.queries import headline_queries
+        wall = {n: 12.3456 for n in headline_queries()}
+        duck = {n: 1.2345 for n in wall}
+        line = bench._contract_line(wall, 0.1, 0.2054, duck)
+        assert "\n" not in line and len(line) <= 1950
         parsed = json.loads(line)
         for key in ("metric", "value", "unit", "queries", "sf",
-                    "ratio_vs_duckdb_raw", "detail_file"):
+                    "floor_sec", "duckdb_total", "ratio_vs_duckdb_raw"):
             assert key in parsed
-        assert len(parsed["queries"]) == 45
-        assert "suite_delta_note" not in parsed  # shed first
-
-    def test_terminal_safeguard_rounds_query_walls(self):
-        # r10 ADVICE: when the queries dict ALONE outgrows the budget
-        # (every optional key already shed), the walls are compacted to
-        # 2 decimals rather than silently printing an unparseable line.
-        import json
-        h = self._headline(n_queries=60, note_chars=900)
-        h["queries"] = {f"q{i:02d}_an_even_longer_synthetic_query_name":
-                        round(0.1234 + i * 0.0371, 4) for i in range(60)}
-        line = bench._stdout_line(h)
-        parsed = json.loads(line)
-        assert len(parsed["queries"]) == 60
-        if len(line) <= bench.STDOUT_BUDGET:
-            # budget met via rounding: every wall carries <= 2 decimals
-            assert all(round(v, 2) == v for v in parsed["queries"].values())
-
-    def test_terminal_safeguard_warns_when_unfixable(self, capsys):
-        import json
-        h = self._headline(n_queries=400, note_chars=0)
-        line = bench._stdout_line(h)
-        parsed = json.loads(line)           # still one parseable JSON line
-        assert len(parsed["queries"]) == 400
-        assert "over the" in capsys.readouterr().err
-
-    def test_live_committed_headline_fits(self):
-        # r10 verdict #8: the unit shapes above are synthetic — ALSO pin
-        # the real committed headline (the exact dict bench.py printed at
-        # the evidence tier) inside the capture window with nothing shed.
-        import glob
-        import json
-        from pathlib import Path
-        paths = sorted(glob.glob(str(Path(bench.REPO) / "BENCH_r*_local.json")))
-        assert paths, "no committed local bench artifact"
-        live = json.loads(Path(paths[-1]).read_text())
-        line = bench._stdout_line(dict(live))
-        assert len(line) <= bench.STDOUT_BUDGET
-        parsed = json.loads(line)
-        assert parsed["queries"] == live["queries"]      # contract intact
-        assert "suite_delta_note" in parsed              # nothing shed
+        assert parsed["queries"] == {n: 12.346 for n in wall}
+        assert parsed["ratio_vs_duckdb_raw"] == 10.0

@@ -168,3 +168,58 @@ def test_catalog_temp_views_are_created_in_one_function():
               and node.attr == "createOrReplaceTempView"}
     assert owners == {"_publish"}
     assert src.count("createOrReplaceTempView(") == 1
+
+
+def _metadata_views(spark):
+    temp = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    owned = set(catalog_mod._VIEW_OWNERS.get(spark, {}))
+    return {n for n in temp | owned if n.startswith("__ducklake_")}
+
+
+def test_metadata_views_are_dropped_after_their_statement(spark, tmp_path):
+    """A ``ducklake_<fn>(…)`` call's temp view lives only as long as the
+    statement that named it; the frame it returned still runs. A command
+    Spark keeps as text (CREATE TEMP VIEW) keeps its metadata view."""
+    before = _metadata_views(spark)
+    dl = DuckLakeSession(spark, str(tmp_path / "c.sqlite"))
+    dl.create_table("main.t", spark.range(0).selectExpr("id"))
+    snaps = [dl.provider.get_current_snapshot()]
+    for i in range(20):
+        dl.sql(f"INSERT INTO t VALUES ({i})")
+        snaps.append(dl.provider.get_current_snapshot())
+    frames = [dl.sql("SELECT id, change_type FROM ducklake_table_changes("
+                     f"'main.t', {a}, {b})")
+              for a, b in zip(snaps, snaps[1:])]
+    assert _metadata_views(spark) == before
+    for i, df in enumerate(frames):
+        assert [tuple(r) for r in df.collect()] == [(i, "insert")]
+    dl.sql("CREATE TEMP VIEW feed AS SELECT id FROM "
+           f"ducklake_table_changes('main.t', {snaps[0]}, {snaps[-1]})")
+    try:
+        assert spark.sql("SELECT count(*) FROM feed").collect()[0][0] == 20
+    finally:
+        spark.catalog.dropTempView("feed")
+
+
+def test_columns_query_leaves_no_binding_behind(spark, tmp_path,
+                                                to_df_calls):
+    """``information_schema.columns`` plans every persisted view to read
+    its columns, without binding the views or their tables into the
+    session; the next ``refresh()`` has nothing to rebuild."""
+    db = str(tmp_path / "c.sqlite")
+    setup = DuckLakeSession(spark, db)
+    for i in range(5):
+        setup.create_table(f"main.t{i}", spark.range(2).selectExpr("id"))
+        setup.sql(f"CREATE VIEW v{i} AS SELECT id AS k{i} FROM t{i}")
+    dl = DuckLakeSession(spark, db)
+    views, before = dict(dl._views), _metadata_views(spark)
+    rows = dl.sql("SELECT table_name, column_name "
+                  "FROM information_schema.columns "
+                  "WHERE table_name IN ('t0', 'v3')").collect()
+    assert sorted(map(tuple, rows)) == [("t0", "id"), ("v3", "k3")]
+    assert dl._views == views
+    assert _metadata_views(spark) == before
+    del to_df_calls[:]
+    dl.refresh()
+    assert to_df_calls == []
+    assert _count(dl, "v3") == 2

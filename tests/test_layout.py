@@ -49,23 +49,6 @@ def test_bucketed_join_matches_shuffle_join(spark, bucketed):
             == _q12_shape(li, o).collect())
 
 
-def test_override_swaps_scan_only(spark, bucketed):
-    """Query bodies are layout-independent: injecting the bucketed source
-    under queries._util.t leaves results identical."""
-    from datafusion_ducklake_spark.queries import REGISTRY
-    from datafusion_ducklake_spark.queries._util import set_table_override
-    lb, ob = bucketed
-    spec = REGISTRY["q12_shipping_buckets"]
-    plain = spec.fn(spark, SF_SMOKE).collect()
-    set_table_override("lineitem", lb)
-    set_table_override("orders", ob)
-    try:
-        assert spec.fn(spark, SF_SMOKE).collect() == plain
-    finally:
-        set_table_override("lineitem", None)
-        set_table_override("orders", None)
-
-
 # ---- catalog-integrated clustering (round 6: the lever, wired in) --------
 
 @pytest.fixture(scope="module")
@@ -842,16 +825,14 @@ def test_refresh_replica_covers_schema_staleness(spark, tmp_path):
 
 
 def test_events_clustered_override_serves_cb_top_users(spark, tmp_path):
-    """bench.py's events-clustered sub-tier contract (round-10 opt):
-    events clustered on user_id injected under queries._util's events
-    override — load_events applies the same ts normalization on top of
-    the catalog scan, results are identical to the plain path, and the
-    user_id aggregation plans with ZERO exchanges (complete per-bucket
-    aggregate)."""
+    """cb_top_users' aggregate over events clustered on user_id, read
+    straight from the catalog: the user_id aggregation plans with ZERO
+    exchanges (complete per-bucket aggregate) and returns the plain
+    path's rows."""
     from datafusion_ducklake_spark.catalog import DuckLakeSession
     from datafusion_ducklake_spark.metadata.writer import CatalogWriter
     from datafusion_ducklake_spark.queries import REGISTRY
-    from datafusion_ducklake_spark.queries._util import set_table_override
+    from datafusion_ducklake_spark.queries.dsbench import top_users
     db = str(tmp_path / "evc.sqlite")
     w = CatalogWriter.sqlite(db)
     w.initialize_schema(data_path=str(tmp_path / "lake_evc"))
@@ -861,20 +842,11 @@ def test_events_clustered_override_serves_cb_top_users(spark, tmp_path):
     dl.create_table("main.events",
                     spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
     dl.cluster_by("main.events", "user_id", 4)
-    spec = REGISTRY["cb_top_users"]
-    plain = spec.fn(spark, SF_SMOKE).collect()
+    plain = REGISTRY["cb_top_users"].fn(spark, SF_SMOKE).collect()
     ev = dl.table("main.events")
     assert "ducklake_clustered_" in (
         ev._jdf.queryExecution().executedPlan().toString())
-    set_table_override("events", ev)
-    try:
-        from datafusion_ducklake_spark.queries._util import load_events
-        served = load_events(spark, SF_SMOKE)
-        # ts normalization applied on top of the injected scan
-        assert dict(served.dtypes)["ts"] == "timestamp"
-        df = spec.fn(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert df.collect() == plain
-    finally:
-        set_table_override("events", None)
+    df = top_users(ev)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert df.collect() == plain

@@ -17,7 +17,7 @@ FILES = sorted(p.name for p in SLT_DIR.glob("*.test"))
 # stay inside the driver's verification window; the full 241-file
 # corpus (~20 min of the 38-min suite) runs under -m "" (the builder's
 # committed per-round gate). Chosen from files measured under ~4 s in
-# PYTEST_r11's --durations log.
+# the round-11 full-suite --durations log.
 SLT_SMOKE = {
     "basic_types.test", "aggregates.test", "insert.test",
     "delete_update.test", "merge_adjacent.test", "alter_add_column.test",
