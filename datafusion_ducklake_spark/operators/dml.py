@@ -18,10 +18,12 @@ Scale shape (100 TB discipline):
   file-local position (``file_row_number``); initial_default filled as
   for a SELECT; the predicate is pushed into the parquet scan by
   Catalyst. No driver-side row movement.
-- write: matched positions group by file; each task writes its file's
-  cumulative delete parquet via pyarrow.fs (executor-side, object-store
-  capable) and returns a ONE-ROW manifest. Only the manifest reaches the
-  driver (O(touched files), never O(rows)).
+- write: matched positions group by file; each task ORs them into its
+  file's prior deletion vector (shipped from the driver, which loaded
+  it for the match scan), writes the cumulative delete parquet via
+  pyarrow.fs (executor-side, object-store capable) and returns a
+  ONE-ROW manifest. Only the manifest reaches the driver (O(touched
+  files), never O(rows)); no delete file is read through Spark.
 - register: one snapshot carries the delete registrations plus any
   appended data files. UPDATE keeps rowids STABLE (the DuckLake
   contract, sql/rowid/ducklake_row_id_update.test): rewritten rows carry
@@ -41,13 +43,12 @@ from pyspark.sql import functions as F
 
 from ..errors import InvalidConfig, MergeActionError
 from ..metadata.writer import DataFileInfo
-from ..sources.scan import FILE_COL, POS_COL, delete_positions, scan_table
+from ..sources.scan import (FILE_COL, POS_COL, deletion_vectors,
+                            scan_table)
 from ..table_writer import (_catalog_writer, _enforce_not_null,
                             _finalize_hadoop, _finalize_local,
                             _local_readable, _raise_if_constraint,
                             _with_field_ids, column_stats_of)
-
-NEW_COL = "__ducklake_dml_new"
 
 _MANIFEST_SCHEMA = ("file_name string, delete_name string, "
                     "cum_count long, new_count long, size long, "
@@ -133,41 +134,39 @@ def _pyarrow_dest(table_path: str):
     return pafs.LocalFileSystem(), p
 
 
-def _write_delete_parquets(spark, cumulative: DataFrame,
+def _write_delete_parquets(spark, matched_pos: DataFrame, prior: dict,
                            table_path: str,
                            encrypt: bool = False) -> list:
     """Write one cumulative delete parquet per TOUCHED file from the
     executors; returns the collected manifest rows (O(files)).
 
-    ``cumulative`` carries every candidate position tagged with NEW_COL
-    (1 = newly matched this DML, 0 = carried over from an existing delete
-    file). Groups with no new positions are untouched files — no write,
-    no manifest row — so the manifest's ``new_count`` sum IS the matched-
-    row count and no separate .count() action (a second execution of the
-    match join) is ever needed."""
+    ``matched_pos`` carries the positions this DML newly matched;
+    ``prior`` maps each dirty data file's URI to the deletion vector of
+    its live delete file (scan.deletion_vectors — the match scan has just
+    loaded them). Each touched file's task ORs its matched positions into
+    its prior words, so no delete file is read or shuffled by the job and
+    untouched files are not written. The manifest's ``new_count`` sum IS
+    the matched-row count, so no separate .count() action (a second
+    execution of the match join) is ever needed."""
 
     def write_group(pdf):
+        import numpy as np
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
-        new_count = int(pdf[NEW_COL].sum())
-        if new_count == 0:
-            return pd.DataFrame({
-                "file_name": pd.Series(dtype="object"),
-                "delete_name": pd.Series(dtype="object"),
-                "cum_count": pd.Series(dtype="int64"),
-                "new_count": pd.Series(dtype="int64"),
-                "size": pd.Series(dtype="int64"),
-                "enc_key": pd.Series(dtype="object")})
         fname = pdf[FILE_COL].iloc[0]
-        positions = sorted(int(p) for p in pdf[POS_COL].tolist())
+        words = prior.get(fname, np.zeros(0, np.int64))
+        # bit k of the little-endian words is position k
+        old = np.flatnonzero(np.unpackbits(words.astype("<i8").view(np.uint8),
+                                           bitorder="little"))
+        positions = np.union1d(pdf[POS_COL].to_numpy(dtype="int64"), old)
         fs, base = _pyarrow_dest(table_path)
         try:
             # the table dir may not exist yet: a table populated only
             # via add_files (absolute external paths) never had a data
             # write create it. Idempotent; object stores have no dirs.
             fs.create_dir(base, recursive=True)
-        except Exception:
+        except OSError:
             pass
         name = f"ducklake-delete-{uuid.uuid4()}.parquet"
         dest = base.rstrip("/") + "/" + name
@@ -192,10 +191,10 @@ def _write_delete_parquets(spark, cumulative: DataFrame,
         size = fs.get_file_info(dest).size
         return pd.DataFrame([{"file_name": fname, "delete_name": name,
                               "cum_count": len(positions),
-                              "new_count": new_count, "size": size,
+                              "new_count": len(pdf), "size": size,
                               "enc_key": enc_key}])
 
-    return (cumulative.repartition(FILE_COL).groupBy(FILE_COL)
+    return (matched_pos.repartition(FILE_COL).groupBy(FILE_COL)
             .applyInPandas(write_group, _MANIFEST_SCHEMA).collect())
 
 
@@ -739,22 +738,18 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
 
     Single-execution discipline: counts come from the write artifacts —
     the delete manifest's new_count and the staged files' footer counts —
-    so the match join / live scan never runs extra .count() actions. The
-    candidate set unions ALL existing delete positions (tagged carry-over)
-    instead of semi-joining on the touched-file list, which would have
-    been a second execution of the match. ``append_only_if_matched``
+    so the match join / live scan never runs extra .count() actions. Each
+    touched file's existing positions come from its driver-held deletion
+    vector, not from a scan of the delete files. ``append_only_if_matched``
     (UPDATE) skips staging when the manifest shows zero matches, since
     its append derives from the matched rows."""
-    cumulative = matched_pos.withColumn(NEW_COL, F.lit(1))
-    dels = delete_positions(session.spark, handle.files)
-    if dels is not None:
-        cumulative = cumulative.unionByName(
-            dels.withColumn(NEW_COL, F.lit(0)))
     encrypted_catalog = (session.provider.get_option("encrypted")
                          or "").lower() in ("true", "1")
-    manifest = _write_delete_parquets(session.spark, cumulative,
-                                      handle.table_path,
-                                      encrypt=encrypted_catalog)
+    manifest = _write_delete_parquets(
+        session.spark, matched_pos,
+        deletion_vectors(session.spark,
+                         {f.data_uri: f for f in handle.files}),
+        handle.table_path, encrypt=encrypted_catalog)
     n_matched = sum(int(r["new_count"]) for r in manifest) \
         + len(inlined_row_ids or [])
 

@@ -66,9 +66,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     elif ts_type == "timestamp_ntz":
-        # microsecond parquet (e.g. tools/scale_data.py output — duckdb
-        # cannot write nanos): session tz is pinned UTC, so the naive→tz
-        # cast is value-preserving.
+        # microsecond parquet (duckdb cannot write nanos): session tz is
+        # pinned UTC, so the naive→tz cast is value-preserving.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _DF_CACHE[key] = df
     return df

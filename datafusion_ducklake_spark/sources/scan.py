@@ -16,18 +16,14 @@ Spark-first design:
   physical row position, stable across row-group splits). Like the
   reference's planning-thread position set (table.rs:302-363), each
   delete file is read ONCE on the driver into an LRU-cached int64 bitset
-  (``record_count/64`` words) that rides into the plan as one array
-  literal: a codegen'd test inside the scan stage, no exchange, no job.
-- Clean files go through ONE ``spark.read.parquet(*paths)`` so Spark gets
-  file-level parallelism and partition coalescing in a single source node.
-- Dirty files: if few (≤ MAX_PER_FILE_BRANCHES), they join the clean
-  files' scan, and one filter tests each dirty file's rows (told apart by
-  ``_metadata.file_name``) against that file's bitset — the plan of a
-  clean table plus a filter; if many, a single scan of all dirty files
-  anti-joined against delete_positions, a single scan of all delete
-  files keyed by data-file URI — O(1) plan nodes and no driver-side
-  position sets, the shape you want at 100 TB with thousands of
-  deleted-from files.
+  (``record_count/64`` words) by ``deletion_vector``, the only reader of
+  delete files for scans, the change feed and DML.
+- Clean and dirty files go through ONE ``spark.read.parquet(*paths)`` so
+  Spark gets file-level parallelism and partition coalescing in a single
+  source node; one filter looks each row's file up in one map literal
+  (file key → words) and tests its bit (``bitset_filter``) — the plan of
+  a clean table plus a filter whose expression size does not grow with
+  the number of dirty files: no join, no exchange, no extra job.
 - rowid and the virtual columns (filename, file_row_number, file_index,
   snapshot_id) ride the same scan: per-file catalog values are map
   literals looked up by ``_metadata.file_name``, the position is
@@ -58,14 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import CatalogCorruption
-
-# Dirty files at or below this count are filtered inside the clean files'
-# scan by their driver-held bitsets (plan size and the driver's bitset
-# memory grow with the count); above it, one grouped scan + one shuffle
-# anti-join keeps both O(1). One 6M-row file with 1.5M deleted positions
-# (local[2], 4-vCPU VM, min of 3 warm runs, delete file re-read each
-# run): bitset filter 0.96 s, grouped path 8.35 s.
-MAX_PER_FILE_BRANCHES = 16
 
 # Hive-mapped files: at or below this many distinct partition-value
 # tuples (per mapping shape) the values stamp as per-branch literals
@@ -199,10 +187,11 @@ def file_has_rowid_column(uri: str) -> bool:
         path = _local_path(uri)
         if path is None:
             return True
+        import pyarrow as pa
+        import pyarrow.parquet as pq
         try:
-            import pyarrow.parquet as pq
             have = ROWID_FILE_COL in pq.read_schema(path).names
-        except Exception:
+        except (OSError, pa.ArrowInvalid):   # unreadable / not parquet
             have = False
         _ROWID_COL_CACHE[uri] = have
     return _ROWID_COL_CACHE[uri]
@@ -223,23 +212,27 @@ def _field_id_level(uri: str) -> str:
     path = _local_path(uri)
     if path is None:
         return "full"
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def nested_has(t) -> bool:
+        if pa.types.is_struct(t):
+            return any((t.field(i).metadata or {}).get(b"PARQUET:field_id")
+                       or nested_has(t.field(i).type)
+                       for i in range(t.num_fields))
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return nested_has(t.value_type)
+        if pa.types.is_map(t):
+            return nested_has(t.key_type) or nested_has(t.item_type)
+        return False
+
+    PROBE_COUNT += 1
     try:
-        import pyarrow.parquet as pq
-        PROBE_COUNT += 1
         fs = pq.read_schema(path)
-
-        def nested_has(t) -> bool:
-            import pyarrow as pa
-            if pa.types.is_struct(t):
-                return any((t.field(i).metadata or {}).get(b"PARQUET:field_id")
-                           or nested_has(t.field(i).type)
-                           for i in range(t.num_fields))
-            if pa.types.is_list(t) or pa.types.is_large_list(t):
-                return nested_has(t.value_type)
-            if pa.types.is_map(t):
-                return nested_has(t.key_type) or nested_has(t.item_type)
-            return False
-
+    except (OSError, pa.ArrowInvalid):
+        # unreadable / not parquet: the scan itself reports the file
+        level = "full"
+    else:
         top = any(fs.field(i).metadata
                   and b"PARQUET:field_id" in fs.field(i).metadata
                   for i in range(len(fs.names)))
@@ -249,8 +242,6 @@ def _field_id_level(uri: str) -> str:
             level = "full"
         else:
             level = "top"
-    except Exception:
-        level = "full"
     _FIELD_ID_CACHE[uri] = level
     return level
 
@@ -576,15 +567,22 @@ def deletion_vector(spark: SparkSession, delete_uri: str,
     return words
 
 
-def _words_literal(spark: SparkSession, words) -> Column:
-    """``words`` as ONE array<bigint> literal, built with a constant number
-    of py4j calls (the bytes cross once, as a byte[])."""
+def deletion_vectors(spark: SparkSession, by_key: dict) -> dict:
+    """key → deletion vector for the files of ``by_key`` (key → file)
+    that have a delete file."""
+    return {k: deletion_vector(spark, f.delete_uri, f.record_count,
+                               f.data_uri, f.delete_encryption_key)
+            for k, f in by_key.items() if f.delete_uri is not None}
+
+
+def _words_literal(spark: SparkSession, words):
+    """``words`` as one JVM long[], built with a constant number of py4j
+    calls (the bytes cross once, as a byte[])."""
     nio = spark._jvm.java.nio
     longs = nio.LongBuffer.allocate(len(words))
     longs.put(nio.ByteBuffer.wrap(words.astype("<i8").tobytes())
               .order(nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer())
-    return Column(spark._jvm.org.apache.spark.sql.functions.lit(
-        longs.array()))
+    return longs.array()
 
 
 def bitset_filter(spark: SparkSession, data: DataFrame, bitsets: dict,
@@ -595,28 +593,39 @@ def bitset_filter(spark: SparkSession, data: DataFrame, bitsets: dict,
     reports it (by default the file name Spark's scan reports), to its
     words; ``pos`` is the row's file-local position column. A row whose
     bit is set is dropped (``keep_set``: only such rows are kept); rows
-    of files not named pass (``keep_set``: are dropped). The optimizer
-    folds the literals into the filter, which runs inside the scan stage:
-    no join, no exchange, no extra job."""
+    of files not named pass (``keep_set``: are dropped).
+
+    Every file's words ride in ONE ``map<string, array<bigint>>`` literal
+    and every row takes the same test, ``m[key][(pos >> 6) + 1] & (1 <<
+    pos % 64)``, so the filter's expression size does not grow with the
+    number of files, and it runs inside the scan stage: no join, no
+    exchange, no extra job."""
     if not bitsets:
         return data
-    cols, tests = {}, []
-    for i, words in enumerate(bitsets.values()):
-        w = f"__ducklake_w{i}"
-        cols[w] = _words_literal(spark, words)
-        clear = (f"({pos} >= {64 * len(words)} OR (element_at({w}, "
-                 f"CAST(shiftright({pos}, 6) + 1 AS INT)) & "
-                 f"shiftleft(1L, CAST({pos} % 64 AS INT))) = 0)")
-        tests.append(f"NOT {clear}" if keep_set else clear)
-
-    def quote(name):    # a SQL string literal
-        return "'{}'".format(
-            name.replace("\\", "\\\\").replace("'", "\\'"))
-    cond = (f"CASE {key} "
-            + " ".join(f"WHEN {quote(n)} THEN {t}"
-                       for n, t in zip(bitsets, tests))
-            + f" ELSE {str(not keep_set).lower()} END")
-    return data.withColumns(cols).filter(cond).drop(*cols)
+    import numpy as np
+    jvm = spark._jvm
+    gateway = spark.sparkContext._gateway
+    # all words cross py4j in one call; each file then costs one name
+    # and one JVM-side copy of its slice
+    flat = _words_literal(spark, np.concatenate(list(bitsets.values())))
+    names = gateway.new_array(jvm.String, len(bitsets))
+    vectors = gateway.new_array(jvm.long, len(bitsets), 0)
+    copy, start = jvm.java.util.Arrays.copyOfRange, 0
+    for i, (name, words) in enumerate(bitsets.items()):
+        names[i] = name
+        vectors[i] = copy(flat, start, start + len(words))
+        start += len(words)
+    lit = jvm.org.apache.spark.sql.functions.lit
+    m = F.map_from_arrays(Column(lit(names)), Column(lit(vectors)))
+    p = F.col(pos)
+    word = F.coalesce(
+        F.try_element_at(F.try_element_at(m, F.col(key)),
+                         (F.shiftright(p, 6) + 1).cast("int")),
+        F.lit(0).cast("long"))
+    bit = F.call_function("shiftleft", F.lit(1).cast("long"),
+                          (p % 64).cast("int"))
+    hit = word.bitwiseAND(bit) != 0
+    return data.filter(hit if keep_set else ~hit)
 
 
 def _scan_name(spark: SparkSession, uri: str) -> str:
@@ -778,14 +787,14 @@ def scan_table(spark: SparkSession, schema: T.StructType,
         if extras else df
 
 
-def _name_batches(spark: SparkSession, files: list[ResolvedFile],
-                  uri_of=lambda f: f.data_uri) -> list[dict]:
+def _name_batches(spark: SparkSession,
+                  files: list[ResolvedFile]) -> list[dict]:
     """``files`` split into batches of distinct names as Spark reports
     them (``_scan_name``), each a name → file dict: one batch unless a
     catalog repeats a name in different directories (add_files)."""
     batches: list[dict] = []
     for f in files:
-        name = _scan_name(spark, uri_of(f))
+        name = _scan_name(spark, f.data_uri)
         batch = next((b for b in batches if name not in b), None)
         if batch is None:
             batches.append(batch := {})
@@ -856,13 +865,10 @@ def _scan_files(spark: SparkSession, schema: T.StructType,
                 files: list[ResolvedFile], index: dict,
                 extras: list[str]) -> DataFrame:
     """Unencrypted files read under one ``schema`` (a name-mapped group
-    passes its in-file read schema): ONE scan per name batch,
-    merge-on-read deletes applied, ``extras`` attached by
-    _with_row_columns.
-
-    Few dirty files (≤ MAX_PER_FILE_BRANCHES) stay in that scan and one
-    filter tests each one's rows against its driver-held bitset; more go
-    to a separate scan anti-joined against delete_positions."""
+    passes its in-file read schema): ONE scan per name batch, clean and
+    dirty files alike, its rows filtered by the dirty files' driver-held
+    deletion vectors (bitset_filter) and ``extras`` attached by
+    _with_row_columns."""
     def read(by_name):
         riders = _riders(list(by_name.values()), extras)
         df = _read_parquet(spark, T.StructType(
@@ -875,74 +881,9 @@ def _scan_files(spark: SparkSession, schema: T.StructType,
             df, by_name, F.col("_metadata.file_name"),
             F.col("_metadata.row_index"), index, extras)
 
-    parts = []
-    for batch in _name_batches(spark, files):
-        dirty = {n: f for n, f in batch.items() if f.delete_uri}
-        if len(dirty) <= MAX_PER_FILE_BRANCHES:
-            parts.append(bitset_filter(spark, read(batch), {
-                n: deletion_vector(spark, f.delete_uri, f.record_count,
-                                   f.data_uri, f.delete_encryption_key)
-                for n, f in dirty.items()}))
-            continue
-        clean = {n: f for n, f in batch.items() if not f.delete_uri}
-        if clean:
-            parts.append(read(clean))
-        # No forced broadcast: the combined delete set can be large; AQE
-        # downgrades the shuffle join to broadcast at runtime when small.
-        data = read(dirty).withColumns({
-            FILE_COL: _per_file(F.col("_metadata.file_name"),
-                                {n: f.data_uri for n, f in dirty.items()},
-                                "string"),
-            POS_COL: F.col("_metadata.row_index")})
-        parts.append(data.join(delete_positions(spark, dirty.values()),
-                               [FILE_COL, POS_COL], "left_anti")
-                     .drop(FILE_COL, POS_COL))
-    return reduce(DataFrame.unionByName, parts)
-
-
-def delete_positions(spark: SparkSession, files) -> Optional[DataFrame]:
-    """(FILE_COL = data-file URI, POS_COL) for every position deleted by
-    the delete files of ``files``; None if none has one.
-
-    Each delete file is tied to its data file by the CATALOG pairing,
-    looked up from the delete file's own name as Spark reports it — never
-    by the delete parquet's ``file_path`` column, which the DuckLake
-    contract treats as documentation-only (ref: src/table.rs:84-85; a
-    DuckDB- or Iceberg-style writer stores absolute paths there). PME
-    delete files decrypt executor-side."""
-    dirty = [f for f in files if f.delete_uri is not None]
-    parts = []
-    for batch in _name_batches(
-            spark, [f for f in dirty if f.delete_encryption_key is None],
-            lambda f: f.delete_uri):
-        for f in batch.values():
-            _check_local_exists(f.delete_uri)
-        parts.append(
-            spark.read.schema(DELETE_POS_SCHEMA)
-            .parquet(*[f.delete_uri for f in batch.values()])
-            .select(_per_file(F.col("_metadata.file_name"),
-                              {n: f.data_uri for n, f in batch.items()},
-                              "string").alias(FILE_COL),
-                    F.col("pos").alias(POS_COL)))
-    encd = [f for f in dirty if f.delete_encryption_key is not None]
-    if encd:
-        def decode(pdf_iter):
-            import pandas as pd
-
-            from .encryption import decode_key, read_encrypted_arrow
-            for pdf in pdf_iter:
-                for path, key, data_uri in zip(pdf["path"], pdf["key"],
-                                               pdf["data_uri"]):
-                    pos = read_encrypted_arrow(
-                        path, decode_key(key)).column("pos").to_pandas()
-                    yield pd.DataFrame({FILE_COL: data_uri, POS_COL: pos})
-
-        parts.append(spark.createDataFrame(
-            [(f.delete_uri, f.delete_encryption_key, f.data_uri)
-             for f in encd], "path STRING, key STRING, data_uri STRING")
-            .repartition(len(encd))
-            .mapInPandas(decode, f"`{FILE_COL}` STRING, `{POS_COL}` LONG"))
-    return reduce(DataFrame.unionByName, parts) if parts else None
+    return reduce(DataFrame.unionByName, [
+        bitset_filter(spark, read(batch), deletion_vectors(spark, batch))
+        for batch in _name_batches(spark, files)])
 
 
 def _era_clip_type(dt: T.DataType, file_begin: Optional[int]
@@ -1080,15 +1021,17 @@ def _encrypted_has_rowid(f: "ResolvedFile") -> bool:
     column? Footer-only decrypt, cached per immutable path."""
     if f.data_uri in _ENC_ROWID_CACHE:
         return _ENC_ROWID_CACHE[f.data_uri]
+    import duckdb
+
     from . import encryption as enc
     path = f.data_uri[len("file://"):] \
         if f.data_uri.startswith("file://") else f.data_uri
     try:
         names = enc.read_encrypted_schema(
             path, enc.decode_key(f.encryption_key)).names
-        has = ROWID_FILE_COL in names
-    except Exception:
-        has = False
+    except duckdb.Error:     # neither decrypt route could open the footer
+        names = []
+    has = ROWID_FILE_COL in names
     _ENC_ROWID_CACHE[f.data_uri] = has
     return has
 
@@ -1100,9 +1043,9 @@ def _scan_encrypted(spark: SparkSession, schema: T.StructType,
     has no PME hook). ONE mapInPandas stage decodes every file (the
     driver ships only (path, key) pairs); each row carries its data-file
     URI and the position synthesized in file order inside the decode, so
-    ALL positional deletes apply through a single anti-join against
-    delete_positions — O(1) plan nodes regardless of file count — and
-    ``extras`` attach by the same _with_row_columns as the plain scan."""
+    the deletes apply through the same bitset_filter as the plain scan,
+    keyed on that URI and position, and ``extras`` attach by the same
+    _with_row_columns."""
     from . import encryption as enc
 
     for f in files:
@@ -1161,13 +1104,11 @@ def _scan_encrypted(spark: SparkSession, schema: T.StructType,
     pairs = spark.createDataFrame(
         [(f.data_uri, f.encryption_key) for f in files],
         "path STRING, key STRING").repartition(len(files))
-    data = pairs.mapInPandas(decode, out_schema)
-    dels = delete_positions(spark, files)
-    if dels is not None:
-        # AQE picks broadcast when the delete set is small
-        data = data.join(dels, [FILE_COL, POS_COL], "left_anti")
+    by_uri = {f.data_uri: f for f in files}
+    data = bitset_filter(spark, pairs.mapInPandas(decode, out_schema),
+                         deletion_vectors(spark, by_uri),
+                         key=FILE_COL, pos=POS_COL)
     if extras:
-        data = _with_row_columns(data, {f.data_uri: f for f in files},
-                                 F.col(FILE_COL), F.col(POS_COL), index,
-                                 extras)
+        data = _with_row_columns(data, by_uri, F.col(FILE_COL),
+                                 F.col(POS_COL), index, extras)
     return data.drop(POS_COL, FILE_COL)

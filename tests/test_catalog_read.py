@@ -140,7 +140,7 @@ class TestEdgeCases:
         assert dl.table("main.empty_t").count() == 0
         assert dl.table("main.empty_t").columns == ["id", "name", "email"]
 
-    def test_out_of_bounds_delete_positions_ignored(self, spark, tmp_path):
+    def test_out_of_bounds_deleted_positions_ignored(self, spark, tmp_path):
         # ref: delete_filter.rs:211-344 — positions beyond file length no-op
         cat = FixtureCatalog(tmp_path)
         s1 = cat.snapshot()
@@ -240,11 +240,8 @@ class TestRenamedColumns:
 
 class TestGroupedDirtyScan:
     def test_many_dirty_files_grouped_path(self, spark, tmp_path):
-        """>MAX_PER_FILE_BRANCHES dirty files triggers the O(1)-plan
-        grouped scan (single data scan + single delete scan joined on
-        (file name, pos)) — the 100 TB path. Results must match the
-        per-file semantics exactly."""
-        from datafusion_ducklake_spark.sources.scan import MAX_PER_FILE_BRANCHES
+        """Twenty dirty files share the one scan and its one map-keyed
+        bitset filter; results match the per-file semantics exactly."""
         cat = FixtureCatalog(tmp_path)
         s1 = cat.snapshot()
         sid = cat.schema("main", s1)
@@ -254,7 +251,7 @@ class TestGroupedDirtyScan:
         cat.column(tid, 3, "email", "varchar", 2, s1)
         tdir = cat.table_dir("main", "big")
 
-        n_files = MAX_PER_FILE_BRANCHES + 4
+        n_files = 20
         expected = []
         s2 = cat.snapshot()
         for i in range(n_files):
@@ -270,7 +267,7 @@ class TestGroupedDirtyScan:
         dl = DuckLakeSession(spark, cat.db_path)
         got = sorted(r["id"] for r in dl.table("main.big").collect())
         assert got == sorted(expected)
-        # count-star and filter through the grouped path too
+        # count-star and filter through the same filter too
         assert dl.table("main.big").count() == n_files * 2
         assert dl.table("main.big").filter("id >= 100").count() == \
             sum(1 for x in expected if x >= 100)

@@ -637,18 +637,22 @@ def test_same_basename_in_two_directories(dl, tmp_path):
 @pytest.mark.parametrize("path", ["dml", "grouped_read"])
 def test_names_needing_url_encoding(dl, tmp_path, path):
     """A data file whose name Spark reports URL-encoded (``part 0%``)
-    takes deletes through DML, and its delete positions reach it on the
-    grouped (many dirty files) read path."""
+    takes deletes through DML, and its delete positions reach it when it
+    is one of many (17) dirty files in the scan."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from datafusion_ducklake_spark.sources import scan as scan_mod
     dl.create_empty_table("main.enc", "id INTEGER")
     _add_parquet(dl, "main.enc", tmp_path / "d" / "part 0%.parquet", range(4))
     _add_parquet(dl, "main.enc", tmp_path / "d" / "q.parquet", range(10, 14))
+    # fifteen one-row files, each fully deleted below: 17 dirty files
+    for k in range(15):
+        _add_parquet(dl, "main.enc", tmp_path / "d" / f"r{k}.parquet",
+                     [100 + k])
     if path == "dml":
+        assert dl.delete_from("main.enc", "id >= 100") == 15
         assert dl.delete_from("main.enc", "id IN (0, 2, 11)") == 3
     else:
         # register the delete files directly, as a foreign writer would
@@ -656,7 +660,8 @@ def test_names_needing_url_encoding(dl, tmp_path, path):
         w = CatalogWriter.sqlite(dl.catalog_path)
         try:
             sid = w.create_snapshot()
-            for raw, positions in zip(handle._raw_files, ([0, 2], [1])):
+            for raw, positions in zip(handle._raw_files,
+                                      [[0, 2], [1]] + [[0]] * 15):
                 name = f"ducklake-delete-{uuid.uuid4()}.parquet"
                 dest = os.path.join(handle.table_path, name)
                 os.makedirs(handle.table_path, exist_ok=True)
@@ -669,12 +674,9 @@ def test_names_needing_url_encoding(dl, tmp_path, path):
         finally:
             w.close()
         dl.refresh()
-    old = scan_mod.MAX_PER_FILE_BRANCHES
-    scan_mod.MAX_PER_FILE_BRANCHES = 0       # force the grouped path
-    try:
-        grouped = _ids(dl, "main.enc")
-    finally:
-        scan_mod.MAX_PER_FILE_BRANCHES = old
+    assert len([f for f in dl.table_handle("main.enc").files
+                if f.delete_uri]) == 17
+    grouped = _ids(dl, "main.enc")
     assert grouped == [1, 3, 10, 12, 13]
     assert _ids(dl, "main.enc") == [1, 3, 10, 12, 13]
 

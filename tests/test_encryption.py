@@ -45,7 +45,7 @@ class TestKeyDecode:
             assert "secret-material-xyz" not in str(e)
 
 
-def _encrypted_users_fixture(tmp_path, delete_positions=None):
+def _encrypted_users_fixture(tmp_path, deleted=None):
     cat = FixtureCatalog(tmp_path)
     s1 = cat.snapshot()
     sid = cat.schema("main", s1)
@@ -64,10 +64,10 @@ def _encrypted_users_fixture(tmp_path, delete_positions=None):
         "encryption_key) VALUES (1, ?, ?, 1, ?, 3, ?, ?)",
         (tid, fname, os.path.getsize(os.path.join(tdir, fname)), s1, KEY_B64))
     cat.conn.commit()
-    if delete_positions is not None:
+    if deleted is not None:
         s2 = cat.snapshot()
-        dname, dsize = write_delete_file(tdir, fname, delete_positions)
-        cat.delete_file(tid, 1, dname, dsize, len(delete_positions), s2)
+        dname, dsize = write_delete_file(tdir, fname, deleted)
+        cat.delete_file(tid, 1, dname, dsize, len(deleted), s2)
     return cat
 
 
@@ -85,7 +85,7 @@ class TestEncryptedScan:
         assert rows == [(1, "a"), (2, "b"), (3, "c")]
 
     def test_encrypted_with_deletes(self, spark, tmp_path):
-        cat = _encrypted_users_fixture(tmp_path, delete_positions=[1])
+        cat = _encrypted_users_fixture(tmp_path, deleted=[1])
         dl = DuckLakeSession(spark, cat.db_path)
         assert sorted(r["id"] for r in dl.table("main.sec").collect()) == [1, 3]
 
@@ -115,7 +115,7 @@ class TestEncryptedScan:
             (10, "p"), (20, "q")]
 
 
-def _footer_key_fixture(tmp_path, delete_positions=None):
+def _footer_key_fixture(tmp_path, deleted=None):
     """Fixture in the REFERENCE's on-disk format: the catalog key IS the
     parquet footer key, no KMS envelope (encryption.rs:26-120). Written by
     DuckDB itself — the same writer that produces real DuckLake encrypted
@@ -145,10 +145,10 @@ def _footer_key_fixture(tmp_path, delete_positions=None):
         "encryption_key) VALUES (1, ?, ?, 1, ?, 3, ?, ?)",
         (tid, fname, os.path.getsize(fpath), s1, KEY_B64))
     cat.conn.commit()
-    if delete_positions is not None:
+    if deleted is not None:
         s2 = cat.snapshot()
-        dname, dsize = write_delete_file(tdir, fname, delete_positions)
-        cat.delete_file(tid, 1, dname, dsize, len(delete_positions), s2)
+        dname, dsize = write_delete_file(tdir, fname, deleted)
+        cat.delete_file(tid, 1, dname, dsize, len(deleted), s2)
     return cat
 
 
@@ -174,7 +174,7 @@ class TestFooterKeyInterop:
         assert rows == [(1, "a"), (2, "b"), (3, "c")]
 
     def test_scan_with_deletes(self, spark, tmp_path):
-        cat = _footer_key_fixture(tmp_path, delete_positions=[0, 2])
+        cat = _footer_key_fixture(tmp_path, deleted=[0, 2])
         dl = DuckLakeSession(spark, cat.db_path)
         assert sorted(r["id"] for r in dl.table("main.fk").collect()) == [2]
 

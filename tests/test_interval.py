@@ -398,11 +398,9 @@ def test_stream_inserts_over_interval(iv_session, spark):
 
 
 def test_grouped_dirty_scan_decodes(spark, tmp_path):
-    """More dirty files than MAX_PER_FILE_BRANCHES routes through the
-    single grouped scan + keyed anti-join — the decode and the
-    _metadata-based position/file keying must still compose."""
-    from datafusion_ducklake_spark.sources import scan as scan_mod
-    n_files, per = 4, 6
+    """Seventeen dirty files in one scan: the interval decode and the
+    _metadata-keyed bitset filter must compose."""
+    n_files, per = 17, 6
     db = str(tmp_path / "catalog.sqlite")
     w = CatalogWriter.sqlite(db)
     w.initialize_schema(data_path=str(tmp_path / "lake"))
@@ -419,12 +417,7 @@ def test_grouped_dirty_scan_decodes(spark, tmp_path):
         s.refresh()
     s.delete_from("main.iv", "id % 3 = 0")   # dirties every file
     s.refresh()
-    old = scan_mod.MAX_PER_FILE_BRANCHES
-    scan_mod.MAX_PER_FILE_BRANCHES = 2       # force the grouped path
-    try:
-        rows = s.table("main.iv").select("id", "iv.days").collect()
-    finally:
-        scan_mod.MAX_PER_FILE_BRANCHES = old
+    rows = s.table("main.iv").select("id", "iv.days").collect()
     surviving = [i for i in range(n_files * per) if i % 3 != 0]
     assert sorted(r["id"] for r in rows) == surviving
     assert all(r["id"] == r["days"] for r in rows)

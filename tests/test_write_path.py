@@ -215,7 +215,7 @@ class TestCompactPreservesRowids:
             [(i, f"v{i}") for i in range(n)], "id INT, s STRING"))
         return dl, db
 
-    def _delete_positions(self, dl, db, positions):
+    def _delete_at(self, dl, db, positions):
         import pyarrow as pa
         import pyarrow.parquet as pq
         import os as _os
@@ -254,7 +254,7 @@ class TestCompactPreservesRowids:
         catalog has one clean file per run."""
         import sqlite3
         dl, db = self._mk(spark, tmp_path)
-        self._delete_positions(dl, db, [2, 5])
+        self._delete_at(dl, db, [2, 5])
         before = sorted((r["id"], r["rowid"]) for r in
                         dl.table("main.t", with_rowid=True).collect())
         assert [rid for _, rid in before] == [0, 1, 3, 4, 6, 7]
@@ -272,7 +272,7 @@ class TestCompactPreservesRowids:
     def test_too_many_runs_refused(self, spark, tmp_path):
         from datafusion_ducklake_spark.table_writer import compact_table
         dl, db = self._mk(spark, tmp_path)
-        self._delete_positions(dl, db, [1, 3, 5])  # runs: 0,2,4,[6,7]
+        self._delete_at(dl, db, [1, 3, 5])  # runs: 0,2,4,[6,7]
         with pytest.raises(InvalidConfig, match="runs"):
             compact_table(dl, "main.t", max_runs=2)
         # explicit renumber opt-out still compacts
