@@ -3618,13 +3618,17 @@ class DuckLakeSession:
     def compact(self, name: str, single_file: bool = True,
                 preserve_rowids: bool = True) -> int:
         """Rewrite a table's live data (deletes applied) into fresh clean
-        files in one Replace snapshot — the corpus's rewrite_data_files
-        operation (reference roadmap item; built from scan ∘ overwrite, so
-        MOR debt collapses and subsequent scans skip the anti-joins).
+        files in one snapshot, so MOR debt collapses and later scans
+        filter no deletes.
 
         With ``preserve_rowids`` (default), virtual rowids survive the
         rewrite: one output file per contiguous surviving rowid run (the
-        DuckLake rowid contract). ``preserve_rowids=False`` renumbers."""
+        DuckLake rowid contract), staged before one catalog commit
+        (table_writer.compact_table). ``preserve_rowids=False``
+        renumbers through the overwrite path. ``single_file`` shapes
+        only the overwrite path (which tables without rowids also take);
+        the rowid-preserving paths write one file per run or per
+        in-file-rowid group whatever it says."""
         from .table_writer import compact_table, create_or_insert
         if preserve_rowids:
             return compact_table(self, name, single_file=single_file)

@@ -44,8 +44,9 @@ class TransactionConflict(DuckLakeError):
 
 
 class CatalogCorruption(DuckLakeError):
-    """A file referenced by the catalog is missing — surfaced as corruption,
-    never as silent wrong results (ref: src/table.rs:340-354, 736-748)."""
+    """A file referenced by the catalog is missing, or a staged file is not
+    what the catalog would record for it — surfaced as corruption, never
+    as silent wrong results (ref: src/table.rs:340-354, 736-748)."""
 
 
 class MergeActionError(DuckLakeError):

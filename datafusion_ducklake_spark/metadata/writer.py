@@ -1727,16 +1727,26 @@ class CatalogWriter:
                 "WHERE data_file_id = ? AND end_snapshot IS NULL",
                 (snapshot_id, data_file_id))
 
-    def expect_live_delete(self, data_file_id: int,
+    def expect_live_member(self, data_file_id: int,
                            expected_delete_file_id) -> None:
         """Optimistic-concurrency check for rewrites: the survivor runs
-        were computed FROM ``expected_delete_file_id``'s positions (None
-        = no delete file existed). A concurrent DML that superseded or
-        added a delete file in the meantime would have its deletions
-        silently dropped by the rewrite — abort instead (ref corpus:
+        were computed from a LIVE data file and from
+        ``expected_delete_file_id``'s positions (None = no delete file
+        existed). A concurrent rewrite that already ended the data file,
+        or a concurrent DML that superseded or added a delete file, would
+        leave its rows live twice or have its deletions silently dropped
+        by this rewrite — abort instead (ref corpus:
         test_rewrite_transaction_conflict.test)."""
         from ..errors import TransactionConflict
         with self._txn() as cur:
+            live = cur.execute(
+                "SELECT 1 FROM ducklake_data_file "
+                "WHERE data_file_id = ? AND end_snapshot IS NULL",
+                (data_file_id,)).fetchall()
+            if not live:
+                raise TransactionConflict(
+                    f"transaction conflict: data file {data_file_id} was "
+                    "ended concurrently; retry the rewrite")
             rows = cur.execute(
                 "SELECT delete_file_id FROM ducklake_delete_file "
                 "WHERE data_file_id = ? AND end_snapshot IS NULL",

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
@@ -508,9 +509,13 @@ DELETE_POS_SCHEMA = "pos BIGINT"
 
 # Deletion vectors held on the driver: bitset words per delete file (files
 # are immutable — DML writes a NEW uuid-named one per transaction), LRU
-# over at most _WORDS_CACHE_MAX files of record_count/64 int64s each.
+# over at most _WORDS_CACHE_BYTES of words (record_count/64 int64s per
+# file), so a table's count of dirty files does not decide whether its
+# reads hit the cache; the newest vector stays even when it alone is over.
+# The lock guards the LRU bookkeeping, never a delete-file read.
 _DELETION_VECTORS: "OrderedDict[str, object]" = OrderedDict()
-_WORDS_CACHE_MAX = 64
+_WORDS_CACHE_BYTES = 64 << 20
+_DELETION_VECTORS_LOCK = threading.Lock()
 
 
 def positions_bitset(positions, n_rows: int):
@@ -535,7 +540,10 @@ def deletion_vector(spark: SparkSession, delete_uri: str,
     for object stores. Without a catalog ``record_count`` the data file's
     footer sizes it."""
     _check_local_exists(delete_uri)
-    words = _DELETION_VECTORS.get(delete_uri)
+    with _DELETION_VECTORS_LOCK:
+        words = _DELETION_VECTORS.get(delete_uri)
+        if words is not None:
+            _DELETION_VECTORS.move_to_end(delete_uri)
     if words is None:
         path = _local_path(delete_uri)
         if encryption_key is not None:
@@ -560,10 +568,11 @@ def deletion_vector(spark: SparkSession, delete_uri: str,
                 reader.close()
         words = positions_bitset(pos.drop_null().to_numpy(), record_count)
         words.flags.writeable = False     # shared by every later scan
-        _DELETION_VECTORS[delete_uri] = words
-        while len(_DELETION_VECTORS) > _WORDS_CACHE_MAX:
-            _DELETION_VECTORS.popitem(last=False)
-    _DELETION_VECTORS.move_to_end(delete_uri)
+        with _DELETION_VECTORS_LOCK:
+            _DELETION_VECTORS[delete_uri] = words
+            held = sum(v.nbytes for v in _DELETION_VECTORS.values())
+            while held > _WORDS_CACHE_BYTES and len(_DELETION_VECTORS) > 1:
+                held -= _DELETION_VECTORS.popitem(last=False)[1].nbytes
     return words
 
 

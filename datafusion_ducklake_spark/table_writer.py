@@ -639,99 +639,51 @@ def _finalize_partitioned_hadoop(spark, staging: str, table_path: str,
 MAX_COMPACT_RUNS = 256
 
 
-def _survivor_run_df(session, file_rows: list, dirty_pairs: list):
-    """Merged contiguous LIVE rowid runs as a DataFrame (__grp, start, cnt)
-    — entirely executor-side, so a heavily-deleted table (billions of
-    delete positions) never materializes positions on the driver (r3
-    VERDICT wrongness #3; the old path collect_list(pos)'d per file).
+def _live_runs(session, groups: list, cap: int) -> list[tuple[int, int, int]]:
+    """[(group index, start rowid, count)] of the groups' contiguous LIVE
+    rowid runs, in group then rowid order; it stops at ``cap + 1`` runs.
 
-    ``file_rows``: (data_basename, group_id, row_id_start, record_count)
-    for EVERY member file; ``dirty_pairs``: (delete_uri, data_basename).
-    Mechanics: per-file live islands are the gaps between consecutive
-    delete positions (lag window over the delete parquets, keyed via the
-    catalog delete→data pairing on _metadata.file_path — never the delete
-    parquet's own file_path column, ref table.rs:84-85), plus the tail
-    after max(pos), plus whole-file runs for clean members; adjacent runs
-    then merge within each group via an island window. Output size is
-    O(live islands); callers collect it capped."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    A member's live rows are the clear bits of its deletion vector (word
+    ``pos >> 6``, bit ``pos & 63``), taken from ``scan.deletion_vectors``
+    keyed by the member's ResolvedFile, never by a file name; they are
+    offset by the member's row_id_start, and runs that touch merge within
+    a group, never across groups. The driver holds only the
+    record_count/64 words per file that the rewrite's own scan loads for
+    its delete filter, and unpacks them a slice at a time — never a
+    position list."""
+    import numpy as np
 
-    from .sources.scan import DELETE_POS_SCHEMA
+    from .sources.scan import deletion_vectors
 
-    spark = session.spark
-    fmap = spark.createDataFrame(
-        file_rows, "__data STRING, __grp LONG, __rstart LONG, __rcount LONG")
-    if dirty_pairs:
-        pair_df = spark.createDataFrame(
-            [(d.rsplit("/", 1)[-1], b) for d, b in dirty_pairs],
-            "__del STRING, __data STRING")
-        dels = (spark.read.schema(DELETE_POS_SCHEMA)
-                .parquet(*[d for d, _ in dirty_pairs])
-                .select(F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1)
-                    .alias("__del"), "pos")
-                .join(F.broadcast(pair_df), "__del")
-                .join(F.broadcast(fmap), "__data"))
-        w = Window.partitionBy("__data").orderBy("pos")
-        gaps = (dels.withColumn("__prev", F.lag("pos", 1, -1).over(w))
-                .filter(F.col("pos") > F.col("__prev") + 1)
-                .select("__grp",
-                        (F.col("__rstart") + F.col("__prev") + 1)
-                        .alias("start"),
-                        (F.col("pos") - F.col("__prev") - 1).alias("cnt")))
-        tails = (dels.groupBy("__data", "__grp", "__rstart", "__rcount")
-                 .agg(F.max("pos").alias("__mx"))
-                 .filter(F.col("__rcount") > F.col("__mx") + 1)
-                 .select("__grp",
-                         (F.col("__rstart") + F.col("__mx") + 1)
-                         .alias("start"),
-                         (F.col("__rcount") - F.col("__mx") - 1)
-                         .alias("cnt")))
-        clean = (fmap.join(pair_df.select("__data").distinct(),
-                           "__data", "left_anti")
-                 .filter(F.col("__rcount") > 0)
-                 .select("__grp", F.col("__rstart").alias("start"),
-                         F.col("__rcount").alias("cnt")))
-        runs = gaps.unionByName(tails).unionByName(clean)
-    else:
-        runs = (fmap.filter(F.col("__rcount") > 0)
-                .select("__grp", F.col("__rstart").alias("start"),
-                        F.col("__rcount").alias("cnt")))
-    w2 = Window.partitionBy("__grp").orderBy("start")
-    return (runs
-            .withColumn("__pend",
-                        F.lag(F.col("start") + F.col("cnt"), 1, -1).over(w2))
-            .withColumn("__new",
-                        F.when(F.col("start") != F.col("__pend"), 1)
-                        .otherwise(0))
-            .withColumn("__island",
-                        F.sum("__new").over(
-                            w2.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("__grp", "__island")
-            .agg(F.min("start").alias("start"), F.sum("cnt").alias("cnt"))
-            .select("__grp", "start", "cnt"))
+    def spans(words, n: int):
+        if words is None:
+            yield from [(0, n)] if n else []
+            return
+        step = 1 << 20            # rows unpacked at once (a multiple of 64)
+        for lo in range(0, n, step):
+            dead = np.unpackbits(
+                words[lo >> 6:(lo + step) >> 6].astype("<i8").view(np.uint8),
+                bitorder="little")[:n - lo]
+            # padded with dead rows, so edges alternate run start, run end
+            edges = np.flatnonzero(np.diff(dead, prepend=1, append=1))
+            yield from zip((lo + edges[::2]).tolist(),
+                           (edges[1::2] - edges[::2]).tolist())
 
-
-def _carve_rowid_runs(session, handle,
-                      cap: Optional[int] = None) -> list[tuple[int, int]]:
-    """[(start_rowid, count)] of the table's contiguous LIVE rowid runs.
-    Runs are computed and merged executor-side (_survivor_run_df); the
-    driver receives at most ``cap + 1`` rows when a cap is given, so a
-    shattered table raises in the caller without ever materializing its
-    islands."""
-    pairs = sorted(zip(handle._raw_files, handle.files),
-                   key=lambda t: t[0].row_id_start)
-    file_rows = [(os.path.basename(mf.path), 0, mf.row_id_start,
-                  mf.record_count) for mf, _ in pairs]
-    dirty_pairs = [(rf.delete_uri, os.path.basename(mf.path))
-                   for mf, rf in pairs if rf.delete_uri is not None]
-    if not file_rows:
-        return []
-    df = _survivor_run_df(session, file_rows, dirty_pairs).orderBy("start")
-    if cap is not None:
-        df = df.limit(cap + 1)
-    return [(r["start"], r["cnt"]) for r in df.collect()]
+    vectors = deletion_vectors(
+        session.spark, {rf: rf for group in groups for _mf, rf in group})
+    runs: list[tuple[int, int, int]] = []
+    for gi, group in enumerate(groups):
+        for mf, rf in sorted(group, key=lambda m: m[0].row_id_start):
+            for s, c in spans(vectors.get(rf), mf.record_count):
+                start = mf.row_id_start + s
+                if runs and runs[-1][0] == gi \
+                        and runs[-1][1] + runs[-1][2] == start:
+                    runs[-1] = (gi, runs[-1][1], runs[-1][2] + c)
+                    continue
+                runs.append((gi, start, c))
+                if len(runs) > cap:
+                    return runs
+    return runs
 
 
 def compact_table(session, name: str, single_file: bool = True,
@@ -742,52 +694,55 @@ def compact_table(session, name: str, single_file: bool = True,
     delete+insert in CDC).
 
     Mechanism: rowid = row_id_start + file position, so an output file
-    can only carry rows whose rowids are CONTIGUOUS. Deletions punch
-    holes, splitting the survivors into runs (gaps-and-islands on
-    rowid); each run becomes one output file registered with
+    can only carry rows whose rowids are CONTIGUOUS. An unpartitioned
+    table whose files all carry row_id_start is one group of
+    rewrite_file_groups: deletions punch holes, splitting the survivors
+    into runs, and each run becomes one output file registered with
     row_id_start = run start. Tables whose deletion pattern shatters
-    them into more than ``max_runs`` islands are refused — re-run after
-    more deletes accumulate contiguously, or accept fresh rowids via
-    ``session.compact(name, preserve_rowids=False)``.
+    them into more than ``max_runs`` runs are refused — compact with
+    ``preserve_rowids=False`` to renumber. A partitioned table compacts
+    per partition-value chain through the same rewrite. Tables with
+    INTERVAL columns or with in-file rowids (UPDATE outputs) are one
+    group of merge_groups_rowid_column: one output file carrying rowids
+    and per-row snapshot ids in-file. ``single_file`` shapes only the
+    overwrite path below; both rowid-preserving paths ignore it.
 
-    Tables without rowids (files lacking row_id_start, e.g. foreign
-    fixtures) take the plain rewrite path unchanged.
+    Either way the outputs are staged first and registered in one
+    catalog transaction that checks every member is still live with the
+    delete file the rewrite read (a concurrent DELETE or rewrite aborts
+    it), so a failed or conflicting compaction leaves the table as it
+    was. Tables
+    without rowids (files lacking row_id_start, e.g. foreign fixtures)
+    take the plain rewrite path unchanged.
 
-    Scale: run discovery reads ONLY the catalog + delete files (the holes
-    define the islands) — no full-table sort, and the islands are carved
-    AND merged executor-side (_survivor_run_df), so the driver receives at
-    most max_runs+1 run rows, never a position list. Rows then assign to
-    runs with a broadcast range join (≤ max_runs ranges)."""
-    from pyspark.sql import functions as F
-
+    Scale: run discovery reads ONLY the catalog + the members' deletion
+    vectors (_live_runs) — no full-table sort — and refuses as soon as
+    it finds max_runs+1 runs. Rows then assign to runs with a broadcast
+    range join (≤ max_runs ranges)."""
     handle = session.table_handle(name)
     if handle.inlined_tables and handle.inlined_rows():
         raise InvalidConfig(
             "compact over tables with live inlined data rows is not "
             "supported — call flush_inlined_data() first")
-    from .types import is_interval_type
-    if any(is_interval_type(c.column_type) for c in handle.columns):
-        # interval rewrite (r9): carry rowids in-file through the
-        # duckdb-backed staging — the run-carving path below writes via
-        # Spark's parquet writer, which cannot emit INTERVAL
-        if not handle.files:
-            return 0
-        return _compact_rowid_column(session, name, handle,
-                                     single_file=single_file)
+    members = list(zip(handle._raw_files, handle.files))
+    iv_table = any(is_interval_type(c.column_type) for c in handle.columns)
+    if iv_table and not members:
+        return 0
     if any(f.encryption_key is not None for f in handle.files):
         raise InvalidConfig(
             "compact with rowid preservation over encrypted tables is not "
             "supported — compact(preserve_rowids=False) rewrites "
             "encrypted (fresh rowids)")
-    if not handle.files or any(f.row_id_start is None for f in handle.files):
+    if iv_table or any(f.row_id_start is None for f in handle.files):
+        # the run path needs contiguous start-based ranges and writes via
+        # Spark's parquet writer, which cannot emit INTERVAL: UPDATE-
+        # rewritten files and INTERVAL tables (duckdb-backed staging, r9)
+        # carry their rowids through the rewrite as the reserved in-file
+        # column instead
         from .operators.dml import rowids_preservable
-        if handle.files and rowids_preservable(handle):
-            # UPDATE-rewritten files carry their rowids as the reserved
-            # in-file column — compact preserves them by carrying the
-            # column through the rewrite (run-carving needs contiguous
-            # start-based ranges, which such tables no longer have)
-            return _compact_rowid_column(session, name, handle,
-                                         single_file=single_file)
+        if members and rowids_preservable(handle):
+            return merge_groups_rowid_column(session, name, [members],
+                                             op="compact")
         return create_or_insert(session, name, session.table(name),
                                 mode="overwrite", single_file=single_file,
                                 maintenance=True)
@@ -802,107 +757,8 @@ def compact_table(session, name: str, single_file: bool = True,
         if not groups:
             return 0
         return rewrite_file_groups(session, name, groups, op="compact")
-
-    run_list = _carve_rowid_runs(session, handle, cap=max_runs)
-    if len(run_list) > max_runs:
-        raise InvalidConfig(
-            f"compact: {name} has more than {max_runs} contiguous rowid "
-            f"runs; rowids cannot be preserved in that many "
-            f"files — compact with preserve_rowids=False to renumber")
-    runs = [(i, s, c) for i, (s, c) in enumerate(run_list)]
-
-    df = session.table(name, with_rowid=True)
-    ranges = session.spark.createDataFrame(
-        [(i, s, s + c - 1) for i, s, c in runs] or [(0, 0, -1)],
-        "__run LONG, __lo LONG, __hi LONG")
-    df2 = (df.join(F.broadcast(ranges),
-                   (F.col("rowid") >= F.col("__lo"))
-                   & (F.col("rowid") <= F.col("__hi")))
-           .drop("__lo", "__hi"))
-
-    writer = _catalog_writer(session)
-    try:
-        cols = [ColumnDef(c.column_name, c.column_type, c.nulls_allowed)
-                for c in handle.columns]
-        schema_name, table_name = session._split(name)
-        setup = writer.begin_write_transaction(
-            schema_name, table_name, cols, WriteMode.REPLACE,
-            maintenance=True)
-
-        if not runs:          # empty table: just end the old files
-            session.refresh()
-            return 0
-
-        table_path = handle.table_path
-        session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled",
-                               "true")
-        data_cols = [f.name for f in session.table(name).schema.fields]
-        # sort on __run first: the planned partitionBy("__run") write
-        # re-sorts on __run alone, which would drop a rowid-only order
-        out = (df2.repartition("__run")
-               .sortWithinPartitions("__run", "rowid")
-               .select(*data_cols, "__run"))
-        out = _with_field_ids_partial(
-            out, data_cols, setup.column_ids,
-            [dict(c.nested_ids or ()) for c in handle.columns])
-        staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
-        schema_meta = session.provider.get_schema_by_name(
-            schema_name, setup.snapshot_id)
-        wopts = _parquet_write_options(
-            session, schema_meta.schema_id, handle.meta.table_id)
-        (out.write.options(**wopts).partitionBy("__run")
-         .parquet(staging, mode="errorifexists"))
-
-        staged = _finalize_compact_runs(session, staging, table_path, runs)
-        n_rows = 0
-        for (run_id, start, cnt), (final_name, size, footer) in \
-                zip(runs, staged):
-            fid = writer.register_data_file(
-                handle.meta.table_id, setup.snapshot_id,
-                DataFileInfo(path=final_name, path_is_relative=True,
-                             file_size_bytes=size, footer_size=footer,
-                             record_count=cnt, row_id_start=int(start)))
-            local = _local_readable(table_path, final_name)
-            if local is not None:
-                writer.register_file_column_stats(
-                    fid, handle.meta.table_id,
-                    column_stats_of(local,
-                                    dict(zip(data_cols, setup.column_ids)),
-                                    {c.column_name for c in handle.columns
-                                     if is_geometry_type(c.column_type)}))
-            n_rows += cnt
-        session.refresh()
-        return n_rows
-    finally:
-        writer.close()
-
-
-def _compact_rowid_column(session, name: str, handle,
-                          single_file: bool = True) -> int:
-    """Compact a table whose files carry explicit in-file rowids: scan
-    live rows WITH rowid, rewrite them keeping the reserved column, and
-    register the outputs with row_id_start NULL in one maintenance
-    Replace snapshot — rowids stay stable through compaction exactly as
-    through the UPDATE that created them."""
-    from .operators.dml import _register_append, _stage_append
-    df = session.table(name, with_rowid=True)
-    schema_name, table_name = session._split(name)
-    writer = _catalog_writer(session)
-    try:
-        cols = [ColumnDef(c.column_name, c.column_type, c.nulls_allowed,
-                          c.initial_default, c.default_value)
-                for c in handle.columns]
-        setup = writer.begin_write_transaction(
-            schema_name, table_name, cols, WriteMode.REPLACE,
-            maintenance=True)
-        staged = _stage_append(session, handle, df,
-                               single_file=single_file, include_rowid=True)
-        n = _register_append(session, writer, setup.snapshot_id, handle,
-                             staged, rowid_in_file=True)
-    finally:
-        writer.close()
-    session.refresh()
-    return n
+    return rewrite_file_groups(session, name, [members], max_runs=max_runs,
+                               op="compact")
 
 
 def _insert_encrypted(session, writer, setup, table_meta, table_path,
@@ -1219,82 +1075,58 @@ def merge_groups_rowid_column(session, name: str, groups: list,
     (row_id_start NULL) — the upstream merge contract for partitioned
     tables whose per-value files interleave in rowid order
     (sql/compaction/compaction_partitioned_non_adjacent.test: rowid AND
-    snapshot_id survive the merge). Stage first, register in one
-    maintenance transaction (orphans on crash, never corruption); the
-    snapshot is labeled compacted_table so CDC stays silent."""
+    snapshot_id survive the merge). Stage first, then end the members
+    and register the outputs in one maintenance transaction behind
+    ``expect_live_member`` (orphans on crash or conflict, never
+    corruption); the snapshot is labeled compacted_table so CDC stays
+    silent."""
     from pyspark.sql import functions as F
 
-    from .operators.dml import _stage_append
+    from .operators.dml import _register_append, _stage_append
     from .sources.scan import scan_table
 
     handle = session.table_handle(name)
-    tid = handle.meta.table_id
     data_cols = [c.column_name for c in handle.columns]
-    col_ids = [c.column_id for c in handle.columns]
-    geo_cols = {c.column_name for c in handle.columns
-                if is_geometry_type(c.column_type)}
-    staged_groups = []
+    staged = []
     for group in groups:
         df = scan_table(session.spark, handle.spark_schema,
                         [rf for _mf, rf in group], with_virtual=True)
         df = df.select(*data_cols, "rowid",
                        F.col("snapshot_id").alias("__begin_snapshot"))
-        staged_groups.append(_stage_append(
-            session, handle, df, single_file=True,
-            include_rowid=True, include_snapshot=True))
+        staged += _stage_append(session, handle, df, single_file=True,
+                                include_rowid=True, include_snapshot=True)
 
     writer = _catalog_writer(session)
     try:
-        snap = writer.create_snapshot([f"compacted_table:{tid}"])
-        n_rows = 0
         with writer._txn():
-            mid = None
-            if any(is_interval_type(c.column_type)
-                   for c in handle.columns):
-                # interval groups staged through the duckdb writer carry
-                # no parquet field ids: register the identity name
-                # mapping (same contract as _register_append /
-                # _insert_interval) so a later column RENAME keeps
-                # resolving instead of reading these rows as NULL
-                mid = writer.create_name_mapping(tid, data_cols, col_ids)
-            for group in groups:
-                for mf, _rf in group:
-                    writer.expect_live_delete(
-                        mf.data_file_id,
-                        mf.delete_file.delete_file_id
-                        if mf.delete_file else None)
-                    writer.end_delete_file(mf.data_file_id, snap)
-                    writer.end_data_file(mf.data_file_id, snap)
-            for staged in staged_groups:
-                for final_name, size, footer, count, pvals, enc_key in \
-                        staged:
-                    if count == 0:
-                        continue
-                    fid = writer.register_data_file(
-                        tid, snap,
-                        DataFileInfo(path=final_name,
-                                     path_is_relative=True,
-                                     file_size_bytes=size,
-                                     footer_size=footer,
-                                     record_count=count,
-                                     row_id_start=None,
-                                     mapping_id=mid,
-                                     encryption_key=enc_key))
-                    if pvals:
-                        writer.register_file_partition_values(
-                            fid, tid, pvals)
-                    local = _local_readable(handle.table_path, final_name)
-                    if local is not None and enc_key is None:
-                        writer.register_file_column_stats(
-                            fid, tid,
-                            column_stats_of(
-                                local, dict(zip(data_cols, col_ids)),
-                                geo_cols))
-                    n_rows += count
+            snap = _end_members(writer, handle.meta.table_id,
+                                [m for g in groups for m in g])
+            n_rows = _register_append(session, writer, snap, handle, staged,
+                                      rowid_in_file=True)
         session.refresh()
         return n_rows
     finally:
         writer.close()
+
+
+def _end_members(writer, table_id: int, members: list) -> int:
+    """Open the rewrite's compacted_table snapshot and end every member
+    data file and its delete file in it, inside the caller's transaction.
+    Optimistic concurrency: the rewrite read each member as a live data
+    file with its CURRENT delete file; a member that a concurrent rewrite
+    ended, or whose delete file a concurrent DML superseded or added,
+    aborts it. The label is a maintenance marker, not a data change: CDC
+    (operators/cdc.py) skips compacted_table snapshots, so a rewrite
+    never re-reports rows as inserted/deleted (upstream table_changes is
+    silent across compaction too)."""
+    snap = writer.create_snapshot([f"compacted_table:{table_id}"])
+    for mf, _rf in members:
+        writer.expect_live_member(
+            mf.data_file_id,
+            mf.delete_file.delete_file_id if mf.delete_file else None)
+        writer.end_delete_file(mf.data_file_id, snap)
+        writer.end_data_file(mf.data_file_id, snap)
+    return snap
 
 
 def rewrite_data_files(session, name: str, max_runs: int = 512,
@@ -1355,14 +1187,17 @@ def rewrite_file_groups(session, name: str, groups: list,
     members within a group (that is what makes ducklake_merge_adjacent's
     target_file_size packing produce one output file per group), never
     across groups. Files outside the groups keep their exact catalog
-    registration. Scan + run discovery touch only the group members and
-    their delete parquets."""
+    registration. Run discovery (_live_runs) reads only the members'
+    deletion vectors, which the rewrite's own scan then filters with, and
+    refuses past ``max_runs`` runs. The runs are staged first; the
+    members end and the outputs register in one transaction behind
+    ``expect_live_member``, so a failed or conflicting rewrite leaves the
+    table as it was."""
     from pyspark.sql import functions as F
 
     from .sources.scan import scan_table
 
     handle = session.table_handle(name)
-    from .types import is_interval_type
     if any(is_interval_type(c.column_type) for c in handle.columns):
         # defense in depth (r9 review): this path writes via Spark's
         # parquet writer, which would silently re-store INTERVAL as a
@@ -1384,51 +1219,27 @@ def rewrite_file_groups(session, name: str, groups: list,
         raise InvalidConfig(
             f"{op} over encrypted tables is not supported — "
             "compact(preserve_rowids=False) rewrites encrypted")
-    if any(mf.row_id_start is None for mf, _ in pairs):
+    if any(mf.row_id_start is None or mf.record_count is None
+           for mf, _ in pairs):
+        # the runs are rowid ranges: without both, a file's rows fall
+        # outside every run and would be dropped
         raise InvalidConfig(
-            f"{op} needs row_id_start on every rewritten file — "
-            "compact(preserve_rowids=False) renumbers instead")
+            f"{op} needs row_id_start and record_count on every rewritten "
+            "file — compact(preserve_rowids=False) renumbers instead")
 
-    # survivor runs per member, carved and merged within each group
-    # executor-side (_survivor_run_df) — the driver receives at most
-    # max_runs+1 run rows, never delete positions
-    base = os.path.basename
-    file_rows = [(base(mf.path), gi, mf.row_id_start, mf.record_count)
-                 for gi, group in enumerate(groups) for mf, _rf in group]
-    dirty_pairs = [(rf.delete_uri, base(mf.path))
-                   for _gi, group in enumerate(groups)
-                   for mf, rf in group if rf.delete_uri is not None]
-    rows = (_survivor_run_df(session, file_rows, dirty_pairs)
-            .orderBy("__grp", "start").limit(max_runs + 1).collect())
-    if len(rows) > max_runs:
+    found = _live_runs(session, groups, max_runs)
+    if len(found) > max_runs:
         raise InvalidConfig(
-            f"{op}: {name} shatters into more than {max_runs} "
-            f"rowid runs; use compact()")
-    run_list: list[tuple[int, int]] = [(r["start"], r["cnt"]) for r in rows]
-    run_group: list[int] = [r["__grp"] for r in rows]
+            f"{op}: {name} has more than {max_runs} contiguous rowid runs "
+            f"(max_runs); rowids cannot be preserved in that many files — "
+            f"compact with preserve_rowids=False to renumber")
+    runs = [(i, s, c) for i, (_g, s, c) in enumerate(found)]
 
     tid = handle.meta.table_id
-    writer = _catalog_writer(session)
-    try:
-        # maintenance marker, not a data change: CDC (operators/cdc.py)
-        # skips compacted_table snapshots so a rewrite never re-reports
-        # rows as inserted/deleted (upstream table_changes is silent
-        # across compaction too)
-        snap = writer.create_snapshot([f"compacted_table:{tid}"])
-        if not run_list:
-            # every row of every member file was deleted: just end them
-            with writer._txn():
-                for mf, _rf in pairs:
-                    writer.expect_live_delete(
-                        mf.data_file_id,
-                        mf.delete_file.delete_file_id
-                        if mf.delete_file else None)
-                    writer.end_delete_file(mf.data_file_id, snap)
-                    writer.end_data_file(mf.data_file_id, snap)
-            session.refresh()
-            return 0
-
-        runs = [(i, s, c) for i, (s, c) in enumerate(run_list)]
+    data_cols = [c.column_name for c in handle.columns]
+    col_ids = [c.column_id for c in handle.columns]
+    staged = []
+    if runs:
         df = scan_table(session.spark, handle.spark_schema,
                         [rf for _, rf in pairs], with_rowid=True)
         ranges = session.spark.createDataFrame(
@@ -1438,12 +1249,8 @@ def rewrite_file_groups(session, name: str, groups: list,
                        (F.col("rowid") >= F.col("__lo"))
                        & (F.col("rowid") <= F.col("__hi")))
                .drop("__lo", "__hi"))
-
-        table_path = handle.table_path
         session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled",
                                "true")
-        data_cols = [c.column_name for c in handle.columns]
-        col_ids = [c.column_id for c in handle.columns]
         # sort on __run first: the planned partitionBy("__run") write
         # re-sorts on __run alone, which would drop a rowid-only order
         out = (df2.repartition("__run")
@@ -1452,60 +1259,55 @@ def rewrite_file_groups(session, name: str, groups: list,
         out = _with_field_ids_partial(
             out, data_cols, col_ids,
             [dict(c.nested_ids or ()) for c in handle.columns])
-        staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
+        staging = handle.table_path.rstrip("/") \
+            + f"/stage-{uuid.uuid4().hex}"
         schema_name, _tbl = session._split(name)
-        schema_meta = session.provider.get_schema_by_name(schema_name, snap)
+        schema_meta = session.provider.get_schema_by_name(
+            schema_name, handle.snapshot_id)
         wopts = _parquet_write_options(session, schema_meta.schema_id, tid)
         (out.write.options(**wopts).partitionBy("__run")
          .parquet(staging, mode="errorifexists"))
-        staged = _finalize_compact_runs(session, staging, table_path, runs)
+        staged = _finalize_compact_runs(session, staging, handle.table_path,
+                                        runs)
 
-        geo_cols = {c.column_name for c in handle.columns
-                    if is_geometry_type(c.column_type)}
-        # partition-value carry (sql/compaction/compaction_partitioned_
-        # table shape): a rewritten file inherits its group's exact
-        # partition values when every member agrees — maintenance never
-        # degrades partition pruning on partitioned tables. Mixed groups
-        # (only possible via a caller that packs across partitions) get
-        # no values, which is correct-but-unpruned.
-        pv_map = session.provider.get_file_partition_values(tid)
-        group_pv: list = []
-        for group in groups:
-            pvs = [pv_map.get(mf.data_file_id, {}) for mf, _rf in group]
-            group_pv.append(sorted(pvs[0].items())
-                            if pvs[0] and all(d == pvs[0] for d in pvs)
-                            else None)
-        n_rows = 0
+    geo_cols = {c.column_name for c in handle.columns
+                if is_geometry_type(c.column_type)}
+    # partition-value carry (sql/compaction/compaction_partitioned_
+    # table shape): a rewritten file inherits its group's exact
+    # partition values when every member agrees — maintenance never
+    # degrades partition pruning on partitioned tables. Mixed groups
+    # (only possible via a caller that packs across partitions) get
+    # no values, which is correct-but-unpruned.
+    pv_map = session.provider.get_file_partition_values(tid)
+    group_pv: list = []
+    for group in groups:
+        pvs = [pv_map.get(mf.data_file_id, {}) for mf, _rf in group]
+        group_pv.append(sorted(pvs[0].items())
+                        if pvs[0] and all(d == pvs[0] for d in pvs)
+                        else None)
+    writer = _catalog_writer(session)
+    try:
         with writer._txn():
-            for mf, _rf in pairs:
-                # optimistic concurrency: the runs were computed from
-                # THIS delete state; a concurrent DML aborts the rewrite
-                writer.expect_live_delete(
-                    mf.data_file_id,
-                    mf.delete_file.delete_file_id
-                    if mf.delete_file else None)
-                writer.end_delete_file(mf.data_file_id, snap)
-                writer.end_data_file(mf.data_file_id, snap)
-            for ri, ((run_id, start, cnt), (final_name, size, footer)) in \
-                    enumerate(zip(runs, staged)):
+            snap = _end_members(writer, tid, pairs)
+            for (gi, start, cnt), (final_name, size, footer) in \
+                    zip(found, staged):
                 fid = writer.register_data_file(
                     tid, snap,
                     DataFileInfo(path=final_name, path_is_relative=True,
                                  file_size_bytes=size, footer_size=footer,
                                  record_count=cnt, row_id_start=int(start)))
-                if group_pv[run_group[ri]]:
+                if group_pv[gi]:
                     writer.register_file_partition_values(
-                        fid, tid, group_pv[run_group[ri]])
-                local = _local_readable(table_path, final_name)
+                        fid, tid, group_pv[gi])
+                local = _local_readable(handle.table_path, final_name)
                 if local is not None:
                     writer.register_file_column_stats(
                         fid, tid,
                         column_stats_of(local, dict(zip(data_cols,
                                                         col_ids)),
                                         geo_cols))
-                n_rows += cnt
         session.refresh()
-        return n_rows
+        return sum(c for _g, _s, c in found)
     finally:
         writer.close()
 
@@ -1515,29 +1317,30 @@ def _finalize_compact_runs(session, staging: str, table_path: str,
                            ) -> list[tuple[str, int, int]]:
     """Move each ``__run=N`` directory's single part file to a UUID name
     in the table dir; returns [(final_name, size, footer)] aligned with
-    ``runs``. Scheme'd table paths (file:// s3a:// hdfs:// ...) go through
-    the Hadoop FS API with row counts from one distributed footer job —
-    the driver never downloads file contents; bare local paths take the
-    direct os/pyarrow route."""
+    ``runs``. Every run is checked first — exactly one staged file
+    holding exactly the run's rows — and a mismatch raises
+    CatalogCorruption before any file moves or registers. Scheme'd table
+    paths (file:// s3a:// hdfs:// ...) go through the Hadoop FS API with
+    row counts from one distributed footer job — the driver never
+    downloads file contents; bare local paths take the direct os/pyarrow
+    route."""
     out = []
     if "://" in table_path:
-        from pyspark.sql import functions as F  # noqa: F401
         fs = _HadoopFs(session.spark, table_path)
         counts = {int(r["__run"]): int(r["count"])
                   for r in (session.spark.read.parquet(staging)
                             .groupBy("__run").count().collect())}
+        sources = []
         for run_id, _start, cnt in runs:
             run_dir = staging.rstrip("/") + f"/__run={run_id}"
             parts = [p for p in sorted(fs.list_names(run_dir))
                      if p.endswith(".parquet")]
-            assert len(parts) == 1, \
-                f"run {run_id} produced {len(parts)} files"
-            assert counts.get(run_id, 0) == cnt, \
-                f"run {run_id}: staged {counts.get(run_id, 0)} rows, " \
-                f"expected {cnt}"
+            _check_staged_run(run_id, parts, counts.get(run_id, 0), cnt)
+            sources.append(run_dir + "/" + parts[0])
+        for src in sources:
             final_name = f"ducklake-{uuid.uuid4()}.parquet"
             final_path = table_path.rstrip("/") + "/" + final_name
-            fs.rename(run_dir + "/" + parts[0], final_path)
+            fs.rename(src, final_path)
             out.append((final_name, fs.size(final_path),
                         _footer_size_from_tail(fs.tail(final_path, 8),
                                                final_path)))
@@ -1546,19 +1349,34 @@ def _finalize_compact_runs(session, staging: str, table_path: str,
     import shutil
 
     import pyarrow.parquet as pq
+    sources = []
     for run_id, _start, cnt in runs:
         run_dir = os.path.join(staging, f"__run={run_id}")
-        parts = [p for p in sorted(os.listdir(run_dir))
+        parts = [os.path.join(run_dir, p) for p in sorted(os.listdir(run_dir))
                  if p.endswith(".parquet")]
-        assert len(parts) == 1, f"run {run_id} produced {len(parts)} files"
+        _check_staged_run(run_id, parts,
+                          sum(pq.read_metadata(p).num_rows for p in parts),
+                          cnt)
+        sources.append(parts[0])
+    for src in sources:
         final_name = f"ducklake-{uuid.uuid4()}.parquet"
         final_path = os.path.join(table_path, final_name)
-        os.rename(os.path.join(run_dir, parts[0]), final_path)
-        assert pq.read_metadata(final_path).num_rows == cnt
+        os.rename(src, final_path)
         out.append((final_name, os.path.getsize(final_path),
                     footer_size_of(final_path)))
     shutil.rmtree(staging)
     return out
+
+
+def _check_staged_run(run_id: int, parts: list, rows: int, cnt: int) -> None:
+    """One staged file holding exactly the run's rows, or CatalogCorruption
+    before anything moves or registers."""
+    from .errors import CatalogCorruption
+    if len(parts) != 1 or rows != cnt:
+        raise CatalogCorruption(
+            f"compaction run {run_id} staged {len(parts)} files of "
+            f"{rows} rows, expected one file of {cnt}; nothing was "
+            "registered")
 
 
 def _with_field_ids_partial(df: DataFrame, data_cols: list[str],

@@ -168,7 +168,8 @@ def test_delete_after_concurrent_compact_conflicts(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_rewrite_after_concurrent_delete_conflicts(spark, tmp_path):
+@pytest.mark.parametrize("op", ["rewrite_data_files", "compact"])
+def test_rewrite_after_concurrent_delete_conflicts(spark, tmp_path, op):
     from datafusion_ducklake_spark.errors import TransactionConflict
     dl1 = _fresh(spark, tmp_path, "rc")
     dl1.create_table("main.t", spark.createDataFrame(
@@ -179,11 +180,42 @@ def test_rewrite_after_concurrent_delete_conflicts(spark, tmp_path):
     # dl1's rewrite computed survivors from v1; folding it now would
     # drop dl2's deletion — abort and retry after refresh
     with pytest.raises(TransactionConflict, match="changed concurrently"):
-        dl1.rewrite_data_files("main.t")
+        getattr(dl1, op)("main.t")
+    assert 1 not in {r.id for r in DuckLakeSession(
+        spark, dl1.catalog_path).table("main.t").collect()}
     dl1.refresh()
-    assert dl1.rewrite_data_files("main.t") == 8
+    assert getattr(dl1, op)("main.t") == 8
     assert sorted(r.id for r in dl1.table("main.t").collect()) \
         == list(range(2, 10))
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("op,path", [("compact", "runs"),
+                                     ("compact", "rowid_in_file"),
+                                     ("merge_adjacent_files", "runs")])
+def test_stale_rewrite_after_concurrent_rewrite_conflicts(spark, tmp_path,
+                                                          op, path):
+    """Two sessions pinned at the same version rewrite the same clean
+    files: the second commit finds its members already ended and aborts,
+    so no row is live twice at head."""
+    from datafusion_ducklake_spark.errors import TransactionConflict
+    dl1 = _fresh(spark, tmp_path, "rr")
+    dl1.create_table("main.t", spark.createDataFrame(
+        [(i, i) for i in range(6)], "id INT, v INT"))
+    dl1.insert_into("main.t", spark.createDataFrame(
+        [(i, i) for i in range(6, 12)], "id INT, v INT"))
+    if path == "rowid_in_file":
+        dl1.update_where("main.t", {"v": "v + 1"}, "id % 2 = 0")
+    dl2 = DuckLakeSession(spark, dl1.catalog_path)
+    before = sorted((r.id, r.rowid)
+                    for r in dl2.table("main.t", with_rowid=True).collect())
+    assert len(before) == 12
+    getattr(dl2, op)("main.t")
+    with pytest.raises(TransactionConflict, match="ended concurrently"):
+        getattr(dl1, op)("main.t")
+    head = DuckLakeSession(spark, dl1.catalog_path)
+    assert sorted((r.id, r.rowid) for r in head.table(
+        "main.t", with_rowid=True).collect()) == before
 
 
 def test_transient_lock_retry_honors_max_retry_count(spark, tmp_path):

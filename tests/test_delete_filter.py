@@ -170,3 +170,21 @@ def test_dml_folds_prior_vectors_without_reading_delete_files(
     assert sorted(r["id"] for r in dl.table("main.t").collect()) == [
         i for i in range(n_files * ROWS_PER_FILE)
         if i % 5 and not (i % 20 in (3, 7) and i < 200)]
+
+
+def test_vector_cache_keeps_a_wide_table(spark, tmp_path, monkeypatch):
+    """The driver's deletion-vector cache is bounded by the bytes of
+    words it holds, not by a file count: three reads of a table with 65
+    dirty files read each delete file once, on the first read."""
+    reads = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda path, *a, **k: (
+        reads.append(str(path)), real(path, *a, **k))[1])
+    dl = DuckLakeSession(spark, _dirty_fixture(tmp_path, 65).db_path)
+    per_read = []
+    for _ in range(3):
+        seen = len(reads)
+        assert dl.table("main.t").count() == 65 * 2
+        per_read.append(len([p for p in reads[seen:]
+                             if "ducklake-delete-" in p]))
+    assert per_read == [65, 0, 0]

@@ -4,6 +4,7 @@ ducklake_cleanup_old_files parity; corpus: cleanup/, remove_orphans/)."""
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 import pytest
 
@@ -328,14 +329,17 @@ def test_merge_adjacent_preserves_partition_values(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_compact_million_deleted_positions_stays_off_driver(spark, tmp_path):
+def test_compact_million_deleted_positions_stays_off_driver(spark, tmp_path,
+                                                           monkeypatch):
     """r3 VERDICT wrongness #3 'done' gate: compact a table whose delete
-    file holds >=1M positions. Run carving must happen executor-side —
-    the runs DataFrame plan contains no collect_list and the driver only
-    ever sees the merged run manifest (2 runs here) — and rowids must
-    survive the rewrite."""
-    from datafusion_ducklake_spark.table_writer import (_survivor_run_df,
-                                                        _carve_rowid_runs)
+    file holds >=1M positions. Run discovery reads the delete file once,
+    through ``deletion_vector`` (the rewrite's scan reuses that vector),
+    the driver only ever sees the merged run manifest (2 runs here), and
+    rowids survive the rewrite."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from datafusion_ducklake_spark.table_writer import _live_runs
 
     db = str(tmp_path / "big.sqlite")
     w = CatalogWriter.sqlite(db)
@@ -351,22 +355,26 @@ def test_compact_million_deleted_positions_stays_off_driver(spark, tmp_path):
     assert sum(f.delete_file.delete_count
                for f in handle._raw_files if f.delete_file) >= 1_000_000
 
-    # executor-side contract: the carve plan never materializes positions
-    # on the driver (no collect_list aggregate anywhere in the plan) and
-    # the collected manifest is exactly the merged islands
-    pairs = sorted(zip(handle._raw_files, handle.files),
-                   key=lambda t: t[0].row_id_start)
-    file_rows = [(os.path.basename(mf.path), 0, mf.row_id_start,
-                  mf.record_count) for mf, _ in pairs]
-    dirty = [(rf.delete_uri, os.path.basename(mf.path))
-             for mf, rf in pairs if rf.delete_uri is not None]
-    plan = _survivor_run_df(dl, file_rows, dirty)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "collect_list" not in plan
-    runs = _carve_rowid_runs(dl, handle, cap=256)
+    # the delete file is read once, by deletion_vector's pyarrow read, and
+    # never handed to a Spark reader
+    reads, spark_reads = [], []
+    real_pf, real_parquet = pq.ParquetFile, DataFrameReader.parquet
+    monkeypatch.setattr(pq, "ParquetFile", lambda path, *a, **k: (
+        reads.append(path), real_pf(path, *a, **k))[1])
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *paths, **k: (
+        spark_reads.extend(paths), real_parquet(self, *paths, **k))[1])
+    from datafusion_ducklake_spark.sources import scan
+    monkeypatch.setattr(scan, "_DELETION_VECTORS", OrderedDict())
+
+    # the driver-side manifest is exactly the merged islands
+    pairs = list(zip(handle._raw_files, handle.files))
+    runs = [(s, c) for _g, s, c in _live_runs(dl, [pairs], cap=256)]
     assert runs == [(0, hole_lo), (hole_hi, n - hole_hi)]
 
     dl.compact("main.big")
+    dels = [rf.delete_uri for rf in handle.files if rf.delete_uri]
+    assert len([p for p in reads if "ducklake-delete-" in p]) == len(dels)
+    assert not [p for p in spark_reads if "ducklake-delete-" in str(p)]
     after = dl.table_handle("main.big")
     assert all(f.delete_file is None for f in after._raw_files)
     assert sorted((f.row_id_start, f.record_count)
@@ -377,6 +385,147 @@ def test_compact_million_deleted_positions_stays_off_driver(spark, tmp_path):
     assert sorted((r.id, r.rowid) for r in rows) == [
         (hole_lo - 1, hole_lo - 1), (hole_hi, hole_hi)]
     assert dl.table("main.big").count() == n - (hole_hi - hole_lo)
+
+
+def _rowid_pairs(dl, name):
+    return sorted((r.id, r.rowid)
+                  for r in dl.table(name, with_rowid=True).collect())
+
+
+def _register_foreign_delete(dl, name, raw, positions, fname):
+    """Register ``positions`` of data file ``raw`` as a delete file named
+    ``fname``, as a foreign writer would."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    handle = dl.table_handle(name)
+    dest = os.path.join(handle.table_path, fname)
+    pq.write_table(pa.table({
+        "file_path": pa.array([raw.path] * len(positions)),
+        "pos": pa.array(positions, pa.int64())}), dest)
+    w = CatalogWriter.sqlite(dl.catalog_path)
+    try:
+        sid = w.create_snapshot()
+        w.register_delete_file(handle.meta.table_id, raw.data_file_id, sid,
+                               fname, True, os.path.getsize(dest),
+                               len(positions))
+    finally:
+        w.close()
+    dl.refresh()
+
+
+@pytest.mark.parametrize("op", ["compact", "rewrite_data_files"])
+def test_rewrite_reads_url_encoded_delete_file(spark, tmp_path, op):
+    """A delete file whose name Spark reports URL-encoded still defines
+    the survivors: every live (id, rowid) pair survives the rewrite."""
+    import uuid
+    dl = DuckLakeSession(spark, _fresh_catalog(tmp_path))
+    dl.create_table("main.u", spark.createDataFrame(
+        [(i,) for i in range(8)], "id BIGINT"))
+    raw = dl.table_handle("main.u")._raw_files[0]
+    _register_foreign_delete(dl, "main.u", raw, [1, 5],
+                             f"del 1%-{uuid.uuid4()}.parquet")
+    live = _rowid_pairs(dl, "main.u")
+    assert [i for i, _r in live] == [0, 2, 3, 4, 6, 7]
+    assert getattr(dl, op)("main.u") == 6
+    assert all(f.delete_file is None
+               for f in dl.table_handle("main.u")._raw_files)
+    assert _rowid_pairs(dl, "main.u") == live
+
+
+def test_compact_same_basename_in_two_directories(spark, tmp_path):
+    """Two add_files'd ``x.parquet`` in different directories keep their
+    own deletions through compaction: every live (id, rowid) pair
+    survives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    dl = DuckLakeSession(spark, _fresh_catalog(tmp_path))
+    dl.create_empty_table("main.af", "id BIGINT")
+    for sub, ids in (("a", range(4)), ("b", range(10, 14))):
+        path = tmp_path / sub / "x.parquet"
+        os.makedirs(path.parent)
+        pq.write_table(pa.table({"id": pa.array(list(ids), pa.int64())}),
+                       path)
+        dl.add_files("main.af", [str(path)])
+        dl.refresh()
+    assert dl.delete_from("main.af", "id = 11") == 1
+    live = _rowid_pairs(dl, "main.af")
+    assert [i for i, _r in live] == [0, 1, 2, 3, 10, 12, 13]
+    assert dl.compact("main.af") == 7
+    assert _rowid_pairs(dl, "main.af") == live
+
+
+def _fresh_catalog(tmp_path) -> str:
+    db = str(tmp_path / "c.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "lake"))
+    w.close()
+    return db
+
+
+@pytest.mark.parametrize("path", ["runs", "rowid_in_file"])
+def test_failed_compact_staging_keeps_every_row(dl, monkeypatch, path):
+    """Staging fails mid-compact: nothing was committed, so a session
+    opened at head still reads every row with its rowid."""
+    from datafusion_ducklake_spark import table_writer
+    from datafusion_ducklake_spark.operators import dml as dml_mod
+    dl.delete_from("main.m", "id IN (3, 4, 12)")
+    if path == "rowid_in_file":
+        dl.update_where("main.m", {"v": "v + 1"}, "id < 10")
+
+    def boom(*_a, **_k):
+        raise RuntimeError("staging failed")
+    if path == "runs":
+        monkeypatch.setattr(table_writer, "_finalize_compact_runs", boom)
+    else:
+        monkeypatch.setattr(dml_mod, "_stage_append", boom)
+    live = _rowid_pairs(dl, "main.m")
+    with pytest.raises(RuntimeError, match="staging failed"):
+        dl.compact("main.m")
+    head = DuckLakeSession(dl.spark, dl.catalog_path)
+    assert _rowid_pairs(head, "main.m") == live
+    assert len(live) == 17
+
+
+def test_compact_run_count_mismatch_raises_before_commit(dl, monkeypatch):
+    """A staged run whose row count disagrees with the run it was meant
+    to hold raises CatalogCorruption — under ``python -O`` too — and
+    nothing is registered."""
+    from datafusion_ducklake_spark import table_writer
+    from datafusion_ducklake_spark.errors import CatalogCorruption
+    dl.delete_from("main.m", "id = 5")
+    real = table_writer._live_runs
+
+    def over_count(*args, **kwargs):
+        (g, s, c), *rest = real(*args, **kwargs)
+        return [(g, s, c + 1), *rest]
+    monkeypatch.setattr(table_writer, "_live_runs", over_count)
+    live = _rowid_pairs(dl, "main.m")
+    files = sorted(f.data_file_id for f in dl.table_handle("main.m")
+                   ._raw_files)
+    with pytest.raises(CatalogCorruption, match="expected one file of 6"):
+        dl.compact("main.m")
+    head = DuckLakeSession(dl.spark, dl.catalog_path)
+    assert _rowid_pairs(head, "main.m") == live
+    assert sorted(f.data_file_id for f in head.table_handle("main.m")
+                  ._raw_files) == files
+
+
+def test_compact_refuses_file_without_record_count(dl):
+    """A started file whose catalog row has no record_count cannot be
+    cut into rowid runs: compact refuses instead of dropping its rows."""
+    import sqlite3
+    dl.delete_from("main.m", "id = 5")
+    con = sqlite3.connect(dl.catalog_path)
+    con.execute("UPDATE ducklake_data_file SET record_count = NULL")
+    con.commit()
+    con.close()
+    head = DuckLakeSession(dl.spark, dl.catalog_path)
+    live = _rowid_pairs(head, "main.m")
+    assert len(live) == 19
+    with pytest.raises(InvalidConfig, match="record_count"):
+        head.compact("main.m")
+    assert _rowid_pairs(DuckLakeSession(dl.spark, dl.catalog_path),
+                        "main.m") == live
 
 
 def test_compact_shatter_refusal_collects_bounded_manifest(spark, tmp_path):
