@@ -3255,15 +3255,14 @@ class DuckLakeSession:
                             "INTERVAL table is not supported")
                     continue
                 # encrypted rewrite renumbers (PME staging path)
-                self.compact(name, single_file=True,
-                             preserve_rowids=False)
+                self.compact(name, preserve_rowids=False)
                 n += 1
                 continue
             if any(mf.row_id_start is None for mf in handle._raw_files) \
                     or (handle.inlined_tables and handle.inlined_rows()):
                 # no preservable rowids (foreign fixtures) → plain
                 # rewrite; live inlined rows → compact raises, as before
-                self.compact(name, single_file=True)
+                self.compact(name)
                 n += 1
                 continue
             # never pack across partitions; size target caps each group;
@@ -3406,8 +3405,8 @@ class DuckLakeSession:
         upstream's whole-catalog form, where the CALL's argument is the
         attached catalog name (sql/data_inlining/
         inlining_issue_on_empty_inline.test)."""
-        from .operators.dml import _register_append, _stage_append
-        from .table_writer import _catalog_writer
+        from .table_writer import (_catalog_writer, register_files,
+                                   stage_files, target_of)
         if name is None:
             total = 0
             snap = self.provider.get_current_snapshot()
@@ -3419,16 +3418,17 @@ class DuckLakeSession:
         df = handle._inlined_df(with_rowid=True, with_snapshot=True)
         if df is None:
             return 0
-        staged = _stage_append(self, handle, df, include_rowid=True,
-                               include_snapshot=True)
+        target = target_of(self, handle)
+        staged = stage_files(self, target, df, include_rowid=True,
+                             include_snapshot=True)
         writer = _catalog_writer(self)
         try:
-            sid = writer.create_snapshot(
-                [f"flushed_inlined_data:{handle.meta.table_id}"])
-            n = _register_append(self, writer, sid, handle, staged,
-                                 rowid_in_file=True)
-            for it in handle.inlined_tables:
-                writer.end_inlined_rows(it, sid)
+            with writer._txn():
+                sid = writer.create_snapshot(
+                    [f"flushed_inlined_data:{handle.meta.table_id}"])
+                n = register_files(writer, sid, target, staged)
+                for it in handle.inlined_tables:
+                    writer.end_inlined_rows(it, sid)
         finally:
             writer.close()
         self.refresh()
@@ -3615,8 +3615,7 @@ class DuckLakeSession:
                           by_source_delete=by_source_delete,
                           by_source_pred=by_source_pred)
 
-    def compact(self, name: str, single_file: bool = True,
-                preserve_rowids: bool = True) -> int:
+    def compact(self, name: str, preserve_rowids: bool = True) -> int:
         """Rewrite a table's live data (deletes applied) into fresh clean
         files in one snapshot, so MOR debt collapses and later scans
         filter no deletes.
@@ -3625,15 +3624,12 @@ class DuckLakeSession:
         rewrite: one output file per contiguous surviving rowid run (the
         DuckLake rowid contract), staged before one catalog commit
         (table_writer.compact_table). ``preserve_rowids=False``
-        renumbers through the overwrite path. ``single_file`` shapes
-        only the overwrite path (which tables without rowids also take);
-        the rowid-preserving paths write one file per run or per
-        in-file-rowid group whatever it says."""
+        renumbers through the overwrite path."""
         from .table_writer import compact_table, create_or_insert
         if preserve_rowids:
-            return compact_table(self, name, single_file=single_file)
+            return compact_table(self, name)
         return create_or_insert(self, name, self.table(name),
-                                mode="overwrite", single_file=single_file)
+                                mode="overwrite")
 
     def cluster_by(self, name: str, key: str, buckets: int,
                    sort: bool = True, replica: bool = False) -> int:
@@ -3866,8 +3862,9 @@ class DuckLakeSession:
 
         from .metadata.writer import DataFileInfo
         from .table_writer import (_catalog_writer, column_stats_of,
-                                   footer_size_of)
-        from .types import spark_to_ducklake_type, types_compatible
+                                   footer_size_of, nested_stats_ids)
+        from .types import (is_geometry_type, spark_to_ducklake_type,
+                            types_compatible)
 
         import pyarrow.parquet as pq
 
@@ -3894,201 +3891,206 @@ class DuckLakeSession:
         tname = name.rsplit(".", 1)[-1]
         expected = {c.column_name: c.column_type for c in handle.columns}
         column_ids = {c.column_name: c.column_id for c in handle.columns}
+        stats_ids = {**column_ids, **nested_stats_ids(handle.columns)}
+        geo_cols = {c.column_name for c in handle.columns
+                    if is_geometry_type(c.column_type)}
+        # every file is validated (and its stats read) before the
+        # catalog is touched; then one transaction registers them all,
+        # so a bad file leaves no snapshot and no rows behind
+        checked = []
+        for path in expanded:
+            meta = pq.read_metadata(path)
+            schema = pq.read_schema(path)
+            for k in range(len(meta.schema)):
+                # TIME unit gate over the leaves the table will
+                # actually READ (nested included): the era-proof
+                # scan reads time physically as int64 and interprets
+                # the values as MICROSECONDS of day — a TIME(NANOS)/
+                # TIME(MILLIS) file would silently read 1000x off,
+                # so only µs-annotated files register. Leaves under
+                # an EXTRA column are exempt: ignore_extra_columns
+                # omits them from the mapping, so they are never
+                # scanned (and without the flag the per-column loop
+                # below rejects the file anyway).
+                leaf = meta.schema.column(k)
+                top = leaf.path.split(".", 1)[0]
+                if top not in expected:
+                    continue
+                leaf_log = str(getattr(leaf, "logical_type", "")
+                               or "")
+                if leaf_log.startswith("Time(") \
+                        and "microseconds" not in leaf_log:
+                    raise InvalidConfig(
+                        f"add_files: column '{leaf.path}' in {path} "
+                        f"has parquet type {leaf_log} — only "
+                        "TIME(MICROS) files are supported (the "
+                        "engine's time representation is µs)")
+            extra_cols: list[str] = []
+            for i, col_name in enumerate(schema.names):
+                if col_name not in expected:
+                    if ignore_extra_columns:
+                        # sql/add_files/add_files_extra_columns.test:
+                        # the mapping below simply omits the column,
+                        # so scans never read it
+                        extra_cols.append(col_name)
+                        continue
+                    raise InvalidConfig(
+                        f"add_files: column '{col_name}' in {path} not "
+                        f"in table {name}; add ignore_extra_columns => "
+                        f"true to register anyway")
+                import pyarrow as _pa
+                if (expected[col_name].strip().lower() == "uuid"
+                        and schema.types[i] == _pa.binary(16)):
+                    # parquet UUID surfaces as fixed_size_binary[16]
+                    # (sql/add_files/add_files_type_check_uuid.test);
+                    # the scan reads it as the table's binary-backed
+                    # uuid representation
+                    continue
+                if (expected[col_name].strip().lower() == "interval"
+                        and schema.types[i] == _pa.binary(12)):
+                    # parquet INTERVAL surfaces as
+                    # fixed_size_binary[12] in pyarrow; the scan
+                    # decodes it to struct<months,days,micros>.
+                    # This is the supported write-side interop path
+                    # for interval tables: create_empty_table +
+                    # add_files of an externally-written file.
+                    # Unlike the byte-transparent uuid rule above,
+                    # the decode is SEMANTIC — require the parquet
+                    # INTERVAL logical annotation so an arbitrary
+                    # 12-byte blob column can't register and be
+                    # silently misread as (months, days, millis)
+                    phys = next(
+                        (meta.schema.column(k)
+                         for k in range(len(meta.schema))
+                         if meta.schema.column(k).path == col_name),
+                        None)
+                    conv = str(getattr(phys, "converted_type", "")
+                               or "") if phys is not None else ""
+                    logi = str(getattr(phys, "logical_type", "")
+                               or "") if phys is not None else ""
+                    if "INTERVAL" in conv.upper() \
+                            or "INTERVAL" in logi.upper():
+                        continue
+                    raise InvalidConfig(
+                        f"add_files: column '{col_name}' in {path} "
+                        "is fixed 12-byte binary without the "
+                        "parquet INTERVAL logical type — refusing "
+                        "to register it into an INTERVAL column")
+                from pyspark.sql.pandas.types import from_arrow_type
+                try:
+                    spark_t = from_arrow_type(schema.types[i],
+                                              prefer_timestamp_ntz=True)
+                except Exception as e:
+                    raise InvalidConfig(
+                        f"add_files: column '{col_name}' in {path} has "
+                        f"arrow type {schema.types[i]} with no Spark "
+                        f"mapping — incompatible with table type "
+                        f"{expected[col_name]} ({e})") from e
+                file_type = spark_to_ducklake_type(spark_t)
+                if not types_compatible(file_type, expected[col_name]):
+                    # legacy 2-level LIST files (old Hive/Avro/Spark
+                    # writeLegacyFormat): pyarrow wraps the element in
+                    # a single-field struct the Spark reader will
+                    # collapse — retry the check through the same
+                    # collapse (sql/add_files/add_old_list.test)
+                    from .types import normalize_legacy_arrow_lists
+                    try:
+                        alt = from_arrow_type(
+                            normalize_legacy_arrow_lists(schema.types[i]),
+                            prefer_timestamp_ntz=True)
+                        alt_type = spark_to_ducklake_type(alt)
+                    except Exception:
+                        alt_type = file_type
+                    if types_compatible(alt_type, expected[col_name]):
+                        file_type = alt_type
+                    else:
+                        raise InvalidConfig(
+                            f"add_files: column '{col_name}' type "
+                            f"{file_type} incompatible with table type "
+                            f"{expected[col_name]}")
+                if not allow_missing:
+                    from .types import missing_nested_fields
+                    missing = missing_nested_fields(
+                        file_type, expected[col_name], col_name)
+                    if missing:
+                        # upstream contract (add_files_missing_fields.
+                        # test): an absent nested field errors unless
+                        # allow_missing — otherwise it would silently
+                        # read NULL
+                        raise InvalidConfig(
+                            f'add_files: Column "{missing[0]}" exists '
+                            f'in table "{tname}" but was not found in '
+                            f'file {path}; pass allow_missing => true '
+                            f'to read NULL')
+            # table columns the file does not store: hive path segment
+            # (value injected at scan), else NULL under allow_missing,
+            # else error — the reference's default contract
+            hive_cols: list[str] = []
+            for col_name in expected:
+                if col_name in schema.names:
+                    continue
+                if hive_partitioning is not False and any(
+                        seg.startswith(f"{col_name}=")
+                        for seg in path.split("/")[:-1]):
+                    hive_cols.append(col_name)
+                elif not allow_missing:
+                    raise InvalidConfig(
+                        f'Column "{col_name}" exists in table "{tname}" '
+                        f'but was not found in file "{path}". Add '
+                        f"allow_missing => true to fill missing columns "
+                        f"with NULL, or hive_partitioning => true if the "
+                        f"value is encoded in the path")
+            # External files without field ids get a map_by_name mapping
+            # recorded in the catalog, so scans never need to probe their
+            # footers again (one probe here, at registration time).
+            # Hive-sourced columns always force a mapping: their
+            # is_partition rows ARE the injection instruction.
+            has_ids = any(
+                schema.field(i).metadata
+                and b"PARQUET:field_id" in schema.field(i).metadata
+                for i in range(len(schema.names)))
+            known_names = [n for n in schema.names if n in expected]
+            mapped = not has_ids or hive_cols or extra_cols
+            stats = column_stats_of(path, stats_ids, geo_cols)
+            for col in hive_cols:
+                # exact synthetic stats (min=max=path value) — catalog
+                # file pruning on partition keys needs no footer I/O
+                val = _hive_value(path, col)
+                nulls = meta.num_rows if val is None else 0
+                stats.append((column_ids[col], 0, meta.num_rows,
+                              nulls, val, val, False))
+            checked.append((path, meta.num_rows, mapped, known_names,
+                            hive_cols, stats))
+        tid = handle.meta.table_id
         writer = _catalog_writer(self)
         try:
-            snapshot_id = writer.create_snapshot(
-                [f"inserted_into_table:{handle.meta.table_id}"])
-            next_rowid = writer.next_row_id(handle.meta.table_id)
-            n_rows = 0
-            for path in expanded:
-                meta = pq.read_metadata(path)
-                schema = pq.read_schema(path)
-                for k in range(len(meta.schema)):
-                    # TIME unit gate over the leaves the table will
-                    # actually READ (nested included): the era-proof
-                    # scan reads time physically as int64 and interprets
-                    # the values as MICROSECONDS of day — a TIME(NANOS)/
-                    # TIME(MILLIS) file would silently read 1000x off,
-                    # so only µs-annotated files register. Leaves under
-                    # an EXTRA column are exempt: ignore_extra_columns
-                    # omits them from the mapping, so they are never
-                    # scanned (and without the flag the per-column loop
-                    # below rejects the file anyway).
-                    leaf = meta.schema.column(k)
-                    top = leaf.path.split(".", 1)[0]
-                    if top not in expected:
-                        continue
-                    leaf_log = str(getattr(leaf, "logical_type", "")
-                                   or "")
-                    if leaf_log.startswith("Time(") \
-                            and "microseconds" not in leaf_log:
-                        raise InvalidConfig(
-                            f"add_files: column '{leaf.path}' in {path} "
-                            f"has parquet type {leaf_log} — only "
-                            "TIME(MICROS) files are supported (the "
-                            "engine's time representation is µs)")
-                extra_cols: list[str] = []
-                for i, col_name in enumerate(schema.names):
-                    if col_name not in expected:
-                        if ignore_extra_columns:
-                            # sql/add_files/add_files_extra_columns.test:
-                            # the mapping below simply omits the column,
-                            # so scans never read it
-                            extra_cols.append(col_name)
-                            continue
-                        raise InvalidConfig(
-                            f"add_files: column '{col_name}' in {path} not "
-                            f"in table {name}; add ignore_extra_columns => "
-                            f"true to register anyway")
-                    import pyarrow as _pa
-                    if (expected[col_name].strip().lower() == "uuid"
-                            and schema.types[i] == _pa.binary(16)):
-                        # parquet UUID surfaces as fixed_size_binary[16]
-                        # (sql/add_files/add_files_type_check_uuid.test);
-                        # the scan reads it as the table's binary-backed
-                        # uuid representation
-                        continue
-                    if (expected[col_name].strip().lower() == "interval"
-                            and schema.types[i] == _pa.binary(12)):
-                        # parquet INTERVAL surfaces as
-                        # fixed_size_binary[12] in pyarrow; the scan
-                        # decodes it to struct<months,days,micros>.
-                        # This is the supported write-side interop path
-                        # for interval tables: create_empty_table +
-                        # add_files of an externally-written file.
-                        # Unlike the byte-transparent uuid rule above,
-                        # the decode is SEMANTIC — require the parquet
-                        # INTERVAL logical annotation so an arbitrary
-                        # 12-byte blob column can't register and be
-                        # silently misread as (months, days, millis)
-                        phys = next(
-                            (meta.schema.column(k)
-                             for k in range(len(meta.schema))
-                             if meta.schema.column(k).path == col_name),
-                            None)
-                        conv = str(getattr(phys, "converted_type", "")
-                                   or "") if phys is not None else ""
-                        logi = str(getattr(phys, "logical_type", "")
-                                   or "") if phys is not None else ""
-                        if "INTERVAL" in conv.upper() \
-                                or "INTERVAL" in logi.upper():
-                            continue
-                        raise InvalidConfig(
-                            f"add_files: column '{col_name}' in {path} "
-                            "is fixed 12-byte binary without the "
-                            "parquet INTERVAL logical type — refusing "
-                            "to register it into an INTERVAL column")
-                    from pyspark.sql.pandas.types import from_arrow_type
-                    try:
-                        spark_t = from_arrow_type(schema.types[i],
-                                                  prefer_timestamp_ntz=True)
-                    except Exception as e:
-                        raise InvalidConfig(
-                            f"add_files: column '{col_name}' in {path} has "
-                            f"arrow type {schema.types[i]} with no Spark "
-                            f"mapping — incompatible with table type "
-                            f"{expected[col_name]} ({e})") from e
-                    file_type = spark_to_ducklake_type(spark_t)
-                    if not types_compatible(file_type, expected[col_name]):
-                        # legacy 2-level LIST files (old Hive/Avro/Spark
-                        # writeLegacyFormat): pyarrow wraps the element in
-                        # a single-field struct the Spark reader will
-                        # collapse — retry the check through the same
-                        # collapse (sql/add_files/add_old_list.test)
-                        from .types import normalize_legacy_arrow_lists
-                        try:
-                            alt = from_arrow_type(
-                                normalize_legacy_arrow_lists(schema.types[i]),
-                                prefer_timestamp_ntz=True)
-                            alt_type = spark_to_ducklake_type(alt)
-                        except Exception:
-                            alt_type = file_type
-                        if types_compatible(alt_type, expected[col_name]):
-                            file_type = alt_type
-                        else:
-                            raise InvalidConfig(
-                                f"add_files: column '{col_name}' type "
-                                f"{file_type} incompatible with table type "
-                                f"{expected[col_name]}")
-                    if not allow_missing:
-                        from .types import missing_nested_fields
-                        missing = missing_nested_fields(
-                            file_type, expected[col_name], col_name)
-                        if missing:
-                            # upstream contract (add_files_missing_fields.
-                            # test): an absent nested field errors unless
-                            # allow_missing — otherwise it would silently
-                            # read NULL
-                            raise InvalidConfig(
-                                f'add_files: Column "{missing[0]}" exists '
-                                f'in table "{tname}" but was not found in '
-                                f'file {path}; pass allow_missing => true '
-                                f'to read NULL')
-                # table columns the file does not store: hive path segment
-                # (value injected at scan), else NULL under allow_missing,
-                # else error — the reference's default contract
-                hive_cols: list[str] = []
-                for col_name in expected:
-                    if col_name in schema.names:
-                        continue
-                    if hive_partitioning is not False and any(
-                            seg.startswith(f"{col_name}=")
-                            for seg in path.split("/")[:-1]):
-                        hive_cols.append(col_name)
-                    elif not allow_missing:
-                        raise InvalidConfig(
-                            f'Column "{col_name}" exists in table "{tname}" '
-                            f'but was not found in file "{path}". Add '
-                            f"allow_missing => true to fill missing columns "
-                            f"with NULL, or hive_partitioning => true if the "
-                            f"value is encoded in the path")
-                # External files without field ids get a map_by_name mapping
-                # recorded in the catalog, so scans never need to probe their
-                # footers again (one probe here, at registration time).
-                # Hive-sourced columns always force a mapping: their
-                # is_partition rows ARE the injection instruction.
-                has_ids = any(
-                    schema.field(i).metadata
-                    and b"PARQUET:field_id" in schema.field(i).metadata
-                    for i in range(len(schema.names)))
-                mapping_id = None
-                known_names = [n for n in schema.names if n in expected]
-                if not has_ids or hive_cols or extra_cols:
+            with writer._txn():
+                snapshot_id = writer.create_snapshot(
+                    [f"inserted_into_table:{tid}"])
+                next_rowid = writer.next_row_id(tid)
+                for path, rows, mapped, known_names, hive_cols, stats \
+                        in checked:
                     mapping_id = writer.create_name_mapping(
-                        handle.meta.table_id, known_names,
+                        tid, known_names,
                         [column_ids[n] for n in known_names],
                         partition_cols=[(c, column_ids[c])
-                                        for c in hive_cols])
-                fid = writer.register_data_file(
-                    handle.meta.table_id, snapshot_id,
-                    DataFileInfo(path=os.path.abspath(path),
-                                 path_is_relative=False,
-                                 file_size_bytes=os.path.getsize(path),
-                                 footer_size=footer_size_of(path),
-                                 record_count=meta.num_rows,
-                                 row_id_start=next_rowid,
-                                 mapping_id=mapping_id))
-                from .table_writer import nested_stats_ids
-                from .types import is_geometry_type
-                stats = column_stats_of(
-                    path, {**column_ids, **nested_stats_ids(handle.columns)},
-                    {c.column_name for c in handle.columns
-                     if is_geometry_type(c.column_type)})
-                for col in hive_cols:
-                    # exact synthetic stats (min=max=path value) — catalog
-                    # file pruning on partition keys needs no footer I/O
-                    val = _hive_value(path, col)
-                    nulls = meta.num_rows if val is None else 0
-                    stats.append((column_ids[col], 0, meta.num_rows,
-                                  nulls, val, val, False))
-                writer.register_file_column_stats(
-                    fid, handle.meta.table_id, stats)
-                next_rowid += meta.num_rows
-                n_rows += meta.num_rows
-            self.refresh()
-            return n_rows
+                                        for c in hive_cols]) \
+                        if mapped else None
+                    fid = writer.register_data_file(
+                        tid, snapshot_id,
+                        DataFileInfo(path=os.path.abspath(path),
+                                     path_is_relative=False,
+                                     file_size_bytes=os.path.getsize(path),
+                                     footer_size=footer_size_of(path),
+                                     record_count=rows,
+                                     row_id_start=next_rowid,
+                                     mapping_id=mapping_id))
+                    writer.register_file_column_stats(fid, tid, stats)
+                    next_rowid += rows
         finally:
             writer.close()
+        self.refresh()
+        return sum(c[1] for c in checked)
 
     def copy_to(self, source: str, dest: str, options: str = "") -> int:
         """COPY (SELECT ...) TO 'file' / COPY table TO 'file' — the

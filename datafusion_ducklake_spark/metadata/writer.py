@@ -3,10 +3,15 @@
 Reference parity: the MetadataWriter trait + ColumnDef/DataFileInfo/
 WriteMode (src/metadata_writer.rs:17-45, 38-45), the SQLite impl's DDL for
 the seven catalog tables (src/metadata_writer_sqlite.rs:15-86) and its
-transactions: create_snapshot, begin_write_transaction (331-470 —
+statements: create_snapshot, begin_write_transaction (331-470 —
 snapshot + get-or-create schema/table + schema-evolution check +
-set_columns + Replace⇒end_table_files, all in ONE DB transaction),
-register_data_file (250-273), end_table_files (275-288).
+set_columns + Replace⇒end_table_files), register_data_file (250-273),
+end_table_files (275-288). Each method is one transaction on its own and
+joins the caller's when called inside ``_txn`` (reentrant): a write
+composes begin_write_transaction (or create_snapshot) with every
+registration of its staged files into ONE commit
+(table_writer.register_files), and ``begin_write_transaction`` versions
+column rows only when the columns changed.
 
 Implementation notes:
 - IDs are allocated explicitly (MAX+1 inside the transaction) instead of
@@ -29,6 +34,7 @@ from typing import Optional
 
 from ..errors import InvalidConfig
 from ..types import is_geometry_type, types_compatible
+from .provider import ColumnMeta
 
 DDL = """
 CREATE TABLE IF NOT EXISTS ducklake_metadata (
@@ -275,11 +281,18 @@ class WriteSetup:
     snapshot_id: int
     schema_id: int
     table_id: int
-    column_ids: list
-    # per top-level column: {path_tuple: child_field_id} for nested types
-    # (struct evolution identity — empty dict for leaf columns); parallel
-    # to column_ids. None on legacy paths that skip child-row bookkeeping.
-    nested_ids: Optional[list] = None
+    # the table's columns as the write leaves them, in the input's order:
+    # ids, declared types, NOT NULL, defaults and nested field ids
+    # (provider ColumnMeta, so staging treats a planned table and a bound
+    # one alike)
+    columns: list
+    # (path, path_is_relative) of the schema row and of the table row
+    schema_path: tuple
+    table_path: tuple
+
+    @property
+    def column_ids(self) -> list:
+        return [c.column_id for c in self.columns]
 
 
 class _QmarkCursor:
@@ -598,20 +611,20 @@ class CatalogWriter:
         return out
 
     @staticmethod
-    def _insert_child_rows(cur, table_id: int, parent_id: int,
-                           col_type: str, sid: int, prev_paths: dict,
-                           next_col_id: int, next_order: int):
-        """Insert child ducklake_column rows for a nested column type
-        (struct fields by name, list 'element', map 'key'/'value' — the
-        DuckLake parent/child convention metadata_provider.rs:361-410
-        reads). Ids reuse the previous version's by path; new slots get
-        fresh ids. Returns ({path: id}, next_col_id, next_order)."""
+    def _child_rows(cur, table_id: int, parent_id: int, col_type: str,
+                    prev_paths: dict, next_col_id: int, next_order: int):
+        """Child ducklake_column rows for a nested column type (struct
+        fields by name, list 'element', map 'key'/'value' — the DuckLake
+        parent/child convention metadata_provider.rs:361-410 reads). Ids
+        reuse the previous version's by path; new slots get fresh ids.
+        Returns (rows, {path: id}, next_col_id, next_order), rows shaped
+        like ``_COLUMN_ROW``."""
         from ..types import nested_tree_paths
         try:
             tree = nested_tree_paths(col_type)
         except Exception:
-            return {}, next_col_id, next_order
-        nested: dict = {}
+            return [], {}, next_col_id, next_order
+        rows, nested = [], {}
         for path, child_type in tree:
             cid = prev_paths.get(path)
             carried_default = None
@@ -622,23 +635,52 @@ class CatalogWriter:
                 # re-versioned field identity: carry its nested DEFAULT
                 # forward (sql/default/struct_field_default.test — an
                 # unrelated later alter must not lose it)
-                rows = cur.execute(
+                found = cur.execute(
                     "SELECT initial_default FROM ducklake_column "
                     "WHERE table_id = ? AND column_id = ? "
                     "ORDER BY begin_snapshot DESC LIMIT 1",
                     (table_id, cid)).fetchall()
-                carried_default = rows[0][0] if rows else None
+                carried_default = found[0][0] if found else None
             parent = parent_id if len(path) == 1 else nested[path[:-1]]
-            cur.execute(
-                "INSERT INTO ducklake_column (column_id, table_id, "
-                "column_name, column_type, column_order, nulls_allowed, "
-                "parent_column, begin_snapshot, initial_default) "
-                "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-                (cid, table_id, path[-1], child_type, next_order,
-                 True, parent, sid, carried_default))
+            rows.append((cid, path[-1], child_type, next_order, True,
+                         parent, carried_default, None))
             nested[path] = cid
             next_order += 1
-        return nested, next_col_id, next_order
+        return rows, nested, next_col_id, next_order
+
+    _COLUMN_ROW = ("column_id, column_name, column_type, column_order, "
+                   "nulls_allowed, parent_column, initial_default, "
+                   "default_value")
+
+    def _version_column_rows(self, cur, table_id: int, sid: int,
+                             rows: list) -> None:
+        """End the table's live column rows and insert ``rows`` as the
+        version beginning at ``sid`` — unless the live rows already equal
+        ``rows`` (ids, names, types, order, nullability, parents and
+        defaults): a write that changes no column writes no column row,
+        so ``ducklake_column`` does not grow with the number of writes
+        and a column's begin_snapshot stays the snapshot that changed
+        it."""
+        def norm(r):
+            return (int(r[0]), str(r[1]), str(r[2]), int(r[3]),
+                    True if r[4] is None else bool(r[4]),
+                    None if r[5] is None else int(r[5]), r[6], r[7])
+        live = cur.execute(
+            f"SELECT {self._COLUMN_ROW} FROM ducklake_column "
+            "WHERE table_id = ? AND end_snapshot IS NULL",
+            (table_id,)).fetchall()
+        if sorted(map(norm, live), key=lambda r: (r[3], r[0])) == \
+                sorted(map(norm, rows), key=lambda r: (r[3], r[0])):
+            return
+        cur.execute(
+            "UPDATE ducklake_column SET end_snapshot = ? "
+            "WHERE table_id = ? AND end_snapshot IS NULL", (sid, table_id))
+        for r in rows:
+            cur.execute(
+                f"INSERT INTO ducklake_column ({self._COLUMN_ROW}, "
+                "table_id, begin_snapshot) "
+                "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
+                (*r, table_id, sid))
 
     def set_nested_field_default(self, table_id: int, parent_name: str,
                                  field_name: str, default: str) -> None:
@@ -820,8 +862,12 @@ class CatalogWriter:
                                 replace_definition: bool = False
                                 ) -> WriteSetup:
         """One atomic transaction: new snapshot, get-or-create schema and
-        table, append-mode schema-evolution check, version the columns,
-        Replace⇒end current files (ref: metadata_writer_sqlite.rs:331-470).
+        table, append-mode schema-evolution check, version the columns
+        when they changed, Replace⇒end current files (ref:
+        metadata_writer_sqlite.rs:331-470). Inside a caller's ``_txn`` it
+        joins that transaction: the table writer plans a write with it
+        under a rolled-back ``_txn`` and commits it together with the
+        write's files.
 
         ``replace_definition``: the REPLACE is a user CREATE OR REPLACE
         (table DEFINITION replaced, one snapshot) rather than a data
@@ -845,27 +891,31 @@ class CatalogWriter:
                 "VALUES (?, CURRENT_TIMESTAMP)", (sid,))
 
             rows = cur.execute(
-                "SELECT schema_id FROM ducklake_schema "
+                "SELECT schema_id, path, path_is_relative FROM ducklake_schema "
                 "WHERE schema_name = ? AND end_snapshot IS NULL",
                 (schema_name,)).fetchall()
             if rows:
                 schema_id = int(rows[0][0])
+                schema_path = (rows[0][1], bool(rows[0][2]))
             else:
                 schema_id = self._next_id(cur, "ducklake_schema", "schema_id")
+                schema_path = (schema_name, True)
                 cur.execute(
                     "INSERT INTO ducklake_schema (schema_id, schema_name, path, "
                     "path_is_relative, begin_snapshot) VALUES (?, ?, ?, ?, ?)",
                     (schema_id, schema_name, schema_name, True, sid))
 
             rows = cur.execute(
-                "SELECT table_id FROM ducklake_table "
+                "SELECT table_id, path, path_is_relative FROM ducklake_table "
                 "WHERE schema_id = ? AND table_name = ? AND end_snapshot IS NULL",
                 (schema_id, table_name)).fetchall()
             created_table = not rows
             if rows:
                 table_id = int(rows[0][0])
+                table_path = (rows[0][1], bool(rows[0][2]))
             else:
                 table_id = self._next_id(cur, "ducklake_table", "table_id")
+                table_path = (table_name, True)
                 cur.execute(
                     "INSERT INTO ducklake_table (table_id, schema_id, table_name, "
                     "path, path_is_relative, begin_snapshot) "
@@ -946,12 +996,8 @@ class CatalogWriter:
                 "WHERE table_id = ? AND end_snapshot IS NULL "
                 "AND parent_column IS NULL", (table_id,)).fetchall()
             } if existing else {}
-            cur.execute(
-                "UPDATE ducklake_column SET end_snapshot = ? "
-                "WHERE table_id = ? AND end_snapshot IS NULL", (sid, table_id))
             existing_types = {r[0]: r[1] for r in existing}
-            column_ids = []
-            nested_ids = []
+            rows, setup_cols = [], []
             next_col_id = self._next_id(cur, "ducklake_column", "column_id")
             order = 0          # global DFS order: parent, then its children
             for col in columns:
@@ -1016,19 +1062,17 @@ class CatalogWriter:
                 else:
                     cid = next_col_id
                     next_col_id += 1
-                cur.execute(
-                    "INSERT INTO ducklake_column (column_id, table_id, column_name, "
-                    "column_type, column_order, nulls_allowed, initial_default, "
-                    "default_value, begin_snapshot) "
-                    "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-                    (cid, table_id, col.name, col_type, order,
-                     nullable, initial, default, sid))
-                column_ids.append(cid)
+                rows.append((cid, col.name, col_type, order, nullable, None,
+                             initial, default))
                 order += 1
-                nmap, next_col_id, order = self._insert_child_rows(
-                    cur, table_id, cid, col_type, sid,
-                    prev_nested.get(cid, {}), next_col_id, order)
-                nested_ids.append(nmap)
+                kids, nmap, next_col_id, order = self._child_rows(
+                    cur, table_id, cid, col_type, prev_nested.get(cid, {}),
+                    next_col_id, order)
+                rows += kids
+                setup_cols.append(ColumnMeta(
+                    cid, col.name, col_type, bool(nullable), initial,
+                    default, nested_ids=tuple(nmap.items())))
+            self._version_column_rows(cur, table_id, sid, rows)
 
             if mode == WriteMode.REPLACE:
                 cur.execute(
@@ -1053,8 +1097,8 @@ class CatalogWriter:
             else:
                 labels = [f"inserted_into_table:{table_id}"]
             self._record_changes(cur, sid, labels)
-            return WriteSetup(sid, schema_id, table_id, column_ids,
-                              nested_ids)
+            return WriteSetup(sid, schema_id, table_id, setup_cols,
+                              schema_path, table_path)
 
     def _ensure_table_mvcc(self) -> None:
         """Catalogs created before MVCC renames declared ``table_id
@@ -1184,33 +1228,26 @@ class CatalogWriter:
                 "VALUES (?, CURRENT_TIMESTAMP)", (sid,))
             self._record_changes(cur, sid, [f"altered_table:{table_id}"])
             prev_nested = self._live_nested_ids(cur, table_id)
-            cur.execute(
-                "UPDATE ducklake_column SET end_snapshot = ? "
-                "WHERE table_id = ? AND end_snapshot IS NULL",
-                (sid, table_id))
             next_col_id = self._next_id(cur, "ducklake_column", "column_id")
-            order = 0
+            order, rows = 0, []
             for cid, col in cols:
                 if cid is None:
                     cid = next_col_id
                     next_col_id += 1
-                cur.execute(
-                    "INSERT INTO ducklake_column (column_id, table_id, "
-                    "column_name, column_type, column_order, nulls_allowed, "
-                    "initial_default, default_value, begin_snapshot) "
-                    "VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
-                    (cid, table_id, col.name, col.ducklake_type, order,
-                     col.is_nullable, col.initial_default, col.default_value,
-                     sid))
+                rows.append((cid, col.name, col.ducklake_type, order,
+                             col.is_nullable, None, col.initial_default,
+                             col.default_value))
                 order += 1
                 prev = dict(prev_nested.get(cid, {}))
                 if nested_hints and cid in nested_hints:
                     # explicit path->id carries (nested field RENAME:
                     # the path changes but the field id must not)
                     prev.update(nested_hints[cid])
-                _, next_col_id, order = self._insert_child_rows(
-                    cur, table_id, cid, col.ducklake_type, sid,
-                    prev, next_col_id, order)
+                kids, _, next_col_id, order = self._child_rows(
+                    cur, table_id, cid, col.ducklake_type, prev,
+                    next_col_id, order)
+                rows += kids
+            self._version_column_rows(cur, table_id, sid, rows)
             return sid
 
     def register_data_file(self, table_id: int, snapshot_id: int,

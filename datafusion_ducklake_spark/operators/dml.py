@@ -24,8 +24,10 @@ Scale shape (100 TB discipline):
   pyarrow.fs (executor-side, object-store capable) and returns a
   ONE-ROW manifest. Only the manifest reaches the driver (O(touched
   files), never O(rows)); no delete file is read through Spark.
-- register: one snapshot carries the delete registrations plus any
-  appended data files. UPDATE keeps rowids STABLE (the DuckLake
+- commit: appended rows are staged first (table_writer.stage_files);
+  then ONE catalog transaction writes the snapshot, every delete
+  registration and every appended data file, so a conflict on any
+  touched file commits nothing. UPDATE keeps rowids STABLE (the DuckLake
   contract, sql/rowid/ducklake_row_id_update.test): rewritten rows carry
   their original ids as the reserved in-file rowid column and the new
   file registers with row_id_start NULL; MERGE and non-preservable
@@ -42,13 +44,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import InvalidConfig, MergeActionError
-from ..metadata.writer import DataFileInfo
 from ..sources.scan import (FILE_COL, POS_COL, deletion_vectors,
                             scan_table)
-from ..table_writer import (_catalog_writer, _enforce_not_null,
-                            _finalize_hadoop, _finalize_local,
-                            _local_readable, _raise_if_constraint,
-                            _with_field_ids, column_stats_of)
+from ..table_writer import (_catalog_writer, register_files, stage_files,
+                            target_of)
 
 _MANIFEST_SCHEMA = ("file_name string, delete_name string, "
                     "cum_count long, new_count long, size long, "
@@ -218,192 +217,6 @@ def _register_deletes(writer, handle, snapshot_id: int, manifest) -> None:
             True, int(row["size"]), int(row["cum_count"]),
             expected_prev_delete_id=prev_delete_id,
             encryption_key=row["enc_key"])
-
-
-def _stage_append(session, handle, df: DataFrame,
-                  single_file: bool = True,
-                  include_rowid: bool = False,
-                  include_snapshot: bool = False) -> list:
-    """Write df's rows as finalized parquet in the table dir WITHOUT
-    registering them (mirrors table_writer.create_or_insert step 2); the
-    returned [(name, size, footer, count, pvals|None)] carries the row
-    counts, so no .count() pre-action is needed. A crash (or a no-op DML
-    discovered after staging) leaves an unregistered file, never a
-    corrupt catalog — the same orphan-not-corruption discipline as the
-    insert path.
-
-    Partition-aware: rewrites into a partitioned table split by the live
-    spec and register their partition values, so pruning keeps working
-    over an UPDATE/MERGE-heavy table instead of degrading as unvalued
-    rewrite files accumulate."""
-    from ..table_writer import (_PART_PREFIX, _finalize_partitioned_hadoop,
-                                _finalize_partitioned_local)
-    data_cols = [c.column_name for c in handle.columns]
-    column_ids = [c.column_id for c in handle.columns]
-    not_null = [c.column_name for c in handle.columns if not c.nulls_allowed]
-    if include_rowid:
-        # UPDATE rewrite keeping original rowids: the ROWID_FILE_COL
-        # rides into the parquet (no field id — resolved by its reserved
-        # name) and the file registers with row_id_start NULL.
-        # ``include_snapshot`` (flush_inlined_data) additionally rides
-        # each row's original insertion snapshot as SNAPSHOT_FILE_COL so
-        # the virtual snapshot_id column survives the storage migration.
-        from ..sources.scan import ROWID_FILE_COL, SNAPSHOT_FILE_COL
-        from ..table_writer import _with_field_ids_partial
-        extra = [F.col("rowid").cast("long").alias(ROWID_FILE_COL)]
-        if include_snapshot:
-            extra.append(F.col("__begin_snapshot").cast("long")
-                         .alias(SNAPSHOT_FILE_COL))
-        out = _with_field_ids_partial(
-            _enforce_not_null(df.select(*data_cols, *extra), not_null),
-            data_cols, column_ids,
-            [dict(c.nested_ids or ()) for c in handle.columns])
-    else:
-        out = _with_field_ids(
-            _enforce_not_null(df.select(*data_cols), not_null), column_ids,
-            [dict(c.nested_ids or ()) for c in handle.columns])
-    if single_file:
-        out = out.coalesce(1)
-    session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    table_path = handle.table_path
-
-    id_to_name = dict(zip(column_ids, data_cols))
-    from ..table_writer import _partition_expr, _partition_keys
-    spec = session.provider.get_partition_columns(
-        handle.meta.table_id, handle.snapshot_id)
-    part_keys = _partition_keys(spec, id_to_name)
-
-    from ..types import is_interval_type
-    iv_cols = [c.column_name for c in handle.columns
-               if is_interval_type(c.column_type)]
-    if iv_cols:
-        # INTERVAL rewrite halves (UPDATE/MERGE/compact) stage through
-        # the duckdb-backed writer — the only local route to the parquet
-        # INTERVAL logical type (r9; table_writer._write_interval_
-        # distributed). Rowid/snapshot rider columns pass through as
-        # plain longs. Partitioned/encrypted interval rewrites stay
-        # refused (neither staging shape is carried by this path).
-        from ..errors import InvalidConfig
-        if part_keys:
-            raise InvalidConfig(
-                "rewrites of a partitioned table with INTERVAL columns "
-                "are not supported")
-        if (session.provider.get_option("encrypted") or "").lower() \
-                in ("true", "1"):
-            raise InvalidConfig(
-                "rewrites of INTERVAL columns in an encrypted catalog "
-                "are not supported (the PME writer cannot emit the "
-                "parquet INTERVAL logical type)")
-        from ..table_writer import _write_interval_distributed
-        manifest = _write_interval_distributed(out, table_path, iv_cols)
-        return [(r["name"], r["size"], r["footer"], r["rows"], None, None)
-                for r in manifest]
-
-    if (session.provider.get_option("encrypted") or "").lower() \
-            in ("true", "1"):
-        # encrypted catalog: rewrite/insert halves of UPDATE/MERGE are
-        # PME parquet with per-file keys, like the insert path
-        if part_keys:
-            # per-combo files, flat names, combos in the manifest —
-            # same shape as the encrypted insert
-            # (sql/encryption/partitioning_encryption.test)
-            import json as _json
-
-            from ..sources.encryption import write_encrypted_partitioned
-            pk_cols = []
-            for i, (base, tf, _dk) in enumerate(part_keys):
-                out = out.withColumn(f"{_PART_PREFIX}{i}",
-                                     _partition_expr(base, tf))
-                pk_cols.append(f"{_PART_PREFIX}{i}")
-            out = out.repartition(*[F.col(c) for c in pk_cols])
-            manifest = write_encrypted_partitioned(out, table_path, pk_cols)
-            return [(r["name"], r["size"], r["footer"], r["rows"],
-                     list(enumerate(_json.loads(r["pvals"]))), r["key"])
-                    for r in manifest]
-        from ..sources.encryption import write_encrypted_distributed
-        manifest = write_encrypted_distributed(out, table_path)
-        return [(r["name"], r["size"], r["footer"], r["rows"], None,
-                 r["key"]) for r in manifest]
-
-    staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
-    try:
-        if part_keys:
-            for i, (base, tf, _dk) in enumerate(part_keys):
-                out = out.withColumn(f"{_PART_PREFIX}{i}",
-                                     _partition_expr(base, tf))
-            (out.write
-             .partitionBy([f"{_PART_PREFIX}{i}"
-                           for i in range(len(part_keys))])
-             .parquet(staging, mode="errorifexists"))
-        else:
-            out.write.parquet(staging, mode="errorifexists")
-    except Exception as e:
-        _raise_if_constraint(e)
-    if part_keys:
-        from ..table_writer import _hive_file_pattern
-        dir_keys = [dk for _b, _t, dk in part_keys]
-        hive = _hive_file_pattern(session, handle.meta.table_id)
-        if "://" in table_path:
-            return [(*t, None) for t in _finalize_partitioned_hadoop(
-                session.spark, staging, table_path, dir_keys,
-                hive_dirs=hive)]
-        return [(*t, None) for t in _finalize_partitioned_local(
-            staging, table_path, dir_keys, hive_dirs=hive)]
-    if "://" in table_path:
-        return [(*s, None, None) for s in
-                _finalize_hadoop(session.spark, staging, table_path)]
-    return [(*s, None, None) for s in _finalize_local(staging, table_path)]
-
-
-def _register_append(session, writer, snapshot_id: int, handle,
-                     staged: list, rowid_in_file: bool = False) -> int:
-    """Register staged files into an EXISTING snapshot (so UPDATE/MERGE
-    record their delete + insert halves atomically). ``rowid_in_file``:
-    the files carry their rowids as the reserved column — register with
-    row_id_start NULL (the DuckLake stable-rowid-update convention)."""
-    data_cols = [c.column_name for c in handle.columns]
-    column_ids = [c.column_id for c in handle.columns]
-    table_path = handle.table_path
-    n_rows = 0
-    next_rowid = writer.next_row_id(handle.meta.table_id)
-    ids_by_name = dict(zip(data_cols, column_ids))
-    from ..types import is_interval_type
-    mid = None
-    if any(is_interval_type(c.column_type) for c in handle.columns):
-        # interval rewrites staged through the duckdb writer carry no
-        # parquet field ids (r9 review finding): register the identity
-        # name mapping — the same contract as _insert_interval and
-        # add_files — so a later column RENAME keeps resolving instead
-        # of silently reading the renamed column as NULL
-        mid = writer.create_name_mapping(
-            handle.meta.table_id, data_cols, column_ids)
-    for final_name, size, footer, count, pvals, enc_key in staged:
-        if count == 0:
-            continue
-        fid = writer.register_data_file(
-            handle.meta.table_id, snapshot_id,
-            DataFileInfo(path=final_name, path_is_relative=True,
-                         file_size_bytes=size, footer_size=footer,
-                         record_count=count,
-                         row_id_start=None if rowid_in_file else next_rowid,
-                         mapping_id=mid,
-                         encryption_key=enc_key))
-        if pvals:
-            writer.register_file_partition_values(
-                fid, handle.meta.table_id, pvals)
-        local = _local_readable(table_path, final_name)
-        if local is not None and enc_key is None:
-            # encrypted files skip stats: the footer is unreadable without
-            # the key, and catalog min/max would leak the payload anyway
-            from ..types import is_geometry_type
-            writer.register_file_column_stats(
-                fid, handle.meta.table_id,
-                column_stats_of(local, ids_by_name,
-                                {c.column_name for c in handle.columns
-                                 if is_geometry_type(c.column_type)}))
-        next_rowid += count
-        n_rows += count
-    return n_rows
 
 
 def delete_rows(session, name: str,
@@ -733,8 +546,11 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
                        appended_fresh: Optional[DataFrame] = None
                        ) -> tuple[int, int]:
     """Shared tail: write cumulative delete files for the matched
-    positions, append rewritten/new rows, register everything in ONE
-    snapshot, refresh the session. Returns (matched, appended) counts.
+    positions, stage the rewritten/new rows, then commit everything in
+    ONE catalog transaction — the snapshot, every delete registration,
+    the ended inlined rows and every data file — and refresh the
+    session. A conflict on any touched file rolls all of it back.
+    Returns (matched, appended) counts.
 
     Single-execution discipline: counts come from the write artifacts —
     the delete manifest's new_count and the staged files' footer counts —
@@ -753,38 +569,35 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
     n_matched = sum(int(r["new_count"]) for r in manifest) \
         + len(inlined_row_ids or [])
 
-    staged, staged_fresh = [], []
+    target = target_of(session, handle)
+    staged = []
     if appended is not None and (n_matched > 0 or not append_only_if_matched):
-        staged = _stage_append(session, handle, appended,
-                               include_rowid=rowid_in_file)
+        staged = stage_files(session, target, appended,
+                             include_rowid=rowid_in_file)
     if appended_fresh is not None:
         # MERGE's insert half: fresh rows in their own files so the
         # update half's rowid-column files stay pure (every row of a
         # rowid-column file must carry an id)
-        staged_fresh = _stage_append(session, handle, appended_fresh)
-    n_append = sum(t[3] for t in staged) + sum(t[3] for t in staged_fresh)
+        staged += stage_files(session, target, appended_fresh)
+    n_append = sum(f.rows for f in staged)
 
     if n_matched == 0 and n_append == 0:
         return 0, 0                    # no snapshot for a no-op DML
+    tid = handle.meta.table_id
+    labels = ([f"deleted_from_table:{tid}"] if n_matched else []) + \
+             ([f"inserted_into_table:{tid}"] if n_append else [])
     writer = _catalog_writer(session)
     try:
-        tid = handle.meta.table_id
-        labels = ([f"deleted_from_table:{tid}"] if n_matched else []) + \
-                 ([f"inserted_into_table:{tid}"]
-                  if staged or staged_fresh else [])
-        snapshot_id = writer.create_snapshot(labels)
-        _register_deletes(writer, handle, snapshot_id, manifest)
-        if inlined_row_ids:
-            # matched inlined rows MVCC-end in the same snapshot (sql/
-            # data_inlining/data_inlining_delete.test: DML addresses
-            # inlined rows directly, no flush)
-            writer.delete_inlined_rows(tid, snapshot_id, inlined_row_ids)
-        if staged:
-            _register_append(session, writer, snapshot_id, handle, staged,
-                             rowid_in_file=rowid_in_file)
-        if staged_fresh:
-            _register_append(session, writer, snapshot_id, handle,
-                             staged_fresh)
+        with writer._txn():
+            snapshot_id = writer.create_snapshot(labels)
+            _register_deletes(writer, handle, snapshot_id, manifest)
+            if inlined_row_ids:
+                # matched inlined rows MVCC-end in the same snapshot (sql/
+                # data_inlining/data_inlining_delete.test: DML addresses
+                # inlined rows directly, no flush)
+                writer.delete_inlined_rows(tid, snapshot_id,
+                                           inlined_row_ids)
+            register_files(writer, snapshot_id, target, staged)
     finally:
         writer.close()
     session.refresh()

@@ -4,10 +4,11 @@ Spark's streaming contract is at-least-once at the sink: after a crash,
 ``foreachBatch`` re-delivers the last un-checkpointed epoch with the
 SAME batch_id. Exactly-once therefore needs a transactional marker on
 the sink side: this sink records ``(source_id, batch_id)`` as a catalog
-option IN THE SAME catalog transaction that registers the batch's data
-files (table_writer.create_or_insert(commit_marker=...) — reentrant
-writer transaction), so a batch is either fully visible WITH its marker
-or not at all, and a replay of an already-committed batch_id is skipped.
+option IN THE SAME catalog transaction that commits the batch's
+snapshot and registers its data files (table_writer.create_or_insert(
+commit_marker=...) — the write's one commit transaction), so a batch is
+either fully visible WITH its marker or not at all, and a replay of an
+already-committed batch_id is skipped.
 
 Spark-first shape: the data plane is the ordinary distributed parquet
 append (executors stage files); only the tiny marker check/commit is

@@ -1,27 +1,41 @@
-"""Write path: INSERT INTO (append/overwrite) and CTAS.
+"""Write path: INSERT INTO (append/overwrite), CTAS, and the staging and
+registration every other write (DML, inlined-data flush, compaction)
+commits through.
 
 Reference parity (SURVEY.md §2A A8-A10): DuckLakeInsertExec
 (src/insert_exec.rs:34-214) + DuckLakeTableWriter
 (src/table_writer.rs:44-130, 201-291) + the one-transaction catalog setup
-(src/metadata_writer_sqlite.rs:331-470). Ordering matches the reference:
-catalog transaction first (snapshot/schema/table/columns [+end files for
-Replace]), then file upload, then register-file — a crash between upload
-and register leaves an orphaned file, never a corrupt catalog
-(ref: table_writer.rs:181,293 comments).
+(src/metadata_writer_sqlite.rs:331-470).
+
+Order: files first, then ONE catalog transaction. A write plans its
+target against the head (``_plan_write``: the write's
+begin_write_transaction under a rolled-back transaction gives the column
+ids the files must carry), stages its files (``stage_files``), and only
+then opens one ``writer._txn()`` that writes the snapshot, its change
+labels, any column versions, the end of replaced files, every
+registration (``register_files``), inlined rows and the streaming sink's
+commit marker. Why this order: the catalog changes only when every file
+it names exists, so a failed or refused write leaves unregistered files
+(``delete_orphaned_files`` reclaims them) and never a partial commit; a
+snapshot is complete from the moment a reader can pin it; and a
+conflict in any registration rolls back the whole write. The commit
+re-runs the setup and refuses (TransactionConflict) when it would
+resolve other columns than the staged files carry.
 
 Spark-first: the input DataFrame is written by executors with
 ``df.write.parquet`` (field ids stamped via schema metadata +
 spark.sql.parquet.fieldId.write.enabled); N written files register as N
 ``ducklake_data_file`` rows in one snapshot — the catalog model supports
 that natively, unlike the reference's collect-to-one-batch limitation
-(insert_exec.rs:3-5), which ``single_file=True`` (coalesce(1)) emulates
-for small results.
+(insert_exec.rs:3-5), whose one-file shape is the default here
+(``_file_split``).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -133,25 +147,30 @@ def _column_defs(schema: T.StructType) -> list[ColumnDef]:
             for f in schema.fields]
 
 
-def _with_field_ids(df: DataFrame, column_ids: list[int],
-                    nested: Optional[list] = None) -> DataFrame:
+def _with_field_ids(df: DataFrame, columns: list) -> DataFrame:
     """Stamp catalog column_ids as parquet field ids so renames stay
-    metadata-only (ref: table_writer.rs:303-317). Uses alias(metadata=...)
-    for the top level; nested struct-field ids (struct evolution — corpus
+    metadata-only (ref: table_writer.rs:303-317); helper columns pass
+    through unstamped. Uses alias(metadata=...) for the top level;
+    nested struct-field ids (struct evolution — corpus
     sql/alter/struct_evolution*.test) ride in via a cast to the same
     structural type carrying ``parquet.field.id`` metadata on its nested
     StructFields (verified: the parquet writer emits them at any depth).
-    ``nested``: per-column {path: id} maps parallel to column_ids."""
+    ``columns``: the target's ColumnMeta, whose nested_ids give the
+    per-path child ids."""
     from pyspark.sql import functions as F
     from .types import annotate_nested_ids
-    nested = nested or [None] * len(column_ids)
+    by_name = {c.column_name: c for c in columns}
     cols = []
-    for f, cid, nmap in zip(df.schema.fields, column_ids, nested):
-        c = F.col(f.name)
-        if nmap:
-            c = c.cast(annotate_nested_ids(f.dataType, (), dict(nmap)))
-        cols.append(c.alias(f.name, metadata={**(f.metadata or {}),
-                                              "parquet.field.id": cid}))
+    for f in df.schema.fields:
+        c, meta = F.col(f.name), by_name.get(f.name)
+        if meta is None:
+            cols.append(c)
+            continue
+        if meta.nested_ids:
+            c = c.cast(annotate_nested_ids(f.dataType, (),
+                                           dict(meta.nested_ids)))
+        cols.append(c.alias(f.name, metadata={
+            **(f.metadata or {}), "parquet.field.id": meta.column_id}))
     return df.select(*cols)
 
 
@@ -524,22 +543,12 @@ def _parse_part_segs(segs: list[str], key_names: list[str]):
 
 
 def _hive_file_pattern(session, table_id: int,
-                       schema_id: "int | None" = None) -> bool:
+                       schema_id: Optional[int]) -> bool:
     """The ``hive_file_pattern`` scoped option (sql/partitioning/
     disable_hive_partitioning.test): False writes a partitioned table's
     files FLAT in the table dir — partition values still register in the
     catalog, so pruning is unaffected; only the directory layout
     changes. Default True (hive-style key=value subdirs)."""
-    if schema_id is None:
-        # callers that only know the table (UPDATE/MERGE rewrite, flush)
-        # still honor a SCHEMA-scoped setting
-        try:
-            rows = session.provider._fetchall(
-                "SELECT schema_id FROM ducklake_table "
-                "WHERE table_id = ? AND end_snapshot IS NULL", (table_id,))
-            schema_id = int(rows[0][0]) if rows else None
-        except Exception:
-            schema_id = None
     v = session.provider.get_scoped_option(
         "hive_file_pattern", schema_id, table_id)
     return v is None or str(v).strip().lower() not in (
@@ -636,6 +645,304 @@ def _finalize_partitioned_hadoop(spark, staging: str, table_path: str,
     return staged
 
 
+@dataclass(frozen=True)
+class WriteTarget:
+    """The table a write lands in, as staging and registration read it:
+    ids, data directory, columns (provider ColumnMeta in file column
+    order — ids, types, NOT NULL, nested ids) and the live partition
+    spec [(key_index, column_id, transform)]. ``target_of`` gives it for
+    a bound table; ``_plan_write`` for a write that may create the table
+    or version its columns."""
+    table_id: int
+    schema_id: Optional[int]
+    table_path: str
+    columns: list
+    spec: list
+
+
+@dataclass(frozen=True)
+class StagedFile:
+    """A finalized data file in the table directory that no catalog row
+    names yet. ``row_id_start`` None takes the table's next rowids at
+    registration; a ``rowid_in_file`` file carries its rowids in the
+    reserved column and registers with none."""
+    path: str                        # relative to the table directory
+    size: int
+    footer: int
+    rows: int
+    pvals: Optional[list] = None     # [(partition_key_index, value)]
+    key: Optional[str] = None        # PME footer key (encrypted catalogs)
+    row_id_start: Optional[int] = None
+    rowid_in_file: bool = False
+
+
+def target_of(session, handle) -> WriteTarget:
+    """WriteTarget of a bound table (DML, flush, compaction)."""
+    tid = handle.meta.table_id
+    rows = session.provider._fetchall(
+        "SELECT schema_id FROM ducklake_table "
+        "WHERE table_id = ? AND end_snapshot IS NULL", (tid,))
+    return WriteTarget(
+        tid, int(rows[0][0]) if rows else None, handle.table_path,
+        list(handle.columns),
+        session.provider.get_partition_columns(tid, handle.snapshot_id))
+
+
+class _Planned(Exception):
+    """Carries a write's setup out of the transaction that rolls it
+    back."""
+
+
+def _plan_write(session, writer, setup) -> WriteTarget:
+    """The WriteTarget a write will commit into, before anything is
+    staged. ``setup(writer)`` is the write's begin_write_transaction;
+    it runs against the head inside a ``_txn`` that is rolled back, so
+    the ids, nested ids, types, NOT NULL set and table path come from
+    the one copy of the column-versioning rules and nothing persists
+    (``_txn`` also keeps the rolled-back snapshot id out of the
+    session's rollback scope). The commit runs ``setup`` again and
+    ``_expect_planned`` refuses it if the columns came out different."""
+    try:
+        with writer._txn():
+            raise _Planned(setup(writer))
+    except _Planned as p:
+        planned = p.args[0]
+    resolver = session.catalog.resolver
+    table_path = resolver.table_path(
+        resolver.schema_path(*planned.schema_path), *planned.table_path)
+    spec = session.provider.get_partition_columns(
+        planned.table_id, session.provider.get_current_snapshot())
+    return WriteTarget(planned.table_id, planned.schema_id, table_path,
+                       planned.columns, spec)
+
+
+def _expect_planned(target: WriteTarget, setup) -> None:
+    """Optimistic check at commit: the staged files carry the planned
+    field ids, so a commit whose setup resolves other columns (a
+    concurrent CREATE, ALTER or schema-changing write in between) is
+    refused, like ``expect_live_member`` refuses a stale rewrite."""
+    from .errors import TransactionConflict
+    if setup.table_id != target.table_id or setup.columns != target.columns:
+        raise TransactionConflict(
+            "transaction conflict: the table's columns changed while the "
+            "write was staged; retry the statement")
+
+
+def _file_split(session, target: WriteTarget, out: DataFrame,
+                per_thread: Optional[bool]) -> DataFrame:
+    """One file per write by default (DuckLake's one-file-per-insert
+    contract, the reference's collect-to-one-batch shape). With
+    target_file_size (sql/insert/insert_file_size.test) a large write
+    splits into ~target-sized files: Catalyst's plan-stats sizeInBytes
+    is the estimate — no extra job; in-memory row width overestimates
+    the compressed parquet, so the split errs toward MORE files, never
+    a too-big one. per_thread_output (sql/settings/
+    per_thread_output.test), or ``per_thread`` from the caller, keeps
+    the plan's write parallelism — one file per Spark partition."""
+    get = lambda k: session.provider.get_scoped_option(  # noqa: E731
+        k, target.schema_id, target.table_id)
+    n_out = 1
+    target_raw = get("target_file_size")
+    if target_raw:
+        size = session._parse_size(target_raw)
+        try:
+            est = int(str(out._jdf.queryExecution()
+                          .optimizedPlan().stats().sizeInBytes()))
+        except Exception:
+            est = 0
+        if est > 0 and size > 0:
+            n_out = max(1, min(4096, -(-est // size)))
+    if per_thread is None:
+        per_thread = (get("per_thread_output") or "").lower() in ("true", "1")
+    if per_thread and n_out <= 1:
+        return out
+    return out.repartition(n_out) if n_out > 1 else out.coalesce(1)
+
+
+def stage_files(session, target: WriteTarget, df: DataFrame,
+                include_rowid: bool = False, include_snapshot: bool = False,
+                runs: Optional[list] = None,
+                per_thread: Optional[bool] = None) -> list[StagedFile]:
+    """Write ``df``'s rows as finalized parquet in the table directory
+    WITHOUT registering them — every write that creates data files
+    stages here first and commits in one catalog transaction after. A
+    crash, a failed job or a refused commit leaves unregistered files
+    (``delete_orphaned_files`` reclaims them), never a changed catalog.
+    The records carry the row counts, so no .count() pre-action runs.
+
+    The file contents: the target's columns with their field ids and
+    NOT NULL enforced inside the write job, plus with ``include_rowid``
+    each row's ``rowid`` as the reserved in-file rowid column (and with
+    ``include_snapshot`` its ``__begin_snapshot`` as the in-file
+    snapshot column) — the stable-rowid rewrites of UPDATE, flush and
+    merge. The table's parquet write settings apply (compression,
+    version, row-group bytes) and the file split of ``_file_split``.
+
+    The writer: INTERVAL tables stage through the duckdb-backed
+    executor writer (the only local route to the parquet INTERVAL type);
+    encrypted catalogs PME-write each file with its own key; otherwise
+    Spark's parquet writer into a staging directory, split by the live
+    partition spec so each file records its partition values.
+
+    ``runs`` (rewrite_file_groups): [(run id, row_id_start, rows,
+    partition values)]; ``df`` carries a ``__run`` column and each run
+    becomes exactly one file registered at its own row_id_start."""
+    from pyspark.sql import functions as F
+    data_cols = [c.column_name for c in target.columns]
+    extra = []
+    if include_rowid:
+        from .sources.scan import ROWID_FILE_COL, SNAPSHOT_FILE_COL
+        extra.append(F.col("rowid").cast("long").alias(ROWID_FILE_COL))
+        if include_snapshot:
+            extra.append(F.col("__begin_snapshot").cast("long")
+                         .alias(SNAPSHOT_FILE_COL))
+    if runs is not None:
+        extra.append(F.col("__run"))
+    not_null = [c.column_name for c in target.columns if not c.nulls_allowed]
+    out = _with_field_ids(
+        _enforce_not_null(df.select(*data_cols, *extra), not_null),
+        target.columns)
+    session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    part_keys = [] if runs is not None else _partition_keys(
+        target.spec, {c.column_id: c.column_name for c in target.columns})
+    if runs is None:
+        out = _file_split(session, target, out, per_thread)
+    table_path = target.table_path
+
+    def staged(name, size, footer, rows, pvals=None, key=None):
+        return StagedFile(name, size, footer, rows, pvals or None, key,
+                          rowid_in_file=include_rowid)
+
+    encrypted = (session.provider.get_option("encrypted") or "").lower() \
+        in ("true", "1")
+    iv_cols = [c.column_name for c in target.columns
+               if is_interval_type(c.column_type)]
+    if runs is not None and (iv_cols or encrypted):
+        raise InvalidConfig(
+            "rowid-run rewrites stage through Spark's parquet writer, which "
+            "writes neither INTERVAL nor encrypted files")
+    if iv_cols:
+        # rowid/snapshot rider columns pass through as plain longs
+        if encrypted:
+            raise InvalidConfig(
+                "INTERVAL columns in an encrypted catalog are not "
+                "writable (the PME writer cannot emit the parquet "
+                "INTERVAL logical type)")
+        if part_keys:
+            raise InvalidConfig(
+                "writes into a partitioned table with INTERVAL columns "
+                "are not supported")
+        return [staged(r["name"], r["size"], r["footer"], r["rows"])
+                for r in _write_interval_distributed(out, table_path,
+                                                     iv_cols)]
+    if encrypted:
+        from .sources.encryption import (write_encrypted_distributed,
+                                         write_encrypted_partitioned)
+        if not part_keys:
+            return [staged(r["name"], r["size"], r["footer"], r["rows"],
+                           key=r["key"])
+                    for r in write_encrypted_distributed(out, table_path)]
+        # per-combo files land FLAT (no value-leaking path segments);
+        # each file's combo registers as catalog rows
+        # (sql/encryption/partitioning_encryption.test)
+        import json
+        pk_cols = [f"{_PART_PREFIX}{i}" for i in range(len(part_keys))]
+        for c, (base, tf, _dk) in zip(pk_cols, part_keys):
+            out = out.withColumn(c, _partition_expr(base, tf))
+        return [staged(r["name"], r["size"], r["footer"], r["rows"],
+                       list(enumerate(json.loads(r["pvals"]))), r["key"])
+                for r in write_encrypted_partitioned(
+                    out.repartition(*pk_cols), table_path, pk_cols)]
+
+    # Partition spec (sql/partitioning/ corpus): the partition columns
+    # are DUPLICATED into __part_<i> staging keys so the data files stay
+    # self-contained (partitionBy drops its keys from file contents;
+    # DuckLake files must carry every column).
+    keys = ["__run"] if runs is not None else []
+    for i, (base, tf, _dk) in enumerate(part_keys):
+        out = out.withColumn(f"{_PART_PREFIX}{i}", _partition_expr(base, tf))
+        keys.append(f"{_PART_PREFIX}{i}")
+    staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
+    dfw = out.write.options(**_parquet_write_options(
+        session, target.schema_id, target.table_id))
+    try:
+        (dfw.partitionBy(*keys) if keys else dfw).parquet(
+            staging, mode="errorifexists")
+    except Exception as e:
+        _raise_if_constraint(e)
+
+    # move part files to UUID names in the table dir (hive-style subdirs
+    # for partitioned tables). Scheme'd paths go through the Hadoop FS
+    # API (object-store-capable); bare local paths take the direct
+    # os/pyarrow route.
+    remote = "://" in table_path
+    if runs is not None:
+        return [StagedFile(name, size, footer, cnt, pv or None,
+                           row_id_start=int(start))
+                for (name, size, footer), (_r, start, cnt, pv) in zip(
+                    _finalize_compact_runs(session, staging, table_path,
+                                           runs), runs)]
+    if part_keys:
+        dir_keys = [dk for _b, _t, dk in part_keys]
+        hive = _hive_file_pattern(session, target.table_id, target.schema_id)
+        files = (_finalize_partitioned_hadoop(
+            session.spark, staging, table_path, dir_keys, hive_dirs=hive)
+            if remote else _finalize_partitioned_local(
+                staging, table_path, dir_keys, hive_dirs=hive))
+        return [staged(*f) for f in files]
+    files = (_finalize_hadoop(session.spark, staging, table_path) if remote
+             else _finalize_local(staging, table_path))
+    return [staged(*f) for f in files]
+
+
+def register_files(writer, snapshot_id: int, target: WriteTarget,
+                   staged: list, keep_empty: bool = False) -> int:
+    """Register staged files into ``snapshot_id`` — the one data-file
+    registration of every write, run inside the write's commit
+    transaction: the table's next rowid is read there, so concurrent
+    appends never share rowids. Each file records its partition values
+    and, when its footer is locally readable and unencrypted, its column
+    stats (nested leaves included); encrypted files keep none, since
+    catalog min/max would leak the payload. Zero-row files (Spark's
+    writer leaves one for an empty input) stay unregistered unless
+    ``keep_empty``: an INSERT lands its file even when it holds no row.
+    Returns the rows registered."""
+    staged = [f for f in staged if f.rows or keep_empty]
+    if not staged:
+        return 0
+    tid = target.table_id
+    ids = {c.column_name: c.column_id for c in target.columns}
+    stats_ids = {**ids, **nested_stats_ids(target.columns)}
+    geo = {c.column_name for c in target.columns
+           if is_geometry_type(c.column_type)}
+    mid = None
+    if any(is_interval_type(c.column_type) for c in target.columns):
+        # the duckdb writer stamps no parquet field ids: the files resolve
+        # through an identity name mapping (the add_files contract), so a
+        # later RENAME keeps them readable
+        mid = writer.create_name_mapping(tid, list(ids), list(ids.values()))
+    fresh = any(f.row_id_start is None and not f.rowid_in_file
+                for f in staged)
+    next_rowid = writer.next_row_id(tid) if fresh else None
+    n_rows = 0
+    for f in staged:
+        start = f.row_id_start
+        if start is None and not f.rowid_in_file:
+            start, next_rowid = next_rowid, next_rowid + f.rows
+        fid = writer.register_data_file(tid, snapshot_id, DataFileInfo(
+            path=f.path, path_is_relative=True, file_size_bytes=f.size,
+            footer_size=f.footer, record_count=f.rows, row_id_start=start,
+            mapping_id=mid, encryption_key=f.key))
+        if f.pvals:
+            writer.register_file_partition_values(fid, tid, f.pvals)
+        local = _local_readable(target.table_path, f.path)
+        if local is not None and f.key is None:
+            writer.register_file_column_stats(
+                fid, tid, column_stats_of(local, stats_ids, geo))
+        n_rows += f.rows
+    return n_rows
+
+
 MAX_COMPACT_RUNS = 256
 
 
@@ -686,7 +993,7 @@ def _live_runs(session, groups: list, cap: int) -> list[tuple[int, int, int]]:
     return runs
 
 
-def compact_table(session, name: str, single_file: bool = True,
+def compact_table(session, name: str,
                   max_runs: int = MAX_COMPACT_RUNS) -> int:
     """Rewrite a table's live rows into clean files, PRESERVING virtual
     rowids (ADVICE r1: real DuckLake keeps rowids stable through
@@ -704,8 +1011,7 @@ def compact_table(session, name: str, single_file: bool = True,
     per partition-value chain through the same rewrite. Tables with
     INTERVAL columns or with in-file rowids (UPDATE outputs) are one
     group of merge_groups_rowid_column: one output file carrying rowids
-    and per-row snapshot ids in-file. ``single_file`` shapes only the
-    overwrite path below; both rowid-preserving paths ignore it.
+    and per-row snapshot ids in-file.
 
     Either way the outputs are staged first and registered in one
     catalog transaction that checks every member is still live with the
@@ -744,76 +1050,19 @@ def compact_table(session, name: str, single_file: bool = True,
             return merge_groups_rowid_column(session, name, [members],
                                              op="compact")
         return create_or_insert(session, name, session.table(name),
-                                mode="overwrite", single_file=single_file,
-                                maintenance=True)
+                                mode="overwrite", maintenance=True)
 
     if session.provider.get_partition_columns(handle.meta.table_id,
                                               handle.snapshot_id):
         # live partition spec: a cross-partition rewrite would strip the
         # outputs' exact partition values (pruning loss). Compact becomes
-        # per-partition adjacent-chain rewrites instead (pv carried;
-        # single_file necessarily per-partition, not per-table).
+        # per-partition adjacent-chain rewrites instead (pv carried).
         groups = partition_chains(session, handle)
         if not groups:
             return 0
         return rewrite_file_groups(session, name, groups, op="compact")
     return rewrite_file_groups(session, name, [members], max_runs=max_runs,
                                op="compact")
-
-
-def _insert_encrypted(session, writer, setup, table_meta, table_path,
-                      out: DataFrame, df: DataFrame,
-                      commit_marker, part_keys=None) -> int:
-    """Encrypted-catalog insert tail: PME-write each partition inside
-    executor tasks (fresh random key per file), then register the
-    manifest in ONE transaction with the keys in the catalog. With
-    ``part_keys`` the files land FLAT (no value-leaking path segments)
-    and each file's partition combo registers as catalog rows
-    (sql/encryption/partitioning_encryption.test)."""
-    import json as _json
-
-    from .sources.encryption import (write_encrypted_distributed,
-                                     write_encrypted_partitioned)
-
-    base = table_path[len("file://"):] \
-        if table_path.startswith("file://") else table_path
-    os.makedirs(base, exist_ok=True)
-    if part_keys:
-        from pyspark.sql import functions as F
-        pk_cols = []
-        for i, (base_col, tf, _dk) in enumerate(part_keys):
-            out = out.withColumn(f"{_PART_PREFIX}{i}",
-                                 _partition_expr(base_col, tf))
-            pk_cols.append(f"{_PART_PREFIX}{i}")
-        out = out.repartition(*[F.col(c) for c in pk_cols])
-        manifest = write_encrypted_partitioned(out, table_path, pk_cols)
-    else:
-        manifest = write_encrypted_distributed(out, table_path)
-    n_rows = 0
-    next_rowid = writer.next_row_id(table_meta.table_id)
-    with writer._txn():
-        for row in sorted(manifest, key=lambda r: r["name"]):
-            fid = writer.register_data_file(
-                table_meta.table_id, setup.snapshot_id,
-                DataFileInfo(path=row["name"], path_is_relative=True,
-                             file_size_bytes=row["size"],
-                             footer_size=row["footer"],
-                             record_count=row["rows"],
-                             row_id_start=next_rowid,
-                             encryption_key=row["key"]))
-            # column stats stay unwritten: the payload is encrypted and
-            # min/max in the catalog would leak it (DuckDB's extension
-            # does the same — pruning falls back to 'keep all')
-            if row.get("pvals"):
-                writer.register_file_partition_values(
-                    fid, table_meta.table_id,
-                    list(enumerate(_json.loads(row["pvals"]))))
-            next_rowid += row["rows"]
-            n_rows += row["rows"]
-        if commit_marker is not None:
-            writer.set_option(commit_marker[0], commit_marker[1])
-    session.refresh()
-    return n_rows
 
 
 def _interval_dest_uri(dest_dir: str) -> "str | None":
@@ -966,55 +1215,6 @@ def _write_interval_distributed(df: DataFrame, dest_dir: str,
     return [r.asDict() for r in manifest]
 
 
-def _insert_interval(session, writer, setup, table_meta, table_path,
-                     out: DataFrame, iv_cols: list[str], commit_marker,
-                     post_cols) -> int:
-    """Insert tail for tables with INTERVAL columns: duckdb-backed
-    executor staging (see _write_interval_distributed), then register
-    the manifest in ONE transaction. The files carry no parquet field
-    ids (duckdb's writer doesn't emit them), so they register under an
-    identity name mapping — the same contract as cluster_by exports and
-    add_files, which the scan already resolves by name; interval/time
-    physical-read marks ride into mapped read schemas since r9."""
-    manifest = _write_interval_distributed(out, table_path, iv_cols)
-    live_names = [c.column_name for c in post_cols]
-    n_rows = 0
-    next_rowid = writer.next_row_id(table_meta.table_id)
-    ids_by_name = {c.column_name: c.column_id for c in post_cols}
-    with writer._txn():
-        mid = writer.create_name_mapping(
-            table_meta.table_id, live_names,
-            [ids_by_name[n] for n in live_names])
-        base = table_path[len("file://"):] \
-            if table_path.startswith("file://") else table_path
-        for row in sorted(manifest, key=lambda r: r["name"]):
-            fid = writer.register_data_file(
-                table_meta.table_id, setup.snapshot_id,
-                DataFileInfo(path=row["name"], path_is_relative=True,
-                             file_size_bytes=row["size"],
-                             footer_size=row["footer"],
-                             record_count=row["rows"],
-                             row_id_start=next_rowid,
-                             mapping_id=mid))
-            # stats: interval FLBA min/max is non-UTF8 → stored NULL →
-            # pruning keeps the file (same as the add_files path); the
-            # other columns' stats register normally
-            local_f = os.path.join(base, row["name"])
-            if os.path.exists(local_f):
-                from .types import is_geometry_type
-                geo = {c.column_name for c in post_cols
-                       if is_geometry_type(c.column_type)}
-                writer.register_file_column_stats(
-                    fid, table_meta.table_id,
-                    column_stats_of(local_f, ids_by_name, geo))
-            next_rowid += row["rows"]
-            n_rows += row["rows"]
-        if commit_marker is not None:
-            writer.set_option(commit_marker[0], commit_marker[1])
-    session.refresh()
-    return n_rows
-
-
 def partition_chains(session, handle, target: "int | None" = None,
                      adjacency: bool = True) -> list:
     """Groups for partition-aware maintenance: bucket live files by their
@@ -1082,27 +1282,25 @@ def merge_groups_rowid_column(session, name: str, groups: list,
     silent."""
     from pyspark.sql import functions as F
 
-    from .operators.dml import _register_append, _stage_append
     from .sources.scan import scan_table
 
     handle = session.table_handle(name)
-    data_cols = [c.column_name for c in handle.columns]
+    target = target_of(session, handle)
     staged = []
     for group in groups:
         df = scan_table(session.spark, handle.spark_schema,
                         [rf for _mf, rf in group], with_virtual=True)
-        df = df.select(*data_cols, "rowid",
+        df = df.select(*[c.column_name for c in handle.columns], "rowid",
                        F.col("snapshot_id").alias("__begin_snapshot"))
-        staged += _stage_append(session, handle, df, single_file=True,
-                                include_rowid=True, include_snapshot=True)
+        staged += stage_files(session, target, df, include_rowid=True,
+                              include_snapshot=True)
 
     writer = _catalog_writer(session)
     try:
         with writer._txn():
             snap = _end_members(writer, handle.meta.table_id,
                                 [m for g in groups for m in g])
-            n_rows = _register_append(session, writer, snap, handle, staged,
-                                      rowid_in_file=True)
+            n_rows = register_files(writer, snap, target, staged)
         session.refresh()
         return n_rows
     finally:
@@ -1233,51 +1431,13 @@ def rewrite_file_groups(session, name: str, groups: list,
             f"{op}: {name} has more than {max_runs} contiguous rowid runs "
             f"(max_runs); rowids cannot be preserved in that many files — "
             f"compact with preserve_rowids=False to renumber")
-    runs = [(i, s, c) for i, (_g, s, c) in enumerate(found)]
-
-    tid = handle.meta.table_id
-    data_cols = [c.column_name for c in handle.columns]
-    col_ids = [c.column_id for c in handle.columns]
-    staged = []
-    if runs:
-        df = scan_table(session.spark, handle.spark_schema,
-                        [rf for _, rf in pairs], with_rowid=True)
-        ranges = session.spark.createDataFrame(
-            [(i, s, s + c - 1) for i, s, c in runs],
-            "__run LONG, __lo LONG, __hi LONG")
-        df2 = (df.join(F.broadcast(ranges),
-                       (F.col("rowid") >= F.col("__lo"))
-                       & (F.col("rowid") <= F.col("__hi")))
-               .drop("__lo", "__hi"))
-        session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled",
-                               "true")
-        # sort on __run first: the planned partitionBy("__run") write
-        # re-sorts on __run alone, which would drop a rowid-only order
-        out = (df2.repartition("__run")
-               .sortWithinPartitions("__run", "rowid")
-               .select(*data_cols, "__run"))
-        out = _with_field_ids_partial(
-            out, data_cols, col_ids,
-            [dict(c.nested_ids or ()) for c in handle.columns])
-        staging = handle.table_path.rstrip("/") \
-            + f"/stage-{uuid.uuid4().hex}"
-        schema_name, _tbl = session._split(name)
-        schema_meta = session.provider.get_schema_by_name(
-            schema_name, handle.snapshot_id)
-        wopts = _parquet_write_options(session, schema_meta.schema_id, tid)
-        (out.write.options(**wopts).partitionBy("__run")
-         .parquet(staging, mode="errorifexists"))
-        staged = _finalize_compact_runs(session, staging, handle.table_path,
-                                        runs)
-
-    geo_cols = {c.column_name for c in handle.columns
-                if is_geometry_type(c.column_type)}
     # partition-value carry (sql/compaction/compaction_partitioned_
     # table shape): a rewritten file inherits its group's exact
     # partition values when every member agrees — maintenance never
     # degrades partition pruning on partitioned tables. Mixed groups
     # (only possible via a caller that packs across partitions) get
     # no values, which is correct-but-unpruned.
+    tid = handle.meta.table_id
     pv_map = session.provider.get_file_partition_values(tid)
     group_pv: list = []
     for group in groups:
@@ -1285,36 +1445,40 @@ def rewrite_file_groups(session, name: str, groups: list,
         group_pv.append(sorted(pvs[0].items())
                         if pvs[0] and all(d == pvs[0] for d in pvs)
                         else None)
+    runs = [(i, s, c, group_pv[g]) for i, (g, s, c) in enumerate(found)]
+
+    target = target_of(session, handle)
+    staged = []
+    if runs:
+        df = scan_table(session.spark, handle.spark_schema,
+                        [rf for _, rf in pairs], with_rowid=True)
+        ranges = session.spark.createDataFrame(
+            [(i, s, s + c - 1) for i, s, c, _pv in runs],
+            "__run LONG, __lo LONG, __hi LONG")
+        df = (df.join(F.broadcast(ranges),
+                      (F.col("rowid") >= F.col("__lo"))
+                      & (F.col("rowid") <= F.col("__hi")))
+              .drop("__lo", "__hi"))
+        # sort on __run first: the planned partitionBy("__run") write
+        # re-sorts on __run alone, which would drop a rowid-only order
+        staged = stage_files(
+            session, target,
+            df.repartition("__run").sortWithinPartitions("__run", "rowid"),
+            runs=runs)
+
     writer = _catalog_writer(session)
     try:
         with writer._txn():
             snap = _end_members(writer, tid, pairs)
-            for (gi, start, cnt), (final_name, size, footer) in \
-                    zip(found, staged):
-                fid = writer.register_data_file(
-                    tid, snap,
-                    DataFileInfo(path=final_name, path_is_relative=True,
-                                 file_size_bytes=size, footer_size=footer,
-                                 record_count=cnt, row_id_start=int(start)))
-                if group_pv[gi]:
-                    writer.register_file_partition_values(
-                        fid, tid, group_pv[gi])
-                local = _local_readable(handle.table_path, final_name)
-                if local is not None:
-                    writer.register_file_column_stats(
-                        fid, tid,
-                        column_stats_of(local, dict(zip(data_cols,
-                                                        col_ids)),
-                                        geo_cols))
+            n_rows = register_files(writer, snap, target, staged)
         session.refresh()
-        return sum(c for _g, _s, c in found)
+        return n_rows
     finally:
         writer.close()
 
 
 def _finalize_compact_runs(session, staging: str, table_path: str,
-                           runs: list[tuple[int, int, int]]
-                           ) -> list[tuple[str, int, int]]:
+                           runs: list) -> list[tuple[str, int, int]]:
     """Move each ``__run=N`` directory's single part file to a UUID name
     in the table dir; returns [(final_name, size, footer)] aligned with
     ``runs``. Every run is checked first — exactly one staged file
@@ -1331,7 +1495,7 @@ def _finalize_compact_runs(session, staging: str, table_path: str,
                   for r in (session.spark.read.parquet(staging)
                             .groupBy("__run").count().collect())}
         sources = []
-        for run_id, _start, cnt in runs:
+        for run_id, _start, cnt, _pv in runs:
             run_dir = staging.rstrip("/") + f"/__run={run_id}"
             parts = [p for p in sorted(fs.list_names(run_dir))
                      if p.endswith(".parquet")]
@@ -1350,7 +1514,7 @@ def _finalize_compact_runs(session, staging: str, table_path: str,
 
     import pyarrow.parquet as pq
     sources = []
-    for run_id, _start, cnt in runs:
+    for run_id, _start, cnt, _pv in runs:
         run_dir = os.path.join(staging, f"__run={run_id}")
         parts = [os.path.join(run_dir, p) for p in sorted(os.listdir(run_dir))
                  if p.endswith(".parquet")]
@@ -1379,30 +1543,6 @@ def _check_staged_run(run_id: int, parts: list, rows: int, cnt: int) -> None:
             "registered")
 
 
-def _with_field_ids_partial(df: DataFrame, data_cols: list[str],
-                            column_ids: list[int],
-                            nested: Optional[list] = None) -> DataFrame:
-    """Stamp field ids on the data columns, pass helper columns through.
-    ``nested``: per-column nested-id maps parallel to data_cols (see
-    _with_field_ids)."""
-    from pyspark.sql import functions as F
-    from .types import annotate_nested_ids
-    ids = dict(zip(data_cols, column_ids))
-    nmaps = dict(zip(data_cols, nested)) if nested else {}
-    cols = []
-    for f in df.schema.fields:
-        if f.name not in ids:
-            cols.append(F.col(f.name))
-            continue
-        c = F.col(f.name)
-        if nmaps.get(f.name):
-            c = c.cast(annotate_nested_ids(f.dataType, (),
-                                           dict(nmaps[f.name])))
-        cols.append(c.alias(f.name, metadata={**(f.metadata or {}),
-                                              "parquet.field.id": ids[f.name]}))
-    return df.select(*cols)
-
-
 _INLINABLE_SPARK_TYPES = ("IntegerType", "LongType", "ShortType",
                           "ByteType", "DoubleType", "FloatType",
                           "StringType", "BooleanType", "DateType",
@@ -1410,25 +1550,25 @@ _INLINABLE_SPARK_TYPES = ("IntegerType", "LongType", "ShortType",
                           "DecimalType")
 
 
-def _try_inline_append(session, writer, setup, table_id: int,
-                       df: DataFrame, not_null: list[str]):
-    """Inline the append into the catalog DB when at or under the
-    data_inlining_row_limit option; returns the row count, or None to
-    take the parquet path."""
+def _inline_rows(session, df: DataFrame, target: WriteTarget):
+    """Write-side data inlining (sql/data_inlining/ corpus): an append at
+    or under data_inlining_row_limit stores its rows IN the catalog DB
+    instead of parquet — DuckDB's DATA_INLINING_ROW_LIMIT behavior.
+    Returns (names, types, rows) for ``insert_inlined_rows``, or None to
+    take the parquet path. limit(n+1) terminates early on big inputs, so
+    a large append pays at most a truncated scan; simple scalar columns
+    only (arrays/structs/binary fall through to parquet)."""
     import datetime
     import decimal
 
     limit_s = session.provider.get_option("data_inlining_row_limit")
-    if not limit_s:
-        return None
     try:
-        limit = int(limit_s)
+        limit = int(limit_s or 0)
     except ValueError:
         return None
-    if limit <= 0:
-        return None
-    if not all(type(f.dataType).__name__ in _INLINABLE_SPARK_TYPES
-               for f in df.schema.fields):
+    if limit <= 0 or not all(
+            type(f.dataType).__name__ in _INLINABLE_SPARK_TYPES
+            for f in df.schema.fields):
         return None
     sample = df.limit(limit + 1).collect()
     if len(sample) > limit:
@@ -1442,20 +1582,16 @@ def _try_inline_append(session, writer, setup, table_id: int,
             return str(v)
         return v
 
+    for c in target.columns:
+        if not c.nulls_allowed and any(r[c.column_name] is None
+                                       for r in sample):
+            raise InvalidConfig(
+                f'NOT NULL constraint violated: column "{c.column_name}" '
+                "contains NULL")
     names = [f.name for f in df.schema.fields]
-    for row in sample:
-        for c in not_null:
-            if row[c] is None:
-                raise InvalidConfig(
-                    f'NOT NULL constraint violated: column "{c}" '
-                    "contains NULL")
-    cols = session.provider.get_table_columns(table_id, setup.snapshot_id)
-    type_by_name = {c.column_name: c.column_type for c in cols}
-    writer.insert_inlined_rows(
-        table_id, setup.snapshot_id, names,
-        [type_by_name.get(n, "varchar") for n in names],
-        [tuple(store(row[n]) for n in names) for row in sample])
-    return len(sample)
+    type_by_name = {c.column_name: c.column_type for c in target.columns}
+    return (names, [type_by_name.get(n, "varchar") for n in names],
+            [tuple(store(row[n]) for n in names) for row in sample])
 
 
 def create_or_insert(session, name: str, df: DataFrame, mode: str,
@@ -1463,232 +1599,47 @@ def create_or_insert(session, name: str, df: DataFrame, mode: str,
                      commit_marker: tuple[str, str] | None = None,
                      maintenance: bool = False,
                      replace_definition: bool = False) -> int:
-    """Returns the number of rows written (the reference returns a 1-row
-    count batch; insert_exec.rs:24-31). ``commit_marker``: a
-    (metadata key, value) recorded in the SAME catalog transaction as
-    the file registrations — the streaming sink's exactly-once anchor."""
+    """INSERT (append/overwrite) and CTAS. Returns the number of rows
+    written (the reference returns a 1-row count batch;
+    insert_exec.rs:24-31). The write is planned against the head, its
+    files staged, and then ONE catalog transaction writes the snapshot,
+    any column versions, the end of replaced files, the registrations
+    or inlined rows and ``commit_marker`` — a (metadata key, value), the
+    streaming sink's exactly-once anchor. ``single_file=False`` keeps
+    the plan's write parallelism (per_thread_output for this write)."""
     schema_name, table_name = session._split(name)
-    writer = _catalog_writer(session)
-    try:
-        write_mode = WriteMode.REPLACE if mode == "overwrite" else WriteMode.APPEND
+    if mode == "create" and if_exists == "error":
+        snap = session.provider.get_current_snapshot()
+        schema_meta = session.provider.get_schema_by_name(schema_name, snap)
+        if schema_meta is not None and session.provider.table_exists(
+                schema_meta.schema_id, table_name, snap):
+            raise InvalidConfig(f"Table already exists: {name}")
+    write_mode = WriteMode.REPLACE if mode == "overwrite" else WriteMode.APPEND
 
-        if mode == "create" and if_exists == "error":
-            snap = session.provider.get_current_snapshot()
-            schema_meta = session.provider.get_schema_by_name(schema_name, snap)
-            if schema_meta is not None and session.provider.table_exists(
-                    schema_meta.schema_id, table_name, snap):
-                raise InvalidConfig(f"Table already exists: {name}")
-
-        # 1) one catalog transaction: snapshot + schema/table/columns
-        #    (+ end files on overwrite)
-        setup = writer.begin_write_transaction(
+    def setup(writer):
+        return writer.begin_write_transaction(
             schema_name, table_name, _column_defs(df.schema), write_mode,
             maintenance=maintenance, replace_definition=replace_definition)
 
-        # 2) stage parquet to the table's data directory (executor-side)
-        resolver = session.catalog.resolver
-        schema_meta = session.provider.get_schema_by_name(
-            schema_name, setup.snapshot_id)
-        table_meta = session.provider.get_table_by_name(
-            schema_meta.schema_id, table_name, setup.snapshot_id)
-        schema_path = resolver.schema_path(
-            schema_meta.path, schema_meta.path_is_relative)
-        table_path = resolver.table_path(
-            schema_path, table_meta.path, table_meta.path_is_relative)
-
-        session.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        # Constraint set: ALWAYS the post-setup catalog columns. For
-        # append that is the table's preserved constraints; for create
-        # it equals the input schema's nullability (the columns came
-        # from it); for REPLACE it includes any NOT NULL the writer
-        # restored onto type-unchanged columns (a data overwrite keeps
-        # declared constraints — and they are enforced here against the
-        # new data, so the restoration can never record a violated
-        # constraint).
-        post_cols = session.provider.get_table_columns(
-            table_meta.table_id, setup.snapshot_id)
-        not_null = [c.column_name for c in post_cols
-                    if not c.nulls_allowed]
-        # Write-side data inlining (sql/data_inlining/ corpus): appends at
-        # or under data_inlining_row_limit store their rows IN the catalog
-        # DB instead of parquet — DuckDB's DATA_INLINING_ROW_LIMIT
-        # behavior. limit(n+1) terminates early on big inputs, so large
-        # appends pay at most a truncated scan before taking the parquet
-        # path; simple scalar columns only (arrays/structs/binary fall
-        # through to parquet).
-        if write_mode == WriteMode.APPEND:
-            # reentrant txn: the inline rows and the streaming sink's
-            # batch marker commit atomically (same guarantee as the
-            # parquet registration path)
-            with writer._txn():
-                n_inlined = _try_inline_append(session, writer, setup,
-                                               table_meta.table_id, df,
-                                               not_null)
-                if n_inlined is not None and commit_marker is not None:
-                    writer.set_option(commit_marker[0], commit_marker[1])
-            if n_inlined is not None:
-                session.refresh()
-                return n_inlined
-
-        out = _with_field_ids(_enforce_not_null(df, not_null),
-                              setup.column_ids, setup.nested_ids)
-        if single_file:
-            # target_file_size (sql/insert/insert_file_size.test): a
-            # large insert splits into ~target-sized files instead of one
-            # coalesced file. Catalyst's plan-stats sizeInBytes is the
-            # split estimate — no extra job; in-memory row width
-            # overestimates the compressed parquet, so the split errs
-            # toward MORE files, never a too-big one.
-            target_raw = session.provider.get_scoped_option(
-                "target_file_size", schema_meta.schema_id,
-                table_meta.table_id)
-            n_out = 1
-            if target_raw:
-                target = session._parse_size(target_raw)
-                try:
-                    est = int(str(out._jdf.queryExecution()
-                                  .optimizedPlan().stats().sizeInBytes()))
-                except Exception:
-                    est = 0
-                if est > 0 and target > 0:
-                    n_out = max(1, min(4096, -(-est // target)))
-            # per_thread_output (sql/settings/per_thread_output.test):
-            # keep the plan's write parallelism — one file per Spark
-            # partition instead of a coalesced single file. The
-            # scale-friendly shape for bulk loads; off by default to
-            # match DuckLake's one-file-per-insert contract.
-            per_thread = (session.provider.get_scoped_option(
-                "per_thread_output", schema_meta.schema_id,
-                table_meta.table_id) or "").lower() in ("true", "1")
-            if per_thread and n_out <= 1:
-                pass                        # plan parallelism untouched
-            else:
-                out = (out.repartition(n_out) if n_out > 1
-                       else out.coalesce(1))
-
-        # Partition spec (sql/partitioning/ corpus): split the insert by
-        # the live spec's columns. The partition columns are DUPLICATED
-        # into __part_<i> staging keys so the data files stay
-        # self-contained (partitionBy drops its keys from file contents;
-        # DuckLake files must carry every column).
-        from pyspark.sql import functions as F
-        id_to_name = {cid: fname for fname, cid in
-                      zip([f.name for f in df.schema.fields],
-                          setup.column_ids)}
-        spec = session.provider.get_partition_columns(
-            table_meta.table_id, setup.snapshot_id)
-        part_keys = _partition_keys(spec, id_to_name)
-
-        from .types import is_interval_type
-        iv_cols = [c.column_name for c in post_cols
-                   if is_interval_type(c.column_type)]
-        if iv_cols:
-            # INTERVAL columns: duckdb-backed executor staging emits the
-            # parquet INTERVAL logical type df.write/pyarrow cannot (r9;
-            # see _write_interval_distributed). Encrypted and partitioned
-            # combinations stay refused — PME-writing the struct would
-            # silently change the physical contract, and the partition
-            # staging machinery is not carried by this path.
-            if (session.provider.get_option("encrypted") or "").lower() \
-                    in ("true", "1"):
-                raise InvalidConfig(
-                    "INTERVAL columns in an encrypted catalog are not "
-                    "writable (the PME writer cannot emit the parquet "
-                    "INTERVAL logical type)")
-            if part_keys:
-                raise InvalidConfig(
-                    "INSERT into a partitioned table with INTERVAL "
-                    "columns is not supported")
-            return _insert_interval(session, writer, setup, table_meta,
-                                    table_path, out, iv_cols,
-                                    commit_marker, post_cols)
-
-        if (session.provider.get_option("encrypted") or "").lower() \
-                in ("true", "1"):
-            # ENCRYPTED catalog (sql/encryption/ corpus): every data file
-            # is PME-encrypted with its own random key, recorded in
-            # ducklake_data_file.encryption_key. Written executor-side.
-            return _insert_encrypted(session, writer, setup, table_meta,
-                                     table_path, out, df, commit_marker,
-                                     part_keys=part_keys)
-
-        staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
-        wopts = _parquet_write_options(
-            session, schema_meta.schema_id, table_meta.table_id)
-        try:
-            if part_keys:
-                for i, (base, tf, _dk) in enumerate(part_keys):
-                    out = out.withColumn(f"{_PART_PREFIX}{i}",
-                                         _partition_expr(base, tf))
-                (out.write.options(**wopts)
-                 .partitionBy([f"{_PART_PREFIX}{i}"
-                               for i in range(len(part_keys))])
-                 .parquet(staging, mode="errorifexists"))
-            else:
-                out.write.options(**wopts).parquet(staging,
-                                                   mode="errorifexists")
-        except Exception as e:
-            _raise_if_constraint(e)
-
-        # 3) move part files to UUID names in the table dir (hive-style
-        #    subdirs for partitioned tables) and register each in the
-        #    catalog (multi-file snapshot) with its partition values.
-        #    Scheme'd paths go through the Hadoop FS API (object-store-
-        #    capable); bare local paths take the direct os/pyarrow route.
-        if part_keys:
-            dir_keys = [dk for _b, _t, dk in part_keys]
-            hive = _hive_file_pattern(session, table_meta.table_id,
-                                      schema_meta.schema_id)
-            if "://" in table_path:
-                staged = _finalize_partitioned_hadoop(
-                    session.spark, staging, table_path, dir_keys,
-                    hive_dirs=hive)
-            else:
-                staged = _finalize_partitioned_local(
-                    staging, table_path, dir_keys, hive_dirs=hive)
-        elif "://" in table_path:
-            staged = [(*s, None) for s in
-                      _finalize_hadoop(session.spark, staging, table_path)]
-        else:
-            staged = [(*s, None) for s in
-                      _finalize_local(staging, table_path)]
-
-        n_rows = 0
-        next_rowid = writer.next_row_id(table_meta.table_id)
-        col_ids = dict(zip([f.name for f in df.schema.fields],
-                           setup.column_ids))
-        _cat_cols = session.provider.get_table_columns(
-            table_meta.table_id, setup.snapshot_id)
-        # nested leaves (list element / map value / struct fields) get
-        # their own stats rows keyed by field id, like top-level columns
-        col_ids.update(nested_stats_ids(_cat_cols))
-        geo_cols = {c.column_name for c in _cat_cols
-                    if is_geometry_type(c.column_type)}
-        # ONE catalog transaction for the whole registration (reentrant
-        # _txn): either every staged file becomes visible or none — and
-        # the streaming sink's batch marker commits atomically with the
-        # files it covers (exactly-once under foreachBatch replays).
+    writer = _catalog_writer(session)
+    try:
+        target = _plan_write(session, writer, setup)
+        inline = _inline_rows(session, df, target) \
+            if write_mode == WriteMode.APPEND else None
+        staged = [] if inline is not None else stage_files(
+            session, target, df, per_thread=None if single_file else True)
         with writer._txn():
-            for final_name, size, footer, count, pvals in staged:
-                fid = writer.register_data_file(
-                    table_meta.table_id, setup.snapshot_id,
-                    DataFileInfo(path=final_name, path_is_relative=True,
-                                 file_size_bytes=size, footer_size=footer,
-                                 record_count=count,
-                                 row_id_start=next_rowid))
-                if pvals:
-                    writer.register_file_partition_values(
-                        fid, table_meta.table_id, pvals)
-                local = _local_readable(table_path, final_name)
-                if local is not None:
-                    writer.register_file_column_stats(
-                        fid, table_meta.table_id,
-                        column_stats_of(local, col_ids, geo_cols))
-                next_rowid += count
-                n_rows += count
+            done = setup(writer)
+            _expect_planned(target, done)
+            if inline is not None:
+                writer.insert_inlined_rows(done.table_id, done.snapshot_id,
+                                           *inline)
+                n_rows = len(inline[2])
+            else:
+                n_rows = register_files(writer, done.snapshot_id, target,
+                                        staged, keep_empty=True)
             if commit_marker is not None:
                 writer.set_option(commit_marker[0], commit_marker[1])
-
         session.refresh()
         return n_rows
     finally:

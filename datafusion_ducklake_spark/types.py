@@ -404,8 +404,8 @@ def is_geometry_type(type_str: str) -> bool:
 
 def is_interval_type(type_str: str) -> bool:
     """True for the INTERVAL type (scan decodes FLBA(12) to the struct
-    representation; INSERT/CTAS re-encode through the duckdb-backed
-    executor staging — see table_writer._insert_interval)."""
+    representation; every write re-encodes it through the duckdb-backed
+    executor staging — see table_writer.stage_files)."""
     return type_str.strip().lower() == "interval"
 
 

@@ -467,7 +467,6 @@ def test_failed_compact_staging_keeps_every_row(dl, monkeypatch, path):
     """Staging fails mid-compact: nothing was committed, so a session
     opened at head still reads every row with its rowid."""
     from datafusion_ducklake_spark import table_writer
-    from datafusion_ducklake_spark.operators import dml as dml_mod
     dl.delete_from("main.m", "id IN (3, 4, 12)")
     if path == "rowid_in_file":
         dl.update_where("main.m", {"v": "v + 1"}, "id < 10")
@@ -477,7 +476,7 @@ def test_failed_compact_staging_keeps_every_row(dl, monkeypatch, path):
     if path == "runs":
         monkeypatch.setattr(table_writer, "_finalize_compact_runs", boom)
     else:
-        monkeypatch.setattr(dml_mod, "_stage_append", boom)
+        monkeypatch.setattr(table_writer, "stage_files", boom)
     live = _rowid_pairs(dl, "main.m")
     with pytest.raises(RuntimeError, match="staging failed"):
         dl.compact("main.m")

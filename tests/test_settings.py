@@ -62,6 +62,38 @@ def test_row_group_size_bytes(dl, spark, tmp_path):
     assert meta.num_row_groups >= 2
 
 
+def test_compression_applies_to_dml_and_maintenance_files(dl, spark,
+                                                         tmp_path):
+    """The settings reach every data file a write stages, not only
+    INSERT's: UPDATE's rewrite, MERGE's rewrite and insert halves, and
+    compact's outputs."""
+    dl.sql("CALL ducklake_set_option('parquet_compression', 'zstd')")
+    dl.create_table("main.t", spark.range(100).selectExpr(
+        "id", "repeat('x', 20) AS s"))
+
+    def data_files():
+        return {p for p in _files(tmp_path, "t")
+                if "ducklake-delete-" not in p}
+
+    written = data_files()
+
+    def new_codecs():
+        nonlocal written
+        now = data_files()
+        fresh, written = now - written, now
+        assert fresh
+        return _codecs(fresh)
+
+    dl.sql("UPDATE t SET s = 'y' WHERE id < 10")
+    assert new_codecs() == {"ZSTD"}
+    dl.merge_into("main.t", spark.createDataFrame(
+        [(5, "z"), (500, "w")], "id BIGINT, s STRING"), ["id"],
+        when_matched_update="source")
+    assert new_codecs() == {"ZSTD"}
+    dl.compact("main.t")
+    assert new_codecs() == {"ZSTD"}
+
+
 def test_per_table_scope_beats_global(dl, spark, tmp_path):
     dl.create_table("main.a", spark.range(10).selectExpr("id"))
     dl.create_table("main.b", spark.range(10).selectExpr("id"))
