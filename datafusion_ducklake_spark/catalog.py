@@ -32,7 +32,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from .errors import (DuckLakeError, InvalidConfig, SchemaNotFound,
                      TableNotFound, UnsupportedType)
 from .metadata.provider import (ColumnMeta, MetadataProvider, SchemaMeta,
-                                TableMeta, provider_for)
+                                Settings, TableMeta, provider_for)
 from .operators.info_schema import local_df
 from .paths import PathResolver, to_spark_uri
 from .sources.scan import ResolvedFile, scan_table
@@ -843,13 +843,17 @@ class DuckLakeSchema:
 
 class DuckLakeCatalog:
     def __init__(self, spark: SparkSession, provider: MetadataProvider,
-                 snapshot_id: Optional[int] = None):
+                 snapshot_id: Optional[int] = None,
+                 settings: Optional[Settings] = None):
+        """``settings``: the open statement's settings read, when it
+        has one (a write's refresh), so data_path is not read again."""
         self.spark = spark
         self.provider = provider
         # pin once; every downstream lookup threads this id
         self.snapshot_id = (provider.get_current_snapshot()
                             if snapshot_id is None else snapshot_id)
-        self.resolver = PathResolver(provider.get_data_path())
+        self.resolver = PathResolver((settings or provider.settings())
+                                     .data_path)
 
     def schema_names(self) -> list[str]:
         return [s.schema_name for s in
@@ -2416,15 +2420,17 @@ class DuckLakeSession:
                 return self.spark.sql(query)
             return self.spark.sql(query, args)
 
-    def refresh(self) -> None:
+    def refresh(self, settings: Optional[Settings] = None) -> None:
         """Re-pin to the latest snapshot (the reference re-creates its
         catalog per query session; hybrid_asyncdb.rs:120-144) and rebuild
         the relations this session has bound, so a write's refresh pays
         for them, not the next read. ``AT (…)`` bindings are pinned and
         carry over. A relation gone at the new pin, or one that no
         longer builds, loses its temp view; the next statement naming
-        it raises."""
-        self.catalog = DuckLakeCatalog(self.spark, self.provider)
+        it raises. ``settings``: a write's own settings read (see
+        DuckLakeCatalog)."""
+        self.catalog = DuckLakeCatalog(self.spark, self.provider,
+                                       settings=settings)
         self._macros = None
         self._names = None
         frames, views = self._frames, self._views
@@ -3104,19 +3110,16 @@ class DuckLakeSession:
 
         registered: set = set()
         registered_names: set = set()
-        try:
-            rows = self.provider.list_registered_file_paths()
-        except Exception:
-            # pre-scope catalog shapes (no path columns on table/schema):
-            # conservative basename matching, the pre-full-path behavior
-            rows = None
-        if rows is None:
+        if not all(self.provider.has(t, "path", "path_is_relative")
+                   for t in ("ducklake_table", "ducklake_schema")):
+            # catalogs without path columns on table/schema: conservative
+            # basename matching, the pre-full-path behavior
             registered_names = {
                 str(p).rsplit("/", 1)[-1]
                 for p in self.provider.list_registered_file_names()}
         else:
             resolver = PathResolver(data_path)
-            for row in rows:
+            for row in self.provider.list_registered_file_paths():
                 resolved = _resolve_catalog_file_row(resolver, row)
                 if resolved is not None:
                     registered.add(resolved)
@@ -3419,9 +3422,10 @@ class DuckLakeSession:
         if df is None:
             return 0
         target = target_of(self, handle)
+        settings = self.provider.settings()
         staged = stage_files(self, target, df, include_rowid=True,
-                             include_snapshot=True)
-        writer = _catalog_writer(self)
+                             include_snapshot=True, settings=settings)
+        writer = _catalog_writer(self, settings)
         try:
             with writer._txn():
                 sid = writer.create_snapshot(
@@ -3431,7 +3435,7 @@ class DuckLakeSession:
                     writer.end_inlined_rows(it, sid)
         finally:
             writer.close()
-        self.refresh()
+        self.refresh(settings)
         return n
 
     # -- transactions (sql/transaction/ corpus; snapshot-anchored) --------

@@ -13,6 +13,9 @@ Parquet I/O is distributed.
 
 from __future__ import annotations
 
+import functools
+import itertools
+import re
 import sqlite3
 import threading
 from dataclasses import dataclass, field
@@ -212,26 +215,161 @@ def reconstruct_list_columns(rows: list[tuple[ColumnMeta, Optional[int]]],
     return out
 
 
+class CatalogShape:
+    """Which catalog tables and columns exist: ``{table: [columns in
+    order]}`` from one dialect statement (``sql.CATALOG_SHAPE``), which
+    ``probe`` runs. Catalogs written by older DuckLake versions lack some
+    tables and columns; every read and write decides from this one shape
+    instead of trying the current SQL and falling back on error.
+
+    Tables and columns are only ever added to a catalog, so a present
+    answer never goes stale. An absent one holds until ``stale`` says
+    that a newer snapshot may have been read since the shape was; the
+    next absent answer after that re-reads it. A catalog that has every
+    table and column asked for is read once."""
+
+    def __init__(self, probe):
+        self._probe = probe
+        self._tables: Optional[dict] = None     # table → (columns, lower set)
+        self._epochs = itertools.count(1)
+        self._epoch = 0
+        self._read_at = -1
+
+    def stale(self) -> None:
+        self._epoch = next(self._epochs)
+
+    def forget(self) -> None:
+        self._tables = None
+
+    def _read(self) -> dict:
+        epoch = self._epoch
+        cols: dict[str, list] = {}
+        for t, c in self._probe():
+            cols.setdefault(str(t).lower(), []).append(str(c))
+        self._tables = {t: (cs, {c.lower() for c in cs})
+                        for t, cs in cols.items()}
+        self._read_at = epoch
+        return self._tables
+
+    def _entry(self, table: str, want: tuple, fresh: bool = False):
+        tables = self._tables if self._tables is not None else self._read()
+        found = tables.get(table.lower())
+        if not self._covers(found, want) and (
+                fresh or self._read_at != self._epoch):
+            found = self._read().get(table.lower())
+        return found
+
+    def columns(self, table: str, *want: str,
+                fresh: bool = False) -> Optional[list]:
+        """The table's columns in order, or None when it is absent. When
+        the table or a ``want`` column is absent, the shape is re-read
+        first if it may be older than a snapshot already read — or
+        always, with ``fresh`` (a table that another catalog row names,
+        so it may have been created since)."""
+        found = self._entry(table, want, fresh)
+        return None if found is None else found[0]
+
+    def has(self, table: str, *columns: str) -> bool:
+        return self._covers(self._entry(table, columns), columns)
+
+    @staticmethod
+    def _covers(found, want) -> bool:
+        return found is not None and all(w.lower() in found[1] for w in want)
+
+
+# {alias.column} slots in a catalog read, and the tables it names
+_SLOT = re.compile(r"\{(\w+)\.(\w+)\}")
+_NAMED = re.compile(r"\b(?:FROM|JOIN)\s+(ducklake_\w+)(?:\s+(?:AS\s+)?(\w+))?",
+                    re.IGNORECASE)
+
+
+@functools.lru_cache(maxsize=None)
+def _tables_named(sql: str) -> tuple[tuple, dict]:
+    named = _NAMED.findall(sql)
+    return tuple({t for t, _a in named}), {a or t: t for t, a in named}
+
+
+@dataclass(frozen=True)
+class Settings:
+    """Every ``ducklake_metadata`` row as (key, value, scope, scope_id),
+    read in one statement. Settings are not snapshot-versioned, so a
+    statement reads them once and never keeps them for the next one."""
+    rows: tuple
+
+    def get(self, key: str, schema_id: Optional[int] = None,
+            table_id: Optional[int] = None) -> Optional[str]:
+        """The DuckLake scoped-settings precedence: table override >
+        schema override > global (corpus: sql/settings/
+        per_table_settings). Without ids, the global value."""
+        best, rank = None, -1
+        for k, value, scope, sid in self.rows:
+            if k != key:
+                continue
+            r = (0 if scope is None
+                 else 1 if scope == "schema" and sid == schema_id
+                 else 2 if scope == "table" and sid == table_id else -1)
+            if r > rank:
+                best, rank = value, r
+        return best
+
+    @property
+    def data_path(self) -> str:
+        path = self.get("data_path")
+        if path is None:
+            raise CatalogError(
+                "catalog has no data_path in ducklake_metadata")
+        return path
+
+
 class MetadataProvider:
     """Base class: issues the shared SQL over a DB-API connection.
-    Subclasses provide the connection; all use qmark parameters."""
+    Subclasses provide the connection and their dialect; all use qmark
+    parameters. Reads of tables or columns that older catalog
+    generations lack go through ``_read``, which consults the catalog's
+    shape: an absent table reads as no rows, an absent column as NULL.
+    Every other error propagates."""
+
+    dialect = "sqlite"
+
+    def __init__(self):
+        self._shape = CatalogShape(
+            lambda: self._fetchall(Q.CATALOG_SHAPE[self.dialect]))
 
     def _fetchall(self, query: str, params: tuple = ()) -> list[tuple]:
         raise NotImplementedError
 
+    def _read(self, query: str, params: tuple = ()) -> list[tuple]:
+        """One catalog read under the catalog's shape: no statement and
+        no rows when a table it names is absent; each ``{alias.column}``
+        slot reads the column, or NULL where the column is absent."""
+        tables, alias = _tables_named(query)
+        if not all(self._shape.has(t) for t in tables):
+            return []
+        return self._fetchall(_SLOT.sub(
+            lambda m: f"{m[1]}.{m[2]}"
+            if self._shape.has(alias[m[1]], m[2]) else "NULL", query),
+            params)
+
+    def has(self, table: str, *columns: str) -> bool:
+        """Whether the catalog has ``table`` with every one of
+        ``columns``."""
+        return self._shape.has(table, *columns)
+
+    def _snapshots(self, rows: list[tuple]) -> list[tuple]:
+        # a newer snapshot may be read from here on: a table or column
+        # the shape lacked may exist at it
+        self._shape.stale()
+        return rows
+
     # --- snapshot / schema / table lookups --------------------------------
 
     def get_current_snapshot(self) -> int:
-        return int(self._fetchall(Q.GET_LATEST_SNAPSHOT)[0][0])
+        return int(self._snapshots(
+            self._fetchall(Q.GET_LATEST_SNAPSHOT))[0][0])
 
     def list_snapshots(self) -> list[SnapshotMeta]:
-        try:
-            return [SnapshotMeta(int(r[0]), r[1], r[2], r[3])
-                    for r in self._fetchall(Q.LIST_SNAPSHOTS_AUDIT)]
-        except Exception:
-            # catalogs that predate the audit columns (sql/audit/)
-            return [SnapshotMeta(int(r[0]), r[1])
-                    for r in self._fetchall(Q.LIST_SNAPSHOTS)]
+        return [SnapshotMeta(int(r[0]), r[1], r[2], r[3])
+                for r in self._snapshots(self._read(Q.LIST_SNAPSHOTS))]
 
     def list_schemas(self, snapshot_id: int) -> list[SchemaMeta]:
         return [SchemaMeta(int(r[0]), r[1], r[2], bool(r[3]))
@@ -244,15 +382,10 @@ class MetadataProvider:
                                         (schema_id, snapshot_id, snapshot_id))]
 
     def list_views(self, schema_id: int, snapshot_id: int) -> list["ViewMeta"]:
-        """Live catalog views (DuckLake spec ``ducklake_view``). Catalogs
-        written before/without view support lack the table — treated as
-        having no views, like the stats table."""
-        try:
-            rows = self._fetchall(Q.LIST_VIEWS,
-                                  (schema_id, snapshot_id, snapshot_id))
-        except Exception:
-            return []
-        return [ViewMeta(int(r[0]), r[1], r[2], r[3]) for r in rows]
+        """Live catalog views (DuckLake spec ``ducklake_view``)."""
+        return [ViewMeta(int(r[0]), r[1], r[2], r[3])
+                for r in self._read(Q.LIST_VIEWS,
+                                    (schema_id, snapshot_id, snapshot_id))]
 
     def get_schema_by_name(self, name: str, snapshot_id: int) -> Optional[SchemaMeta]:
         rows = self._fetchall(Q.GET_SCHEMA_BY_NAME, (name, snapshot_id, snapshot_id))
@@ -273,13 +406,8 @@ class MetadataProvider:
 
     def get_table_columns(self, table_id: int,
                           snapshot_id: int) -> list[ColumnMeta]:
-        try:
-            rows = self._fetchall(Q.GET_TABLE_COLUMNS,
-                                  (table_id, snapshot_id, snapshot_id))
-        except Exception:
-            # pre-default-value catalogs lack initial_default/default_value
-            rows = self._fetchall(Q.GET_TABLE_COLUMNS_LEGACY,
-                                  (table_id, snapshot_id, snapshot_id))
+        rows = self._read(Q.GET_TABLE_COLUMNS,
+                          (table_id, snapshot_id, snapshot_id))
         raw = [(ColumnMeta(int(r[0]), r[1], r[2],
                            bool(r[3]) if r[3] is not None else True,
                            r[5], r[6],
@@ -291,14 +419,11 @@ class MetadataProvider:
             # first appearance of each nested field IDENTITY (min begin
             # over its id's versions) — the no-resurrection boundary for
             # name-mapped files
-            try:
-                first_begin = {int(r[0]): int(r[1]) for r in self._fetchall(
-                    "SELECT column_id, MIN(begin_snapshot) "
-                    "FROM ducklake_column WHERE table_id = ? "
-                    "AND parent_column IS NOT NULL GROUP BY column_id",
-                    (table_id,))}
-            except Exception:
-                first_begin = None
+            first_begin = {int(r[0]): int(r[1]) for r in self._fetchall(
+                "SELECT column_id, MIN(begin_snapshot) "
+                "FROM ducklake_column WHERE table_id = ? "
+                "AND parent_column IS NOT NULL GROUP BY column_id",
+                (table_id,))}
         return reconstruct_list_columns(raw, first_begin)
 
     def get_nested_field_defaults(self, table_id: int,
@@ -308,24 +433,21 @@ class MetadataProvider:
         (sql/default/struct_field_default.test). first_begin = the field
         identity's first appearance — files registered before it read
         the default instead of NULL."""
-        try:
-            return [(r[0], r[1], r[2], int(r[3])) for r in self._fetchall(
-                "SELECT p.column_name, c.column_name, c.initial_default, "
-                "(SELECT MIN(begin_snapshot) FROM ducklake_column "
-                " WHERE table_id = c.table_id AND column_id = c.column_id) "
-                "FROM ducklake_column c "
-                "JOIN ducklake_column p ON c.parent_column = p.column_id "
-                "AND p.table_id = c.table_id "
-                "WHERE c.table_id = ? AND c.initial_default IS NOT NULL "
-                "AND p.parent_column IS NULL "
-                "AND c.begin_snapshot <= ? "
-                "AND (c.end_snapshot IS NULL OR c.end_snapshot > ?) "
-                "AND p.begin_snapshot <= ? "
-                "AND (p.end_snapshot IS NULL OR p.end_snapshot > ?)",
-                (table_id, snapshot_id, snapshot_id, snapshot_id,
-                 snapshot_id))]
-        except Exception:
-            return []
+        return [(r[0], r[1], r[2], int(r[3])) for r in self._read(
+            "SELECT p.column_name, c.column_name, {c.initial_default}, "
+            "(SELECT MIN(begin_snapshot) FROM ducklake_column "
+            " WHERE table_id = c.table_id AND column_id = c.column_id) "
+            "FROM ducklake_column c "
+            "JOIN ducklake_column p ON c.parent_column = p.column_id "
+            "AND p.table_id = c.table_id "
+            "WHERE c.table_id = ? AND {c.initial_default} IS NOT NULL "
+            "AND p.parent_column IS NULL "
+            "AND c.begin_snapshot <= ? "
+            "AND (c.end_snapshot IS NULL OR c.end_snapshot > ?) "
+            "AND p.begin_snapshot <= ? "
+            "AND (p.end_snapshot IS NULL OR p.end_snapshot > ?)",
+            (table_id, snapshot_id, snapshot_id, snapshot_id,
+             snapshot_id))]
 
     def get_data_files(self, table_id: int, snapshot_id: int) -> list[DataFileMeta]:
         rows = self._fetchall(
@@ -364,13 +486,9 @@ class MetadataProvider:
         """{data_file_id: {column_id: (null_count, min_value, max_value)}}
         for the table's live files. Catalogs predating the stats table
         (or never writing it) return {} — pruning then keeps every file."""
-        try:
-            rows = self._fetchall(Q.GET_FILE_COLUMN_STATS,
-                                  (table_id, snapshot_id, snapshot_id))
-        except Exception:
-            return {}
         out: dict[int, dict[int, tuple]] = {}
-        for fid, cid, nulls, mn, mx in rows:
+        for fid, cid, nulls, mn, mx in self._read(
+                Q.GET_FILE_COLUMN_STATS, (table_id, snapshot_id, snapshot_id)):
             out.setdefault(int(fid), {})[int(cid)] = (
                 int(nulls) if nulls is not None else None, mn, mx)
         return out
@@ -378,68 +496,48 @@ class MetadataProvider:
     def get_file_extra_stats(self, table_id: int, snapshot_id: int
                              ) -> dict[int, dict[int, str]]:
         """{data_file_id: {column_id: extra_stats_json}} for the table's
-        live files (geometry bbox pruning). Separate from
-        get_file_column_stats so catalogs predating the extra_stats
-        column keep their scalar pruning ({} here on failure)."""
-        try:
-            rows = self._fetchall(
-                "SELECT s.data_file_id, s.column_id, s.extra_stats "
+        live files (geometry bbox pruning)."""
+        out: dict[int, dict[int, str]] = {}
+        for fid, cid, extra in self._read(
+                "SELECT s.data_file_id, s.column_id, {s.extra_stats} "
                 "FROM ducklake_file_column_stats s "
                 "JOIN ducklake_data_file data "
                 "ON s.data_file_id = data.data_file_id "
-                "WHERE s.table_id = ? AND s.extra_stats IS NOT NULL "
+                "WHERE s.table_id = ? AND {s.extra_stats} IS NOT NULL "
                 "AND data.begin_snapshot <= ? "
                 "AND (data.end_snapshot IS NULL OR data.end_snapshot > ?)",
-                (table_id, snapshot_id, snapshot_id))
-        except Exception:
-            return {}
-        out: dict[int, dict[int, str]] = {}
-        for fid, cid, extra in rows:
+                (table_id, snapshot_id, snapshot_id)):
             out.setdefault(int(fid), {})[int(cid)] = extra
         return out
 
     def get_raw_file_column_stats(self) -> list[tuple]:
         """All ducklake_file_column_stats rows (incl. extra_stats) for the
-        SQL-callable stats functions; [] on catalogs without the table."""
-        try:
-            return self._fetchall(
-                "SELECT data_file_id, table_id, column_id, "
-                "column_size_bytes, value_count, null_count, min_value, "
-                "max_value, contains_nan, extra_stats "
-                "FROM ducklake_file_column_stats")
-        except Exception:
-            try:
-                rows = self._fetchall(
-                    "SELECT data_file_id, table_id, column_id, "
-                    "column_size_bytes, value_count, null_count, "
-                    "min_value, max_value, contains_nan "
-                    "FROM ducklake_file_column_stats")
-                return [(*r, None) for r in rows]
-            except Exception:
-                return []
+        SQL-callable stats functions."""
+        return self._read(
+            "SELECT s.data_file_id, s.table_id, s.column_id, "
+            "s.column_size_bytes, s.value_count, s.null_count, s.min_value, "
+            "s.max_value, s.contains_nan, {s.extra_stats} "
+            "FROM ducklake_file_column_stats s")
 
     def get_raw_table_column_stats(self) -> list[tuple]:
-        try:
-            return self._fetchall(
-                "SELECT table_id, column_id, contains_null, contains_nan, "
-                "min_value, max_value, extra_stats "
-                "FROM ducklake_table_column_stats")
-        except Exception:
-            return []
+        return self._read(
+            "SELECT s.table_id, s.column_id, s.contains_null, "
+            "s.contains_nan, s.min_value, s.max_value, {s.extra_stats} "
+            "FROM ducklake_table_column_stats s")
 
     def snapshot_exists(self, snapshot_id: int) -> bool:
-        rows = self._fetchall(
+        rows = self._snapshots(self._fetchall(
             "SELECT 1 FROM ducklake_snapshot WHERE snapshot_id = ?",
-            (int(snapshot_id),))
+            (int(snapshot_id),)))
         return bool(rows)
 
     def get_snapshot_at_timestamp(self, ts: str) -> Optional[int]:
         """Newest snapshot at or before the ISO timestamp (the
         AT (TIMESTAMP => ...) resolution rule). Lexicographic compare is
         exact for the ISO-rendered snapshot_time."""
-        rows = self._fetchall(
+        rows = self._snapshots(self._fetchall(
             "SELECT MAX(snapshot_id) FROM ducklake_snapshot "
-            "WHERE CAST(snapshot_time AS VARCHAR) <= ?", (ts,))
+            "WHERE CAST(snapshot_time AS VARCHAR) <= ?", (ts,)))
         return int(rows[0][0]) if rows and rows[0][0] is not None else None
 
     def get_snapshot_before_timestamp(self, ts: str) -> Optional[int]:
@@ -447,39 +545,25 @@ class MetadataProvider:
         exclusive-start CDC bound: table_changes(t, ts, ...) must
         include snapshots committed AT ts (upstream issue #330,
         table_changes/ducklake_lower_timestamp.test)."""
-        rows = self._fetchall(
+        rows = self._snapshots(self._fetchall(
             "SELECT MAX(snapshot_id) FROM ducklake_snapshot "
-            "WHERE CAST(snapshot_time AS VARCHAR) < ?", (ts,))
+            "WHERE CAST(snapshot_time AS VARCHAR) < ?", (ts,)))
         return int(rows[0][0]) if rows and rows[0][0] is not None else None
 
     def get_catalog_table_columns(self, table: str) -> list[str]:
-        """Column names of one metadata-catalog table, in DDL order —
-        the SQL metadata passthrough's schema source (upstream ATTACHes
-        the metadata DB as a queryable catalog, e.g.
-        __ducklake_metadata_ducklake.ducklake_macro)."""
-        try:
-            cols = [str(r[1]) for r in self._fetchall(
-                f'PRAGMA table_info("{table}")')]
-            if cols:
-                return cols
-        except Exception:
-            pass
-        return [str(r[0]) for r in self._fetchall(
-            "SELECT column_name FROM information_schema.columns "
-            "WHERE table_name = ? ORDER BY ordinal_position", (table,))]
+        """Column names of one metadata-catalog table, in DDL order — the
+        SQL metadata passthrough's schema source (upstream ATTACHes the
+        metadata DB as a queryable catalog, e.g.
+        __ducklake_metadata_ducklake.ducklake_macro); [] when absent."""
+        return list(self._shape.columns(table) or [])
 
     def get_snapshot_changes(self) -> dict[int, str]:
         """{snapshot_id: changes_made} from ducklake_snapshot_changes —
         the per-snapshot change summary real DuckLake catalogs record
-        (surfaces as the ``changes`` column of ducklake_snapshots()).
-        {} for catalogs without the table."""
-        try:
-            rows = self._fetchall(
-                "SELECT snapshot_id, changes_made "
-                "FROM ducklake_snapshot_changes")
-        except Exception:
-            return {}
-        return {int(r[0]): r[1] for r in rows}
+        (surfaces as the ``changes`` column of ducklake_snapshots())."""
+        return {int(r[0]): r[1] for r in self._read(
+            "SELECT c.snapshot_id, c.changes_made "
+            "FROM ducklake_snapshot_changes c")}
 
     def list_registered_file_names(self) -> list[str]:
         """Every data/delete file path the catalog has EVER registered
@@ -505,61 +589,30 @@ class MetadataProvider:
         return (self._fetchall(sql.format(tbl="ducklake_data_file")) +
                 self._fetchall(sql.format(tbl="ducklake_delete_file")))
 
+    def settings(self) -> Settings:
+        """Every catalog setting at every scope, in one statement."""
+        return Settings(tuple(
+            (str(k), None if v is None else str(v), s,
+             None if sid is None else int(sid))
+            for k, v, s, sid in self._read(Q.LIST_SETTINGS)))
+
     def list_options(self) -> list[tuple]:
         """Every persisted ducklake_metadata row as (key, value, scope,
         scope_id) — the ducklake_options() listing (corpus:
         sql/settings/per_table_settings.test). Pre-scope catalogs
         surface every row as global."""
-        try:
-            rows = self._fetchall(
-                "SELECT key, value, scope, scope_id FROM ducklake_metadata")
-            return [(str(k), str(v), s,
-                     int(sid) if sid is not None else None)
-                    for k, v, s, sid in rows]
-        except Exception:
-            rows = self._fetchall(
-                "SELECT key, value FROM ducklake_metadata")
-            return [(str(k), str(v), None, None) for k, v in rows]
+        return list(self.settings().rows)
 
     def get_option(self, key: str) -> Optional[str]:
         """GLOBAL catalog option from ducklake_metadata (e.g.
-        data_inlining_row_limit), or None. Scoped rows (per-schema/
-        per-table overrides) are excluded; pre-scope catalogs fall back
-        to the bare (key, value) shape."""
-        try:
-            rows = self._fetchall(
-                "SELECT value FROM ducklake_metadata WHERE key = ? "
-                "AND scope IS NULL", (key,))
-        except Exception:
-            try:
-                rows = self._fetchall(
-                    "SELECT value FROM ducklake_metadata WHERE key = ?",
-                    (key,))
-            except Exception:
-                return None
-        return str(rows[0][0]) if rows else None
+        data_inlining_row_limit), or None."""
+        return self.settings().get(key)
 
     def get_scoped_option(self, key: str, schema_id: int,
                           table_id: int) -> Optional[str]:
-        """Option with the DuckLake scoped-settings precedence: table
-        override > schema override > global (corpus:
-        sql/settings/per_table_settings). None when unset anywhere."""
-        try:
-            rows = self._fetchall(
-                "SELECT scope, scope_id, value FROM ducklake_metadata "
-                "WHERE key = ?", (key,))
-        except Exception:
-            return self.get_option(key)
-        best, best_rank = None, -1
-        for scope, sid, value in rows:
-            sid = int(sid) if sid is not None else None
-            if scope is None and best_rank < 0:
-                best, best_rank = value, 0
-            elif scope == "schema" and sid == schema_id and best_rank < 1:
-                best, best_rank = value, 1
-            elif scope == "table" and sid == table_id and best_rank < 2:
-                best, best_rank = value, 2
-        return str(best) if best is not None else None
+        """Option with table > schema > global precedence; None when
+        unset anywhere."""
+        return self.settings().get(key, schema_id, table_id)
 
     def list_option_values(self, key: str) -> list[str]:
         """Every value stored under ``key`` at ANY scope (all schema/table
@@ -567,24 +620,12 @@ class MetadataProvider:
         discover engine-owned files recorded only in options (clustering
         replicas), which must never be deleted as orphans — so errors
         PROPAGATE: a transient failure returning [] here would let the
-        sweep delete live replica files (the query touches only the
-        (key, value) columns every catalog generation has, so there is
-        no legacy-shape fallback to degrade to)."""
-        rows = self._fetchall(
-            "SELECT value FROM ducklake_metadata WHERE key = ?", (key,))
-        return [str(r[0]) for r in rows if r[0] is not None]
+        sweep delete live replica files."""
+        return [v for k, v, _s, _sid in self.settings().rows
+                if k == key and v is not None]
 
     def get_data_path(self) -> str:
-        try:
-            rows = self._fetchall(Q.GET_DATA_PATH)
-        except Exception:
-            # pre-scope catalogs: ducklake_metadata is just (key, value)
-            rows = self._fetchall(
-                "SELECT value FROM ducklake_metadata "
-                "WHERE key = 'data_path'")
-        if not rows:
-            raise CatalogError("catalog has no data_path in ducklake_metadata")
-        return str(rows[0][0])
+        return self.settings().data_path
 
     # --- CDC --------------------------------------------------------------
 
@@ -610,9 +651,7 @@ class MetadataProvider:
                 for r in self._fetchall(Q.DELETE_FILES_ADDED_BETWEEN,
                                         (table_id, start, end, table_id, start, end))]
 
-    # --- bulk (information_schema) ----------------------------------------
-
-    _INLINE_NAME_RE = None  # compiled lazily below
+    # --- inlined data, macros, partitions, name mappings, tags -------------
 
     def get_inlined_tables(self, table_id: int) -> list[str]:
         """Names of the table's inlined-data tables from the
@@ -620,14 +659,9 @@ class MetadataProvider:
         inlining: DuckDB stores small inserts as ROWS IN THE CATALOG DB,
         one table per (table_id, schema_version), instead of parquet).
         Catalogs that predate the feature have no registry — []."""
-        import re
-        try:
-            rows = self._fetchall(
-                "SELECT table_name FROM ducklake_inlined_data_tables "
-                "WHERE table_id = ?", (table_id,))
-        except Exception:
-            return []
-        names = [r[0] for r in rows]
+        names = [r[0] for r in self._read(
+            "SELECT r.table_name FROM ducklake_inlined_data_tables r "
+            "WHERE r.table_id = ?", (table_id,))]
         for n in names:
             # registry content reaches SQL identifiers — harden like paths
             if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", n):
@@ -666,21 +700,16 @@ class MetadataProvider:
         # data_inlining_alter.test): a column ADDed after the rows were
         # inlined is absent from the inline table — it reads NULL, same
         # as a parquet file missing the field id. Dropped columns simply
-        # stop being selected.
-        have = None
-        try:
-            have = {str(r[1]).lower() for r in self._fetchall(
-                f'PRAGMA table_info("{inline_table}")')}
-        except Exception:
-            try:
-                have = {str(r[0]).lower() for r in self._fetchall(
-                    "SELECT column_name FROM information_schema.columns "
-                    "WHERE table_name = ?", (inline_table,))}
-            except Exception:
-                have = None
+        # stop being selected. The registry names the table, so the
+        # shape is re-read when it lacks the table or a column.
+        have = self._shape.columns(inline_table, *column_names, fresh=True)
+        if have is None:
+            raise CatalogCorruption(
+                f"inlined-data table {inline_table!r} is registered but "
+                "absent from the catalog")
+        have = {c.lower() for c in have}
         cols = ", ".join(
-            f'"{c}"' if (have is None or c.lower() in have)
-            else f'NULL AS "{c}"'
+            f'"{c}"' if c.lower() in have else f'NULL AS "{c}"'
             for c in column_names)
         # the snapshot trails the data columns (consumers zip against
         # the schema, so the extra element is only read where needed)
@@ -692,25 +721,22 @@ class MetadataProvider:
         """Live catalog macros at the snapshot (DuckLake macro tables;
         layout per the reference's sql/macros/ corpus). Catalogs without
         the tables have no macros."""
-        try:
-            rows = self._fetchall(
-                "SELECT m.macro_id, m.macro_name, i.body, i.macro_type, "
-                "COALESCE(s.schema_name, 'main') "
-                "FROM ducklake_macro m "
-                "JOIN ducklake_macro_impl i ON m.macro_id = i.macro_id "
-                "LEFT JOIN ducklake_schema s ON m.schema_id = s.schema_id "
-                "AND s.end_snapshot IS NULL "
-                "WHERE m.begin_snapshot <= ? "
-                "AND (m.end_snapshot IS NULL OR m.end_snapshot > ?)",
-                (snapshot_id, snapshot_id))
-        except Exception:
-            return []
+        rows = self._read(
+            "SELECT m.macro_id, m.macro_name, i.body, i.macro_type, "
+            "COALESCE(s.schema_name, 'main') "
+            "FROM ducklake_macro m "
+            "JOIN ducklake_macro_impl i ON m.macro_id = i.macro_id "
+            "LEFT JOIN ducklake_schema s ON m.schema_id = s.schema_id "
+            "AND s.end_snapshot IS NULL "
+            "WHERE m.begin_snapshot <= ? "
+            "AND (m.end_snapshot IS NULL OR m.end_snapshot > ?)",
+            (snapshot_id, snapshot_id))
         out = []
         for mid, name, body, kind, schema_name in rows:
-            params = self._fetchall(
-                "SELECT parameter_name, default_value "
-                "FROM ducklake_macro_parameters WHERE macro_id = ? "
-                "ORDER BY position", (int(mid),))
+            params = self._read(
+                "SELECT p.parameter_name, p.default_value "
+                "FROM ducklake_macro_parameters p WHERE p.macro_id = ? "
+                "ORDER BY p.position", (int(mid),))
             out.append(MacroMeta(int(mid), name, body, kind,
                                  [(p, d) for p, d in params],
                                  str(schema_name)))
@@ -724,42 +750,28 @@ class MetadataProvider:
         year_month_day.test). [] when the table is unpartitioned or the
         catalog predates the feature; legacy catalogs without the
         transform column read as identity."""
-        base = ("FROM ducklake_partition_info i "
-                "JOIN ducklake_partition_column c "
-                "ON i.partition_id = c.partition_id "
-                "AND i.table_id = c.table_id "
-                "WHERE i.table_id = ? AND i.begin_snapshot <= ? "
-                "AND (i.end_snapshot IS NULL OR i.end_snapshot > ?) "
-                "ORDER BY c.partition_key_index")
-        try:
-            rows = self._fetchall(
-                "SELECT c.partition_key_index, c.column_id, c.transform "
-                + base, (table_id, snapshot_id, snapshot_id))
-            return [(int(r[0]), int(r[1]),
-                     (r[2] or "identity").lower()) for r in rows]
-        except Exception:
-            pass
-        try:
-            rows = self._fetchall(
-                "SELECT c.partition_key_index, c.column_id " + base,
-                (table_id, snapshot_id, snapshot_id))
-        except Exception:
-            return []
-        return [(int(r[0]), int(r[1]), "identity") for r in rows]
+        return [(int(r[0]), int(r[1]), (r[2] or "identity").lower())
+                for r in self._read(
+                    "SELECT c.partition_key_index, c.column_id, "
+                    "{c.transform} "
+                    "FROM ducklake_partition_info i "
+                    "JOIN ducklake_partition_column c "
+                    "ON i.partition_id = c.partition_id "
+                    "AND i.table_id = c.table_id "
+                    "WHERE i.table_id = ? AND i.begin_snapshot <= ? "
+                    "AND (i.end_snapshot IS NULL OR i.end_snapshot > ?) "
+                    "ORDER BY c.partition_key_index",
+                    (table_id, snapshot_id, snapshot_id))]
 
     def get_file_partition_values(self, table_id: int
                                   ) -> dict[int, dict[int, Optional[str]]]:
         """{data_file_id: {partition_key_index: value_str}} — exact
         per-file partition values for pruning."""
-        try:
-            rows = self._fetchall(
-                "SELECT data_file_id, partition_key_index, partition_value "
-                "FROM ducklake_file_partition_value WHERE table_id = ?",
-                (table_id,))
-        except Exception:
-            return {}
         out: dict[int, dict[int, Optional[str]]] = {}
-        for fid, idx, val in rows:
+        for fid, idx, val in self._read(
+                "SELECT v.data_file_id, v.partition_key_index, "
+                "v.partition_value FROM ducklake_file_partition_value v "
+                "WHERE v.table_id = ?", (table_id,)):
             out.setdefault(int(fid), {})[int(idx)] = val
         return out
 
@@ -772,19 +784,15 @@ class MetadataProvider:
         is_partition rows take their value from hive-style ``name=value``
         path segments; corpus: sql/add_files/). {} when the catalog
         predates name mappings."""
-        try:
-            rows = self._fetchall(
+        out: dict[int, list[tuple[int, str, bool]]] = {}
+        for mid, cid, src, part in self._read(
                 "SELECT n.mapping_id, n.column_id, n.source_name, "
-                "n.is_partition "
+                "{n.is_partition} "
                 "FROM ducklake_name_mapping n "
                 "JOIN ducklake_column_mapping m "
                 "ON n.mapping_id = m.mapping_id "
                 "WHERE m.table_id = ?",
-                (table_id,))
-        except Exception:
-            return {}
-        out: dict[int, list[tuple[int, str, bool]]] = {}
-        for mid, cid, src, part in rows:
+                (table_id,)):
             out.setdefault(int(mid), []).append(
                 (int(cid), src, bool(part)))
         return out
@@ -793,26 +801,20 @@ class MetadataProvider:
                 snapshot_id: int) -> Optional[str]:
         """Live value of one object tag (ducklake_tag; COMMENT ON uses
         key='comment'), or None."""
-        try:
-            rows = self._fetchall(
-                "SELECT value FROM ducklake_tag WHERE object_id = ? "
-                "AND key = ? AND begin_snapshot <= ? "
-                "AND (end_snapshot IS NULL OR end_snapshot > ?)",
-                (object_id, key, snapshot_id, snapshot_id))
-        except Exception:
-            return None
+        rows = self._read(
+            "SELECT g.value FROM ducklake_tag g WHERE g.object_id = ? "
+            "AND g.key = ? AND g.begin_snapshot <= ? "
+            "AND (g.end_snapshot IS NULL OR g.end_snapshot > ?)",
+            (object_id, key, snapshot_id, snapshot_id))
         return rows[0][0] if rows else None
 
     def get_column_tag(self, table_id: int, column_id: int, key: str,
                        snapshot_id: int) -> Optional[str]:
-        try:
-            rows = self._fetchall(
-                "SELECT value FROM ducklake_column_tag WHERE table_id = ? "
-                "AND column_id = ? AND key = ? AND begin_snapshot <= ? "
-                "AND (end_snapshot IS NULL OR end_snapshot > ?)",
-                (table_id, column_id, key, snapshot_id, snapshot_id))
-        except Exception:
-            return None
+        rows = self._read(
+            "SELECT g.value FROM ducklake_column_tag g WHERE g.table_id = ? "
+            "AND g.column_id = ? AND g.key = ? AND g.begin_snapshot <= ? "
+            "AND (g.end_snapshot IS NULL OR g.end_snapshot > ?)",
+            (table_id, column_id, key, snapshot_id, snapshot_id))
         return rows[0][0] if rows else None
 
     def count_ended_files(self, table_id: int) -> int:
@@ -871,6 +873,7 @@ class SqliteMetadataProvider(MetadataProvider):
     sub-millisecond; contention is not a concern."""
 
     def __init__(self, db_path: str):
+        super().__init__()
         self._conn = sqlite3.connect(db_path, check_same_thread=False)
         self._lock = threading.Lock()
 
@@ -887,7 +890,10 @@ class DuckdbMetadataProvider(MetadataProvider):
     """DuckDB catalog access, read-only connection
     (ref: metadata_provider_duckdb.rs:16-70)."""
 
+    dialect = "duckdb"
+
     def __init__(self, db_path: str):
+        super().__init__()
         import duckdb
         # Read-write connection even though the provider only reads:
         # DuckDB rejects same-file connections with DIFFERENT configs in
@@ -895,6 +901,9 @@ class DuckdbMetadataProvider(MetadataProvider):
         # DML/DDL over duckdb-format catalogs (META_TYPE 'DUCKDB').
         # Read-only is still honored where it matters: sessions enforce
         # it at the API layer, and an unwritable file falls back here.
+        # The read-write open fails in more than one way (an unwritable
+        # file, another process's lock), so this read-only retry is the
+        # one broad handler of this module.
         try:
             self._conn = duckdb.connect(db_path)
         except Exception:
@@ -914,7 +923,10 @@ class PostgresMetadataProvider(MetadataProvider):
     Same SQL surface; qmark params are rewritten to %s (psycopg style).
     Import-gated: psycopg is not bundled in every environment."""
 
+    dialect = "postgres"
+
     def __init__(self, dsn: str):
+        super().__init__()
         try:
             import psycopg
         except ImportError as e:  # pragma: no cover - driver not in container
@@ -936,7 +948,10 @@ class MySqlMetadataProvider(MetadataProvider):
     """MySQL catalog access (ref: metadata_provider_mysql.rs).
     Import-gated on mysql-connector; %s param style."""
 
+    dialect = "mysql"
+
     def __init__(self, **connect_kwargs):
+        super().__init__()
         try:
             import mysql.connector
         except ImportError as e:  # pragma: no cover - driver not in container

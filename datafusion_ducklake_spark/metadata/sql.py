@@ -14,19 +14,35 @@ we use an equivalent NOT-EXISTS "latest earlier delete" join that runs
 unchanged on SQLite and DuckDB.
 """
 
+# The catalog's shape: one (table, column) row per column of every table
+# in the catalog database, in column order — one statement per dialect,
+# shared by the provider and the writer. The live backends scope it to
+# the connection's own schema: a shared server may host a same-named
+# table elsewhere whose columns must not leak in.
+CATALOG_SHAPE_SQLITE = """
+SELECT m.name, p.name FROM sqlite_master m, pragma_table_info(m.name) p
+WHERE m.type = 'table' ORDER BY m.name, p.cid
+"""
+_INFO_SCHEMA_SHAPE = """
+SELECT table_name, column_name FROM information_schema.columns
+WHERE table_schema = {scope} ORDER BY table_name, ordinal_position
+"""
+CATALOG_SHAPE = {
+    "sqlite": CATALOG_SHAPE_SQLITE,
+    "duckdb": _INFO_SCHEMA_SHAPE.format(
+        scope="current_schema() AND table_catalog = current_database()"),
+    "postgres": _INFO_SCHEMA_SHAPE.format(scope="current_schema()"),
+    "mysql": _INFO_SCHEMA_SHAPE.format(scope="DATABASE()"),
+}
+
 GET_LATEST_SNAPSHOT = "SELECT COALESCE(MAX(snapshot_id), 0) FROM ducklake_snapshot"
 
+# {alias.column} slots name columns that older catalog generations lack;
+# the provider reads them as NULL there (MetadataProvider._read)
 LIST_SNAPSHOTS = """
-SELECT snapshot_id, CAST(snapshot_time AS VARCHAR) AS snapshot_time
-FROM ducklake_snapshot ORDER BY snapshot_id
-"""
-
-# audit columns (author / commit_message — sql/audit/ corpus); catalogs
-# that predate them fall back to LIST_SNAPSHOTS
-LIST_SNAPSHOTS_AUDIT = """
-SELECT snapshot_id, CAST(snapshot_time AS VARCHAR) AS snapshot_time,
-       author, commit_message
-FROM ducklake_snapshot ORDER BY snapshot_id
+SELECT s.snapshot_id, CAST(s.snapshot_time AS VARCHAR) AS snapshot_time,
+       {s.author}, {s.commit_message}
+FROM ducklake_snapshot s ORDER BY s.snapshot_id
 """
 
 _VISIBLE = "? >= {t}.begin_snapshot AND (? < {t}.end_snapshot OR {t}.end_snapshot IS NULL)"
@@ -70,17 +86,7 @@ ORDER BY v.view_id
 
 GET_TABLE_COLUMNS = f"""
 SELECT c.column_id, c.column_name, c.column_type, c.nulls_allowed, c.parent_column,
-       c.initial_default, c.default_value, c.begin_snapshot
-FROM ducklake_column c
-WHERE c.table_id = ? AND {_VISIBLE.format(t='c')}
-ORDER BY c.column_order
-"""
-# Catalogs written before the default-value columns existed (DuckLake
-# pre-0.2 / earlier versions of this writer) lack initial_default /
-# default_value — the provider falls back to this legacy shape.
-GET_TABLE_COLUMNS_LEGACY = f"""
-SELECT c.column_id, c.column_name, c.column_type, c.nulls_allowed, c.parent_column,
-       NULL, NULL, c.begin_snapshot
+       {{c.initial_default}}, {{c.default_value}}, c.begin_snapshot
 FROM ducklake_column c
 WHERE c.table_id = ? AND {_VISIBLE.format(t='c')}
 ORDER BY c.column_order
@@ -106,7 +112,10 @@ LEFT JOIN ducklake_delete_file AS del
 WHERE data.table_id = ? AND {_VISIBLE.format(t='data')}
 """
 
-GET_DATA_PATH = "SELECT value FROM ducklake_metadata WHERE key = 'data_path' AND scope IS NULL"
+# every setting at every scope, in one read (pre-scope catalogs: global)
+LIST_SETTINGS = """
+SELECT m.key, m.value, {m.scope}, {m.scope_id} FROM ducklake_metadata m
+"""
 
 # Per-file column stats for catalog-level file pruning — the reference
 # leaves this as TODO (metadata_provider.rs:569); real DuckLake catalogs

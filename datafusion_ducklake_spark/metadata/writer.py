@@ -34,7 +34,8 @@ from typing import Optional
 
 from ..errors import InvalidConfig
 from ..types import is_geometry_type, types_compatible
-from .provider import ColumnMeta
+from . import sql as Q
+from .provider import CatalogShape, ColumnMeta
 
 DDL = """
 CREATE TABLE IF NOT EXISTS ducklake_metadata (
@@ -342,6 +343,12 @@ class CatalogWriter:
         self._conn = conn
         self._lock = threading.RLock()
         self._dialect = dialect
+        # the catalog's shape, probed inside the writer's own
+        # transaction: stale at every BEGIN (another writer may have
+        # added a table since), forgotten after a ROLLBACK or this
+        # writer's own DDL
+        self._shape = CatalogShape(lambda: self._conn.execute(
+            Q.CATALOG_SHAPE[dialect]).fetchall())
 
     # -- construction ------------------------------------------------------
 
@@ -418,49 +425,17 @@ class CatalogWriter:
         return stmt
 
     def _ensure_lazy(self, cur, table: str, ddl: str) -> None:
-        """Lazy aux-table creation (pre-existing catalogs may predate
-        newer tables). Cached per writer; on MySQL the existence check
-        runs FIRST because any DDL — even a no-op IF NOT EXISTS —
-        implicitly commits an open transaction. The one genuinely-absent
-        case still commits (first-ever use of the feature on that
-        catalog), which is documented and unavoidable without a separate
+        """Create an auxiliary catalog table that an older catalog lacks,
+        decided from the shape — never a DDL statement when the table is
+        there: on MySQL any DDL, even a no-op IF NOT EXISTS, implicitly
+        commits an open transaction. The one genuinely-absent case still
+        commits there (first-ever use of the feature on that catalog),
+        which is documented and unavoidable without a separate
         connection."""
-        known = getattr(self, "_known_aux", None)
-        if known is None:
-            known = self._known_aux = set()
-        if table in known:
+        if self._shape.has(table):
             return
-        if self._dialect == "mysql":
-            rows = cur.execute(
-                "SELECT 1 FROM information_schema.tables WHERE "
-                "table_name = ? AND table_schema = DATABASE()",
-                (table,)).fetchall()
-            if rows:
-                known.add(table)
-                return
-        # NOT cached after executing: the CREATE is transactional on the
-        # other dialects, so a rolled-back enclosing txn would leave the
-        # cache claiming a table that does not exist. Re-running
-        # IF NOT EXISTS is sub-ms; only the verified-exists fast path
-        # above caches.
         cur.execute(self._dialect_ddl(ddl))
-
-    def _table_columns_of(self, cur, name: str) -> set:
-        """Lower-cased column names of a catalog-side table, dialect-
-        aware (PRAGMA table_info on sqlite/duckdb, information_schema on
-        the live backends)."""
-        if self._dialect in ("postgres", "mysql"):
-            # scope to OUR schema/database: a shared server may host a
-            # same-named table elsewhere whose columns must not leak in
-            scope = ("current_schema()" if self._dialect == "postgres"
-                     else "DATABASE()")
-            rows = cur.execute(
-                "SELECT column_name FROM information_schema.columns "
-                f"WHERE table_name = ? AND table_schema = {scope}",
-                (name,)).fetchall()
-            return {str(r[0]).lower() for r in rows}
-        return {str(r[1]).lower() for r in cur.execute(
-            f'PRAGMA table_info("{name}")').fetchall()}
+        self._shape.forget()
 
     def initialize_schema(self, data_path: str = "") -> None:
         """Create the seven catalog tables + data_path + snapshot 0
@@ -481,6 +456,7 @@ class CatalogWriter:
                 cur.execute(
                     "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
                     "VALUES (0, CURRENT_TIMESTAMP)")
+            self._shape.forget()
 
     # -- transaction helper ------------------------------------------------
 
@@ -526,6 +502,7 @@ class CatalogWriter:
                             import time as _time
                             _time.sleep(0.05 * (attempt + 1))
                     writer._txn_failed = False
+                    writer._shape.stale()
                 writer._txn_depth = depth + 1
                 return writer._conn
 
@@ -537,6 +514,7 @@ class CatalogWriter:
                     if writer._txn_depth == 0:
                         if writer._txn_failed:
                             writer._conn.execute("ROLLBACK")
+                            writer._shape.forget()
                             # allocated-but-never-persisted snapshot ids
                             # must NOT reach the session's rollback scope:
                             # a concurrent session can commit the same id
@@ -738,16 +716,9 @@ class CatalogWriter:
         """Stamp audit info on a committed snapshot (DuckDB's
         ducklake.set_commit_message; corpus: sql/audit/). Pre-audit
         catalogs get the columns added on demand."""
-        for col in ("author", "commit_message"):
-            # each probe in its own transaction: a failed statement can
-            # poison the surrounding txn on some backends
-            try:
-                with self._txn() as cur:
-                    cur.execute("ALTER TABLE ducklake_snapshot "
-                                f"ADD COLUMN {col} VARCHAR")
-            except Exception:
-                pass                       # column already present
         with self._txn() as cur:
+            for col in ("author", "commit_message"):
+                self._ensure_column(cur, "ducklake_snapshot", col, "VARCHAR")
             cur.execute(
                 "UPDATE ducklake_snapshot SET author = ?, "
                 "commit_message = ? WHERE snapshot_id = ?",
@@ -808,13 +779,11 @@ class CatalogWriter:
                 "SELECT view_id FROM ducklake_view "
                 "WHERE schema_id = ? AND end_snapshot IS NULL",
                 (schema_id,)).fetchall()
-            try:
-                live_macros = cur.execute(
-                    "SELECT macro_id FROM ducklake_macro "
-                    "WHERE schema_id = ? AND end_snapshot IS NULL",
-                    (schema_id,)).fetchall()
-            except Exception:
-                live_macros = []        # catalog predates macro tables
+            live_macros = cur.execute(
+                "SELECT macro_id FROM ducklake_macro "
+                "WHERE schema_id = ? AND end_snapshot IS NULL",
+                (schema_id,)).fetchall() \
+                if self._shape.has("ducklake_macro") else []
             if (live or live_views or live_macros) and not cascade:
                 raise InvalidConfig(
                     f"Cannot drop schema {schema_name}: there are entries "
@@ -1100,29 +1069,27 @@ class CatalogWriter:
             return WriteSetup(sid, schema_id, table_id, setup_cols,
                               schema_path, table_path)
 
+    def _has_primary_key(self, cur, table: str) -> bool:
+        """Whether a catalog table declares a PRIMARY KEY (catalogs from
+        before MVCC renames did). The live backends' catalogs come from
+        this module's DDL, which declares none on the renamed tables."""
+        if self._dialect == "sqlite":
+            return any(int(r[5]) == 1 for r in cur.execute(
+                f"PRAGMA table_info({table})").fetchall())
+        if self._dialect == "duckdb":
+            return bool(cur.execute(
+                "SELECT 1 FROM duckdb_constraints() WHERE table_name = ? "
+                "AND constraint_type = 'PRIMARY KEY'", (table,)).fetchall())
+        return False
+
     def _ensure_table_mvcc(self) -> None:
         """Catalogs created before MVCC renames declared ``table_id
         INTEGER PRIMARY KEY`` on ducklake_table — which rejects the
         second same-id row a rename writes. Detect the constraint and
         rebuild the table without it (copy-swap), once."""
-        has_pk = False
-        try:
-            if self._dialect == "sqlite":
-                with self._txn() as cur:
-                    has_pk = any(
-                        int(r[5]) == 1 for r in cur.execute(
-                            "PRAGMA table_info(ducklake_table)").fetchall())
-            else:
-                with self._txn() as cur:
-                    has_pk = bool(cur.execute(
-                        "SELECT 1 FROM duckdb_constraints() WHERE "
-                        "table_name = 'ducklake_table' AND "
-                        "constraint_type = 'PRIMARY KEY'").fetchall())
-        except Exception:
-            return
-        if not has_pk:
-            return
         with self._txn() as cur:
+            if not self._has_primary_key(cur, "ducklake_table"):
+                return
             cur.execute("ALTER TABLE ducklake_table RENAME TO "
                         "__ducklake_table_pk")
             cur.execute(
@@ -1137,6 +1104,7 @@ class CatalogWriter:
                 "table_name, path, path_is_relative, begin_snapshot, "
                 "end_snapshot FROM __ducklake_table_pk")
             cur.execute("DROP TABLE __ducklake_table_pk")
+            self._shape.forget()
 
     def rename_table(self, table_id: int, new_name: str) -> int:
         """ALTER TABLE ... RENAME TO (corpus: sql/alter/rename_table*):
@@ -1280,10 +1248,7 @@ class CatalogWriter:
                     "WHERE table_id = ? AND row_id_start IS NOT NULL",
                     (table_id,)).fetchall()
                 cand = int(rows[0][0])
-                try:
-                    inl = self.max_inlined_row_id(table_id)
-                except Exception:
-                    inl = None
+                inl = self._max_inlined_row_id(cur, table_id)
                 if inl is not None:
                     cand = max(cand, int(inl) + 1)
             self._bump_next_row_id(cur, table_id, cand)
@@ -1368,28 +1333,20 @@ class CatalogWriter:
                        sql_type: str) -> None:
         """ALTER-if-missing migration for catalogs created before the
         column existed (older engine versions / foreign writers).
-        Probe-first, never try/except around the ALTER: a failed
-        statement inside an open transaction poisons it on Postgres
-        (InFailedSqlTransaction — every later statement in the txn
-        errors) and on DuckDB."""
-        known = getattr(self, "_known_cols", None)
-        if known is None:
-            known = self._known_cols = set()
-        if (table, column) in known:
-            return
-        if column.lower() in self._table_columns_of(cur, table):
-            # cache ONLY the verified-exists path (mirrors _ensure_lazy):
-            # caching right after an ALTER would go stale if the
-            # enclosing transaction rolls back
-            known.add((table, column))
+        Shape-first: the ALTER runs only where the shape lacks the
+        column, since a failed statement inside an open transaction
+        poisons it on Postgres (InFailedSqlTransaction — every later
+        statement in the txn errors) and on DuckDB."""
+        if self._shape.has(table, column):
             return
         if self._dialect in ("postgres", "duckdb"):
-            # atomic — closes the probe/ALTER race against a concurrent
+            # atomic — closes the shape/ALTER race against a concurrent
             # writer without risking a failed statement inside the open
             # transaction (which Postgres would poison)
             cur.execute(self._dialect_ddl(
                 f"ALTER TABLE {table} ADD COLUMN IF NOT EXISTS "
                 f"{column} {sql_type}"))
+            self._shape.forget()
             return
         # sqlite/mysql lack ADD COLUMN IF NOT EXISTS. A concurrent
         # duplicate ALTER is tolerable here: sqlite serializes writers on
@@ -1399,10 +1356,10 @@ class CatalogWriter:
             cur.execute(self._dialect_ddl(
                 f"ALTER TABLE {table} ADD COLUMN {column} {sql_type}"))
         except Exception:
-            if column.lower() not in self._table_columns_of(cur, table):
+            self._shape.forget()
+            if not self._shape.has(table, column):
                 raise          # not a lost duplicate-column race
-        # deliberately NOT cached: an ALTER inside a transaction that
-        # later rolls back would leave a stale "exists" entry
+        self._shape.forget()
 
     def _fold_table_column_stats(self, cur, table_id: int, cid: int,
                                  nulls, mn, mx, nan, extra,
@@ -1535,34 +1492,20 @@ class CatalogWriter:
         PRIMARY KEY`` reject the second same-id row a rename writes —
         copy-swap the constraint away, once (same treatment as
         _ensure_table_mvcc)."""
-        has_pk = False
-        try:
-            if self._dialect == "sqlite":
-                with self._txn() as cur:
-                    rows = cur.execute(
-                        "PRAGMA table_info(ducklake_view)").fetchall()
-                    if not rows:
-                        return
-                    has_pk = any(int(r[5]) == 1 for r in rows)
-            else:
-                with self._txn() as cur:
-                    has_pk = bool(cur.execute(
-                        "SELECT 1 FROM duckdb_constraints() WHERE "
-                        "table_name = 'ducklake_view' AND "
-                        "constraint_type = 'PRIMARY KEY'").fetchall())
-        except Exception:
-            return
-        if not has_pk:
-            return
         with self._txn() as cur:
+            if not self._shape.has("ducklake_view") or \
+                    not self._has_primary_key(cur, "ducklake_view"):
+                return
             cur.execute("ALTER TABLE ducklake_view RENAME TO "
                         "__ducklake_view_pk")
+            self._shape.forget()
             self._ensure_lazy(cur, "ducklake_view", self._VIEW_DDL)
             cur.execute(
                 "INSERT INTO ducklake_view SELECT view_id, schema_id, "
                 "view_name, dialect, sql, column_aliases, begin_snapshot, "
                 "end_snapshot FROM __ducklake_view_pk")
             cur.execute("DROP TABLE __ducklake_view_pk")
+            self._shape.forget()
 
     def rename_view(self, schema_id: int, view_name: str,
                     new_name: str) -> int:
@@ -1618,10 +1561,7 @@ class CatalogWriter:
                 (table_id,)).fetchall()
             base = max(int(rows[0][0]),
                        self._stored_next_row_id(cur, table_id))
-        try:
-            inl = self.max_inlined_row_id(table_id)
-        except Exception:
-            inl = None
+            inl = self._max_inlined_row_id(cur, table_id)
         return base if inl is None else max(base, int(inl) + 1)
 
     def create_name_mapping(self, table_id: int, column_names: list[str],
@@ -1853,6 +1793,13 @@ class CatalogWriter:
         specs = [(c, "identity") if not isinstance(c, tuple) else c
                  for c in column_ids]
         with self._txn() as cur:
+            transform = self._shape.has("ducklake_partition_column",
+                                        "transform")
+            if not transform and any(tf != "identity" for _c, tf in specs):
+                raise InvalidConfig(
+                    "this catalog's ducklake_partition_column lacks the "
+                    "transform column — partition transforms need a "
+                    "newer catalog")
             sid = self._next_id(cur, "ducklake_snapshot", "snapshot_id")
             cur.execute(
                 "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
@@ -1869,24 +1816,13 @@ class CatalogWriter:
                     "table_id, begin_snapshot) VALUES (?, ?, ?)",
                     (pid, table_id, sid))
                 for idx, (cid, tf) in enumerate(specs):
-                    try:
-                        cur.execute(
-                            "INSERT INTO ducklake_partition_column "
-                            "(partition_id, table_id, partition_key_index, "
-                            "column_id, transform) VALUES (?, ?, ?, ?, ?)",
-                            (pid, table_id, idx, cid, tf))
-                    except Exception:
-                        # legacy catalog without the transform column
-                        if tf != "identity":
-                            raise InvalidConfig(
-                                "this catalog's ducklake_partition_column "
-                                "lacks the transform column — partition "
-                                "transforms need a newer catalog")
-                        cur.execute(
-                            "INSERT INTO ducklake_partition_column "
-                            "(partition_id, table_id, partition_key_index, "
-                            "column_id) VALUES (?, ?, ?, ?)",
-                            (pid, table_id, idx, cid))
+                    cur.execute(
+                        "INSERT INTO ducklake_partition_column "
+                        "(partition_id, table_id, partition_key_index, "
+                        + ("column_id, transform) VALUES (?, ?, ?, ?, ?)"
+                           if transform else "column_id) VALUES (?, ?, ?, ?)"),
+                        (pid, table_id, idx, cid) + ((tf,) if transform
+                                                     else ()))
             return sid
 
     def register_file_partition_values(self, data_file_id: int,
@@ -2005,10 +1941,10 @@ class CatalogWriter:
         ``scope``/``scope_id``: per-schema ('schema', schema_id) or
         per-table ('table', table_id) overrides, the DuckLake scoped-
         settings layout (corpus: sql/settings/per_table_settings).
-        Catalogs created before the scope_id column fall back to
-        global-only writes."""
+        Catalogs created before the scope columns take global writes
+        only."""
         with self._txn() as cur:
-            try:
+            if self._shape.has("ducklake_metadata", "scope", "scope_id"):
                 cur.execute(
                     "DELETE FROM ducklake_metadata WHERE key = ? AND "
                     "COALESCE(scope, '') = COALESCE(?, '') AND "
@@ -2019,15 +1955,17 @@ class CatalogWriter:
                         "INSERT INTO ducklake_metadata (key, value, scope, "
                         "scope_id) VALUES (?, ?, ?, ?)",
                         (key, str(value), scope, scope_id))
-            except Exception:
-                if scope is not None:
-                    raise
-                cur.execute("DELETE FROM ducklake_metadata WHERE key = ?",
-                            (key,))
-                if value is not None:
-                    cur.execute(
-                        "INSERT INTO ducklake_metadata (key, value) "
-                        "VALUES (?, ?)", (key, str(value)))
+                return
+            if scope is not None:
+                raise InvalidConfig(
+                    "this catalog's ducklake_metadata predates scoped "
+                    "settings (no scope/scope_id columns)")
+            cur.execute("DELETE FROM ducklake_metadata WHERE key = ?",
+                        (key,))
+            if value is not None:
+                cur.execute(
+                    "INSERT INTO ducklake_metadata (key, value) "
+                    "VALUES (?, ?)", (key, str(value)))
 
     _SQLITE_AFFINITY = {"int": "BIGINT", "float": "DOUBLE",
                         "double": "DOUBLE", "decimal": "VARCHAR",
@@ -2055,19 +1993,21 @@ class CatalogWriter:
             # collide rowids (the catalog txn serializes the allocation)
             row_id_start = self.next_row_id(table_id)
         with self._txn() as cur:
-            cur.execute(self._dialect_ddl(
-                f'CREATE TABLE IF NOT EXISTS "{name}" ('
+            self._ensure_lazy(
+                cur, name, f'CREATE TABLE IF NOT EXISTS "{name}" ('
                 "row_id BIGINT, begin_snapshot BIGINT, end_snapshot BIGINT, "
-                f"{cols_ddl})"))
+                f"{cols_ddl})")
             # schema evolution: an inline table created before an ALTER
             # ADD COLUMN lacks the new column — extend it in place (old
             # rows read NULL, matching parquet missing-field semantics)
-            have = self._table_columns_of(cur, name)
+            have = {c.lower()
+                    for c in self._shape.columns(name, *column_names)}
             for c, t in zip(column_names, column_types):
                 if c.lower() not in have:
                     cur.execute(self._dialect_ddl(
                         f'ALTER TABLE "{name}" ADD COLUMN "{c}" '
                         f"{self._affinity(t)}"))
+                    self._shape.forget()
             known = cur.execute(
                 "SELECT COUNT(*) FROM ducklake_inlined_data_tables "
                 "WHERE table_id = ? AND table_name = ?",
@@ -2091,22 +2031,29 @@ class CatalogWriter:
                 return sql
         return "VARCHAR"
 
-    def max_inlined_row_id(self, table_id: int) -> Optional[int]:
+    def _inlined_tables(self, cur, table_id: Optional[int] = None
+                        ) -> list[str]:
+        """The inlined-data tables the registry lists — the table's own
+        with ``table_id`` — as safe identifiers; [] on a catalog without
+        the registry."""
+        if not self._shape.has("ducklake_inlined_data_tables"):
+            return []
+        where, args = ("WHERE table_id = ?", (table_id,)) \
+            if table_id is not None else ("", ())
+        return [r[0] for r in cur.execute(
+            f"SELECT DISTINCT table_name FROM ducklake_inlined_data_tables "
+            f"{where}", args).fetchall()
+            if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", r[0])]
+
+    def _max_inlined_row_id(self, cur, table_id: int) -> Optional[int]:
         """MAX(row_id) over the table's inlined-data tables (rowid
         sequencing must advance past inlined rows too)."""
-        with self._txn() as cur:
-            names = [r[0] for r in cur.execute(
-                "SELECT table_name FROM ducklake_inlined_data_tables "
-                "WHERE table_id = ?", (table_id,)).fetchall()]
-            top = None
-            for n in names:
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", n):
-                    continue
-                m = cur.execute(
-                    f'SELECT MAX(row_id) FROM "{n}"').fetchall()[0][0]
-                if m is not None:
-                    top = m if top is None else max(top, int(m))
-            return top
+        top = None
+        for n in self._inlined_tables(cur, table_id):
+            m = cur.execute(f'SELECT MAX(row_id) FROM "{n}"').fetchall()[0][0]
+            if m is not None:
+                top = m if top is None else max(top, int(m))
+        return top
 
     def delete_inlined_rows(self, table_id: int, snapshot_id: int,
                             row_ids: list[int]) -> int:
@@ -2117,12 +2064,7 @@ class CatalogWriter:
         if not row_ids:
             return 0
         with self._txn() as cur:
-            names = [r[0] for r in cur.execute(
-                "SELECT table_name FROM ducklake_inlined_data_tables "
-                "WHERE table_id = ?", (table_id,)).fetchall()]
-            for nm in names:
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", nm):
-                    continue
+            for nm in self._inlined_tables(cur, table_id):
                 ph = ",".join("?" * len(row_ids))
                 cur.execute(
                     f'UPDATE "{nm}" SET end_snapshot = ? '
@@ -2134,22 +2076,20 @@ class CatalogWriter:
                               new: str) -> None:
         """Keep live inlined-data tables aligned with a catalog column
         rename: the inline tables store columns BY NAME (no field ids),
-        so the physical column renames with the catalog one. Residual
-        gap: time travel to before the rename reads the renamed inlined
-        column as NULL (parquet gets this right via field ids)."""
+        so the physical column renames with the catalog one — in the
+        tables that have it (a table inlined before the column was added
+        lacks it). Residual gap: time travel to before the rename reads
+        the renamed inlined column as NULL (parquet gets this right via
+        field ids)."""
         with self._txn() as cur:
-            names = [r[0] for r in cur.execute(
-                "SELECT table_name FROM ducklake_inlined_data_tables "
-                "WHERE table_id = ?", (table_id,)).fetchall()]
-            for nm in names:
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", nm):
-                    continue
-                try:
+            for nm in self._inlined_tables(cur, table_id):
+                have = {c.lower() for c in
+                        self._shape.columns(nm, old, fresh=True) or []}
+                if old.lower() in have and new.lower() not in have:
                     cur.execute(
                         f'ALTER TABLE "{nm}" RENAME COLUMN "{old}" '
                         f'TO "{new}"')
-                except Exception:
-                    pass        # column may predate/postdate the rows
+                    self._shape.forget()
 
     def end_inlined_rows(self, inline_table: str, snapshot_id: int) -> None:
         """End every live row of one inlined-data table (data-inlining
@@ -2304,15 +2244,7 @@ class CatalogWriter:
             ).fetchall()[0][0]
             if oldest is None:
                 return
-            try:
-                inlined = [r[0] for r in cur.execute(
-                    "SELECT DISTINCT table_name "
-                    "FROM ducklake_inlined_data_tables").fetchall()]
-            except Exception:
-                inlined = []
-            for nm in inlined:
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", nm):
-                    continue
+            for nm in self._inlined_tables(cur):
                 cur.execute(
                     f'DELETE FROM "{nm}" WHERE end_snapshot IS NOT NULL '
                     "AND end_snapshot <= ?", (oldest,))
@@ -2350,52 +2282,44 @@ class CatalogWriter:
             snap_p, snap_a = "snapshot_id > ?", (snapshot_id,)
         dropped: list[tuple] = []
         with self._txn() as cur:
+            has = self._shape.has
             for ftbl in ("ducklake_data_file", "ducklake_delete_file"):
-                try:
-                    dropped += cur.execute(
-                        f"SELECT f.path, f.path_is_relative, t.path, "
-                        f"t.path_is_relative, s.path, s.path_is_relative "
-                        f"FROM {ftbl} f "
-                        "JOIN ducklake_table t ON f.table_id = t.table_id "
-                        "JOIN ducklake_schema s ON t.schema_id = s.schema_id "
-                        f"WHERE f.{born_p}", born_a).fetchall()
-                except Exception:
-                    pass    # pre-scope catalog shapes: skip the cleanup
-            for tbl in self._MVCC_TABLES:
+                dropped += cur.execute(
+                    f"SELECT f.path, f.path_is_relative, t.path, "
+                    f"t.path_is_relative, s.path, s.path_is_relative "
+                    f"FROM {ftbl} f "
+                    "JOIN ducklake_table t ON f.table_id = t.table_id "
+                    "JOIN ducklake_schema s ON t.schema_id = s.schema_id "
+                    f"WHERE f.{born_p}", born_a).fetchall()
+            # an older catalog lacks some of these tables: nothing of
+            # theirs to rewind
+            for tbl in filter(has, self._MVCC_TABLES):
                 cur.execute(
                     f"DELETE FROM {tbl} WHERE {born_p}", born_a)
                 cur.execute(
                     f"UPDATE {tbl} SET end_snapshot = NULL "
                     f"WHERE {end_p}", end_a)
-            cur.execute(
-                "DELETE FROM ducklake_file_column_stats WHERE data_file_id "
-                "NOT IN (SELECT data_file_id FROM ducklake_data_file)")
             # inlined-data rows version by snapshot too — without this
             # sweep, a rolled-back inlined insert would RESURRECT when
             # the next snapshot reuses the deleted id (ids are max+1)
-            try:
-                inlined = [r[0] for r in cur.execute(
-                    "SELECT DISTINCT table_name "
-                    "FROM ducklake_inlined_data_tables").fetchall()]
-            except Exception:
-                inlined = []
-            for n in inlined:
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", n):
-                    continue
+            for n in self._inlined_tables(cur):
                 cur.execute(f'DELETE FROM "{n}" WHERE {born_p}', born_a)
                 cur.execute(f'UPDATE "{n}" SET end_snapshot = NULL '
                             f"WHERE {end_p}", end_a)
-            for tbl in ("ducklake_macro_impl", "ducklake_macro_parameters"):
-                cur.execute(
-                    f"DELETE FROM {tbl} WHERE macro_id "
-                    "NOT IN (SELECT macro_id FROM ducklake_macro)")
-            cur.execute(
-                "DELETE FROM ducklake_partition_column WHERE partition_id "
-                "NOT IN (SELECT partition_id FROM ducklake_partition_info)")
-            cur.execute(
-                "DELETE FROM ducklake_file_partition_value WHERE "
-                "data_file_id NOT IN "
-                "(SELECT data_file_id FROM ducklake_data_file)")
+            for tbl, key, owner in (
+                    ("ducklake_file_column_stats", "data_file_id",
+                     "ducklake_data_file"),
+                    ("ducklake_file_partition_value", "data_file_id",
+                     "ducklake_data_file"),
+                    ("ducklake_macro_impl", "macro_id", "ducklake_macro"),
+                    ("ducklake_macro_parameters", "macro_id",
+                     "ducklake_macro"),
+                    ("ducklake_partition_column", "partition_id",
+                     "ducklake_partition_info")):
+                if has(tbl) and has(owner):
+                    cur.execute(
+                        f"DELETE FROM {tbl} WHERE {key} "
+                        f"NOT IN (SELECT {key} FROM {owner})")
             cur.execute(
                 f"DELETE FROM ducklake_snapshot WHERE {snap_p}", snap_a)
             self._ensure_lazy(

@@ -133,11 +133,28 @@ def _pyarrow_dest(table_path: str):
     return pafs.LocalFileSystem(), p
 
 
+def _delete_file_options(settings, target) -> dict:
+    """pyarrow ``write_table`` options for a table's delete files: the
+    parquet_compression (and, for zstd, parquet_compression_level)
+    settings that its data files honour."""
+    def get(key):
+        return settings.get(key, target.schema_id, target.table_id)
+    opts = {}
+    comp = (get("parquet_compression") or "").lower()
+    if comp:
+        opts["compression"] = "none" if comp == "uncompressed" else comp
+    level = get("parquet_compression_level")
+    if level and comp == "zstd":
+        opts["compression_level"] = int(level)
+    return opts
+
+
 def _write_delete_parquets(spark, matched_pos: DataFrame, prior: dict,
-                           table_path: str,
-                           encrypt: bool = False) -> list:
+                           table_path: str, encrypt: bool = False,
+                           options: Optional[dict] = None) -> list:
     """Write one cumulative delete parquet per TOUCHED file from the
     executors; returns the collected manifest rows (O(files)).
+    ``options`` are pyarrow write options (``_delete_file_options``).
 
     ``matched_pos`` carries the positions this DML newly matched;
     ``prior`` maps each dirty data file's URI to the deletion vector of
@@ -186,7 +203,7 @@ def _write_delete_parquets(spark, matched_pos: DataFrame, prior: dict,
             write_encrypted(tbl, dest, key)
         else:
             with fs.open_output_stream(dest) as out:
-                pq.write_table(tbl, out)
+                pq.write_table(tbl, out, **(options or {}))
         size = fs.get_file_info(dest).size
         return pd.DataFrame([{"file_name": fname, "delete_name": name,
                               "cum_count": len(positions),
@@ -559,26 +576,28 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
     vector, not from a scan of the delete files. ``append_only_if_matched``
     (UPDATE) skips staging when the manifest shows zero matches, since
     its append derives from the matched rows."""
-    encrypted_catalog = (session.provider.get_option("encrypted")
-                         or "").lower() in ("true", "1")
+    settings = session.provider.settings()
+    target = target_of(session, handle)
     manifest = _write_delete_parquets(
         session.spark, matched_pos,
         deletion_vectors(session.spark,
                          {f.data_uri: f for f in handle.files}),
-        handle.table_path, encrypt=encrypted_catalog)
+        handle.table_path,
+        encrypt=(settings.get("encrypted") or "").lower() in ("true", "1"),
+        options=_delete_file_options(settings, target))
     n_matched = sum(int(r["new_count"]) for r in manifest) \
         + len(inlined_row_ids or [])
 
-    target = target_of(session, handle)
     staged = []
     if appended is not None and (n_matched > 0 or not append_only_if_matched):
         staged = stage_files(session, target, appended,
-                             include_rowid=rowid_in_file)
+                             include_rowid=rowid_in_file, settings=settings)
     if appended_fresh is not None:
         # MERGE's insert half: fresh rows in their own files so the
         # update half's rowid-column files stay pure (every row of a
         # rowid-column file must carry an id)
-        staged += stage_files(session, target, appended_fresh)
+        staged += stage_files(session, target, appended_fresh,
+                              settings=settings)
     n_append = sum(f.rows for f in staged)
 
     if n_matched == 0 and n_append == 0:
@@ -586,7 +605,7 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
     tid = handle.meta.table_id
     labels = ([f"deleted_from_table:{tid}"] if n_matched else []) + \
              ([f"inserted_into_table:{tid}"] if n_append else [])
-    writer = _catalog_writer(session)
+    writer = _catalog_writer(session, settings)
     try:
         with writer._txn():
             snapshot_id = writer.create_snapshot(labels)
@@ -600,5 +619,5 @@ def _delete_and_append(session, handle, matched_pos: DataFrame,
             register_files(writer, snapshot_id, target, staged)
     finally:
         writer.close()
-    session.refresh()
+    session.refresh(settings)
     return n_matched, n_append

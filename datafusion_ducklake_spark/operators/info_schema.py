@@ -375,7 +375,8 @@ def metadata_table_df(session, name: str) -> DataFrame:
             if re.fullmatch(r"ducklake_[a-z0-9_]+", name) else None)
     if not cols:
         raise InvalidConfig(f"not a metadata catalog table: {name!r}")
-    rows = session.provider._fetchall(f'SELECT * FROM "{name}"')
+    rows = session.provider._fetchall(
+        "SELECT " + ", ".join(f'"{c}"' for c in cols) + f' FROM "{name}"')
     fields = []
     for i, c in enumerate(cols):
         vals = [r[i] for r in rows if r[i] is not None]

@@ -74,8 +74,8 @@ FILE_COL = "__ducklake_file"
 ROWID_FILE_COL = "_ducklake_row_id"
 
 # Per-row insertion-snapshot column inside a data file: written by
-# flush_inlined_data so rows migrated from catalog inlining keep their
-# ORIGINAL snapshot_id through the storage change (upstream corpus:
+# flush_inlined_data and by compaction so rows keep their ORIGINAL
+# snapshot_id through the storage change (upstream corpus:
 # sql/data_inlining/data_inlining_flush.test asserts rowid AND
 # snapshot_id survive the flush). Same reserved-prefix convention as
 # ROWID_FILE_COL; only consulted by the virtual-column scan.
@@ -862,12 +862,16 @@ def _with_row_columns(df: DataFrame, by_key: dict, key: Column,
 
 def _riders(files: list[ResolvedFile], extras: list[str]) -> list[str]:
     """Reserved in-file columns to read alongside the data for
-    ``extras``: only files without a catalog ``row_id_start`` carry them
-    (a file lacking one reads it as NULL)."""
-    if not extras or all(f.row_id_start is not None for f in files):
-        return []
-    return [ROWID_FILE_COL] + (
-        [SNAPSHOT_FILE_COL] if "snapshot_id" in extras else [])
+    ``extras``: the rowid column where a file has no catalog
+    ``row_id_start``, and the snapshot column whenever ``snapshot_id``
+    is asked for — a compaction's run files carry one beside their
+    ``row_id_start``. A file lacking one reads it as NULL."""
+    riders = []
+    if extras and any(f.row_id_start is None for f in files):
+        riders.append(ROWID_FILE_COL)
+    if "snapshot_id" in extras:
+        riders.append(SNAPSHOT_FILE_COL)
+    return riders
 
 
 def _scan_files(spark: SparkSession, schema: T.StructType,

@@ -42,17 +42,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .errors import InvalidConfig
+from .metadata.provider import Settings
 from .metadata.writer import CatalogWriter, ColumnDef, DataFileInfo, WriteMode
 from .types import (is_geometry_type, is_interval_type,
                     spark_to_ducklake_type)
 
 
-def _catalog_writer(session) -> CatalogWriter:
+def _catalog_writer(session, settings: Optional[Settings] = None
+                    ) -> CatalogWriter:
+    """The session's catalog writer; ``settings`` is the statement's
+    settings read when it has one."""
     w = _catalog_writer_raw(session)
     # max_retry_count (DuckDB's ducklake_max_retry_count, default 10):
     # retries of the catalog BEGIN on transient cross-process lock
     # contention — sql/settings/max_retry_count.test
-    raw = session.provider.get_option("max_retry_count")
+    raw = (settings or session.provider.settings()).get("max_retry_count")
     if raw is not None:
         try:
             w.max_retry_count = max(0, int(raw))
@@ -100,7 +104,7 @@ def _catalog_writer_raw(session) -> CatalogWriter:
     return CatalogWriter.sqlite(path)
 
 
-def _parquet_write_options(session, schema_id: int,
+def _parquet_write_options(settings: Settings, schema_id: int,
                            table_id: int) -> dict[str, str]:
     """DataFrameWriter options for the DuckLake parquet write settings
     (corpus: sql/settings/), resolved with table > schema > global
@@ -110,8 +114,7 @@ def _parquet_write_options(session, schema_id: int,
     (→ parquet.block.size). parquet_row_group_size (a ROW count) is
     stored for DuckDB writers sharing the catalog but has no parquet-mr
     equivalent — Spark's writer splits row groups by bytes."""
-    get = lambda k: session.provider.get_scoped_option(  # noqa: E731
-        k, schema_id, table_id)
+    get = lambda k: settings.get(k, schema_id, table_id)  # noqa: E731
     opts: dict[str, str] = {}
     comp = get("parquet_compression")
     if comp:
@@ -542,15 +545,14 @@ def _parse_part_segs(segs: list[str], key_names: list[str]):
     return pvals, subsegs
 
 
-def _hive_file_pattern(session, table_id: int,
+def _hive_file_pattern(settings: Settings, table_id: int,
                        schema_id: Optional[int]) -> bool:
     """The ``hive_file_pattern`` scoped option (sql/partitioning/
     disable_hive_partitioning.test): False writes a partitioned table's
     files FLAT in the table dir — partition values still register in the
     catalog, so pruning is unaffected; only the directory layout
     changes. Default True (hive-style key=value subdirs)."""
-    v = session.provider.get_scoped_option(
-        "hive_file_pattern", schema_id, table_id)
+    v = settings.get("hive_file_pattern", schema_id, table_id)
     return v is None or str(v).strip().lower() not in (
         "false", "0", "no", "f")
 
@@ -728,8 +730,8 @@ def _expect_planned(target: WriteTarget, setup) -> None:
             "write was staged; retry the statement")
 
 
-def _file_split(session, target: WriteTarget, out: DataFrame,
-                per_thread: Optional[bool]) -> DataFrame:
+def _file_split(session, settings: Settings, target: WriteTarget,
+                out: DataFrame, per_thread: Optional[bool]) -> DataFrame:
     """One file per write by default (DuckLake's one-file-per-insert
     contract, the reference's collect-to-one-batch shape). With
     target_file_size (sql/insert/insert_file_size.test) a large write
@@ -739,7 +741,7 @@ def _file_split(session, target: WriteTarget, out: DataFrame,
     a too-big one. per_thread_output (sql/settings/
     per_thread_output.test), or ``per_thread`` from the caller, keeps
     the plan's write parallelism — one file per Spark partition."""
-    get = lambda k: session.provider.get_scoped_option(  # noqa: E731
+    get = lambda k: settings.get(  # noqa: E731
         k, target.schema_id, target.table_id)
     n_out = 1
     target_raw = get("target_file_size")
@@ -759,9 +761,9 @@ def _file_split(session, target: WriteTarget, out: DataFrame,
     return out.repartition(n_out) if n_out > 1 else out.coalesce(1)
 
 
-def stage_files(session, target: WriteTarget, df: DataFrame,
-                include_rowid: bool = False, include_snapshot: bool = False,
-                runs: Optional[list] = None,
+def stage_files(session, target: WriteTarget, df: DataFrame, *,
+                settings: Settings, include_rowid: bool = False,
+                include_snapshot: bool = False, runs: Optional[list] = None,
                 per_thread: Optional[bool] = None) -> list[StagedFile]:
     """Write ``df``'s rows as finalized parquet in the table directory
     WITHOUT registering them — every write that creates data files
@@ -772,11 +774,13 @@ def stage_files(session, target: WriteTarget, df: DataFrame,
 
     The file contents: the target's columns with their field ids and
     NOT NULL enforced inside the write job, plus with ``include_rowid``
-    each row's ``rowid`` as the reserved in-file rowid column (and with
+    each row's ``rowid`` as the reserved in-file rowid column — the
+    stable-rowid rewrites of UPDATE, flush and merge — and with
     ``include_snapshot`` its ``__begin_snapshot`` as the in-file
-    snapshot column) — the stable-rowid rewrites of UPDATE, flush and
-    merge. The table's parquet write settings apply (compression,
-    version, row-group bytes) and the file split of ``_file_split``.
+    snapshot column, so a rewrite keeps each row's insertion snapshot.
+    The table's parquet write settings, from the statement's
+    ``settings`` read, apply (compression, version, row-group bytes) and
+    the file split of ``_file_split``.
 
     The writer: INTERVAL tables stage through the duckdb-backed
     executor writer (the only local route to the parquet INTERVAL type);
@@ -788,14 +792,15 @@ def stage_files(session, target: WriteTarget, df: DataFrame,
     partition values)]; ``df`` carries a ``__run`` column and each run
     becomes exactly one file registered at its own row_id_start."""
     from pyspark.sql import functions as F
+
+    from .sources.scan import ROWID_FILE_COL, SNAPSHOT_FILE_COL
     data_cols = [c.column_name for c in target.columns]
     extra = []
     if include_rowid:
-        from .sources.scan import ROWID_FILE_COL, SNAPSHOT_FILE_COL
         extra.append(F.col("rowid").cast("long").alias(ROWID_FILE_COL))
-        if include_snapshot:
-            extra.append(F.col("__begin_snapshot").cast("long")
-                         .alias(SNAPSHOT_FILE_COL))
+    if include_snapshot:
+        extra.append(F.col("__begin_snapshot").cast("long")
+                     .alias(SNAPSHOT_FILE_COL))
     if runs is not None:
         extra.append(F.col("__run"))
     not_null = [c.column_name for c in target.columns if not c.nulls_allowed]
@@ -806,15 +811,14 @@ def stage_files(session, target: WriteTarget, df: DataFrame,
     part_keys = [] if runs is not None else _partition_keys(
         target.spec, {c.column_id: c.column_name for c in target.columns})
     if runs is None:
-        out = _file_split(session, target, out, per_thread)
+        out = _file_split(session, settings, target, out, per_thread)
     table_path = target.table_path
 
     def staged(name, size, footer, rows, pvals=None, key=None):
         return StagedFile(name, size, footer, rows, pvals or None, key,
                           rowid_in_file=include_rowid)
 
-    encrypted = (session.provider.get_option("encrypted") or "").lower() \
-        in ("true", "1")
+    encrypted = (settings.get("encrypted") or "").lower() in ("true", "1")
     iv_cols = [c.column_name for c in target.columns
                if is_interval_type(c.column_type)]
     if runs is not None and (iv_cols or encrypted):
@@ -864,7 +868,7 @@ def stage_files(session, target: WriteTarget, df: DataFrame,
         keys.append(f"{_PART_PREFIX}{i}")
     staging = table_path.rstrip("/") + f"/stage-{uuid.uuid4().hex}"
     dfw = out.write.options(**_parquet_write_options(
-        session, target.schema_id, target.table_id))
+        settings, target.schema_id, target.table_id))
     try:
         (dfw.partitionBy(*keys) if keys else dfw).parquet(
             staging, mode="errorifexists")
@@ -884,7 +888,8 @@ def stage_files(session, target: WriteTarget, df: DataFrame,
                                            runs), runs)]
     if part_keys:
         dir_keys = [dk for _b, _t, dk in part_keys]
-        hive = _hive_file_pattern(session, target.table_id, target.schema_id)
+        hive = _hive_file_pattern(settings, target.table_id,
+                                  target.schema_id)
         files = (_finalize_partitioned_hadoop(
             session.spark, staging, table_path, dir_keys, hive_dirs=hive)
             if remote else _finalize_partitioned_local(
@@ -1286,6 +1291,7 @@ def merge_groups_rowid_column(session, name: str, groups: list,
 
     handle = session.table_handle(name)
     target = target_of(session, handle)
+    settings = session.provider.settings()
     staged = []
     for group in groups:
         df = scan_table(session.spark, handle.spark_schema,
@@ -1293,15 +1299,15 @@ def merge_groups_rowid_column(session, name: str, groups: list,
         df = df.select(*[c.column_name for c in handle.columns], "rowid",
                        F.col("snapshot_id").alias("__begin_snapshot"))
         staged += stage_files(session, target, df, include_rowid=True,
-                              include_snapshot=True)
+                              include_snapshot=True, settings=settings)
 
-    writer = _catalog_writer(session)
+    writer = _catalog_writer(session, settings)
     try:
         with writer._txn():
             snap = _end_members(writer, handle.meta.table_id,
                                 [m for g in groups for m in g])
             n_rows = register_files(writer, snap, target, staged)
-        session.refresh()
+        session.refresh(settings)
         return n_rows
     finally:
         writer.close()
@@ -1387,7 +1393,9 @@ def rewrite_file_groups(session, name: str, groups: list,
     across groups. Files outside the groups keep their exact catalog
     registration. Run discovery (_live_runs) reads only the members'
     deletion vectors, which the rewrite's own scan then filters with, and
-    refuses past ``max_runs`` runs. The runs are staged first; the
+    refuses past ``max_runs`` runs. Each row keeps its insertion
+    snapshot through the in-file snapshot column (the outputs register
+    in the rewrite's snapshot). The runs are staged first; the
     members end and the outputs register in one transaction behind
     ``expect_live_member``, so a failed or conflicting rewrite leaves the
     table as it was."""
@@ -1448,10 +1456,13 @@ def rewrite_file_groups(session, name: str, groups: list,
     runs = [(i, s, c, group_pv[g]) for i, (g, s, c) in enumerate(found)]
 
     target = target_of(session, handle)
+    settings = session.provider.settings()
     staged = []
     if runs:
         df = scan_table(session.spark, handle.spark_schema,
-                        [rf for _, rf in pairs], with_rowid=True)
+                        [rf for _, rf in pairs], with_virtual=True)
+        df = df.select(*[c.column_name for c in handle.columns], "rowid",
+                       F.col("snapshot_id").alias("__begin_snapshot"))
         ranges = session.spark.createDataFrame(
             [(i, s, s + c - 1) for i, s, c, _pv in runs],
             "__run LONG, __lo LONG, __hi LONG")
@@ -1464,14 +1475,14 @@ def rewrite_file_groups(session, name: str, groups: list,
         staged = stage_files(
             session, target,
             df.repartition("__run").sortWithinPartitions("__run", "rowid"),
-            runs=runs)
+            include_snapshot=True, runs=runs, settings=settings)
 
-    writer = _catalog_writer(session)
+    writer = _catalog_writer(session, settings)
     try:
         with writer._txn():
             snap = _end_members(writer, tid, pairs)
             n_rows = register_files(writer, snap, target, staged)
-        session.refresh()
+        session.refresh(settings)
         return n_rows
     finally:
         writer.close()
@@ -1550,7 +1561,7 @@ _INLINABLE_SPARK_TYPES = ("IntegerType", "LongType", "ShortType",
                           "DecimalType")
 
 
-def _inline_rows(session, df: DataFrame, target: WriteTarget):
+def _inline_rows(settings: Settings, df: DataFrame, target: WriteTarget):
     """Write-side data inlining (sql/data_inlining/ corpus): an append at
     or under data_inlining_row_limit stores its rows IN the catalog DB
     instead of parquet — DuckDB's DATA_INLINING_ROW_LIMIT behavior.
@@ -1561,7 +1572,7 @@ def _inline_rows(session, df: DataFrame, target: WriteTarget):
     import datetime
     import decimal
 
-    limit_s = session.provider.get_option("data_inlining_row_limit")
+    limit_s = settings.get("data_inlining_row_limit")
     try:
         limit = int(limit_s or 0)
     except ValueError:
@@ -1621,13 +1632,15 @@ def create_or_insert(session, name: str, df: DataFrame, mode: str,
             schema_name, table_name, _column_defs(df.schema), write_mode,
             maintenance=maintenance, replace_definition=replace_definition)
 
-    writer = _catalog_writer(session)
+    settings = session.provider.settings()
+    writer = _catalog_writer(session, settings)
     try:
         target = _plan_write(session, writer, setup)
-        inline = _inline_rows(session, df, target) \
+        inline = _inline_rows(settings, df, target) \
             if write_mode == WriteMode.APPEND else None
         staged = [] if inline is not None else stage_files(
-            session, target, df, per_thread=None if single_file else True)
+            session, target, df, per_thread=None if single_file else True,
+            settings=settings)
         with writer._txn():
             done = setup(writer)
             _expect_planned(target, done)
@@ -1640,7 +1653,7 @@ def create_or_insert(session, name: str, df: DataFrame, mode: str,
                                         staged, keep_empty=True)
             if commit_marker is not None:
                 writer.set_option(commit_marker[0], commit_marker[1])
-        session.refresh()
+        session.refresh(settings)
         return n_rows
     finally:
         writer.close()

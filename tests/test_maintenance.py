@@ -694,3 +694,32 @@ def test_add_files_ignores_extra_non_micro_time_column(dl, spark, tmp_path):
     dl.create_empty_table("main.x", "k INTEGER")
     assert dl.add_files("main.x", [f], ignore_extra_columns=True) == 2
     assert sorted(r.k for r in dl.table("main.x").collect()) == [1, 2]
+
+
+def test_run_path_compaction_keeps_each_rows_snapshot_id(spark, tmp_path):
+    """compact and merge_adjacent_files rewrite contiguous rowid runs into
+    files registered in the rewrite's snapshot; each row still reads the
+    snapshot that inserted it, through any number of rewrites."""
+    db = str(tmp_path / "snap.sqlite")
+    w = CatalogWriter.sqlite(db)
+    w.initialize_schema(data_path=str(tmp_path / "lake"))
+    w.close()
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.s", spark.range(0, 3).selectExpr("id"))
+    dl.insert_into("main.s", spark.range(3, 6).selectExpr("id"))
+
+    def snapshot_of():
+        return {r.id: r.snapshot_id
+                for r in dl.table("main.s", with_virtual=True).collect()}
+
+    inserted = snapshot_of()
+    assert len(set(inserted.values())) == 2
+    dl.compact("main.s")
+    files = dl.table_handle("main.s")._raw_files
+    assert len(files) == 1 and files[0].row_id_start is not None
+    assert snapshot_of() == inserted
+    dl.insert_into("main.s", spark.range(6, 8).selectExpr("id"))
+    inserted = snapshot_of()
+    assert dl.merge_adjacent_files() >= 1
+    assert len(dl.table_handle("main.s")._raw_files) == 1
+    assert snapshot_of() == inserted

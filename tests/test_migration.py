@@ -1,7 +1,9 @@
 """Old-catalog migration reads (corpus: sql/migration/): a catalog
 written by an earlier DuckLake version — no view/macro/tag/partition/
 inlined tables, no default-value columns on ducklake_column — must read
-unchanged through every fallback path."""
+unchanged. The catalog's shape says what it lacks: an absent table
+reads empty and an absent column reads NULL, without a failing
+statement."""
 
 from __future__ import annotations
 
@@ -121,3 +123,36 @@ def test_old_catalog_rowid_and_virtual(spark, old_catalog):
     assert got == {1: 0, 2: 1, 3: 2}
     v = dl.table("main.t", with_virtual=True).collect()
     assert {r["snapshot_id"] for r in v} == {1}
+
+
+def test_old_catalog_issues_no_failing_statement(spark, old_catalog):
+    dl = DuckLakeSession(spark, old_catalog)
+    dl.sql("SELECT count(*) FROM t").collect()
+    log = []
+    fetch = dl.provider._fetchall
+
+    def spy(query, params=()):
+        try:
+            rows = fetch(query, params)
+        except Exception as e:
+            log.append((query, e))
+            raise
+        log.append((query, None))
+        return rows
+
+    dl.provider._fetchall = spy
+    dl.refresh()
+    assert dl.sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 3
+    assert log and [q for q, e in log if e is not None] == []
+
+
+def test_old_catalog_shape_grows_under_a_live_session(spark, old_catalog):
+    """Session B's CREATE VIEW creates ducklake_view; session A, open
+    since before, sees the view after its refresh."""
+    a = DuckLakeSession(spark, old_catalog)
+    b = DuckLakeSession(spark, old_catalog)
+    assert a.sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 3
+    assert a.provider.list_views(1, a.catalog.snapshot_id) == []
+    b.sql("CREATE VIEW v AS SELECT id FROM t WHERE id > 1")
+    a.refresh()
+    assert a.sql("SELECT count(*) AS n FROM v").collect()[0]["n"] == 2

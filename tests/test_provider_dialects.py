@@ -41,6 +41,10 @@ class _FakeCursor:
         assert "?" not in sql, f"unrewritten qmark placeholder in: {sql}"
         assert sql.count("%s") == len(params), \
             f"placeholder/param mismatch: {sql.count('%s')} vs {len(params)}"
+        if sql == Q.CATALOG_SHAPE["postgres"]:
+            # the backing store is SQLite: answer the dialect's shape
+            # probe with SQLite's own
+            sql = Q.CATALOG_SHAPE["sqlite"]
         self._rows = self._conn.execute(
             sql.replace("%s", "?"), params).fetchall()
 

@@ -23,6 +23,7 @@ from pathlib import Path
 
 import pytest
 
+from datafusion_ducklake_spark.metadata import sql as Q
 from tests.ducklake_fixtures import build_users_fixture
 
 GOLDEN_DIR = Path(__file__).parent / "goldens"
@@ -39,6 +40,10 @@ class _RecordingCursor:
         assert sql.count(self._style) == len(params), \
             f"placeholder/param mismatch in: {sql}"
         self._log.append((self._method_ref[0], sql, tuple(params)))
+        if sql in (Q.CATALOG_SHAPE["postgres"], Q.CATALOG_SHAPE["mysql"]):
+            # the backing store is SQLite: answer the dialect's shape
+            # probe with SQLite's own
+            sql = Q.CATALOG_SHAPE["sqlite"]
         self._rows = self._conn.execute(
             sql.replace(self._style, "?"), params).fetchall()
 
@@ -173,7 +178,10 @@ def test_mysql_wire_golden(monkeypatch, fixture_db):
 
 def test_backends_emit_identical_logical_queries(monkeypatch, fixture_db):
     """Postgres and MySQL must send the SAME SQL text (both use %s): a
-    divergence means a backend-specific fork crept into the shared shim."""
+    divergence means a backend-specific fork crept into the shared shim.
+    The one deliberate fork is the catalog-shape probe, scoped to each
+    backend's own schema (sql.CATALOG_SHAPE): each sends exactly its own
+    probe, at the same point of the sequence."""
     from datafusion_ducklake_spark.metadata.provider import (
         MySqlMetadataProvider, PostgresMetadataProvider)
     log_pg, ref_pg = [], [""]
@@ -183,4 +191,15 @@ def test_backends_emit_identical_logical_queries(monkeypatch, fixture_db):
     _install_fake_driver(monkeypatch, "mysql.connector", fixture_db, log_my,
                          ref_my)
     _canonical_sequence(MySqlMetadataProvider(host="f", database="d"), ref_my)
-    assert _render(log_pg) == _render(log_my)
+
+    def probes(log, dialect):
+        return [m for m, sql, _p in log if sql == Q.CATALOG_SHAPE[dialect]]
+
+    def unified(log, dialect):
+        return [(m, "<shape probe>" if sql == Q.CATALOG_SHAPE[dialect]
+                 else sql, p) for m, sql, p in log]
+
+    assert probes(log_pg, "postgres") == probes(log_my, "mysql") == \
+        ["list_snapshots"]
+    assert _render(unified(log_pg, "postgres")) == \
+        _render(unified(log_my, "mysql"))

@@ -86,6 +86,9 @@ def test_compression_applies_to_dml_and_maintenance_files(dl, spark,
 
     dl.sql("UPDATE t SET s = 'y' WHERE id < 10")
     assert new_codecs() == {"ZSTD"}
+    # the UPDATE's delete file too (the table had none before)
+    assert _codecs(p for p in _files(tmp_path, "t")
+                   if "ducklake-delete-" in p) == {"ZSTD"}
     dl.merge_into("main.t", spark.createDataFrame(
         [(5, "z"), (500, "w")], "id BIGINT, s STRING"), ["id"],
         when_matched_update="source")
@@ -161,3 +164,29 @@ def test_schema_scope_options_listing_and_persistence(dl, spark, tmp_path):
                     ("lz4", "SCHEMA", "s1"),
                     ("gzip", "TABLE", "s1.t1"),
                     ("zstd", "TABLE", "main.t1")}
+
+
+def test_insert_reads_settings_in_one_statement(dl, spark, tmp_path):
+    """An INSERT reads every ducklake_metadata row once — retry count,
+    inlining limit, file size, parquet options, encryption and the
+    refresh's data_path alike — and never keeps them for the next
+    statement: a setting another writer changes in between applies."""
+    dl.sql("CREATE TABLE t (id INT, s STRING)")
+    dl.sql("INSERT INTO t VALUES (1, 'a')")
+    seen = []
+    fetch = dl.provider._fetchall
+
+    def spy(query, params=()):
+        seen.append(query)
+        return fetch(query, params)
+
+    dl.provider._fetchall = spy
+    dl.sql("INSERT INTO t VALUES (2, 'b')")
+    assert sum("ducklake_metadata" in q for q in seen) == 1
+
+    w = CatalogWriter.sqlite(str(tmp_path / "cat.sqlite"))
+    w.set_option("parquet_compression", "zstd")
+    w.close()
+    before = set(_files(tmp_path, "t"))
+    dl.sql("INSERT INTO t VALUES (3, 'c')")
+    assert _codecs(set(_files(tmp_path, "t")) - before) == {"ZSTD"}
