@@ -886,6 +886,23 @@ def drop_ducklake_secret(name: str = "__default") -> None:
     _DUCKLAKE_SECRETS.pop(name, None)
 
 
+# What a refresh learns from each change label the catalog writer records
+# (``label:<id>``): what the id names, and whether relation names may
+# have changed with it. Any other label, or an id that is not a number
+# (DuckDB records some objects by name), makes a refresh rebuild every
+# binding (DuckLakeSession.refresh).
+_CHANGE_LABELS = {
+    **dict.fromkeys(("inserted_into_table", "deleted_from_table",
+                     "compacted_table", "flushed_inlined_data",
+                     "altered_table"), ("table", False)),
+    **dict.fromkeys(("created_table", "dropped_table", "renamed_table"),
+                    ("table", True)),
+    **dict.fromkeys(("created_view", "dropped_view", "altered_view"),
+                    ("view", True)),
+    **dict.fromkeys(("created_schema", "dropped_schema"), ("schema", True)),
+    **dict.fromkeys(("created_macro", "dropped_macro"), ("macro", False)),
+}
+
 # Which frame each temp view name serves, per SparkSession. Temp views
 # are global to a SparkSession while bindings belong to a DuckLakeSession
 # (its catalog, its pin), so a name is re-created only when another
@@ -900,7 +917,8 @@ class DuckLakeSession:
     - ``dl.table('main.users')`` / ``dl.table('users')`` → DataFrame
     - ``dl.sql('SELECT ... FROM main.users')`` → DataFrame. A statement
       binds only the relations it names, at this session's pin, as temp
-      views; ``refresh()`` re-pins and rebuilds what the session bound
+      views; ``refresh()`` re-pins and rebuilds only the bound
+      relations the snapshots since the pin touched
     - ``dl.snapshots() / table_info() / list_files()`` and
       ``dl.table_changes / table_deletions`` (table-function parity,
       SURVEY §2A A13-14; SQL calls resolve to the same builders)
@@ -1006,11 +1024,18 @@ class DuckLakeSession:
             # covers beyond-history AND expired versions
             raise InvalidConfig(
                 f"No snapshot found at version {snapshot_id}")
-        self.catalog = DuckLakeCatalog(spark, self.provider, snapshot_id)
+        # (snapshot id, catalog version) the session is pinned at; the
+        # version is unknown for an explicit pin
+        self._pin = (self.provider.head() if snapshot_id is None
+                     else (snapshot_id, None))
+        self.catalog = DuckLakeCatalog(spark, self.provider, self._pin[0])
         # relation binder state at the pin (see _resolve_relations)
         self._names: Optional[dict] = None       # pin's relation names
         self._frames: dict[tuple, DataFrame] = {}   # relation key → frame
         self._views: dict[str, tuple] = {}       # temp view → relation key
+        # relation key → (what it named at the pin, keys its body bound)
+        self._deps: dict[tuple, tuple] = {}
+        self._building: list[set] = []      # keys bound by frames in build
         self._published: Optional[list] = None   # open statement's views
         self._txn_base: Optional[int] = None   # BEGIN's snapshot anchor
         self._macros: Optional[list] = None    # lazy ducklake_macro cache
@@ -1084,7 +1109,7 @@ class DuckLakeSession:
         registrar this replaced; ``sql()`` needs no call before it."""
         for view, key in self._views.items():
             self._release(view, self._frames[key])
-        self._frames, self._views = {}, {}
+        self._frames, self._views, self._deps = {}, {}, {}
 
     def _build(self, key: tuple) -> DataFrame:
         """The frame of relation ``key`` = (name, variant): variant None,
@@ -1117,33 +1142,58 @@ class DuckLakeSession:
                 f"{smeta.schema_name}.{meta.table_name}: {e}") from e
 
     def _bind(self, key: tuple, view: str) -> str:
-        """Bind relation ``key`` for this session as temp view ``view``."""
+        """Bind relation ``key`` for this session as temp view ``view``,
+        recording what it named at the pin and what its body bound."""
         df = self._frames.get(key)
         if df is None:
             if key in self._frames:
                 raise InvalidConfig(f"view {key[0]} refers to itself")
             self._frames[key] = None
+            self._building.append(set())
             try:
                 df = self._frames[key] = self._build(key)
             finally:
+                uses = self._building.pop()
                 if df is None:
                     del self._frames[key]
+            self._deps[key] = (self._identity(key), frozenset(uses))
+        self._uses(key)
         self._views[view] = key
         self._publish(view, df)
         return view
+
+    def _uses(self, key: tuple) -> None:
+        """Record that the frame in build reads relation ``key``."""
+        if self._building:
+            self._building[-1].add(key)
+
+    def _identity(self, key: tuple) -> Optional[tuple]:
+        """What relation ``key`` names at the pin: ("table", table_id) or
+        ("view", view_id); None for an ``AT (…)`` binding, which names
+        one snapshot for good, or a name the pin lacks."""
+        name, variant = key
+        if isinstance(variant, int):
+            return None
+        meta = self._relation(name)[1]
+        if isinstance(meta, TableMeta):
+            return "table", meta.table_id
+        return None if meta is None else ("view", meta.view_id)
 
     def _probe(self, key: tuple) -> DataFrame:
         """The frame of relation ``key``, leaving no binding behind:
         whatever building it binds (a view body's relations) is released
         again, and the session's own bindings are kept as they were."""
         frames, views = dict(self._frames), dict(self._views)
+        deps = dict(self._deps)
+        self._building.append(set())
         try:
             return self._build(key)
         finally:
+            self._building.pop()
             for view, k in self._views.items():
                 if view not in views:
                     self._release(view, self._frames[k])
-            self._frames, self._views = frames, views
+            self._frames, self._views, self._deps = frames, views, deps
 
     @contextlib.contextmanager
     def _statement(self):
@@ -1296,6 +1346,9 @@ class DuckLakeSession:
             if args:
                 view += f"_{zlib.crc32(repr(args).encode()):08x}"
             df = info_schema.relation(self, name, args)
+            # metadata is read at the pin: a view body naming it is
+            # rebuilt whenever the pin moves
+            self._uses((view, "metadata"))
             self._publish(view, df)
             if self._published is not None:
                 self._published.append((view, df))
@@ -2422,26 +2475,49 @@ class DuckLakeSession:
 
     def refresh(self, settings: Optional[Settings] = None) -> None:
         """Re-pin to the latest snapshot (the reference re-creates its
-        catalog per query session; hybrid_asyncdb.rs:120-144) and rebuild
-        the relations this session has bound, so a write's refresh pays
-        for them, not the next read. ``AT (…)`` bindings are pinned and
-        carry over. A relation gone at the new pin, or one that no
-        longer builds, loses its temp view; the next statement naming
-        it raises. ``settings``: a write's own settings read (see
+        catalog per query session; hybrid_asyncdb.rs:120-144) and bring
+        the relations this session has bound up to it, so a write's
+        refresh pays for them, not the next read. Frames carry forward
+        by snapshot:
+
+        - at an unchanged pin every frame is kept, and no catalog
+          statement runs beyond reading the head and the settings;
+        - after commits, one ranged read of their change labels names
+          the tables and views they touched. A frame is kept when its
+          name still resolves to the same table or view, no label names
+          that id, and, for a view, everything its body bound was kept.
+          ``AT (…)`` bindings are kept;
+        - everything is rebuilt when the labels cannot vouch for the
+          range: a snapshot without labels or with one not understood,
+          a ROLLBACK or expiry of the pin since, the head below the pin,
+          or another data path (settings are not snapshot-versioned).
+
+        A relation gone at the new pin, or one that no longer builds,
+        loses its temp view; the next statement naming it raises.
+        ``settings``: a write's own settings read (see
         DuckLakeCatalog)."""
+        pin, data_path = self._pin, self.catalog.resolver.data_path
+        self._pin = self.provider.head()
         self.catalog = DuckLakeCatalog(self.spark, self.provider,
-                                       settings=settings)
-        self._macros = None
-        self._names = None
+                                       self._pin[0], settings)
+        if self.catalog.resolver.data_path != data_path:
+            keep = self._rebuild_all()
+        elif self._pin == pin:
+            keep = set(self._frames)
+        else:
+            keep = self._carried(pin)
         frames, views = self._frames, self._views
-        self._frames = {k: df for k, df in frames.items()
-                        if isinstance(k[1], int)}
-        self._views = {v: k for v, k in views.items()
-                       if k in self._frames}
+        self._frames = {k: frames[k] for k in keep}
+        self._deps = {k: self._deps[k] for k in keep}
+        self._views = {v: k for v, k in views.items() if k in keep}
         gone = {k for k in frames
-                if k not in self._frames and self._relation(k[0])[1] is None}
+                if k not in keep and not isinstance(k[1], int)
+                and self._relation(k[0])[1] is None}
         for view, key in views.items():
-            if key in gone:
+            if key in keep:
+                # another session may have re-pointed the name
+                self._publish(view, frames[key])
+            elif key in gone:
                 self._release(view, frames[key])
         for view, key in views.items():
             if view in self._views or key in gone:
@@ -2452,6 +2528,58 @@ class DuckLakeSession:
                 # e.g. a view over a dropped table: raised again when a
                 # statement names it
                 self._release(view, frames[key])
+
+    def _rebuild_all(self) -> set:
+        self._names = self._macros = None
+        return set()
+
+    def _carried(self, pin: tuple) -> set:
+        """The bound relation keys whose frames hold at the new pin,
+        given the old ``pin`` (see refresh)."""
+        (old, old_version), (head, version) = pin, self._pin
+        old_version = old if old_version is None else old_version
+        if head < old or version < old_version:
+            return self._rebuild_all()
+        changes = self.provider.get_snapshot_changes(old - 1, version)
+        if old not in changes:          # rolled back or expired
+            return self._rebuild_all()
+        touched, renamed = set(), False
+        for sid, text in changes.items():
+            if sid <= old_version:      # the pin, or a rewind before it
+                continue
+            if text is None:            # a snapshot without labels
+                return self._rebuild_all()
+            for label in text.split(","):
+                kind, _, oid = label.strip().partition(":")
+                what = _CHANGE_LABELS.get(kind)
+                if what is None or not oid.isdigit():
+                    return self._rebuild_all()
+                touched.add((what[0], int(oid)))
+                renamed |= what[1]
+        if renamed:
+            self._names = None
+        if any(what == "macro" for what, _id in touched):
+            self._macros = None
+        carried: dict[tuple, bool] = {}
+
+        def same(key: tuple, ident: Optional[tuple]) -> bool:
+            if ident is None:           # AT (…): one snapshot for good
+                return True
+            if ident in touched:
+                return False
+            # with names moved, a view body may name something new
+            return not renamed or (ident[0] == "table"
+                                   and self._identity(key) == ident)
+
+        def holds(key: tuple) -> bool:
+            if key not in carried:
+                # metadata a view body read is never carried
+                dep = self._deps.get(key)
+                carried[key] = dep is not None and same(key, dep[0]) \
+                    and all(holds(u) for u in dep[1])
+            return carried[key]
+
+        return {k for k in self._frames if holds(k)}
 
     # -- info-schema / CDC / write entry points (other modules) ------------
 
@@ -2607,13 +2735,20 @@ class DuckLakeSession:
     # -- metadata-only ALTER TABLE (sql/alter/ corpus; zero file I/O) ----
 
     def _alter_columns(self, name: str, cols,
-                       nested_hints: Optional[dict] = None) -> None:
+                       nested_hints: Optional[dict] = None,
+                       then=None) -> None:
+        """Version the table's columns in one snapshot. ``then(writer,
+        table_id)`` writes the rest of the change in the same catalog
+        transaction: a visible snapshot never changes afterwards."""
         from .table_writer import _catalog_writer
         handle = self.table_handle(name)
         writer = _catalog_writer(self)
         try:
-            writer.version_columns(handle.meta.table_id, cols,
-                                   nested_hints=nested_hints)
+            with writer._txn():
+                writer.version_columns(handle.meta.table_id, cols,
+                                       nested_hints=nested_hints)
+                if then is not None:
+                    then(writer, handle.meta.table_id)
         finally:
             writer.close()
         self.refresh()
@@ -2694,17 +2829,11 @@ class DuckLakeSession:
                                     else c.column_name,
                                     c.column_type, c.nulls_allowed,
                                     c.initial_default, c.default_value))
-            for c in handle.columns])
-        if handle.inlined_tables:
+            for c in handle.columns],
             # inline tables store columns by name — rename the physical
             # column so live inlined rows keep resolving
-            from .table_writer import _catalog_writer
-            w = _catalog_writer(self)
-            try:
-                w.rename_inlined_column(handle.meta.table_id, old, new)
-            finally:
-                w.close()
-            self.refresh()
+            then=(lambda w, tid: w.rename_inlined_column(tid, old, new))
+            if handle.inlined_tables else None)
 
     def promote_column_type(self, name: str, col_name: str,
                             new_type: str) -> None:
@@ -2765,13 +2894,15 @@ class DuckLakeSession:
 
     def _edit_nested_column(self, name: str, col_path: str, action: str,
                             new_type: Optional[str] = None,
-                            lenient: bool = False) -> None:
+                            lenient: bool = False,
+                            default: Optional[str] = None) -> None:
         """Targeted nested field ALTER — ``ADD/DROP COLUMN col.path.field``
         (corpus: sql/alter/struct_evolution_*_alter.test). Rewrites the
         root column's type string via edit_nested_type and versions the
         columns; kept nested field ids stay stable by path (writer child-
         row reuse), added fields get fresh ids. ``lenient``: swallow the
-        already-exists / does-not-exist error (IF [NOT] EXISTS)."""
+        already-exists / does-not-exist error (IF [NOT] EXISTS).
+        ``default``: the added direct field's initial default."""
         from .errors import UnsupportedType
         from .metadata.writer import ColumnDef
         from .types import edit_nested_type
@@ -2801,7 +2932,10 @@ class DuckLakeSession:
                                     else c.column_type,
                                     c.nulls_allowed,
                                     c.initial_default, c.default_value))
-            for c in handle.columns])
+            for c in handle.columns],
+            then=None if default is None
+            else lambda w, tid: w.set_nested_field_default(
+                tid, root, path[0], default))
 
     def add_column(self, name: str, col_name: str, col_type: str,
                    default: Optional[str] = None,
@@ -2826,16 +2960,8 @@ class DuckLakeSession:
                         "DEFAULT on nested adds is supported only for "
                         "direct fields of a top-level struct column")
                 self._edit_nested_column(name, col_name, "add", col_type,
-                                         lenient=if_not_exists)
-                from .table_writer import _catalog_writer
-                handle = self.table_handle(name)
-                writer = _catalog_writer(self)
-                try:
-                    writer.set_nested_field_default(
-                        handle.meta.table_id, parts[0], parts[1], default)
-                finally:
-                    writer.close()
-                self.refresh()
+                                         lenient=if_not_exists,
+                                         default=default)
                 return
             self._edit_nested_column(name, col_name, "add", col_type,
                                      lenient=if_not_exists)

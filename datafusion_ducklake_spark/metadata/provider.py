@@ -241,6 +241,18 @@ class CatalogShape:
     def forget(self) -> None:
         self._tables = None
 
+    def seed(self, other: "CatalogShape") -> None:
+        """Start from ``other``'s present answers (they never go stale);
+        the first absent answer still reads the shape."""
+        self.rewind(other._tables)
+
+    def rewind(self, tables: Optional[dict]) -> None:
+        """Back to answers held earlier (``_tables`` is replaced on each
+        read, never changed in place), e.g. those from before a
+        transaction that rolled its own DDL back; the first absent
+        answer reads the shape again."""
+        self._tables, self._read_at = tables, -1
+
     def _read(self) -> dict:
         epoch = self._epoch
         cols: dict[str, list] = {}
@@ -366,6 +378,17 @@ class MetadataProvider:
     def get_current_snapshot(self) -> int:
         return int(self._snapshots(
             self._fetchall(Q.GET_LATEST_SNAPSHOT))[0][0])
+
+    def head(self) -> tuple[int, int]:
+        """(latest snapshot id, catalog version) in one statement. The
+        version is the highest snapshot id ever allocated, a ROLLBACK's
+        included: it equals the one read before iff no commit and no
+        rollback happened in between."""
+        if not self.has("ducklake_snapshot_changes"):
+            sid = self.get_current_snapshot()
+            return sid, sid
+        sid, top = self._snapshots(self._fetchall(Q.GET_HEAD))[0]
+        return int(sid), max(int(sid), int(top or 0))
 
     def list_snapshots(self) -> list[SnapshotMeta]:
         return [SnapshotMeta(int(r[0]), r[1], r[2], r[3])
@@ -557,13 +580,28 @@ class MetadataProvider:
         __ducklake_metadata_ducklake.ducklake_macro); [] when absent."""
         return list(self._shape.columns(table) or [])
 
-    def get_snapshot_changes(self) -> dict[int, str]:
+    def get_snapshot_changes(self, after: Optional[int] = None,
+                             upto: Optional[int] = None
+                             ) -> dict[int, Optional[str]]:
         """{snapshot_id: changes_made} from ducklake_snapshot_changes —
         the per-snapshot change summary real DuckLake catalogs record
-        (surfaces as the ``changes`` column of ducklake_snapshots())."""
-        return {int(r[0]): r[1] for r in self._read(
-            "SELECT c.snapshot_id, c.changes_made "
-            "FROM ducklake_snapshot_changes c")}
+        (surfaces as the ``changes`` column of ducklake_snapshots()).
+
+        With ``after``/``upto``, ids in (after, upto] only, in one
+        statement: every snapshot there is a key, None when it has no
+        change row, and a change row without a snapshot (a ROLLBACK's)
+        is a key too. A catalog without the table has no keys."""
+        if after is None:
+            return {int(r[0]): r[1] for r in self._read(
+                "SELECT c.snapshot_id, c.changes_made "
+                "FROM ducklake_snapshot_changes c")}
+        out: dict[int, Optional[str]] = {}
+        for sid, changes in self._read(Q.SNAPSHOT_CHANGES_BETWEEN,
+                                       (after, upto, after, upto)):
+            sid = int(sid)
+            out[sid] = ",".join(filter(None, (out.get(sid), changes))) \
+                or None
+        return out
 
     def list_registered_file_names(self) -> list[str]:
         """Every data/delete file path the catalog has EVER registered

@@ -37,6 +37,26 @@ CATALOG_SHAPE = {
 
 GET_LATEST_SNAPSHOT = "SELECT COALESCE(MAX(snapshot_id), 0) FROM ducklake_snapshot"
 
+# The head snapshot and the highest snapshot id ever allocated: a ROLLBACK
+# deletes visible snapshots and leaves a change row under a fresh id with
+# no snapshot row, so the second column moves on every commit AND every
+# rollback (metadata.writer.rollback_to_snapshot)
+GET_HEAD = """
+SELECT COALESCE(MAX(s.snapshot_id), 0),
+       (SELECT MAX(c.snapshot_id) FROM ducklake_snapshot_changes c)
+FROM ducklake_snapshot s
+"""
+
+# Snapshots and change rows with ids in (?, ?], one row each: (id, NULL)
+# per snapshot, (id, changes_made) per change row
+SNAPSHOT_CHANGES_BETWEEN = """
+SELECT s.snapshot_id, NULL FROM ducklake_snapshot s
+WHERE s.snapshot_id > ? AND s.snapshot_id <= ?
+UNION ALL
+SELECT c.snapshot_id, c.changes_made FROM ducklake_snapshot_changes c
+WHERE c.snapshot_id > ? AND c.snapshot_id <= ?
+"""
+
 # {alias.column} slots name columns that older catalog generations lack;
 # the provider reads them as NULL there (MetadataProvider._read)
 LIST_SNAPSHOTS = """

@@ -16,7 +16,9 @@ column rows only when the columns changed.
 Implementation notes:
 - IDs are allocated explicitly (MAX+1 inside the transaction) instead of
   relying on SQLite rowid autoincrement, so the identical writer works on
-  both sqlite3 and duckdb connections.
+  both sqlite3 and duckdb connections. A snapshot id is allocated above
+  every id a ROLLBACK deleted as well, so no snapshot id that was visible
+  is ever reused (``_snapshot_high_water``).
 - ``register_delete_file`` is an extension beyond the reference's writer
   (which never writes deletes — DuckDB's ducklake extension does that in
   its test setup); we need it to build MOR fixtures without network access
@@ -203,6 +205,12 @@ CREATE TABLE IF NOT EXISTS ducklake_inlined_data_tables (
     table_name VARCHAR NOT NULL,
     schema_version INTEGER
 );
+CREATE TABLE IF NOT EXISTS ducklake_table_stats (
+    table_id BIGINT PRIMARY KEY,
+    record_count BIGINT,
+    next_row_id BIGINT,
+    file_size_bytes BIGINT
+);
 CREATE TABLE IF NOT EXISTS ducklake_delete_file (
     delete_file_id INTEGER PRIMARY KEY,
     data_file_id INTEGER NOT NULL,
@@ -217,6 +225,10 @@ CREATE TABLE IF NOT EXISTS ducklake_delete_file (
     end_snapshot INTEGER
 );
 """
+
+# each catalog table's CREATE statement in DDL, by table name
+_DDL_OF = {re.search(r"EXISTS (\w+)", stmt)[1]: stmt.strip()
+           for stmt in DDL.split(";") if stmt.strip()}
 
 MAX_NAME_LEN = 1024
 
@@ -345,8 +357,8 @@ class CatalogWriter:
         self._dialect = dialect
         # the catalog's shape, probed inside the writer's own
         # transaction: stale at every BEGIN (another writer may have
-        # added a table since), forgotten after a ROLLBACK or this
-        # writer's own DDL
+        # added a table since), rewound to its BEGIN answers after a
+        # ROLLBACK, forgotten after this writer's own DDL
         self._shape = CatalogShape(lambda: self._conn.execute(
             Q.CATALOG_SHAPE[dialect]).fetchall())
 
@@ -424,17 +436,18 @@ class CatalogWriter:
                           r"'(?:[^']|'')*'", r"\1", stmt)
         return stmt
 
-    def _ensure_lazy(self, cur, table: str, ddl: str) -> None:
-        """Create an auxiliary catalog table that an older catalog lacks,
-        decided from the shape — never a DDL statement when the table is
-        there: on MySQL any DDL, even a no-op IF NOT EXISTS, implicitly
-        commits an open transaction. The one genuinely-absent case still
-        commits there (first-ever use of the feature on that catalog),
-        which is documented and unavoidable without a separate
-        connection."""
+    def _ensure_lazy(self, cur, table: str,
+                     ddl: Optional[str] = None) -> None:
+        """Create an auxiliary catalog table that an older catalog lacks
+        (by its statement in ``DDL`` unless ``ddl`` is given), decided
+        from the shape — never a DDL statement when the table is there:
+        on MySQL any DDL, even a no-op IF NOT EXISTS, implicitly commits
+        an open transaction. The one genuinely-absent case still commits
+        there (first-ever use of the feature on that catalog), which is
+        documented and unavoidable without a separate connection."""
         if self._shape.has(table):
             return
-        cur.execute(self._dialect_ddl(ddl))
+        cur.execute(self._dialect_ddl(ddl or _DDL_OF[table]))
         self._shape.forget()
 
     def initialize_schema(self, data_path: str = "") -> None:
@@ -502,6 +515,7 @@ class CatalogWriter:
                             import time as _time
                             _time.sleep(0.05 * (attempt + 1))
                     writer._txn_failed = False
+                    writer._shape_at_begin = writer._shape._tables
                     writer._shape.stale()
                 writer._txn_depth = depth + 1
                 return writer._conn
@@ -514,7 +528,8 @@ class CatalogWriter:
                     if writer._txn_depth == 0:
                         if writer._txn_failed:
                             writer._conn.execute("ROLLBACK")
-                            writer._shape.forget()
+                            # this transaction's own DDL is undone too
+                            writer._shape.rewind(writer._shape_at_begin)
                             # allocated-but-never-persisted snapshot ids
                             # must NOT reach the session's rollback scope:
                             # a concurrent session can commit the same id
@@ -537,10 +552,12 @@ class CatalogWriter:
         return _Txn()
 
     def _next_id(self, cur, table: str, id_col: str) -> int:
-        nid = int(cur.execute(
-            f"SELECT COALESCE(MAX({id_col}), 0) + 1 FROM {table}"
-        ).fetchall()[0][0])
-        if table == "ducklake_snapshot":
+        if table != "ducklake_snapshot":
+            return int(cur.execute(
+                f"SELECT COALESCE(MAX({id_col}), 0) + 1 FROM {table}"
+            ).fetchall()[0][0])
+        nid = self._snapshot_high_water(cur) + 1
+        if getattr(self, "on_snapshot", None) is not None:
             # session hook: an explicit BEGIN tracks ITS OWN snapshot ids
             # so ROLLBACK rewinds only them — a concurrent session's
             # commits after the anchor must survive the rewind. Recorded
@@ -548,12 +565,24 @@ class CatalogWriter:
             # COMMITS (_Txn.__exit__): an aborted statement's id may be
             # re-allocated and committed by a concurrent session, and the
             # session's ROLLBACK must never rewind that
-            if getattr(self, "on_snapshot", None) is not None:
-                pend = getattr(self, "_pending_snapshot_ids", None)
-                if pend is None:
-                    pend = self._pending_snapshot_ids = []
-                pend.append(nid)
+            pend = getattr(self, "_pending_snapshot_ids", None)
+            if pend is None:
+                pend = self._pending_snapshot_ids = []
+            pend.append(nid)
         return nid
+
+    def _snapshot_high_water(self, cur) -> int:
+        """The highest snapshot id ever allocated. A ROLLBACK's change
+        row outlives the snapshots it deleted (rollback_to_snapshot), so
+        allocating above it never reuses a snapshot id that was
+        visible."""
+        ids = "SELECT MAX(snapshot_id) AS snapshot_id FROM ducklake_snapshot"
+        if self._shape.has("ducklake_snapshot_changes"):
+            ids += (" UNION ALL SELECT MAX(snapshot_id) "
+                    "FROM ducklake_snapshot_changes")
+        return int(cur.execute(
+            f"SELECT COALESCE(MAX(snapshot_id), 0) FROM ({ids}) ids"
+        ).fetchall()[0][0])
 
     @staticmethod
     def _live_nested_ids(cur, table_id: int) -> dict:
@@ -694,8 +723,7 @@ class CatalogWriter:
         rendering."""
         if not changes:
             return
-        self._ensure_lazy(
-            cur, "ducklake_snapshot_changes", self._CHANGES_DDL)
+        self._ensure_lazy(cur, "ducklake_snapshot_changes")
         cur.execute(
             "INSERT INTO ducklake_snapshot_changes (snapshot_id, "
             "changes_made) VALUES (?, ?)",
@@ -1263,8 +1291,7 @@ class CatalogWriter:
         + record_count) collapses and a naive next_row_id would re-issue
         rowids that still exist in-file — breaking rowid-targeted
         DELETE/UPDATE, CDC update pairing, and streaming exactly-once."""
-        self._ensure_lazy(
-            cur, "ducklake_table_stats", self._STATS_DDL)
+        self._ensure_lazy(cur, "ducklake_table_stats")
         rows = cur.execute(
             "SELECT next_row_id FROM ducklake_table_stats "
             "WHERE table_id = ?", (table_id,)).fetchall()
@@ -1280,8 +1307,7 @@ class CatalogWriter:
     def _stored_next_row_id(self, cur, table_id: int) -> int:
         # create-if-missing rather than try/except: a failed statement
         # poisons an open DuckDB transaction
-        self._ensure_lazy(
-            cur, "ducklake_table_stats", self._STATS_DDL)
+        self._ensure_lazy(cur, "ducklake_table_stats")
         rows = cur.execute(
             "SELECT next_row_id FROM ducklake_table_stats "
             "WHERE table_id = ?", (table_id,)).fetchall()
@@ -1299,22 +1325,10 @@ class CatalogWriter:
         ``ducklake_table_column_stats`` envelope (table-level stats are
         an upper bound in DuckLake: deletes never shrink them)."""
         with self._txn() as cur:
-            self._ensure_lazy(
-                cur, "ducklake_file_column_stats",
-                "CREATE TABLE IF NOT EXISTS ducklake_file_column_stats ("
-                "data_file_id INTEGER NOT NULL, table_id INTEGER NOT NULL, "
-                "column_id INTEGER NOT NULL, column_size_bytes INTEGER, "
-                "value_count INTEGER, null_count INTEGER, min_value VARCHAR, "
-                "max_value VARCHAR, contains_nan BOOLEAN, "
-                "extra_stats VARCHAR)")
+            self._ensure_lazy(cur, "ducklake_file_column_stats")
             self._ensure_column(cur, "ducklake_file_column_stats",
                                 "extra_stats", "VARCHAR")
-            self._ensure_lazy(
-                cur, "ducklake_table_column_stats",
-                "CREATE TABLE IF NOT EXISTS ducklake_table_column_stats ("
-                "table_id INTEGER NOT NULL, column_id INTEGER NOT NULL, "
-                "contains_null BOOLEAN, contains_nan BOOLEAN, "
-                "min_value VARCHAR, max_value VARCHAR, extra_stats VARCHAR)")
+            self._ensure_lazy(cur, "ducklake_table_column_stats")
             for row in stats:
                 (cid, size, count, nulls, mn, mx, nan) = row[:7]
                 extra = row[7] if len(row) > 7 else None
@@ -1405,14 +1419,6 @@ class CatalogWriter:
             "extra_stats = ? WHERE table_id = ? AND column_id = ?",
             (bool(t_null) or has_null, bool(t_nan) or bool(nan),
              new_mn, new_mx, new_extra, table_id, cid))
-
-    _CHANGES_DDL = (
-        "CREATE TABLE IF NOT EXISTS ducklake_snapshot_changes ("
-        "snapshot_id BIGINT NOT NULL, changes_made VARCHAR)")
-    _STATS_DDL = (
-        "CREATE TABLE IF NOT EXISTS ducklake_table_stats ("
-        "table_id BIGINT PRIMARY KEY, record_count BIGINT, "
-        "next_row_id BIGINT, file_size_bytes BIGINT)")
 
     _VIEW_DDL = (
         "CREATE TABLE IF NOT EXISTS ducklake_view ("
@@ -1586,17 +1592,8 @@ class CatalogWriter:
             + [(cid, name, 1) for name, cid in partition_cols])
         with self._txn() as cur:
             # pre-existing catalogs may predate these tables
-            self._ensure_lazy(
-                cur, "ducklake_column_mapping",
-                "CREATE TABLE IF NOT EXISTS ducklake_column_mapping ("
-                "mapping_id INTEGER PRIMARY KEY, table_id INTEGER NOT NULL, "
-                "type VARCHAR NOT NULL)")
-            self._ensure_lazy(
-                cur, "ducklake_name_mapping",
-                "CREATE TABLE IF NOT EXISTS ducklake_name_mapping ("
-                "mapping_id INTEGER NOT NULL, column_id INTEGER NOT NULL, "
-                "source_name VARCHAR NOT NULL, parent_column INTEGER, "
-                "is_partition BOOLEAN)")
+            self._ensure_lazy(cur, "ducklake_column_mapping")
+            self._ensure_lazy(cur, "ducklake_name_mapping")
             for (existing,) in cur.execute(
                     "SELECT mapping_id FROM ducklake_column_mapping "
                     "WHERE table_id = ? AND type = 'map_by_name'",
@@ -1749,13 +1746,20 @@ class CatalogWriter:
                 value: Optional[str], column_id: Optional[int] = None,
                 table_id_for_column: Optional[int] = None) -> int:
         """Set/replace one MVCC tag (DuckLake ducklake_tag /
-        ducklake_column_tag — COMMENT ON stores key='comment'). value
-        None ends the tag without writing a new row."""
+        ducklake_column_tag — COMMENT ON stores key='comment') on a
+        table or one of its columns, in a snapshot labeled
+        ``altered_table:<id>``. value None ends the tag without writing a
+        new row."""
         with self._txn() as cur:
+            self._ensure_lazy(cur, "ducklake_tag" if column_id is None
+                              else "ducklake_column_tag")
             sid = self._next_id(cur, "ducklake_snapshot", "snapshot_id")
             cur.execute(
                 "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
                 "VALUES (?, CURRENT_TIMESTAMP)", (sid,))
+            table_id = object_id if column_id is None \
+                else table_id_for_column
+            self._record_changes(cur, sid, [f"altered_table:{table_id}"])
             if column_id is None:
                 cur.execute(
                     "UPDATE ducklake_tag SET end_snapshot = ? "
@@ -1793,6 +1797,8 @@ class CatalogWriter:
         specs = [(c, "identity") if not isinstance(c, tuple) else c
                  for c in column_ids]
         with self._txn() as cur:
+            self._ensure_lazy(cur, "ducklake_partition_info")
+            self._ensure_lazy(cur, "ducklake_partition_column")
             transform = self._shape.has("ducklake_partition_column",
                                         "transform")
             if not transform and any(tf != "identity" for _c, tf in specs):
@@ -1804,6 +1810,7 @@ class CatalogWriter:
             cur.execute(
                 "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
                 "VALUES (?, CURRENT_TIMESTAMP)", (sid,))
+            self._record_changes(cur, sid, [f"altered_table:{table_id}"])
             cur.execute(
                 "UPDATE ducklake_partition_info SET end_snapshot = ? "
                 "WHERE table_id = ? AND end_snapshot IS NULL",
@@ -1993,6 +2000,7 @@ class CatalogWriter:
             # collide rowids (the catalog txn serializes the allocation)
             row_id_start = self.next_row_id(table_id)
         with self._txn() as cur:
+            self._ensure_lazy(cur, "ducklake_inlined_data_tables")
             self._ensure_lazy(
                 cur, name, f'CREATE TABLE IF NOT EXISTS "{name}" ('
                 "row_id BIGINT, begin_snapshot BIGINT, end_snapshot BIGINT, "
@@ -2132,8 +2140,7 @@ class CatalogWriter:
                 "WHERE snapshot_id < ?", (cutoff,)).fetchall())
             cur.execute("DELETE FROM ducklake_snapshot "
                         "WHERE snapshot_id < ?", (cutoff,))
-            self._ensure_lazy(
-            cur, "ducklake_snapshot_changes", self._CHANGES_DDL)
+            self._ensure_lazy(cur, "ducklake_snapshot_changes")
             cur.execute("DELETE FROM ducklake_snapshot_changes "
                         "WHERE snapshot_id < ?", (cutoff,))
             return n
@@ -2158,8 +2165,7 @@ class CatalogWriter:
             for v in live:
                 cur.execute("DELETE FROM ducklake_snapshot "
                             "WHERE snapshot_id = ?", (v,))
-            self._ensure_lazy(
-            cur, "ducklake_snapshot_changes", self._CHANGES_DDL)
+            self._ensure_lazy(cur, "ducklake_snapshot_changes")
             for v in live:
                 cur.execute("DELETE FROM ducklake_snapshot_changes "
                             "WHERE snapshot_id = ?", (v,))
@@ -2320,13 +2326,21 @@ class CatalogWriter:
                     cur.execute(
                         f"DELETE FROM {tbl} WHERE {key} "
                         f"NOT IN (SELECT {key} FROM {owner})")
+            # the rewind is a change other sessions must see: it leaves
+            # one change row under a fresh id and no snapshot row, so the
+            # catalog version (provider.head) moves and the deleted ids
+            # are never allocated again
+            rewind_id = self._snapshot_high_water(cur) + 1
             cur.execute(
                 f"DELETE FROM ducklake_snapshot WHERE {snap_p}", snap_a)
-            self._ensure_lazy(
-            cur, "ducklake_snapshot_changes", self._CHANGES_DDL)
+            self._ensure_lazy(cur, "ducklake_snapshot_changes")
             cur.execute(
                 f"DELETE FROM ducklake_snapshot_changes WHERE {snap_p}",
                 snap_a)
+            cur.execute(
+                "INSERT INTO ducklake_snapshot_changes (snapshot_id, "
+                "changes_made) VALUES (?, ?)",
+                (rewind_id, f"rolled_back_to_snapshot:{snapshot_id}"))
         return dropped
 
     def close(self) -> None:

@@ -150,7 +150,7 @@ def _inserted_rows(session, name: str, start: int, end: int) -> DataFrame:
     ``snapshot_id`` is the file's begin_snapshot: the only writer of the
     in-file snapshot column is the flush, whose snapshots CDC skips."""
     table = _resolve(session, name, start, end)
-    skip = _maintenance_snapshots(session, table)
+    skip = _maintenance_snapshots(session, table, start, end)
     files = [_data_file(session, table, f.path, f.path_is_relative,
                         encryption_key=f.encryption_key,
                         mapping_id=f.mapping_id,
@@ -173,25 +173,29 @@ def _inserted_rows(session, name: str, start: int, end: int) -> DataFrame:
     return reduce(DataFrame.unionByName, parts)
 
 
-def labeled_snapshots(provider, table_id: int, *labels: str) -> set:
-    """Snapshot ids whose ``changes_made`` list holds ``<label>:<table_id>``
-    for one of ``labels``. Token-exact, NOT substring: 'compacted_table:1'
-    is a substring of 'compacted_table:12' and would false-positive on
-    tables whose id is a prefix of another's."""
+def labeled_snapshots(provider, table_id: int, after: int, upto: int,
+                      *labels: str) -> set:
+    """Snapshot ids in (after, upto] whose ``changes_made`` list holds
+    ``<label>:<table_id>`` for one of ``labels``, read in one ranged
+    statement. Token-exact, NOT substring: 'compacted_table:1' is a
+    substring of 'compacted_table:12' and would false-positive on tables
+    whose id is a prefix of another's."""
     markers = {f"{label}:{table_id}" for label in labels}
-    return {sid for sid, s in provider.get_snapshot_changes().items()
+    return {sid for sid, s in
+            provider.get_snapshot_changes(after, upto).items()
             if markers & {t.strip() for t in (s or "").split(",")}}
 
 
-def _maintenance_snapshots(session, table) -> set:
-    """Snapshot ids that are STORAGE maintenance for this table — file
-    compaction (compact / merge_adjacent / rewrite_data_files, labeled
-    compacted_table) and inlined-data flushes (labeled
-    flushed_inlined_data): neither changes table contents, so CDC skips
-    them on both the insert and the delete side (upstream table_changes
-    is silent across compaction AND flush —
+def _maintenance_snapshots(session, table, start: int, end: int) -> set:
+    """Snapshot ids in (start, end] that are STORAGE maintenance for
+    this table — file compaction (compact / merge_adjacent /
+    rewrite_data_files, labeled compacted_table) and inlined-data
+    flushes (labeled flushed_inlined_data): neither changes table
+    contents, so CDC skips them on both the insert and the delete side
+    (upstream table_changes is silent across compaction AND flush —
     sql/data_inlining/data_inlining_flush.test)."""
     return labeled_snapshots(session.provider, table.meta.table_id,
+                             start, end,
                              "compacted_table", "flushed_inlined_data")
 
 
@@ -252,7 +256,7 @@ def table_deletions(session, name: str, start: int, end: int) -> DataFrame:
     file-local position, so plan size is O(delete snapshots)."""
     table = _resolve(session, name, start, end)
     spark = session.spark
-    skip = _maintenance_snapshots(session, table)
+    skip = _maintenance_snapshots(session, table, start, end)
     resolver = session.catalog.resolver
 
     def uri(path, is_relative):

@@ -166,8 +166,10 @@ class _CatalogStreamReader(DataSourceStreamReader):
                 f"mode='glob' or replay_changes())")
         if self._flush_snapshots is None:
             from ..operators.cdc import labeled_snapshots
+            begins = [g.begin_snapshot or 0 for g in handle.files]
             self._flush_snapshots = labeled_snapshots(
-                self._provider, handle.meta.table_id, "flushed_inlined_data")
+                self._provider, handle.meta.table_id, min(begins) - 1,
+                max(begins), "flushed_inlined_data")
         lo, hi = _rowid_extent(f.data_uri, f.encryption_key)
         snap = int(f.begin_snapshot or 0)
         if f.begin_snapshot in self._flush_snapshots:

@@ -53,6 +53,10 @@ def _catalog_writer(session, settings: Optional[Settings] = None
     """The session's catalog writer; ``settings`` is the statement's
     settings read when it has one."""
     w = _catalog_writer_raw(session)
+    # the provider's present answers hold for the writer too (tables and
+    # columns are only ever added); an absent one is still probed inside
+    # the writer's transaction
+    w._shape.seed(session.provider._shape)
     # max_retry_count (DuckDB's ducklake_max_retry_count, default 10):
     # retries of the catalog BEGIN on transient cross-process lock
     # contention — sql/settings/max_retry_count.test

@@ -1,15 +1,20 @@
 """The relation binder behind ``DuckLakeSession.sql``: a statement binds
 only the relations it names, at its own session's pinned snapshot, and
-``refresh()`` rebuilds only what the session has bound."""
+``refresh()`` carries every bound frame forward that the snapshots since
+the pin left untouched, rebuilding the rest."""
 
 from __future__ import annotations
 
 import ast
+import shutil
+import sqlite3
 from pathlib import Path
 
 import pytest
 
 from datafusion_ducklake_spark import catalog as catalog_mod
+from pyspark.sql import DataFrame
+
 from datafusion_ducklake_spark.catalog import DuckLakeSession, DuckLakeTable
 from datafusion_ducklake_spark.errors import InvalidConfig
 
@@ -78,13 +83,22 @@ def test_sql_builds_only_the_named_table(spark, tmp_path, to_df_calls):
 
 
 def test_refresh_rebuilds_only_bound_relations(spark, tmp_path, to_df_calls):
-    dl = DuckLakeSession(spark, str(tmp_path / "c.sqlite"))
+    """With no commit a refresh rebuilds nothing; after another session's
+    commit it rebuilds the bound table that commit touched and no
+    other."""
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
     for name in ("a", "b", "c"):
         dl.create_table(f"main.{name}", spark.range(2).selectExpr("id"))
     assert _count(dl, "a") == 2 and _count(dl, "main.b") == 2
     del to_df_calls[:]
     dl.refresh()
-    assert sorted(to_df_calls) == ["a", "b"]
+    assert to_df_calls == []
+    DuckLakeSession(spark, db).insert_into(
+        "main.a", spark.range(3).selectExpr("id"))
+    dl.refresh()
+    assert to_df_calls == ["a"]
+    assert _count(dl, "a") == 5 and _count(dl, "main.b") == 2
 
 
 def test_refresh_shows_other_writers_rows_and_binds_nothing_else(
@@ -223,3 +237,168 @@ def test_columns_query_leaves_no_binding_behind(spark, tmp_path,
     dl.refresh()
     assert to_df_calls == []
     assert _count(dl, "v3") == 2
+
+
+def _ids(dl, name):
+    return sorted(r[0] for r in dl.sql(f"SELECT id FROM {name}").collect())
+
+
+def _catalog_statements(dl):
+    """(query, params) of every catalog statement ``dl``'s provider runs
+    from here on."""
+    log = []
+    fetch = dl.provider._fetchall
+
+    def spy(query, params=()):
+        log.append((query, tuple(params)))
+        return fetch(query, params)
+
+    dl.provider._fetchall = spy
+    return log
+
+
+def test_refresh_at_an_unchanged_pin_builds_and_publishes_nothing(
+        spark, tmp_path, to_df_calls, monkeypatch):
+    dl = DuckLakeSession(spark, str(tmp_path / "c.sqlite"))
+    for name in ("a", "b"):
+        dl.create_table(f"main.{name}", spark.range(2).selectExpr("id"))
+    dl.sql("CREATE VIEW v AS SELECT id FROM a")
+    assert _count(dl, "a") == 2 and _count(dl, "main.b") == 2
+    assert _count(dl, "v") == 2
+    published = []
+    real = DataFrame.createOrReplaceTempView
+    monkeypatch.setattr(
+        DataFrame, "createOrReplaceTempView",
+        lambda df, name: published.append(name) or real(df, name))
+    statements = _catalog_statements(dl)
+    del to_df_calls[:]
+    dl.refresh()
+    assert to_df_calls == [] and published == []
+    assert len(statements) <= 2
+    assert _count(dl, "a") == 2 and _count(dl, "v") == 2
+
+
+def test_refresh_after_a_commit_reads_nothing_of_untouched_tables(
+        spark, tmp_path, to_df_calls):
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.a", spark.range(2).selectExpr("id"))
+    dl.create_table("main.b", spark.range(4).selectExpr("id"))
+    b_id = dl.table_handle("main.b").meta.table_id
+    assert _count(dl, "a") == 2 and _count(dl, "b") == 4
+    other = DuckLakeSession(spark, db)
+    for _ in range(2):
+        other.insert_into("main.a", spark.range(10, 13).selectExpr("id"))
+    statements = _catalog_statements(dl)
+    del to_df_calls[:]
+    dl.refresh()
+    assert to_df_calls == ["a"]
+    assert not [q for q, params in statements
+                if "table_id" in q and b_id in params]
+    assert _ids(dl, "a") == [0, 1, 10, 10, 11, 11, 12, 12]
+    assert _count(dl, "b") == 4
+
+
+def test_refresh_rebuilds_the_views_over_what_a_commit_touched(
+        spark, tmp_path):
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.a", spark.range(2).selectExpr("id"))
+    dl.create_table("main.b", spark.range(4).selectExpr("id"))
+    dl.sql("CREATE VIEW va AS SELECT id FROM a")
+    dl.sql("CREATE VIEW vb AS SELECT id FROM b WHERE id > 0")
+    assert _count(dl, "va") == 2 and _count(dl, "vb") == 3
+    before = dict(dl._frames)
+    DuckLakeSession(spark, db).insert_into(
+        "main.a", spark.range(5, 6).selectExpr("id"))
+    dl.refresh()
+    assert dl._frames[("main.vb", None)] is before[("main.vb", None)]
+    assert dl._frames[("main.b", None)] is before[("main.b", None)]
+    assert dl._frames[("main.va", None)] is not before[("main.va", None)]
+    assert _ids(dl, "va") == [0, 1, 5] and _count(dl, "vb") == 3
+
+
+def test_snapshot_without_change_labels_rebuilds_every_binding(
+        spark, tmp_path, to_df_calls):
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.a", spark.range(2).selectExpr("id"))
+    dl.create_table("main.b", spark.range(4).selectExpr("id"))
+    assert _count(dl, "a") == 2 and _count(dl, "b") == 4
+    con = sqlite3.connect(db)
+    con.execute("INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
+                "VALUES (?, CURRENT_TIMESTAMP)",
+                (dl.provider.get_current_snapshot() + 1,))
+    con.commit()
+    con.close()
+    del to_df_calls[:]
+    dl.refresh()
+    assert sorted(to_df_calls) == ["a", "b"]
+
+
+def test_rolled_back_snapshot_id_is_never_trusted(spark, tmp_path):
+    """A reads B's uncommitted-to-the-user INSERT; B rolls back and C
+    commits. The catalog never hands C the id B's snapshot had, and A's
+    refresh reads C's row and not B's."""
+    db = str(tmp_path / "c.sqlite")
+    a = DuckLakeSession(spark, db)
+    a.create_table("main.t", spark.range(1, 2).selectExpr("id"))
+    b = DuckLakeSession(spark, db)
+    b.sql("BEGIN")
+    b.sql("INSERT INTO t VALUES (2)")
+    rolled_back = b.provider.get_current_snapshot()
+    a.refresh()
+    assert _ids(a, "t") == [1, 2]
+    b.sql("ROLLBACK")
+    c = DuckLakeSession(spark, db)
+    c.sql("INSERT INTO t VALUES (3)")
+    assert c.provider.get_current_snapshot() > rolled_back
+    a.refresh()
+    assert _ids(a, "t") == [1, 3]
+
+
+def test_refresh_releases_renamed_and_dropped_tables(spark, tmp_path):
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
+    for name, n in (("ren", 2), ("gone2", 4), ("kept", 3)):
+        dl.create_table(f"main.{name}", spark.range(n).selectExpr("id"))
+    assert _count(dl, "ren") == 2 and _count(dl, "gone2") == 4
+    assert _count(dl, "main.gone2") == 4 and _count(dl, "kept") == 3
+    other = DuckLakeSession(spark, db)
+    other.rename_table("main.ren", "ren2")
+    other.drop_table("main.gone2")
+    dl.refresh()
+    for name in ("ren", "gone2", "main__gone2"):
+        assert not spark.catalog.tableExists(name)
+    assert _count(dl, "ren2") == 2 and _count(dl, "kept") == 3
+    with pytest.raises(Exception, match="ren"):
+        dl.sql("SELECT * FROM ren").collect()
+
+
+def test_new_data_path_rebuilds_every_binding(spark, tmp_path, to_df_calls):
+    db = str(tmp_path / "c.sqlite")
+    dl = DuckLakeSession(spark, db)
+    dl.create_table("main.a", spark.range(2).selectExpr("id"))
+    dl.create_table("main.b", spark.range(4).selectExpr("id"))
+    assert _count(dl, "a") == 2 and _count(dl, "b") == 4
+    moved = str(tmp_path / "moved")
+    shutil.copytree(dl.provider.get_data_path(), moved)
+    DuckLakeSession(spark, db).set_option("data_path", moved)
+    del to_df_calls[:]
+    dl.refresh()
+    assert sorted(to_df_calls) == ["a", "b"]
+    assert all(f.data_uri.find("moved") >= 0
+               for f in dl.table_handle("main.a").files)
+    assert _count(dl, "a") == 2 and _count(dl, "b") == 4
+
+
+def test_refresh_takes_back_a_view_name_another_session_repointed(
+        spark, tmp_path):
+    a = DuckLakeSession(spark, str(tmp_path / "a.sqlite"))
+    a.create_table("main.t", spark.range(2).selectExpr("id"))
+    b = DuckLakeSession(spark, str(tmp_path / "b.sqlite"))
+    b.create_table("main.t", spark.range(7).selectExpr("id"))
+    assert _count(a, "t") == 2
+    assert _count(b, "t") == 7
+    a.refresh()
+    assert spark.sql("SELECT count(*) FROM t").collect()[0][0] == 2

@@ -117,3 +117,24 @@ def test_current_catalog_reads_its_shape_once(dl, spark):
         dl.sql("SELECT count(*) FROM t").collect()
         dl.snapshots().collect()
     assert not any("sqlite_master" in q for q in seen)
+
+
+def test_writer_starts_from_the_providers_shape(dl, spark, monkeypatch):
+    """The provider's present answers never go stale, so a statement's
+    catalog writer takes them instead of probing the shape again."""
+    from datafusion_ducklake_spark import table_writer
+    dl.sql("CREATE TABLE t (id INT)")
+    dl.sql("INSERT INTO t VALUES (1)")
+    probes = []
+    raw = table_writer._catalog_writer_raw
+
+    def spy(session):
+        w = raw(session)
+        probe = w._shape._probe
+        w._shape._probe = lambda: probes.append(1) or probe()
+        return w
+
+    monkeypatch.setattr(table_writer, "_catalog_writer_raw", spy)
+    dl.sql("INSERT INTO t VALUES (2)")
+    assert probes == []
+    assert dl.sql("SELECT count(*) FROM t").collect()[0][0] == 2

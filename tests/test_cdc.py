@@ -340,3 +340,23 @@ def test_deletions_of_one_snapshot_share_one_scan(spark, tmp_path):
     assert sorted((r.id, r.rowid, r.snapshot_id) for r in df.collect()) == \
         [(i, r, snap) for i, r in
          [(0, 0), (2, 2), (10, 4), (12, 6), (20, 8), (22, 10)]]
+
+
+def test_change_feed_reads_only_its_window_of_change_labels(spark,
+                                                           tmp_path):
+    """A change feed reads the change labels of its own snapshot window,
+    in one statement per side, never the whole history."""
+    dl = DuckLakeSession(spark, str(tmp_path / "c.sqlite"))
+    dl.create_table("main.t", spark.range(1).selectExpr("id"))
+    for i in range(4):
+        dl.insert_into("main.t", spark.range(10 * i, 10 * i + 2)
+                       .selectExpr("id"))
+    end = dl.provider.get_current_snapshot()
+    start = end - 2
+    calls = []
+    ranged = dl.provider.get_snapshot_changes
+    dl.provider.get_snapshot_changes = \
+        lambda *a: calls.append(a) or ranged(*a)
+    rows = dl.table_changes("main.t", start, end).collect()
+    assert sorted(r["id"] for r in rows) == [20, 21, 30, 31]
+    assert calls and set(calls) == {(start, end)}

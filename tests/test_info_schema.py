@@ -294,3 +294,18 @@ def test_view_body_is_persisted_verbatim(fresh):
         fresh.catalog.snapshot_id)]
     assert stored == [body]
     assert [r[0] for r in fresh.sql("SELECT * FROM tv").collect()] == ["t"]
+
+
+def test_comment_and_partition_snapshots_carry_change_labels(fresh):
+    tid = fresh.table_handle("main.t").meta.table_id
+
+    def last_changes():
+        return fresh.sql("SELECT changes FROM ducklake_snapshots() "
+                         "ORDER BY snapshot_id DESC LIMIT 1").collect()[0][0]
+
+    fresh.sql("COMMENT ON TABLE t IS 'c'")
+    assert last_changes() == f"altered_table:{tid}"
+    fresh.sql("COMMENT ON COLUMN t.g IS 'group'")
+    assert last_changes() == f"altered_table:{tid}"
+    fresh.set_partitioned_by("main.t", ["g"])
+    assert last_changes() == f"altered_table:{tid}"

@@ -14,6 +14,7 @@ import uuid
 import pytest
 
 from datafusion_ducklake_spark.catalog import DuckLakeSession
+from datafusion_ducklake_spark.metadata.writer import CatalogWriter
 
 _V01_DDL = """
 CREATE TABLE ducklake_metadata (key VARCHAR NOT NULL, value VARCHAR NOT NULL);
@@ -156,3 +157,33 @@ def test_old_catalog_shape_grows_under_a_live_session(spark, old_catalog):
     b.sql("CREATE VIEW v AS SELECT id FROM t WHERE id > 1")
     a.refresh()
     assert a.sql("SELECT count(*) AS n FROM v").collect()[0]["n"] == 2
+
+
+
+def test_old_catalog_partition_spec_creates_its_tables(spark, old_catalog):
+    dl = DuckLakeSession(spark, old_catalog)
+    dl.sql("ALTER TABLE t SET PARTITIONED BY (s)")
+    assert dl.provider.get_partition_columns(1, dl.catalog.snapshot_id)
+
+
+def test_old_catalog_comment_creates_the_tag_table(spark, old_catalog):
+    dl = DuckLakeSession(spark, old_catalog)
+    dl.sql("COMMENT ON TABLE t IS 'old'")
+    dl.sql("COMMENT ON COLUMN t.id IS 'key'")
+    assert dl.table_comment("main.t") == "old"
+    assert dl.column_comment("main.t", "id") == "key"
+
+
+def test_old_catalog_inlined_rows_create_the_registry(spark, old_catalog):
+    w = CatalogWriter.sqlite(old_catalog)
+    try:
+        with w._txn():
+            sid = w.create_snapshot(["inserted_into_table:1"])
+            w.insert_inlined_rows(1, sid, ["id", "s"], ["int32", "varchar"],
+                                  [(4, "d")])
+    finally:
+        w.close()
+    dl = DuckLakeSession(spark, old_catalog)
+    assert len(dl.table_handle("main.t").inlined_rows()) == 1
+    assert sorted(r["id"] for r in dl.table("main.t").collect()) == \
+        [1, 2, 3, 4]

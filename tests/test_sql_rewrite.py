@@ -28,7 +28,7 @@ class TestRewriteUnit:
             "main.users": (main, TableMeta(1, "users", "users/", True)),
             "sales.orders": (sales, TableMeta(2, "orders", "orders/", True))}
         dl._frames = {(n, None): object() for n in dl._names}
-        dl._views = {}
+        dl._views, dl._building = {}, []
         self.published: list[str] = []
         monkeypatch.setattr(dl, "_publish",
                             lambda view, df: self.published.append(view))
