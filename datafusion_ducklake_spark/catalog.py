@@ -887,8 +887,8 @@ def drop_ducklake_secret(name: str = "__default") -> None:
 
 
 # What a refresh learns from each change label the catalog writer records
-# (``label:<id>``): what the id names, and whether relation names may
-# have changed with it. Any other label, or an id that is not a number
+# (``label:<id>``): what the id names, and whether relation or macro names
+# may have changed with it. Any other label, or an id that is not a number
 # (DuckDB records some objects by name), makes a refresh rebuild every
 # binding (DuckLakeSession.refresh).
 _CHANGE_LABELS = {
@@ -900,7 +900,7 @@ _CHANGE_LABELS = {
     **dict.fromkeys(("created_view", "dropped_view", "altered_view"),
                     ("view", True)),
     **dict.fromkeys(("created_schema", "dropped_schema"), ("schema", True)),
-    **dict.fromkeys(("created_macro", "dropped_macro"), ("macro", False)),
+    **dict.fromkeys(("created_macro", "dropped_macro"), ("macro", True)),
 }
 
 # Which frame each temp view name serves, per SparkSession. Temp views
@@ -2556,10 +2556,8 @@ class DuckLakeSession:
                     return self._rebuild_all()
                 touched.add((what[0], int(oid)))
                 renamed |= what[1]
-        if renamed:
-            self._names = None
-        if any(what == "macro" for what, _id in touched):
-            self._macros = None
+        if renamed:                     # DROP SCHEMA ends macros too
+            self._names = self._macros = None
         carried: dict[tuple, bool] = {}
 
         def same(key: tuple, ident: Optional[tuple]) -> bool:

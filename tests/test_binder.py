@@ -402,3 +402,15 @@ def test_refresh_takes_back_a_view_name_another_session_repointed(
     assert _count(b, "t") == 7
     a.refresh()
     assert spark.sql("SELECT count(*) FROM t").collect()[0][0] == 2
+
+
+def test_refresh_after_drop_schema_forgets_its_macros(spark, tmp_path):
+    """DROP SCHEMA … CASCADE labels its tables and schema, not the
+    macros it ends; the next statement must not expand them."""
+    dl = DuckLakeSession(spark, str(tmp_path / "c.sqlite"))
+    dl.sql("CREATE SCHEMA ms")
+    dl.sql("CREATE MACRO ms.twice(a) AS a * 2")
+    assert dl.sql("SELECT ms.twice(7) AS v").collect()[0][0] == 14
+    dl.sql("DROP SCHEMA ms CASCADE")
+    with pytest.raises(Exception, match="ms"):
+        dl.sql("SELECT ms.twice(7) AS v").collect()
