@@ -34,7 +34,9 @@ from .errors import (DuckLakeError, InvalidConfig, SchemaNotFound,
 from .metadata.provider import (ColumnMeta, MetadataProvider, SchemaMeta,
                                 Settings, TableMeta, provider_for)
 from .operators.info_schema import local_df
+from .operators.macros import expand_macros, split_top_level
 from .paths import PathResolver, to_spark_uri
+from .procedures import CALL_HEAD_RE, call_procedure
 from .sources.scan import ResolvedFile, scan_table
 from .types import build_spark_schema
 
@@ -1000,12 +1002,8 @@ class DuckLakeSession:
                         f"DATA_PATH '{data_path}' does not match existing "
                         f"data path in the catalog ('{recorded}') — pass "
                         "override_data_path=True to rewrite it")
-                from .table_writer import _catalog_writer
-                w = _catalog_writer(self)
-                try:
+                with self._writer() as w:
                     w.set_option("data_path", data_path)
-                finally:
-                    w.close()
         if snapshot_time is not None:
             # ATTACH (SNAPSHOT_TIME => ...) — sql/general/
             # attach_at_snapshot.test: resolves to the newest snapshot
@@ -1194,6 +1192,16 @@ class DuckLakeSession:
                 if view not in views:
                     self._release(view, self._frames[k])
             self._frames, self._views, self._deps = frames, views, deps
+
+    @contextlib.contextmanager
+    def _writer(self, settings=None):
+        """The session's catalog writer, closed when the block ends."""
+        from .table_writer import _catalog_writer
+        writer = _catalog_writer(self, settings)
+        try:
+            yield writer
+        finally:
+            writer.close()
 
     @contextlib.contextmanager
     def _statement(self):
@@ -1468,44 +1476,6 @@ class DuckLakeSession:
     _DROP_MATVIEW_RE = re.compile(
         r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(?:(IF\s+EXISTS)\s+)?"
         r"([A-Za-z_][\w.]*)\s*;?\s*$", re.I)
-    _REFRESH_MATVIEW_RE = re.compile(
-        r"^\s*CALL\s+ducklake_refresh_materialized_view\s*\(\s*"
-        r"'([^']*)'\s*\)\s*;?\s*$", re.I)
-
-    @staticmethod
-    def _split_top_level(s: str, sep: str = ",",
-                         angle: bool = False) -> list[str]:
-        """Split on ``sep`` outside quotes/parens (SET-clause commas can
-        appear inside function calls and string literals). ``angle=True``
-        also nests on <...> — for column-definition lists where
-        STRUCT<...>/MAP<...> carry commas; never for expressions, where
-        < and > are comparison operators."""
-        parts, depth, cur, quote = [], 0, [], None
-        opens = "([<" if angle else "(["
-        closes = ")]>" if angle else ")]"
-        for ch in s:
-            if quote:
-                cur.append(ch)
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-                cur.append(ch)
-            elif ch in opens:
-                depth += 1
-                cur.append(ch)
-            elif ch in closes:
-                depth -= 1
-                cur.append(ch)
-            elif ch == sep and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        if cur:
-            parts.append("".join(cur).strip())
-        return parts
-
     def _count_df(self, n: int) -> DataFrame:
         """DML statements return a 1-row count batch, the reference's
         INSERT convention (insert_exec.rs:24-31)."""
@@ -1561,7 +1531,7 @@ class DuckLakeSession:
         from .types import normalize_ducklake_type
         params = []
         if raw.strip():
-            for p in self._split_top_level(raw):
+            for p in split_top_level(raw):
                 pn, sep, dflt = p.partition(":=")
                 tokens = pn.strip().split(None, 1)
                 ptype = None
@@ -1584,14 +1554,13 @@ class DuckLakeSession:
         raise InvalidConfig(f"Schema not found: {schema_name}")
 
     def _try_macro_ddl(self, query: str) -> Optional[DataFrame]:
-        from .table_writer import _catalog_writer
         mm = self._MULTI_MACRO_HEAD_RE.match(query)
         if mm:
             # multi-arity form (sql/macros/test_multiple_implementations
             # .test): CREATE MACRO f () AS 0, (a) AS a, (a, b) AS a+b.
             # Top-level commas split candidate segments; a segment that
             # does not open a new "(sig) AS" belongs to the previous body.
-            pieces = self._split_top_level(mm.group(3))
+            pieces = split_top_level(mm.group(3))
             segs: list[str] = []
             for piece in pieces:
                 if segs and not self._MACRO_SIG_RE.match(piece):
@@ -1601,8 +1570,7 @@ class DuckLakeSession:
             if len(segs) > 1 and all(self._MACRO_SIG_RE.match(s)
                                      for s in segs):
                 bare, schema_id = self._macro_schema_id(mm.group(2))
-                writer = _catalog_writer(self)
-                try:
+                with self._writer() as writer:
                     for seg in segs:
                         sm = self._MACRO_SIG_RE.match(seg)
                         params = self._parse_macro_params(sm.group(1))
@@ -1612,8 +1580,6 @@ class DuckLakeSession:
                             sm.group(3).rstrip().rstrip(";"), kind,
                             replace=bool(mm.group(1)), arity_scoped=True,
                             schema_id=schema_id)
-                finally:
-                    writer.close()
                 self.refresh()
                 return self._count_df(0)
         m = self._CREATE_MACRO_RE.match(query)
@@ -1621,25 +1587,19 @@ class DuckLakeSession:
             params = self._parse_macro_params(m.group(3))
             kind = "table" if m.group(4) else "scalar"
             bare, schema_id = self._macro_schema_id(m.group(2))
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 writer.create_macro(bare, params, m.group(5), kind,
                                     replace=bool(m.group(1)),
                                     schema_id=schema_id)
-            finally:
-                writer.close()
             self.refresh()
             return self._count_df(0)
         m = self._DROP_MACRO_RE.match(query)
         if m:
             bare, schema_id = self._macro_schema_id(m.group(2))
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 found = writer.drop_macro(
                     bare, schema_id=schema_id if "." in m.group(2)
                     else None)
-            finally:
-                writer.close()
             if not found and not m.group(1):
                 raise InvalidConfig(f"macro not found: {m.group(2)}")
             self.refresh()
@@ -1652,60 +1612,6 @@ class DuckLakeSession:
                 self.catalog.snapshot_id)
         return self._macros
 
-    _CALL_RE = re.compile(
-        r"^\s*CALL\s+ducklake_(expire_snapshots|cleanup_old_files"
-        r"|flush_inlined_data)"
-        r"\s*\(\s*(\d*|'[^']*')\s*\)\s*;?\s*$", re.I)
-    _CLEANUP_NAMED_RE = re.compile(
-        r"^\s*CALL\s+ducklake_cleanup_old_files\s*\(\s*"
-        r"((?:(?:dry_run|cleanup_all)\s*=>\s*(?:true|false)\s*,?\s*)+)"
-        r"\)\s*;?\s*$", re.I)
-    _SET_OPTION_RE = re.compile(
-        r"^\s*CALL\s+ducklake_set_option\s*\(\s*'([^']*)'\s*,\s*"
-        r"(NULL|TRUE|FALSE|-?\d+(?:\.\d+)?|'[^']*')\s*"
-        r"((?:,\s*(?:table_name|schema)\s*=>\s*'[^']*'\s*)*)\)\s*;?\s*$",
-        re.I)
-    _SET_OPTION_SCOPE_RE = re.compile(
-        r"(table_name|schema)\s*=>\s*'([^']*)'", re.I)
-    _ADD_FILES_RE = re.compile(
-        r"^\s*CALL\s+ducklake_add_data_files\s*\((.*)\)\s*;?\s*$",
-        re.I | re.S)
-    _COMMIT_MSG_RE = re.compile(
-        r"^\s*CALL\s+ducklake_set_commit_message\s*\(\s*"
-        r"(NULL|'[^']*')\s*,\s*(NULL|'[^']*')\s*\)\s*;?\s*$", re.I)
-    _EXPIRE_NAMED_RE = re.compile(
-        r"^\s*CALL\s+ducklake_expire_snapshots\s*\(\s*"
-        r"((?:(?:versions\s*=>\s*\[[\d\s,]*\]|dry_run\s*=>\s*"
-        r"(?:true|false)|older_than\s*=>\s*"
-        r"(?:NOW\s*\(\s*\)|TIMESTAMP\s*'[^']*'|'[^']*'))\s*,?\s*)+)"
-        r"\)\s*;?\s*$", re.I)
-    _ORPHANS_RE = re.compile(
-        r"^\s*CALL\s+ducklake_delete_orphaned_files\s*\(\s*"
-        r"((?:(?:dry_run|cleanup_all)\s*=>\s*(?:true|false)\s*,?\s*)*)"
-        r"\)\s*;?\s*$", re.I)
-    _MERGE_ADJ_RE = re.compile(
-        r"^\s*CALL\s+ducklake_merge_adjacent_files\s*\(\s*"
-        r"(?:'([^']*)'\s*,?\s*)?"
-        r"(?:max_compacted_files\s*=>\s*(NULL|-?\d+)\s*)?"
-        r"\)\s*;?\s*$",
-        re.I)
-    _CLUSTER_BY_RE = re.compile(
-        r"^\s*CALL\s+ducklake_cluster_by\s*\(\s*'([^']*)'\s*,\s*"
-        r"'([^']*)'\s*,\s*(\d+)\s*"
-        r"(?:,\s*sort\s*=>\s*(true|false)\s*)?"
-        r"(?:,\s*replica\s*=>\s*(true|false)\s*)?\)\s*;?\s*$", re.I)
-    _DROP_REPLICA_RE = re.compile(
-        r"^\s*CALL\s+ducklake_drop_clustering_replica\s*\(\s*'([^']*)'"
-        r"\s*(?:,\s*'([^']*)'\s*)?\)\s*;?\s*$", re.I)
-    _REFRESH_REPLICA_RE = re.compile(
-        r"^\s*CALL\s+ducklake_refresh_replica\s*\(\s*'([^']*)'"
-        r"\s*(?:,\s*'([^']*)'\s*)?\)\s*;?\s*$", re.I)
-    _REWRITE_FILES_RE = re.compile(
-        r"^\s*CALL\s+ducklake_rewrite_data_files\s*\(\s*"
-        r"(?:('[^']*'|(?!delete_threshold\b)[\w.]+)\s*)?"
-        r"(?:,\s*('[^']*'|[\w.]+)\s*)?"
-        r"(?:,?\s*delete_threshold\s*=>\s*([^\s,)]+)\s*)?\)\s*;?\s*$",
-        re.I)
     _CHECKPOINT_RE = re.compile(r"^\s*CHECKPOINT\s*;?\s*$", re.I)
     _COPY_RE = re.compile(
         r"^\s*COPY\s+(\(.*\)|[A-Za-z_][\w.]*)\s+TO\s+'([^']+)'"
@@ -1732,138 +1638,9 @@ class DuckLakeSession:
         return self.spark.table(self._resolve_relations(name))
 
     def _try_dml(self, query: str) -> Optional[DataFrame]:
-        m = self._CALL_RE.match(query)
+        m = CALL_HEAD_RE.match(query)
         if m:
-            fn, arg = m.group(1).lower(), m.group(2)
-            if fn == "expire_snapshots":
-                n = self.expire_snapshots(int(arg) if arg else None)
-                return self._count_df(n)
-            if fn == "flush_inlined_data":
-                if not arg:
-                    # whole-catalog form (the upstream CALL's arg is the
-                    # attached catalog name; bare parens here)
-                    return self._count_df(self.flush_inlined_data())
-                if not (arg.startswith("'") and arg.endswith("'")):
-                    raise InvalidConfig(
-                        "ducklake_flush_inlined_data needs a quoted "
-                        "table name (or no argument for all tables)")
-                return self._count_df(
-                    self.flush_inlined_data(arg[1:-1]))
-            return self._count_df(len(self.cleanup_old_files()))
-        m = self._CLEANUP_NAMED_RE.match(query)
-        if m:
-            # named args (sql/compaction/small_insert_compaction.test):
-            # dry_run counts without deleting; cleanup_all ignores the
-            # delete_older_than retention option
-            opts = {k.lower(): v.lower() == "true" for k, v in re.findall(
-                r"(dry_run|cleanup_all)\s*=>\s*(true|false)",
-                m.group(1), re.I)}
-            return self._count_df(len(self.cleanup_old_files(
-                dry_run=opts.get("dry_run", False),
-                cleanup_all=opts.get("cleanup_all", False))))
-        m = self._SET_OPTION_RE.match(query)
-        if m:
-            raw = m.group(2)
-            value = (None if raw.upper() == "NULL"
-                     else raw[1:-1] if raw.startswith("'") else raw)
-            scopes = {k.lower(): v for k, v in
-                      self._SET_OPTION_SCOPE_RE.findall(m.group(3) or "")}
-            self.set_option(m.group(1), value,
-                            table_name=scopes.get("table_name"),
-                            schema=scopes.get("schema"))
-            return self._count_df(0)
-        m = self._COMMIT_MSG_RE.match(query)
-        if m:
-            unq = lambda s: None if s.upper() == "NULL" else s[1:-1]  # noqa: E731
-            self.set_commit_message(unq(m.group(1)), unq(m.group(2)))
-            return self._count_df(0)
-        m = self._EXPIRE_NAMED_RE.match(query)
-        if m:
-            # named form (sql/compaction/expire_snapshots.test):
-            # versions => [..] selects exact snapshots; dry_run counts
-            vm = re.search(r"versions\s*=>\s*\[([\d\s,]*)\]",
-                           m.group(1), re.I)
-            versions = ([int(x) for x in vm.group(1).split(",")
-                         if x.strip()] if vm else None)
-            dm = re.search(r"dry_run\s*=>\s*(true|false)", m.group(1), re.I)
-            om = re.search(r"older_than\s*=>\s*(NOW\s*\(\s*\)|"
-                           r"TIMESTAMP\s*'([^']*)'|'([^']*)')",
-                           m.group(1), re.I)
-            older_than = None
-            if om:
-                older_than = ("now" if om.group(1).upper().startswith("NOW")
-                              else (om.group(2) or om.group(3)))
-            return self._count_df(self.expire_snapshots(
-                versions=versions, older_than=older_than,
-                dry_run=bool(dm and dm.group(1).lower() == "true")))
-        m = self._ORPHANS_RE.match(query)
-        if m:
-            opts = {k.lower(): v.lower() == "true" for k, v in re.findall(
-                r"(dry_run|cleanup_all)\s*=>\s*(true|false)",
-                m.group(1), re.I)}
-            return self._count_df(len(self.delete_orphaned_files(
-                dry_run=opts.get("dry_run", False),
-                cleanup_all=opts.get("cleanup_all", False))))
-        m = self._MERGE_ADJ_RE.match(query)
-        if m:
-            mx = m.group(2)
-            if mx is not None and mx.upper() == "NULL":
-                raise InvalidConfig("The max_compacted_files option must "
-                                    "be a non-null integer")
-            return self._count_df(self.merge_adjacent_files(
-                table_name=m.group(1),
-                max_compacted_files=int(mx) if mx is not None else None))
-        m = self._CLUSTER_BY_RE.match(query)
-        if m:
-            # CALL ducklake_cluster_by('table', 'key', buckets
-            # [, sort => true|false] [, replica => true|false]) — beyond
-            # the reference (layout metadata a single-node engine never
-            # needed); replica => true builds a SECOND clustered family
-            # without touching the live file set (operators/layout)
-            sort = (m.group(4) or "true").lower() == "true"
-            replica = (m.group(5) or "false").lower() == "true"
-            return self._count_df(self.cluster_by(
-                m.group(1), m.group(2), int(m.group(3)), sort=sort,
-                replica=replica))
-        m = self._DROP_REPLICA_RE.match(query)
-        if m:
-            # CALL ducklake_drop_clustering_replica('table' [, 'key']) —
-            # disposal for DML-invalidated replicas (files become
-            # orphans the next sweep collects)
-            return self._count_df(self.drop_clustering_replica(
-                m.group(1), m.group(2)))
-        m = self._REFRESH_REPLICA_RE.match(query)
-        if m:
-            # CALL ducklake_refresh_replica('table' [, 'key']) — rebuild
-            # diverged replica families (see refresh_replica; staleness
-            # is visible via ducklake_clustering_info())
-            return self._count_df(self.refresh_replica(
-                m.group(1), m.group(2)))
-        m = self._REFRESH_MATVIEW_RE.match(query)
-        if m:
-            # CALL ducklake_refresh_materialized_view('name') — returns
-            # the refresh mode so SQL callers see which path ran
-            out = self.refresh_materialized_view(m.group(1))
-            return local_df(self.spark, [(out["mode"], out["snapshot"])],
-                            "mode STRING, snapshot BIGINT")
-        m = self._REWRITE_FILES_RE.match(query)
-        if m:
-            # two positional names = (catalog_alias, table) — the alias
-            # is implicit here, as with the other maintenance CALLs; no
-            # name at all = every table (upstream's whole-DB
-            # ducklake_rewrite_data_files('ducklake') form)
-            name = m.group(2) or m.group(1)
-            name = name.strip("'") if name is not None else None
-            thr = m.group(3)
-            if thr is not None:
-                try:
-                    thr = float(thr)
-                except ValueError:
-                    raise InvalidConfig(
-                        "The delete_threshold option must be between "
-                        "0 and 1")
-            return self._count_df(self.rewrite_data_files(
-                name, delete_threshold=self._rewrite_threshold(thr)))
+            return call_procedure(self, m.group(1), m.group(2))
         m = self._CHECKPOINT_RE.match(query)
         if m:
             return self._count_df(self.checkpoint())
@@ -1894,70 +1671,19 @@ class DuckLakeSession:
         m = self._CREATE_SCHEMA_RE.match(query)
         if m:
             # multi-schema DDL (corpus: sql/catalog/schema.test)
-            from .table_writer import _catalog_writer
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 writer.create_schema(m.group(2),
                                      if_not_exists=bool(m.group(1)))
-            finally:
-                writer.close()
             self.refresh()
             return self._count_df(0)
         m = self._DROP_SCHEMA_RE.match(query)
         if m:
-            from .table_writer import _catalog_writer
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 writer.drop_schema(m.group(2),
                                    if_exists=bool(m.group(1)),
                                    cascade=bool(m.group(3)))
-            finally:
-                writer.close()
             self.refresh()
             return self._count_df(0)
-        m = self._ADD_FILES_RE.match(query)
-        if m:
-            # CALL ducklake_add_data_files('table', 'path'[, 'path'...]
-            #     [, allow_missing => true][, hive_partitioning => bool])
-            # — the reference's add_files SQL surface, single-catalog form
-            strings: list[str] = []
-            opts: dict[str, bool] = {}
-            for part in self._split_top_level(m.group(1)):
-                part = part.strip()
-                if part.startswith("'") and part.endswith("'"):
-                    strings.append(part[1:-1])
-                    continue
-                if part.startswith("[") and part.endswith("]"):
-                    # list-literal form: CALL ducklake_add_data_files(
-                    # 'table', ['a.parquet', 'b.parquet'])  — corpus
-                    # sql/add_files/add_files_list.test
-                    for sub in self._split_top_level(part[1:-1]):
-                        sub = sub.strip()
-                        if not (sub.startswith("'") and sub.endswith("'")):
-                            raise InvalidConfig(
-                                f"ducklake_add_data_files: bad path list "
-                                f"element {sub!r}")
-                        strings.append(sub[1:-1])
-                    continue
-                key, arrow, val = part.partition("=>")
-                key, val = key.strip().lower(), val.strip().lower()
-                if not arrow or key not in (
-                        "allow_missing", "hive_partitioning",
-                        "ignore_extra_columns") or \
-                        val not in ("true", "false"):
-                    raise InvalidConfig(
-                        f"ducklake_add_data_files: bad argument {part!r}")
-                opts[key] = val == "true"
-            if len(strings) < 2:
-                raise InvalidConfig(
-                    "ducklake_add_data_files needs ('table', 'path', ...)")
-            n = self.add_files(
-                strings[0], strings[1:],
-                allow_missing=opts.get("allow_missing", False),
-                hive_partitioning=opts.get("hive_partitioning"),
-                ignore_extra_columns=opts.get("ignore_extra_columns",
-                                              False))
-            return self._count_df(n)
         m = self._TXN_RE.match(query)
         if m:
             word = m.group(1).split()[0].upper()
@@ -1994,7 +1720,7 @@ class DuckLakeSession:
         if m:
             target, talias, sets, src, salias, cond = m.groups()
             assignments = {}
-            for part in self._split_top_level(sets):
+            for part in split_top_level(sets):
                 col, _, expr = part.partition("=")
                 if not _:
                     raise InvalidConfig(f"UPDATE: bad SET clause {part!r}")
@@ -2341,7 +2067,7 @@ class DuckLakeSession:
                     update = "source"   # bare UPDATE: take source columns
                     continue
                 update = {}
-                for part in self._split_top_level(um.group(2)):
+                for part in split_top_level(um.group(2)):
                     col, eq, expr = part.partition("=")
                     if not eq:
                         raise InvalidConfig(
@@ -2395,7 +2121,7 @@ class DuckLakeSession:
                 cols = [c.strip().rsplit(".", 1)[-1]
                         for c in iv.group(2).split(",") if c.strip()]
                 exprs = [requalify(e.strip()) for e in
-                         self._split_top_level(iv.group(3))]
+                         split_top_level(iv.group(3))]
                 if len(cols) != len(exprs):
                     raise InvalidConfig(
                         "MERGE: INSERT column list and VALUES arity differ")
@@ -2454,7 +2180,6 @@ class DuckLakeSession:
             ddl = self._try_macro_ddl(query)
             if ddl is not None:
                 return ddl
-            from .operators.macros import expand_macros
             query = expand_macros(query, self._live_macros())
             self._register_st_functions(query)
             if not is_query and re.search(r"\(\s*SELECT\b", query, re.I):
@@ -2640,15 +2365,11 @@ class DuckLakeSession:
         are catalog-invisible duplicates no time-travel read can ever
         reference, so a dropped table's replicas would otherwise be
         spared by the orphan sweep forever — an unbounded leak."""
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer, writer._txn():
             writer.drop_table(handle.meta.table_id)
-            writer.set_option("clustering_replicas", None,
-                              scope="table", scope_id=handle.meta.table_id)
-        finally:
-            writer.close()
+            writer.set_option("clustering_replicas", None, scope="table",
+                              scope_id=handle.meta.table_id)
         self.refresh()
 
     def create_view(self, name: str, sql_text: str,
@@ -2661,7 +2382,6 @@ class DuckLakeSession:
         shape). The body is planned once up front so an invalid
         definition fails at create time. Tables and views share one
         namespace (transaction/create_conflict corpus)."""
-        from .table_writer import _catalog_writer
         schema_name, view_name = self._split(name)
         try:
             schema = self.catalog.schema(schema_name)
@@ -2671,11 +2391,8 @@ class DuckLakeSession:
             # CREATE VIEW as the catalog's very first DDL: materialize
             # the default schema exactly as the table write path would
             # (DuckDB creates main on ATTACH)
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 writer.create_schema(DEFAULT_SCHEMA)
-            finally:
-                writer.close()
             self.refresh()
             schema = self.catalog.schema(schema_name)
         if isinstance(self._relation(name)[1], TableMeta):
@@ -2686,12 +2403,9 @@ class DuckLakeSession:
             return
         # validate: the body must plan against the current catalog
         self._plan_view_body(sql_text)
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.create_view(schema.meta.schema_id, view_name, sql_text,
                                replace=replace)
-        finally:
-            writer.close()
         self.refresh()
 
     def _view_exists(self, name: str) -> bool:
@@ -2701,15 +2415,11 @@ class DuckLakeSession:
     def drop_view(self, name: str, if_exists: bool = False) -> None:
         """DROP VIEW [IF EXISTS] — MVCC-ends the view row; time travel
         before the drop still resolves it."""
-        from .table_writer import _catalog_writer
         schema_name, view_name = self._split(name)
         try:
             schema = self.catalog.schema(schema_name)
-            writer = _catalog_writer(self)
-            try:
+            with self._writer() as writer:
                 writer.drop_view(schema.meta.schema_id, view_name)
-            finally:
-                writer.close()
         except (SchemaNotFound, InvalidConfig):
             if not if_exists:
                 raise
@@ -2719,15 +2429,11 @@ class DuckLakeSession:
     def rename_view(self, name: str, new_name: str) -> None:
         """ALTER VIEW ... RENAME TO (sql/alter/rename_entity.test):
         MVCC rename keeping the view_id and body."""
-        from .table_writer import _catalog_writer
         schema_name, view_name = self._split(name)
         schema = self.catalog.schema(schema_name)
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.rename_view(schema.meta.schema_id, view_name,
                                new_name.rsplit(".", 1)[-1])
-        finally:
-            writer.close()
         self.refresh()
 
     # -- metadata-only ALTER TABLE (sql/alter/ corpus; zero file I/O) ----
@@ -2738,17 +2444,12 @@ class DuckLakeSession:
         """Version the table's columns in one snapshot. ``then(writer,
         table_id)`` writes the rest of the change in the same catalog
         transaction: a visible snapshot never changes afterwards."""
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
-        writer = _catalog_writer(self)
-        try:
-            with writer._txn():
-                writer.version_columns(handle.meta.table_id, cols,
-                                       nested_hints=nested_hints)
-                if then is not None:
-                    then(writer, handle.meta.table_id)
-        finally:
-            writer.close()
+        with self._writer() as writer, writer._txn():
+            writer.version_columns(handle.meta.table_id, cols,
+                                   nested_hints=nested_hints)
+            if then is not None:
+                then(writer, handle.meta.table_id)
         self.refresh()
 
     def rename_table(self, name: str, new_name: str) -> None:
@@ -2756,13 +2457,9 @@ class DuckLakeSession:
         sql/alter/rename_table*): MVCC metadata-only rename — same
         table_id keeps files/columns/rowids; time travel before the
         rename resolves the old name; the storage path is unchanged."""
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.rename_table(handle.meta.table_id, new_name)
-        finally:
-            writer.close()
         self.refresh()
 
     def rename_nested_field(self, name: str, col_path: str,
@@ -3038,7 +2735,6 @@ class DuckLakeSession:
         write-side data inlining (DuckDB's DATA_INLINING_ROW_LIMIT).
         ``table_name``/``schema`` record a per-table/per-schema override
         (DuckLake scoped settings; corpus: sql/settings/)."""
-        from .table_writer import _catalog_writer
         if key in ("delete_older_than", "expire_older_than") \
                 and value is not None:
             self._parse_interval(str(value))   # validate (ref error text)
@@ -3063,12 +2759,9 @@ class DuckLakeSession:
             if meta is None:
                 raise SchemaNotFound(schema)
             scope, scope_id = "schema", meta.schema_id
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.set_option(key, None if value is None else str(value),
                               scope=scope, scope_id=scope_id)
-        finally:
-            writer.close()
         self.refresh()
 
     def expire_snapshots(self, before: Optional[int] = None,
@@ -3082,7 +2775,6 @@ class DuckLakeSession:
         sql/compaction/expire_snapshots.test). ``dry_run`` counts
         without deleting. Returns snapshots expired. Rejected inside a
         transaction."""
-        from .table_writer import _catalog_writer
         if self._txn_base is not None:
             raise InvalidConfig(
                 "expire_snapshots inside a transaction is not supported")
@@ -3118,8 +2810,7 @@ class DuckLakeSession:
                 else sel
             if not versions:
                 return 0
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             if versions is not None:
                 n = writer.expire_snapshot_ids(versions, dry_run=dry_run)
             elif dry_run:
@@ -3129,8 +2820,6 @@ class DuckLakeSession:
                         if s.snapshot_id < cutoff)
             else:
                 n = writer.expire_snapshots(before)
-        finally:
-            writer.close()
         if not dry_run:
             self.refresh()
         return n
@@ -3146,7 +2835,6 @@ class DuckLakeSession:
         ``cleanup_all`` overrides it. Returns the deleted (or, with
         dry_run, deletable) resolved paths."""
         from .operators.dml import _pyarrow_dest
-        from .table_writer import _catalog_writer
         resolver = self.catalog.resolver
         cutoff = None
         if not cleanup_all:
@@ -3155,8 +2843,7 @@ class DuckLakeSession:
             if delta is not None:
                 import time
                 cutoff = time.time() - delta.total_seconds()
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             doomed = writer.list_expired_files()
             paths, ids = [], []
             for kind, fid, f_path, f_rel, t_path, t_rel, s_path, s_rel \
@@ -3187,8 +2874,6 @@ class DuckLakeSession:
             # THIS pass go now (no double-reporting, no lingering stats)
             writer.drop_file_rows(ids)
             writer.drop_expired_inlined_rows()
-        finally:
-            writer.close()
         self.refresh()
         return paths
 
@@ -3438,29 +3123,21 @@ class DuckLakeSession:
         """COMMENT ON TABLE — an MVCC 'comment' tag in ducklake_tag
         (corpus: sql/comments/); None clears it. Rollback-aware like all
         snapshot-versioned state."""
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.set_tag(handle.meta.table_id, "comment", comment)
-        finally:
-            writer.close()
         self.refresh()
 
     def comment_on_column(self, name: str, col_name: str,
                           comment: Optional[str]) -> None:
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
         target = {c.column_name: c for c in handle.columns}.get(col_name)
         if target is None:
             raise InvalidConfig(f"comment_on_column: no column {col_name!r}")
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.set_tag(handle.meta.table_id, "comment", comment,
                            column_id=target.column_id,
                            table_id_for_column=handle.meta.table_id)
-        finally:
-            writer.close()
         self.refresh()
 
     def table_comment(self, name: str) -> Optional[str]:
@@ -3490,7 +3167,6 @@ class DuckLakeSession:
         year_month_day.test) — over date/timestamp columns. [] resets
         the spec. Existing files are untouched (DuckDB behavior) and
         stay conservatively un-prunable."""
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
         by_name = {c.column_name.lower(): c for c in handle.columns}
         specs = []
@@ -3510,11 +3186,8 @@ class DuckLakeSession:
                 specs.append((col.column_id, m.group(1).lower()))
             else:
                 specs.append((col.column_id, "identity"))
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.set_partitioned_by(handle.meta.table_id, specs)
-        finally:
-            writer.close()
         self.refresh()
 
     def flush_inlined_data(self, name: "str | None" = None) -> int:
@@ -3532,8 +3205,7 @@ class DuckLakeSession:
         upstream's whole-catalog form, where the CALL's argument is the
         attached catalog name (sql/data_inlining/
         inlining_issue_on_empty_inline.test)."""
-        from .table_writer import (_catalog_writer, register_files,
-                                   stage_files, target_of)
+        from .table_writer import register_files, stage_files, target_of
         if name is None:
             total = 0
             snap = self.provider.get_current_snapshot()
@@ -3549,16 +3221,12 @@ class DuckLakeSession:
         settings = self.provider.settings()
         staged = stage_files(self, target, df, include_rowid=True,
                              include_snapshot=True, settings=settings)
-        writer = _catalog_writer(self, settings)
-        try:
-            with writer._txn():
-                sid = writer.create_snapshot(
-                    [f"flushed_inlined_data:{handle.meta.table_id}"])
-                n = register_files(writer, sid, target, staged)
-                for it in handle.inlined_tables:
-                    writer.end_inlined_rows(it, sid)
-        finally:
-            writer.close()
+        with self._writer(settings) as writer, writer._txn():
+            sid = writer.create_snapshot(
+                [f"flushed_inlined_data:{handle.meta.table_id}"])
+            n = register_files(writer, sid, target, staged)
+            for it in handle.inlined_tables:
+                writer.end_inlined_rows(it, sid)
         self.refresh(settings)
         return n
 
@@ -3603,12 +3271,8 @@ class DuckLakeSession:
             # only stamp a snapshot THIS transaction created — an empty
             # transaction must not clobber a prior commit's audit record
             if snap > self._txn_base:
-                from .table_writer import _catalog_writer
-                writer = _catalog_writer(self)
-                try:
+                with self._writer() as writer:
                     writer.set_snapshot_audit(snap, *pending)
-                finally:
-                    writer.close()
             self._pending_audit = None
         self._txn_base = None
 
@@ -3620,15 +3284,11 @@ class DuckLakeSession:
         transaction_conflict_cleanup.test); a failed removal degrades to
         an orphan delete_orphaned_files can sweep — never corruption."""
         from .paths import PathResolver
-        from .table_writer import _catalog_writer
         if self._txn_base is None:
             raise InvalidConfig("no transaction in progress")
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             dropped = writer.rollback_to_snapshot(
                 self._txn_base, only=getattr(self, "_txn_snapshots", None))
-        finally:
-            writer.close()
         data_path = self.provider.get_data_path()
         resolver = PathResolver(data_path)
         root = os.path.normpath(data_path[len("file://"):]
@@ -3906,7 +3566,6 @@ class DuckLakeSession:
         match again; only a same-key rebuild or this call frees the
         storage). Returns the number of specs removed."""
         import json
-        from .table_writer import _catalog_writer
         handle = self.table_handle(name)
         raw = self.provider.get_scoped_option(
             "clustering_replicas", None, handle.meta.table_id)
@@ -3922,14 +3581,11 @@ class DuckLakeSession:
             removed, specs = len(specs), {}
         else:
             removed = 1 if specs.pop(key, None) is not None else 0
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.set_option(
                 "clustering_replicas",
                 json.dumps(specs) if specs else None,
                 scope="table", scope_id=handle.meta.table_id)
-        finally:
-            writer.close()
         self.refresh()
         return removed
 
@@ -3989,8 +3645,8 @@ class DuckLakeSession:
         import glob as _glob
 
         from .metadata.writer import DataFileInfo
-        from .table_writer import (_catalog_writer, column_stats_of,
-                                   footer_size_of, nested_stats_ids)
+        from .table_writer import (column_stats_of, footer_size_of,
+                                   nested_stats_ids)
         from .types import (is_geometry_type, spark_to_ducklake_type,
                             types_compatible)
 
@@ -4108,7 +3764,7 @@ class DuckLakeSession:
                 try:
                     spark_t = from_arrow_type(schema.types[i],
                                               prefer_timestamp_ntz=True)
-                except Exception as e:
+                except TypeError as e:
                     raise InvalidConfig(
                         f"add_files: column '{col_name}' in {path} has "
                         f"arrow type {schema.types[i]} with no Spark "
@@ -4127,7 +3783,7 @@ class DuckLakeSession:
                             normalize_legacy_arrow_lists(schema.types[i]),
                             prefer_timestamp_ntz=True)
                         alt_type = spark_to_ducklake_type(alt)
-                    except Exception:
+                    except TypeError:
                         alt_type = file_type
                     if types_compatible(alt_type, expected[col_name]):
                         file_type = alt_type
@@ -4190,33 +3846,29 @@ class DuckLakeSession:
             checked.append((path, meta.num_rows, mapped, known_names,
                             hive_cols, stats))
         tid = handle.meta.table_id
-        writer = _catalog_writer(self)
-        try:
-            with writer._txn():
-                snapshot_id = writer.create_snapshot(
-                    [f"inserted_into_table:{tid}"])
-                next_rowid = writer.next_row_id(tid)
-                for path, rows, mapped, known_names, hive_cols, stats \
-                        in checked:
-                    mapping_id = writer.create_name_mapping(
-                        tid, known_names,
-                        [column_ids[n] for n in known_names],
-                        partition_cols=[(c, column_ids[c])
-                                        for c in hive_cols]) \
-                        if mapped else None
-                    fid = writer.register_data_file(
-                        tid, snapshot_id,
-                        DataFileInfo(path=os.path.abspath(path),
-                                     path_is_relative=False,
-                                     file_size_bytes=os.path.getsize(path),
-                                     footer_size=footer_size_of(path),
-                                     record_count=rows,
-                                     row_id_start=next_rowid,
-                                     mapping_id=mapping_id))
-                    writer.register_file_column_stats(fid, tid, stats)
-                    next_rowid += rows
-        finally:
-            writer.close()
+        with self._writer() as writer, writer._txn():
+            snapshot_id = writer.create_snapshot(
+                [f"inserted_into_table:{tid}"])
+            next_rowid = writer.next_row_id(tid)
+            for path, rows, mapped, known_names, hive_cols, stats \
+                    in checked:
+                mapping_id = writer.create_name_mapping(
+                    tid, known_names,
+                    [column_ids[n] for n in known_names],
+                    partition_cols=[(c, column_ids[c])
+                                    for c in hive_cols]) \
+                    if mapped else None
+                fid = writer.register_data_file(
+                    tid, snapshot_id,
+                    DataFileInfo(path=os.path.abspath(path),
+                                 path_is_relative=False,
+                                 file_size_bytes=os.path.getsize(path),
+                                 footer_size=footer_size_of(path),
+                                 record_count=rows,
+                                 row_id_start=next_rowid,
+                                 mapping_id=mapping_id))
+                writer.register_file_column_stats(fid, tid, stats)
+                next_rowid += rows
         self.refresh()
         return sum(c[1] for c in checked)
 
@@ -4267,7 +3919,6 @@ class DuckLakeSession:
         from pyspark.sql import types as T
 
         from .metadata.writer import ColumnDef
-        from .table_writer import _catalog_writer
         from .types import ducklake_to_spark_type
         schema_name, table_name = self._split(name)
         snap = self.provider.get_current_snapshot()
@@ -4285,7 +3936,7 @@ class DuckLakeSession:
                 f"cannot create table {name!r}: a view with that name "
                 "already exists")
         cols = []
-        for part in self._split_top_level(col_defs, angle=True):
+        for part in split_top_level(col_defs, angle=True):
             if re.search(r"\bAS\s*\(", part, re.I):
                 # sql/general/generated_columns.test
                 raise InvalidConfig(
@@ -4318,12 +3969,9 @@ class DuckLakeSession:
                                   None,
                                   default.strip() if default else None))
         from .metadata.writer import WriteMode
-        writer = _catalog_writer(self)
-        try:
+        with self._writer() as writer:
             writer.begin_write_transaction(
                 schema_name, table_name, cols, WriteMode.APPEND)
-        finally:
-            writer.close()
         self.refresh()
 
     def create_table(self, name: str, df: DataFrame, mode: str = "error",

@@ -655,6 +655,12 @@ class CatalogWriter:
             next_order += 1
         return rows, nested, next_col_id, next_order
 
+    def _ensure_default_columns(self, cur) -> None:
+        """v0.1 catalogs predate the default-value columns that every
+        column version reads and writes."""
+        for col in ("initial_default", "default_value"):
+            self._ensure_column(cur, "ducklake_column", col, "VARCHAR")
+
     _COLUMN_ROW = ("column_id, column_name, column_type, column_order, "
                    "nulls_allowed, parent_column, initial_default, "
                    "default_value")
@@ -882,6 +888,7 @@ class CatalogWriter:
             validate_name(col.name, "Column")
 
         with self._txn() as cur:
+            self._ensure_default_columns(cur)
             sid = self._next_id(cur, "ducklake_snapshot", "snapshot_id")
             cur.execute(
                 "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "
@@ -1218,6 +1225,7 @@ class CatalogWriter:
         for _, col in cols:
             validate_name(col.name, "Column")
         with self._txn() as cur:
+            self._ensure_default_columns(cur)
             sid = self._next_id(cur, "ducklake_snapshot", "snapshot_id")
             cur.execute(
                 "INSERT INTO ducklake_snapshot (snapshot_id, snapshot_time) "

@@ -21,8 +21,15 @@ from ..errors import InvalidConfig
 _MAX_DEPTH = 10
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
+def split_top_level(s: str, angle: bool = False) -> list[str]:
+    """Split ``s`` on commas outside quotes and brackets, dropping empty
+    items (SET-clause commas can appear inside function calls and string
+    literals). ``angle=True`` also nests on <...> — for column-definition
+    lists where STRUCT<...>/MAP<...> carry commas; never for expressions,
+    where < and > are comparison operators."""
     parts, depth, cur, quote = [], 0, [], None
+    opens = "([<" if angle else "(["
+    closes = ")]>" if angle else ")]"
     for ch in s:
         if quote:
             cur.append(ch)
@@ -31,20 +38,19 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
         elif ch in ("'", '"'):
             quote = ch
             cur.append(ch)
-        elif ch in "([":
+        elif ch in opens:
             depth += 1
             cur.append(ch)
-        elif ch in ")]":
+        elif ch in closes:
             depth -= 1
             cur.append(ch)
-        elif ch == sep and depth == 0:
+        elif ch == "," and depth == 0:
             parts.append("".join(cur).strip())
             cur = []
         else:
             cur.append(ch)
-    if cur and "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
+    parts.append("".join(cur).strip())
+    return [p for p in parts if p]
 
 
 def _sub_outside_literals(text: str, pattern: str, repl) -> str:
@@ -119,7 +125,7 @@ def _find_call(query: str, names: set[str]):
                 if depth != 0:
                     raise InvalidConfig(
                         f"macro {word}: unbalanced parentheses")
-                args = _split_top_level(query[j + 1:k])
+                args = split_top_level(query[j + 1:k])
                 return i, k + 1, word, args
             i += len(word)
             continue

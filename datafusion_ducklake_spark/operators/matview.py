@@ -43,6 +43,7 @@ import re
 from typing import Optional
 
 from ..errors import InvalidConfig
+from .macros import split_top_level
 
 MV_OPTION = "materialized_view"
 
@@ -80,26 +81,6 @@ _COMBINE = {"SUM": _ADD_NULL_ID, "COUNT": _ADD_NULL_ID,
             "MAX": "greatest(tgt.{t}, src.{t})"}
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split a select list on commas outside parentheses and quotes."""
-    items, depth, start, quote = [], 0, 0, None
-    for i, ch in enumerate(text):
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            items.append(text[start:i].strip())
-            start = i + 1
-    items.append(text[start:].strip())
-    return [i for i in items if i]
-
-
 def _norm(s: str) -> str:
     return re.sub(r"\s+", " ", s.strip()).lower()
 
@@ -119,9 +100,9 @@ def parse_incremental_spec(sql_text: str) -> Optional[dict]:
     m = _GRAMMAR.match(sql_text)
     if not m:
         return None
-    group_terms = [_norm(g) for g in _split_top_level(m.group("group"))]
+    group_terms = [_norm(g) for g in split_top_level(m.group("group"))]
     group_cols, aggs = [], {}
-    for item in _split_top_level(m.group("select")):
+    for item in split_top_level(m.group("select")):
         am = _AGG_ITEM.match(item)
         if am:
             if re.match(r"\s*DISTINCT\b", am.group("arg"), re.I):

@@ -17,7 +17,7 @@ BUDGET = {
     # _txn's BEGIN retry, _ensure_column's duplicate-column race,
     # _child_rows' type parse
     "metadata/writer.py": 3,
-    "catalog.py": 6,
+    "catalog.py": 4,
     "table_writer.py": 7,
     "operators/matview.py": 4,
     "sources/encryption.py": 2,

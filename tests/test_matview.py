@@ -59,6 +59,12 @@ class TestParse:
             "FROM t GROUP BY id % 3")
         assert spec is not None and spec["group_cols"] == ["bucket"]
 
+    def test_list_literal_is_one_select_item(self):
+        spec = parse_incremental_spec(
+            "SELECT tag, [1, 2] AS xs, SUM(v) AS total "
+            "FROM t GROUP BY tag, [1, 2]")
+        assert spec is not None and spec["group_cols"] == ["tag", "xs"]
+
     def test_rejections_fall_to_full(self):
         for sql in (
                 "SELECT tag, AVG(v) AS a FROM t GROUP BY tag",

@@ -187,3 +187,33 @@ def test_old_catalog_inlined_rows_create_the_registry(spark, old_catalog):
     assert len(dl.table_handle("main.t").inlined_rows()) == 1
     assert sorted(r["id"] for r in dl.table("main.t").collect()) == \
         [1, 2, 3, 4]
+
+
+def test_old_catalog_accepts_insert(spark, old_catalog):
+    """An INSERT migrates the default-value columns a v0.1
+    ``ducklake_column`` lacks inside its own write transaction."""
+    dl = DuckLakeSession(spark, old_catalog)
+    log = []
+    fetch = dl.provider._fetchall
+
+    def spy(query, params=()):
+        try:
+            rows = fetch(query, params)
+        except Exception as e:
+            log.append((query, e))
+            raise
+        log.append((query, None))
+        return rows
+
+    dl.provider._fetchall = spy
+    dl.sql("INSERT INTO t VALUES (4, 'd')")
+    assert dl.sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 4
+    assert log and [q for q, e in log if e is not None] == []
+
+
+def test_old_catalog_accepts_add_column(spark, old_catalog):
+    """ALTER TABLE versions the columns of a v0.1 catalog the same way."""
+    dl = DuckLakeSession(spark, old_catalog)
+    dl.sql("ALTER TABLE t ADD COLUMN z INT")
+    assert sorted(tuple(r) for r in dl.sql("SELECT * FROM t").collect()) \
+        == [(1, "a", None), (2, "b", None), (3, "c", None)]

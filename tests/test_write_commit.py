@@ -232,3 +232,22 @@ def test_add_files_with_a_bad_file_adds_nothing(spark, db, tmp_path):
     assert dl.provider.get_current_snapshot() == head
     assert dl.table("main.t").count() == 0
     assert _count(db, "SELECT count(*) FROM ducklake_data_file") == 0
+
+
+def test_failed_drop_table_keeps_the_table(spark, db, monkeypatch):
+    """DROP TABLE ends the table and clears its clustering replicas in
+    one catalog transaction: when the second step fails the table is
+    still live with its rows."""
+    dl = DuckLakeSession(spark, db)
+    dl.sql("CREATE TABLE t (id INT)")
+    dl.sql("INSERT INTO t VALUES (1), (2)")
+
+    def boom(*args, **kwargs):
+        raise sqlite3.OperationalError("disk I/O error")
+
+    monkeypatch.setattr(CatalogWriter, "set_option", boom)
+    with pytest.raises(sqlite3.OperationalError, match="disk I/O"):
+        dl.sql("DROP TABLE t")
+    monkeypatch.undo()
+    dl.refresh()
+    assert _ids(dl) == [1, 2]
